@@ -111,7 +111,7 @@ object SparkEntry {
       freqCache.computeIfAbsent(
         s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
     }.computeIfAbsent(dir, { _ =>
-      FreqSummary.throughMerge(Ingest.fromEventsTable(s, dir), Spec).localCheckpoint()
+      FreqSummary.Kind.throughMerge(Ingest.fromEventsTable(s, dir), Spec).localCheckpoint()
     })
 
   /** The flagged duplicated-window frame shared by the two substring

@@ -1,7 +1,7 @@
 package graft.core
 
-import graft.windowing.{DecayModel, WindowingSpec}
-import org.apache.spark.sql.Dataset
+import graft.windowing.WindowingSpec
+import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
 /** Decay maintenance without raw events — the Spark replacement for the
@@ -23,65 +23,52 @@ import org.apache.spark.sql.functions._
   */
 object Compactor {
 
-  /** Re-coarsen `sw` to the canonical decay partition for each stream's
-    * current element count (max ce + 1). Input windows may be any
-    * partition that nests into the canonical one — in particular any
-    * earlier canonical partition plus per-element fine windows of newly
-    * appended data.
+  /** Re-coarsen `windows` of any [[SummaryKind]] to the canonical decay
+    * partition for each stream's current element count (max ce + 1),
+    * re-merging window states with the kind's `mergeAggs`. Input
+    * windows may be any partition that nests into the canonical one —
+    * in particular any earlier canonical partition plus the kind's
+    * append delta. The element count is a joined column and the window
+    * id is computed row-side from (spec, n, cs) — no driver collect, no
+    * broadcast map (the [[Summarizer]] pattern).
     */
+  def recoarsen(
+      windows: DataFrame,
+      specOf: Long => WindowingSpec,
+      mergeAggs: Seq[Column],
+      bufferSize: Long): DataFrame = {
+    val counts = windows.groupBy(col("streamId")).agg((max(col("ce")) + 1L).as("n"))
+    val aggs = Seq(
+      min(col("ts")).as("ts"), max(col("te")).as("te"),
+      min(col("cs")).as("cs"), max(col("ce")).as("ce")) ++ mergeAggs
+    windows
+      .join(counts, "streamId")
+      .withColumn("windowId",
+        graft.functions.WindowId.column(specOf, bufferSize, col("streamId"), col("n"), col("cs")))
+      .groupBy(col("streamId"), col("windowId"))
+      .agg(aggs.head, aggs.tail: _*)
+      .drop("windowId")
+  }
+
+  /** [[recoarsen]] for the scalar `summary_windows` table. */
   def recoarsen(
       sw: Dataset[SummaryWindow],
       specOf: Long => WindowingSpec,
-      bufferSize: Long = 0L): Dataset[SummaryWindow] = {
-    val spark = sw.sparkSession
-    import spark.implicits._
-
-    // Per-stream element count as a joined column; windowId computed
-    // row-side from (spec, n, cs) — no driver collect, no broadcast map
-    // (see Summarizer's scale notes; same pattern).
-    val counts = sw.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-    val bs = bufferSize
-
-    sw.toDF()
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"cs"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"te").as("te"),
-        min($"cs").as("cs"),
-        max($"ce").as("ce"),
-        sum($"count").as("count"),
-        sum($"sum").as("sum"),
-        max($"max").as("max"),
-        min($"min").as("min"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"count", $"sum", $"max", $"min")
-      .as[SummaryWindow]
-  }
+      bufferSize: Long = 0L): Dataset[SummaryWindow] =
+    recoarsen(sw.toDF(), specOf, Summarizer.Kind.mergeAggs, bufferSize).as[SummaryWindow](windowEncoder)
 
   /** Per-element fine windows for a freshly appended batch, offset by
     * each stream's existing element count — the unbuffered ingest shape
-    * (`/root/reference/core/pipeline.go:109-117`) ready for
+    * (the reference's `core/pipeline.go:109-117`) ready for
     * [[recoarsen]]. `baseCounts` is a (streamId, n) frame (typically the
     * aggregate of the existing summary table); streams absent from it
     * start at 0. All-columnar — no driver map.
     */
   def fineWindows(
       batch: Dataset[Event],
-      baseCounts: org.apache.spark.sql.DataFrame): Dataset[SummaryWindow] = {
-    val spark = batch.sparkSession
-    import spark.implicits._
-    batch
-      .join(baseCounts.withColumnRenamed("n", "base"), Seq("streamId"), "left")
-      .select(
-        $"streamId",
-        $"ts", $"ts".as("te"),
-        ($"seq" + coalesce($"base", lit(0L))).as("cs"),
-        ($"seq" + coalesce($"base", lit(0L))).as("ce"),
-        lit(1.0).as("count"),
-        $"value".as("sum"), $"value".as("max"), $"value".as("min"))
-      .as[SummaryWindow]
+      baseCounts: DataFrame): Dataset[SummaryWindow] = {
+    val (joined, seq) = SummaryKind.rebase(batch, baseCounts)
+    Summarizer.Kind.perElement(joined, seq).as[SummaryWindow](windowEncoder)
   }
 
   /** Test-friendly overload with an in-memory base-count map. */
@@ -93,125 +80,30 @@ object Compactor {
     fineWindows(batch, baseCount.toSeq.toDF("streamId", "n"))
   }
 
-  /** [[recoarsen]] for the distinct-count summary table
-    * ([[DistinctSummary.summarize]] schema): HLL sketches are mergeable
-    * monoids like count/sum/max, so decay maintenance is the same
-    * groupBy-the-new-partition with `hll_union_agg` as the aggregate.
-    * Input windows must nest into the canonical partition for each
-    * stream's current element count, exactly as for scalar windows.
-    */
+  /** [[recoarsen]] for the distinct-count table ([[DistinctSummary]]). */
   def recoarsenDistinct(
-      sketches: org.apache.spark.sql.DataFrame,
+      sketches: DataFrame,
       specOf: Long => WindowingSpec,
-      bufferSize: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val spark = sketches.sparkSession
-    import spark.implicits._
-    val counts = sketches.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-    val bs = bufferSize
-    sketches
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"cs"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"te").as("te"),
-        min($"cs").as("cs"),
-        max($"ce").as("ce"),
-        hll_union_agg($"sketch", lit(false)).as("sketch"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"sketch")
-  }
+      bufferSize: Long = 0L): DataFrame =
+    recoarsen(sketches, specOf, DistinctSummary.Kind.mergeAggs, bufferSize)
 
-  /** [[recoarsen]] for the bloom/cms summary table
-    * ([[FreqSummary.summarizePerStream]] schema): bloom unions bit-OR
-    * and CMS counters add cell-wise under `mergeInPlace`, so both are
-    * monoids and decay maintenance is the same
-    * groupBy-the-new-partition, with the serialized-sketch union
-    * aggregates ([[graft.functions.Sketches.bloomUnionAgg]]/
-    * [[graft.functions.Sketches.cmsUnionAgg]]) in the agg list. All
-    * input windows must share one sketch geometry (FreqSummary's
-    * table-level constants) — `mergeInPlace` rejects mismatches loudly.
+  /** [[recoarsen]] for the bloom/cms table ([[FreqSummary]]). All input
+    * windows must share one sketch geometry — `mergeInPlace` rejects
+    * mismatches loudly.
     */
   def recoarsenFreq(
-      sketches: org.apache.spark.sql.DataFrame,
+      sketches: DataFrame,
       specOf: Long => WindowingSpec,
-      bufferSize: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val spark = sketches.sparkSession
-    import spark.implicits._
-    val counts = sketches.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-    val bs = bufferSize
-    sketches
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"cs"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"te").as("te"),
-        min($"cs").as("cs"),
-        max($"ce").as("ce"),
-        graft.functions.Sketches.bloomUnionAgg($"bloom").as("bloom"),
-        graft.functions.Sketches.cmsUnionAgg($"cms").as("cms"),
-        graft.functions.Sketches.mgUnionAgg($"cand", FreqSummary.MgCapacity).as("cand"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"bloom", $"cms", $"cand")
-  }
+      bufferSize: Long = 0L): DataFrame =
+    recoarsen(sketches, specOf, FreqSummary.Kind.mergeAggs, bufferSize)
 
-  /** [[recoarsen]] for the sample summary table ([[SampleSummary
-    * .summarizePerStream]] schema): bottom-k by a fixed hash is an
-    * EXACT monoid (the bottom-k of a union is the bottom-k of the
-    * members' bottom-ks), so decay maintenance is the same
-    * groupBy-the-new-partition — and unlike the sketch ops the coarse
-    * window's sample is bit-identical to a fresh draw from raw data.
-    */
+  /** [[recoarsen]] for the sample table ([[SampleSummary]]). */
   def recoarsenSample(
-      samples: org.apache.spark.sql.DataFrame,
+      samples: DataFrame,
       specOf: Long => WindowingSpec,
       k: Int = SampleSummary.K,
-      bufferSize: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val spark = samples.sparkSession
-    import spark.implicits._
-    val counts = samples.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-    val bs = bufferSize
-    samples
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"cs"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"te").as("te"),
-        min($"cs").as("cs"),
-        max($"ce").as("ce"),
-        graft.functions.SampleSketch.ksUnionAgg($"sample", k).as("sample"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"sample")
-  }
+      bufferSize: Long = 0L): DataFrame =
+    recoarsen(samples, specOf, SampleSummary.kind(k).mergeAggs, bufferSize)
 
-  /** [[recoarsen]] for the quantile summary table ([[QuantileSummary
-    * .summarizePerStream]] schema): KLL-style sketches merge by level
-    * concatenation + re-compaction with their certified rank-error
-    * bounds ADDING ([[graft.functions.QuantileSketch.qsUnionAgg]]), so
-    * decay maintenance is the same groupBy-the-new-partition as every
-    * other op. All input windows must share one sketch capacity.
-    */
-  def recoarsenQuantile(
-      sketches: org.apache.spark.sql.DataFrame,
-      specOf: Long => WindowingSpec,
-      bufferSize: Long = 0L): org.apache.spark.sql.DataFrame = {
-    val spark = sketches.sparkSession
-    import spark.implicits._
-    val counts = sketches.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-    val bs = bufferSize
-    sketches
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"cs"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"te").as("te"),
-        min($"cs").as("cs"),
-        max($"ce").as("ce"),
-        graft.functions.QuantileSketch.qsUnionAgg($"qsk").as("qsk"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"qsk")
-  }
+  private val windowEncoder = org.apache.spark.sql.Encoders.product[SummaryWindow]
 }

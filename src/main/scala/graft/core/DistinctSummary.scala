@@ -1,6 +1,6 @@
 package graft.core
 
-import graft.windowing.{DecayModel, WindowingSpec}
+import graft.windowing.WindowingSpec
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -16,47 +16,27 @@ import org.apache.spark.sql.functions._
   */
 object DistinctSummary {
 
-  /** Per-(stream, window) sketch partials over the canonical decay
-    * partition — same window assignment as [[Summarizer.summarize]],
-    * with an HLL binary as the aggregate. Values are sketched via their
-    * canonical string form (Spark's HLL accepts int/long/string/binary;
+  /** The HLL window kind (Spark's `hll_sketch_agg`, lgK = 12 — the
+    * precision the distinct-count rewrite assumes). Values are sketched
+    * via [[canonicalValue]] (Spark's HLL accepts int/long/string/binary;
     * the double→string map is injective, so cardinalities are
-    * unchanged).
+    * unchanged). A sparse HLL of one element is small, so appends keep
+    * per-element fine sketches until the next merge.
+    */
+  val Kind: SummaryKind = SummaryKind("distinct_sketches",
+    elementAggs = Seq(hll_sketch_agg(canonicalValue(col("value")), lit(12)).as("sketch")),
+    mergeAggs = Seq(hll_union_agg(col("sketch"), lit(false)).as("sketch")),
+    delta = SummaryKind.PerElement,
+    rewrite = Some(graft.plans.SummaryRewrite.Pairing.Distinct))
+
+  /** Sketch table (streamId, ts, te, cs, ce, sketch) over one decay
+    * policy — same window assignment as [[Summarizer.summarize]].
     */
   def summarize(
       events: Dataset[Event],
       spec: WindowingSpec,
-      lgK: Int = 12,
       bufferSize: Long = 0L): DataFrame =
-    summarizePerStream(events, _ => spec, lgK, bufferSize)
-
-  /** As [[summarize]] with per-stream decay policies (the catalog's
-    * `specOf`, like [[Summarizer.summarizePerStream]]). Canonical
-    * output schema (streamId, ts, te, cs, ce, sketch) — the same shape
-    * [[Compactor.recoarsenDistinct]] maintains.
-    */
-  def summarizePerStream(
-      events: Dataset[Event],
-      specOf: Long => WindowingSpec,
-      lgK: Int = 12,
-      bufferSize: Long = 0L): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val counts = events.groupBy($"streamId").agg(count(lit(1)).as("n"))
-    val bs = bufferSize
-    events
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"seq"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"ts").as("te"),
-        min($"seq").as("cs"),
-        max($"seq").as("ce"),
-        hll_sketch_agg(canonicalValue($"value"), lit(lgK)).as("sketch"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"sketch")
-  }
+    Kind.summarize(events, _ => spec, bufferSize)
 
   /** Canonical sketch-entry form of a value: string, with -0.0 first
     * normalized to 0.0. SQL `=` (and `countDistinct`) treat the two
@@ -96,11 +76,10 @@ object DistinctSummary {
   def distinctContract(
       events: Dataset[Event],
       spec: WindowingSpec,
-      tol: Double = 0.05,
-      lgK: Int = 12): DataFrame = {
+      tol: Double = 0.05): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    val est = rangeDistinct(summarize(events, spec, lgK))
+    val est = rangeDistinct(summarize(events, spec))
     val exact = events.groupBy($"streamId".as("stream_id"))
       .agg(countDistinct($"value").cast("double").as("exact"))
     est.join(exact, "stream_id")

@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.functions.Sketches
-import graft.windowing.{DecayModel, WindowingSpec}
+import graft.windowing.WindowingSpec
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   * (`/root/reference/protos/summarydb.capnp:6-13`, `README.md:27-28`),
   * completing the [[DistinctSummary]] pattern. Both sketches are
   * mergeable monoids (bit-OR / cell-wise add), so decay re-coarsening
-  * ([[Compactor.recoarsenFreq]]) and query-time range union follow the
+  * ([[Compactor.recoarsen]]) and query-time range union follow the
   * same shapes as count/sum/max:
   *
   *   - "did key X appear in [t0, t1]?"  → union the overlapping
@@ -25,10 +25,9 @@ import org.apache.spark.sql.functions._
   *
   * Sketch sizing is a TABLE-LEVEL constant: `mergeInPlace` (both kinds)
   * requires identical geometry, so every window of a table — across
-  * builds, appends, and re-coarsenings — must be created with the same
-  * (expectedItems, fpp) / (eps, confidence) configuration. The
-  * defaults size a window for ~4k distinct members at 1% error; at
-  * 100 TB the knobs scale per deployment, not per query.
+  * builds, appends, and re-coarsenings — is created with the same
+  * ([[ExpectedItems]], [[Fpp]]) / ([[Eps]], [[Confidence]]) constants,
+  * which size a window for ~4k distinct members at 1% error.
   */
 object FreqSummary {
 
@@ -50,76 +49,35 @@ object FreqSummary {
     */
   val MgCapacity = 64
 
-  /** Per-(stream, window) bloom+cms partials over the canonical decay
-    * partition — the [[DistinctSummary.summarizePerStream]] shape with
-    * two sketch columns. Output schema
-    * (streamId, ts, te, cs, ce, bloom, cms); values enter via
+  /** The bloom + CMS + Misra-Gries window kind. Values enter via
     * [[DistinctSummary.canonicalValue]] so -0.0/0.0 stay one key and
-    * probes use the same canonical form.
+    * probes use the same canonical form. Bloom/CMS have no sparse mode,
+    * so an append aggregates at the post-append canonical partition —
+    * per-element windows would write one ~16 KB sketch pair per element.
     */
-  def summarizePerStream(
-      events: Dataset[Event],
-      specOf: Long => WindowingSpec,
-      expectedItems: Long = ExpectedItems,
-      fpp: Double = Fpp,
-      eps: Double = Eps,
-      confidence: Double = Confidence,
-      bufferSize: Long = 0L): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val counts = events.groupBy($"streamId").agg(count(lit(1)).as("n"))
-    partialsAt(events.toDF(), specOf, counts, expectedItems, fpp, eps, confidence, bufferSize)
+  val Kind: SummaryKind = {
+    val v = DistinctSummary.canonicalValue(col("value"))
+    SummaryKind("freq_sketches",
+      elementAggs = Seq(
+        Sketches.bloomAgg(v, ExpectedItems, Fpp).as("bloom"),
+        Sketches.cmsAgg(v, Eps, Confidence).as("cms"),
+        Sketches.mgAgg(v, MgCapacity).as("cand")),
+      mergeAggs = Seq(
+        Sketches.bloomUnionAgg(col("bloom")).as("bloom"),
+        Sketches.cmsUnionAgg(col("cms")).as("cms"),
+        Sketches.mgUnionAgg(col("cand"), MgCapacity).as("cand")),
+      delta = SummaryKind.AtCount,
+      rewrite = Some(graft.plans.SummaryRewrite.Pairing.Freq))
   }
 
-  /** Sketch partials of `events` on the canonical partition for the
-    * per-stream counts in `counts` (streamId, n) — which may exceed the
-    * events' own span (the incremental-append shape: a batch aggregated
-    * at the post-append total nests into every future canonical
-    * partition, at O(log n) sketch rows per stream instead of one
-    * fixed-size sketch pair PER ELEMENT — bloom/cms have no sparse
-    * mode, so per-element fine windows would write ~16 KB × batch).
+  /** Sketch table (streamId, ts, te, cs, ce, bloom, cms, cand) over one
+    * decay policy.
     */
-  private[graft] def partialsAt(
-      events: DataFrame,
-      specOf: Long => WindowingSpec,
-      counts: DataFrame,
-      expectedItems: Long = ExpectedItems,
-      fpp: Double = Fpp,
-      eps: Double = Eps,
-      confidence: Double = Confidence,
-      bufferSize: Long = 0L): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val bs = bufferSize
-    events
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"seq"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"ts").as("te"),
-        min($"seq").as("cs"),
-        max($"seq").as("ce"),
-        Sketches.bloomAgg(
-          DistinctSummary.canonicalValue($"value"), expectedItems, fpp).as("bloom"),
-        Sketches.cmsAgg(
-          DistinctSummary.canonicalValue($"value"), eps, confidence).as("cms"),
-        Sketches.mgAgg(
-          DistinctSummary.canonicalValue($"value"), MgCapacity).as("cand"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"bloom", $"cms", $"cand")
-  }
-
-  /** As [[summarizePerStream]] with one spec for every stream. */
   def summarize(
       events: Dataset[Event],
       spec: WindowingSpec,
-      expectedItems: Long = ExpectedItems,
-      fpp: Double = Fpp,
-      eps: Double = Eps,
-      confidence: Double = Confidence,
       bufferSize: Long = 0L): DataFrame =
-    summarizePerStream(events, _ => spec, expectedItems, fpp, eps, confidence, bufferSize)
+    Kind.summarize(events, _ => spec, bufferSize)
 
   /** Per-stream union of the window blooms overlapping [t0, t1],
     * probed for `keys` (canonical string form): (stream_id, key,
@@ -205,25 +163,20 @@ object FreqSummary {
   }
 
   /** Self-checking freq contract through the decay-merge path: every
-    * EXACT-heavy key (> `minFrac` of its stream — above the MG floor
+    * EXACT-heavy key (> [[HeavyFrac]] of its stream — above the MG floor
     * 1/(MgCapacity+1) = ~1.54%) must surface in the merged candidate map
-    * with a CMS estimate in [exact, exact + ceil(eps·N)]. Output
+    * with a CMS estimate in [exact, exact + ceil(Eps·N)]. Output
     * (stream_id, n_heavy, n_missing_candidates, n_out_of_bounds); the
     * oracle recomputes n_heavy from exact data and asserts the zeros.
     */
-  def freqContract(
-      events: Dataset[Event],
-      spec: WindowingSpec,
-      eps: Double = Eps,
-      minFrac: Double = 0.02): DataFrame =
-    freqContractFrom(throughMerge(events, spec, eps = eps), events, eps, minFrac)
+  def freqContract(events: Dataset[Event], spec: WindowingSpec): DataFrame =
+    freqContractFrom(Kind.throughMerge(events, spec), events)
+
+  /** Heaviness cut of [[freqContract]]: above the Misra-Gries floor. */
+  private val HeavyFrac = 0.02
 
   /** [[freqContract]] over a prebuilt sketch table. */
-  def freqContractFrom(
-      table: DataFrame,
-      events: Dataset[Event],
-      eps: Double = Eps,
-      minFrac: Double = 0.02): DataFrame = {
+  def freqContractFrom(table: DataFrame, events: Dataset[Event]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val merged = table
@@ -236,14 +189,13 @@ object FreqSummary {
       .agg(count(lit(1)).as("cnt"))
       .withColumn("n", sum($"cnt").over(
         org.apache.spark.sql.expressions.Window.partitionBy($"streamId")))
-      .filter($"cnt" > $"n" * minFrac)
+      .filter($"cnt" > $"n" * HeavyFrac)
       .groupBy($"streamId")
       .agg(
         map_from_entries(collect_list(struct($"key", $"cnt"))).as("exact"),
         first($"n").as("n"))
-    val e = eps
     val audit = udf((cand: Map[String, Long], s: Array[Byte], exact: Map[String, Long], n: Long) => {
-      val bound = math.ceil(e * n).toLong
+      val bound = math.ceil(Eps * n).toLong
       val missing = exact.keys.count(k => cand == null || !cand.contains(k)).toLong
       val oob =
         if (s == null) exact.size.toLong
@@ -260,10 +212,9 @@ object FreqSummary {
   }
 
   /** Self-checking bloom contract (the `q_approx_distinct` pattern),
-    * routed THROUGH a decay merge: per-element fine sketches are
-    * re-coarsened to the canonical partition ([[Compactor
-    * .recoarsenFreq]] — every canonical window is a real merge of fine
-    * sketches), the per-stream union is probed for every value the
+    * routed THROUGH a decay merge ([[SummaryKind.throughMerge]] — every
+    * moved boundary is a real merge of sketches), the per-stream union
+    * is probed for every value the
     * stream actually contains, and the output counts misses:
     * (stream_id, n_present, n_missed). A bloom filter has NO false
     * negatives, and unions only set more bits — n_missed must be 0 for
@@ -271,43 +222,8 @@ object FreqSummary {
     * count-distinct (pinning the probe plumbing, not just the
     * guarantee).
     */
-  /** Sketch table routed THROUGH a real decay merge without building
-    * per-element windows: each stream's first half summarized at its
-    * OWN canonical partition (the state an earlier append would have
-    * left), the remainder aggregated at the final partition, then one
-    * [[Compactor.recoarsenFreq]] — every boundary that moved between
-    * n/2 and n forces a genuine multi-way sketch merge, at O(log n)
-    * sketch rows per stream. This is the incremental-append shape the
-    * contracts certify.
-    */
-  private[graft] def throughMerge(
-      events: Dataset[Event],
-      spec: WindowingSpec,
-      expectedItems: Long = ExpectedItems,
-      fpp: Double = Fpp,
-      eps: Double = Eps,
-      confidence: Double = Confidence): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val counts = events.groupBy($"streamId").agg(count(lit(1)).as("n"))
-    val ev = events.toDF().join(counts, "streamId")
-    val cols = Seq($"streamId", $"ts", $"seq", $"value")
-    val firstHalf = ev.filter($"seq" < $"n" / 2).select(cols: _*)
-    val rest = ev.filter($"seq" >= $"n" / 2).select(cols: _*)
-    val specOf = (_: Long) => spec
-    val a = partialsAt(firstHalf, specOf,
-      firstHalf.groupBy($"streamId").agg(count(lit(1)).as("n")),
-      expectedItems, fpp, eps, confidence)
-    val b = partialsAt(rest, specOf, counts, expectedItems, fpp, eps, confidence)
-    Compactor.recoarsenFreq(a.unionByName(b), specOf)
-  }
-
-  def bloomContract(
-      events: Dataset[Event],
-      spec: WindowingSpec,
-      expectedItems: Long = ExpectedItems,
-      fpp: Double = Fpp): DataFrame =
-    bloomContractFrom(throughMerge(events, spec, expectedItems, fpp), events)
+  def bloomContract(events: Dataset[Event], spec: WindowingSpec): DataFrame =
+    bloomContractFrom(Kind.throughMerge(events, spec), events)
 
   /** Probe-set chunking for the audit contracts: distinct keys are
     * grouped into `pmod(xxhash64(key), ContractChunks)` buckets before
@@ -321,7 +237,8 @@ object FreqSummary {
   private val ContractChunks = 1024
 
   /** [[bloomContract]] over a prebuilt (typically cached) sketch table
-    * — several contracts share one [[throughMerge]] materialization.
+    * — several contracts share one [[SummaryKind.throughMerge]]
+    * materialization.
     */
   def bloomContractFrom(table: DataFrame, events: Dataset[Event]): DataFrame = {
     val spark = events.sparkSession
@@ -345,26 +262,22 @@ object FreqSummary {
 
   /** Self-checking CMS contract through the same decay-merge path:
     * every value's estimate from the per-stream union of RE-COARSENED
-    * window sketches must sit in [exact, exact + ceil(eps·N)] —
+    * window sketches must sit in [exact, exact + ceil(Eps·N)] —
     * (stream_id, n_keys, n_events, n_out_of_bounds). One-sided error
     * makes the lower bound deterministic; the upper bound holds at the
     * configured confidence with a fixed seed, so the output is
     * reproducible for the oracle (n_out_of_bounds must read 0).
     */
-  def cmsContract(
-      events: Dataset[Event],
-      spec: WindowingSpec,
-      eps: Double = Eps,
-      confidence: Double = Confidence): DataFrame =
-    cmsContractFrom(throughMerge(events, spec, eps = eps, confidence = confidence), events, eps)
+  def cmsContract(events: Dataset[Event], spec: WindowingSpec): DataFrame =
+    cmsContractFrom(Kind.throughMerge(events, spec), events)
 
   /** [[cmsContract]] over a prebuilt sketch table. Every key is still
     * audited; the exact counts reach the probe as [[ContractChunks]]
     * bounded chunk rows, never one per-stream map (a map of ALL
-    * distinct keys is the OOM shape `freqContract`'s `minFrac` cut
+    * distinct keys is the OOM shape `freqContract`'s [[HeavyFrac]] cut
     * avoids — this contract can't cut, so it chunks).
     */
-  def cmsContractFrom(table: DataFrame, events: Dataset[Event], eps: Double = Eps): DataFrame = {
+  def cmsContractFrom(table: DataFrame, events: Dataset[Event]): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val merged = table
@@ -381,11 +294,10 @@ object FreqSummary {
       .groupBy($"streamId", pmod(xxhash64($"key"), lit(ContractChunks)).as("chunk"))
       .agg(collect_list(struct($"key", $"cnt")).as("kc"))
       .select($"streamId", $"kc.key".as("keys"), $"kc.cnt".as("cnts"))
-    val e = eps
     val oob = udf((s: Array[Byte], keys: Seq[String], cnts: Seq[Long], n: Long) =>
       if (s == null) keys.size.toLong
       else {
-        val bound = math.ceil(e * n).toLong
+        val bound = math.ceil(Eps * n).toLong
         val est = Sketches.cmsEstimateAll(s, keys).iterator.map(_._2)
         cnts.iterator.zip(est).count { case (ex, es) => es < ex || es > ex + bound }.toLong
       })
@@ -394,32 +306,5 @@ object FreqSummary {
         oob($"s", $"keys", $"cnts", $"n").as("noob"))
       .groupBy($"streamId".as("stream_id"))
       .agg(sum($"nk").as("n_keys"), first($"n").as("n_events"), sum($"noob").as("n_out_of_bounds"))
-  }
-
-  /** One sketch window per ELEMENT (windowId = seq): the append-delta
-    * shape ([[Compactor.fineWindows]] analogue) and the worst-case
-    * re-coarsening input — every canonical window becomes a genuine
-    * multi-way sketch merge.
-    */
-  private[graft] def finePerElement(
-      events: Dataset[Event],
-      expectedItems: Long,
-      fpp: Double,
-      eps: Double,
-      confidence: Double): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events.toDF()
-      .groupBy($"streamId", $"seq")
-      .agg(
-        min($"ts").as("ts"),
-        max($"ts").as("te"),
-        Sketches.bloomAgg(
-          DistinctSummary.canonicalValue($"value"), expectedItems, fpp).as("bloom"),
-        Sketches.cmsAgg(
-          DistinctSummary.canonicalValue($"value"), eps, confidence).as("cms"),
-        Sketches.mgAgg(
-          DistinctSummary.canonicalValue($"value"), MgCapacity).as("cand"))
-      .select($"streamId", $"ts", $"te", $"seq".as("cs"), $"seq".as("ce"), $"bloom", $"cms", $"cand")
   }
 }

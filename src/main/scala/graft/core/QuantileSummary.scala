@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.functions.QuantileSketch
-import graft.windowing.{DecayModel, WindowingSpec}
+import graft.windowing.WindowingSpec
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *
   *   - "what was the p50/p99 in [t0, t1]?" → union the overlapping
   *     windows' sketches, probe — O(log N) sketch rows read;
-  *   - decay re-coarsening ([[Compactor.recoarsenQuantile]]) merges
+  *   - decay re-coarsening ([[Compactor.recoarsen]]) merges
   *     sketches exactly like count/sum/max partials merge;
   *   - the sketch carries a SELF-CERTIFIED worst-case rank error that
   *     ADDS across merges, so a range query can report its own bound
@@ -33,48 +33,24 @@ object QuantileSummary {
     */
   val K = 512
 
-  /** Per-(stream, window) sketch partials over the canonical decay
-    * partition — the [[FreqSummary.summarizePerStream]] shape with one
-    * quantile-sketch column. Output (streamId, ts, te, cs, ce, qsk).
+  /** The KLL window kind at capacity `k`. An append aggregates at the
+    * post-append canonical partition; the merge's certified error
+    * bounds add, so the maintained table stays within its contract
+    * whatever the merge history. [[SummaryDB]] keeps no rewrite pairing
+    * for it.
     */
+  def kind(k: Int = K): SummaryKind = SummaryKind("quantile_windows",
+    elementAggs = Seq(QuantileSketch.qsAgg(col("value"), k).as("qsk")),
+    mergeAggs = Seq(QuantileSketch.qsUnionAgg(col("qsk")).as("qsk")),
+    delta = SummaryKind.AtCount)
+
+  /** Sketch table (streamId, ts, te, cs, ce, qsk), per-stream policies. */
   def summarizePerStream(
       events: Dataset[Event],
       specOf: Long => WindowingSpec,
       k: Int = K,
-      bufferSize: Long = 0L): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val counts = events.groupBy($"streamId").agg(count(lit(1)).as("n"))
-    partialsAt(events.toDF(), specOf, counts, k, bufferSize)
-  }
-
-  /** Sketch partials of `events` on the canonical partition for the
-    * per-stream counts in `counts` (streamId, n) — the incremental-
-    * append shape: a batch aggregated at the post-append total nests
-    * into every future canonical partition at O(log n) sketch rows.
-    */
-  private[graft] def partialsAt(
-      events: DataFrame,
-      specOf: Long => WindowingSpec,
-      counts: DataFrame,
-      k: Int = K,
-      bufferSize: Long = 0L): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val bs = bufferSize
-    events
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"seq"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"ts").as("te"),
-        min($"seq").as("cs"),
-        max($"seq").as("ce"),
-        QuantileSketch.qsAgg($"value", k).as("qsk"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"qsk")
-  }
+      bufferSize: Long = 0L): DataFrame =
+    kind(k).summarize(events, specOf, bufferSize)
 
   /** As [[summarizePerStream]] with one spec for every stream. */
   def summarize(
@@ -133,7 +109,7 @@ object QuantileSummary {
       spec: WindowingSpec,
       probs: Seq[Double],
       k: Int = 32): DataFrame =
-    quantileContractFrom(throughMerge(events, spec, k), events, probs)
+    quantileContractFrom(kind(k).throughMerge(events, spec), events, probs)
 
   /** [[quantileContract]] over a prebuilt sketch table. */
   def quantileContractFrom(
@@ -157,29 +133,5 @@ object QuantileSummary {
         $"rank_le" >= target - $"rank_err" &&
         $"rank_lt" <= target - 1L + $"rank_err")
         .as("within_bound"))
-  }
-
-  /** Sketch table routed THROUGH a real decay merge ([[FreqSummary
-    * .throughMerge]] shape): each stream's first half summarized at its
-    * OWN canonical partition, the remainder at the final partition,
-    * then one [[Compactor.recoarsenQuantile]] — every boundary that
-    * moved between n/2 and n forces a genuine multi-way sketch merge.
-    */
-  private[graft] def throughMerge(
-      events: Dataset[Event],
-      spec: WindowingSpec,
-      k: Int = K): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val counts = events.groupBy($"streamId").agg(count(lit(1)).as("n"))
-    val ev = events.toDF().join(counts, "streamId")
-    val cols = Seq($"streamId", $"ts", $"seq", $"value")
-    val firstHalf = ev.filter($"seq" < $"n" / 2).select(cols: _*)
-    val rest = ev.filter($"seq" >= $"n" / 2).select(cols: _*)
-    val specOf = (_: Long) => spec
-    val a = partialsAt(firstHalf, specOf,
-      firstHalf.groupBy($"streamId").agg(count(lit(1)).as("n")), k)
-    val b = partialsAt(rest, specOf, counts, k)
-    Compactor.recoarsenQuantile(a.unionByName(b), specOf)
   }
 }

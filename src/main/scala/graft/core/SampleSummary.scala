@@ -2,7 +2,7 @@ package graft.core
 
 import graft.functions.SampleSketch
 import graft.ops.Sampling
-import graft.windowing.{DecayModel, WindowingSpec}
+import graft.windowing.WindowingSpec
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 
@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * is EXACT under merge — the bottom-k of a union is the bottom-k of
   * the members' bottom-ks — so:
   *
-  *   - decay re-coarsening ([[Compactor.recoarsenSample]]) loses
+  *   - decay re-coarsening ([[Compactor.recoarsen]]) loses
   *     nothing: the coarse window's sample equals the sample that would
   *     have been drawn from the raw coarse window;
   *   - a full-range query equals the global bottom-k regardless of the
@@ -39,57 +39,25 @@ object SampleSummary {
   /** Default per-window sample size. */
   val K = 16
 
-  /** Per-(stream, window) bottom-k samples over the canonical decay
-    * partition — the [[QuantileSummary.summarizePerStream]] shape with
-    * one sample column. Output (streamId, ts, te, cs, ce, sample) with
-    * `sample: array<struct<hk, seq, value>>` sorted by (hk, seq).
+  /** The bottom-k window kind at sample size `k`: `sample` is
+    * `array<struct<hk, seq, value>>` sorted by (hk, seq), hashed on the
+    * GLOBAL element index, so an incrementally maintained table samples
+    * identically to a full rebuild. An append aggregates at the
+    * post-append canonical partition.
     */
-  def summarizePerStream(
-      events: Dataset[Event],
-      specOf: Long => WindowingSpec,
-      k: Int = K,
-      bufferSize: Long = 0L): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val counts = events.groupBy($"streamId").agg(count(lit(1)).as("n"))
-    partialsAt(events.toDF(), specOf, counts, k, bufferSize)
-  }
+  def kind(k: Int = K): SummaryKind = SummaryKind("sample_windows",
+    elementAggs = Seq(
+      SampleSketch.ksAgg(Sampling.hashKey("seq"), col("seq"), col("value"), k).as("sample")),
+    mergeAggs = Seq(SampleSketch.ksUnionAgg(col("sample"), k).as("sample")),
+    delta = SummaryKind.AtCount)
 
-  /** Sample partials of `events` on the canonical partition for the
-    * per-stream counts in `counts` (streamId, n) — the incremental-
-    * append shape ([[QuantileSummary.partialsAt]]).
-    */
-  private[graft] def partialsAt(
-      events: DataFrame,
-      specOf: Long => WindowingSpec,
-      counts: DataFrame,
-      k: Int = K,
-      bufferSize: Long = 0L): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val bs = bufferSize
-    events
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"seq"))
-      .withColumn("hk", Sampling.hashKey("seq"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"ts").as("te"),
-        min($"seq").as("cs"),
-        max($"seq").as("ce"),
-        SampleSketch.ksAgg($"hk", $"seq", $"value", k).as("sample"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"sample")
-  }
-
-  /** As [[summarizePerStream]] with one spec for every stream. */
+  /** Sample table (streamId, ts, te, cs, ce, sample) over one policy. */
   def summarize(
       events: Dataset[Event],
       spec: WindowingSpec,
       k: Int = K,
       bufferSize: Long = 0L): DataFrame =
-    summarizePerStream(events, _ => spec, k, bufferSize)
+    kind(k).summarize(events, _ => spec, bufferSize)
 
   /** Per-stream bottom-k over the windows overlapping [t0, t1]:
     * (stream_id, rank, seq, value, hk), rank 1..k ascending by
@@ -114,28 +82,9 @@ object SampleSummary {
         $"s.seq".as("seq"), $"s.value".as("value"), $"s.hk".as("hk"))
   }
 
-  /** Sample table routed THROUGH a real decay merge ([[QuantileSummary
-    * .throughMerge]] shape): each stream's first half summarized at its
-    * OWN canonical partition, the remainder at the final partition,
-    * then one [[Compactor.recoarsenSample]] — every boundary that moved
-    * between n/2 and n forces a genuine multi-way sample merge, and the
-    * full-range result must STILL equal the global bottom-k exactly.
+  /** [[SummaryKind.throughMerge]] of [[kind]]: the full-range result
+    * must STILL equal the global bottom-k exactly.
     */
-  private[graft] def throughMerge(
-      events: Dataset[Event],
-      spec: WindowingSpec,
-      k: Int = K): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    val counts = events.groupBy($"streamId").agg(count(lit(1)).as("n"))
-    val ev = events.toDF().join(counts, "streamId")
-    val cols = Seq($"streamId", $"ts", $"seq", $"value")
-    val firstHalf = ev.filter($"seq" < $"n" / 2).select(cols: _*)
-    val rest = ev.filter($"seq" >= $"n" / 2).select(cols: _*)
-    val specOf = (_: Long) => spec
-    val a = partialsAt(firstHalf, specOf,
-      firstHalf.groupBy($"streamId").agg(count(lit(1)).as("n")), k)
-    val b = partialsAt(rest, specOf, counts, k)
-    Compactor.recoarsenSample(a.unionByName(b), specOf, k)
-  }
+  private[graft] def throughMerge(events: Dataset[Event], spec: WindowingSpec, k: Int = K): DataFrame =
+    kind(k).throughMerge(events, spec)
 }

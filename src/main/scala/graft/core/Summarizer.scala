@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.windowing.{DecayModel, WindowingSpec}
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -52,36 +52,31 @@ object Summarizer {
   def summarizePerStream(
       events: Dataset[Event],
       specOf: Long => WindowingSpec,
-      bufferSize: Long = 0L): Dataset[SummaryWindow] = {
-    val spark = events.sparkSession
-    import spark.implicits._
+      bufferSize: Long = 0L): Dataset[SummaryWindow] =
+    Kind.summarize(events, specOf, bufferSize).as[SummaryWindow](Encoders.product[SummaryWindow])
 
-    // `specOf` is shipped inside the UDF, so it must be self-contained
-    // (capture specs, not the catalog owner). windowStarts is memoized
-    // per executor, so each distinct (spec, n) decomposes once per JVM.
-    val counts = events.groupBy($"streamId").agg(count(lit(1)).as("n"))
-    val bs = bufferSize
-    // r10: native codegen kernel (graft.functions.WindowId) — the old
-    // Scala UDF boxed three Longs and allocated a memo-key tuple per
-    // ROW; the expression calls a primitive static kernel resolving
-    // starts through a per-thread last-hit memo. Bit-identical ids.
-    events
-      .join(counts, "streamId")
-      .withColumn("windowId",
-        graft.functions.WindowId.column(specOf, bs, $"streamId", $"n", $"seq"))
-      .groupBy($"streamId", $"windowId")
-      .agg(
-        min($"ts").as("ts"),
-        max($"ts").as("te"),
-        min($"seq").as("cs"),
-        max($"seq").as("ce"),
-        count(lit(1)).cast("double").as("count"),
-        sum($"value").as("sum"),
-        max($"value").as("max"),
-        min($"value").as("min"))
-      .select($"streamId", $"ts", $"te", $"cs", $"ce", $"count", $"sum", $"max", $"min")
-      .as[SummaryWindow]
-  }
+  /** The scalar window kind: count/sum/max/min, the reference's
+    * DataTable (`protos/summarydb.capnp:16-20`). A single element's
+    * window is a projection of its value, so the append delta needs no
+    * shuffle.
+    */
+  val Kind: SummaryKind = SummaryKind("summary_windows",
+    elementAggs = Seq(
+      count(lit(1)).cast("double").as("count"),
+      sum(col("value")).as("sum"),
+      max(col("value")).as("max"),
+      min(col("value")).as("min")),
+    mergeAggs = Seq(
+      sum(col("count")).as("count"),
+      sum(col("sum")).as("sum"),
+      max(col("max")).as("max"),
+      min(col("min")).as("min")),
+    delta = SummaryKind.Singleton(Seq(
+      lit(1.0).as("count"),
+      col("value").as("sum"),
+      col("value").as("max"),
+      col("value").as("min"))),
+    rewrite = Some(graft.plans.SummaryRewrite.Pairing.Summary))
 
   /** Summarize with exact landmark intervals: elements whose timestamp
     * falls inside a landmark interval are diverted verbatim into the

@@ -2,7 +2,8 @@ package graft.core
 
 import graft.windowing.WindowingSpec
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Dataset, SaveMode, SparkSession}
+import graft.plans.SummaryRewrite
+import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The persistent multi-stream store: catalog + events + summary +
@@ -202,7 +203,7 @@ final class SummaryDB private (
     require(t0 <= t1, s"bad landmark interval [$t0, $t1]")
     saveIntervals((storedIntervals :+ ((streamId, t0, t1))).distinct)
     refreshSummaries(landmarkIntervals)
-    refreshRewriteRegistration()
+    refreshRegistrations()
   }
 
   /** The open-interval sentinel: an un-ended landmark absorbs every
@@ -225,7 +226,7 @@ final class SummaryDB private (
       s"stream $streamId already has an open landmark")
     saveIntervals((storedIntervals :+ ((streamId, t0, OpenT1))).distinct)
     refreshSummaries(landmarkIntervals)
-    refreshRewriteRegistration()
+    refreshRegistrations()
   }
 
   /** Close the stream's open landmark at t1 — the reference's
@@ -240,7 +241,7 @@ final class SummaryDB private (
     require(t1 >= open._2, s"endLandmark($t1) precedes startLandmark(${open._2})")
     saveIntervals(storedIntervals.filterNot(_ == open) :+ ((streamId, open._2, t1)))
     refreshSummaries(landmarkIntervals)
-    refreshRewriteRegistration()
+    refreshRegistrations()
   }
 
   private def saveIntervals(rows: Seq[(Long, Long, Long)]): Unit =
@@ -336,38 +337,18 @@ final class SummaryDB private (
     val all = this.landmarkIntervals
     if (all.nonEmpty || streamLandmarks.nonEmpty || forceRecompute)
       refreshSummaries(all, includeUncommittedTag = Some(tag))
-    else appendIncremental(prepared)
-    // Distinct sketches rank over ALL elements (landmark diversion
-    // never removes a value from the distinct set), so the incremental
-    // path applies even to landmarked stores. On crash REPLAY the
-    // incremental path would re-apply a batch the sketch table may
-    // already hold (it is written before the commit marker): HLL set
-    // semantics would keep the estimates right, but the cs/ce element
-    // bookkeeping would double-count and drift the partition off the
-    // canonical decay — rebuild from the WAL instead, like the scalar
-    // refreshSummaries path.
-    if (distinctEnabled) {
-      if (forceRecompute) rebuildDistinct(includeUncommittedTag = Some(tag))
-      else appendIncrementalDistinct(prepared)
-    }
-    // Same replay discipline for the bloom/cms table: rebuild from the
-    // WAL on forceRecompute, incremental fine-sketch union otherwise.
-    if (freqEnabled) {
-      if (forceRecompute) rebuildFreq(includeUncommittedTag = Some(tag))
-      else appendIncrementalFreq(prepared)
-    }
-    // And for the bottom-k sample table (exact monoid — but the same
-    // double-count drift would corrupt cs/ce bookkeeping on replay).
-    if (sampleEnabled) {
-      if (forceRecompute) rebuildSample(includeUncommittedTag = Some(tag))
-      else appendIncrementalSample(prepared)
-    }
-    // And for the quantile sketch table (KLL merges are lossy-but-
-    // certified; replay double-application would both drift cs/ce and
-    // double the sketch weights — rebuild from the WAL instead).
-    if (quantileEnabled) {
-      if (forceRecompute) rebuildQuantile(includeUncommittedTag = Some(tag))
-      else appendIncrementalQuantile(prepared)
+    else appendIncremental(Summarizer.Kind, prepared)
+    // The enabled kinds rank over ALL elements (landmark diversion never
+    // removes a value from a sketch or sample), so the incremental path
+    // applies even to landmarked stores. On crash REPLAY it would
+    // re-apply a batch the table may already hold (tables are written
+    // before the commit marker): the cs/ce element bookkeeping would
+    // double-count and drift the partition off the canonical decay
+    // (and KLL sketch weights would double) — rebuild from the WAL
+    // instead, like the scalar refreshSummaries path.
+    enabled.values.foreach { kind =>
+      if (forceRecompute) rebuild(kind, includeUncommittedTag = Some(tag))
+      else appendIncremental(kind, prepared)
     }
     // The summaries now reflect this batch: commit it. A crash before
     // this line leaves an unmarked events/<tag> dir that readEvents
@@ -376,22 +357,18 @@ final class SummaryDB private (
     // summary table must agree under every crash point).
     fs.mkdirs(new Path(p("commits")))
     fs.create(new Path(p("commits"), tag), true).close()
-    refreshRewriteRegistration()
-    refreshDistinctRegistration()
-    refreshFreqRegistration()
+    refreshRegistrations()
   }
 
   // ---------------------------------------------------------- merge cadence
 
-  /** One re-coarsening cadence counter per summary KIND (scalar /
-    * distinct / freq / sample), all sharing [[SummaryDB.open]]'s
-    * `mergeEvery` knob — a single controller instead of one mutable
-    * field per kind, so new summary kinds get cadence by key and the
-    * kinds cannot drift behaviorally. Counters are session-scoped by
-    * design (cadence restarts on reopen — it is not durable state) and
-    * advance independently: not every kind is exercised by every
-    * append (the scalar path skips landmarked stores; the sketch paths
-    * run regardless).
+  /** One re-coarsening cadence counter per summary kind, keyed by its
+    * table, all sharing [[SummaryDB.open]]'s `mergeEvery` knob — a
+    * single controller, so the kinds cannot drift behaviorally.
+    * Counters are session-scoped by design (cadence restarts on reopen
+    * — it is not durable state) and advance independently: not every
+    * kind is exercised by every append (the scalar path skips
+    * landmarked stores; the enabled kinds run regardless).
     */
   private val sinceMerge = collection.mutable.Map.empty[String, Int]
 
@@ -402,22 +379,33 @@ final class SummaryDB private (
     n >= mergeEvery
   }
 
-  /** Old summary + fine windows of the (already clamped) batch ->
-    * canonical partition at the new N, by pure monoid re-merge.
+  /** `kind`'s table + the append delta of the (already clamped) batch
+    * -> canonical partition at the new N, by pure monoid re-merge. Below
+    * the `mergeEvery` cadence the delta persists as-is: the merge is a
+    * monoid, so the state after the next merge is identical to
+    * always-merging.
     */
-  private def appendIncremental(prepared: Dataset[Event]): Unit = {
-    val old = summaryWindows.persist()
+  private def appendIncremental(kind: SummaryKind, prepared: Dataset[Event]): Unit = {
+    val old = table(kind).persist()
     try {
       val baseCounts = old
         .groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-      val fine = Compactor.fineWindows(prepared, baseCounts)
+      val delta = kind.appendDelta(prepared, baseCounts, specOf)
       val next =
-        if (mergeDue("scalar")) Compactor.recoarsen(old.unionByName(fine), specOf)
-        else old.unionByName(fine) // merge deferred: fine windows persist as-is
-      writeVersioned("summary_windows",
-        next.toDF().write.mode(SaveMode.Overwrite).parquet(_))
+        if (mergeDue(kind.table))
+          Compactor.recoarsen(old.unionByName(delta), specOf, kind.mergeAggs, 0L)
+        else old.unionByName(delta)
+      writeVersioned(kind.table, next.write.mode(SaveMode.Overwrite).parquet(_))
     } finally old.unpersist()
   }
+
+  /** The current table of `kind` (an empty frame of its schema before
+    * any data).
+    */
+  private def table(kind: SummaryKind): DataFrame =
+    currentVersion(kind.table)
+      .map(v => spark.read.parquet(v.toString))
+      .getOrElse(kind.summarize(spark.emptyDataset[Event], specOf))
 
   /** Recompute summary + landmark tables from the persisted events.
     * `includeUncommittedTag`: the batch currently being applied — its
@@ -521,9 +509,7 @@ final class SummaryDB private (
     try out.write(dirs.map(_.getName).mkString("\n").getBytes("UTF-8"))
     finally out.close()
     gcReplacedDirs()
-    refreshRewriteRegistration()
-    refreshDistinctRegistration()
-    refreshFreqRegistration()
+    refreshRegistrations()
   }
 
   /** Delete superseded event dirs and their markers (never a compact
@@ -566,7 +552,6 @@ final class SummaryDB private (
   // ------------------------------------------------- query rewrite hookup
 
   private var rewriteEnabled = false
-  private var rewriteKey: Option[Set[String]] = None
 
   /** Install graft.plans.SummaryRewrite for this session and keep this
     * store's committed-events -> current-summary pairing registered
@@ -576,283 +561,109 @@ final class SummaryDB private (
     */
   def enableQueryRewrite(): Unit = {
     rewriteEnabled = true
-    graft.plans.SummaryRewrite.install(spark)
-    refreshRewriteRegistration()
+    SummaryRewrite.install(spark)
+    refreshRegistrations()
   }
 
-  private def refreshRewriteRegistration(): Unit = if (rewriteEnabled) {
-    rewriteKey.foreach(graft.plans.SummaryRewrite.unregisterSet)
-    rewriteKey = {
-      // Landmark elements live in the landmarks table, NOT in
+  /** The rewrite keys this store has registered, per pairing. */
+  private val registered = collection.mutable.Map.empty[SummaryRewrite.Pairing, Set[String]]
+
+  /** Re-pair each maintained table that has a rewrite (the scalar one
+    * once [[enableQueryRewrite]] is on, every enabled kind) with the
+    * committed-events relation, at the table's current version.
+    */
+  private def refreshRegistrations(): Unit = {
+    lazy val dirs = committedEventDirs().map(_.toString)
+    val maintained = (if (rewriteEnabled) Seq(Summarizer.Kind) else Nil) ++ enabled.values
+    for (kind <- maintained; pairing <- kind.rewrite) {
+      registered.remove(pairing).foreach(SummaryRewrite.unregisterSet(_, pairing))
+      // Landmark elements live in the landmark tables, NOT in
       // summary_windows — a full-stream aggregate over raw events is
-      // only answerable from the summary when no landmarks exist.
-      val dirs = committedEventDirs()
-      currentVersion("summary_windows") match {
-        case Some(sv) if dirs.nonEmpty && storedIntervals.isEmpty =>
-          Some(graft.plans.SummaryRewrite.registerSet(dirs.map(_.toString), sv.toString))
-        case _ => None
+      // only answerable from it when no landmarks exist. The other
+      // kinds rank over every element.
+      def complete = kind.ne(Summarizer.Kind) || storedIntervals.isEmpty
+      currentVersion(kind.table).filter(_ => dirs.nonEmpty && complete).foreach { v =>
+        registered(pairing) = SummaryRewrite.registerSet(dirs, v.toString, pairing)
       }
     }
   }
 
-  // -------------------------------------------- distinct sketch hookup
+  // ------------------------------------------------- windowed summary kinds
 
-  private var distinctEnabled = false
-  private var distinctKey: Option[Set[String]] = None
+  /** The enabled summary kinds beside the scalar table, by table name. */
+  private val enabled = collection.mutable.LinkedHashMap.empty[String, SummaryKind]
 
-  /** Maintain a windowed HLL distinct-count table
-    * ([[DistinctSummary]] schema) alongside the scalar summaries and
-    * keep it paired for the distinct-count rewrite: with the
-    * approximate flag on, `approx_count_distinct`/`count(DISTINCT
-    * value)` over [[rawEvents]] read O(log N) sketch rows. Incremental:
-    * appends union per-element sketches and re-coarsen
-    * ([[Compactor.recoarsenDistinct]]) — no full-corpus recompute.
+  /** Sample size of the sample table: a range union of windows holding
+    * `sampleK` samples each is the exact bottom-k only up to `sampleK`.
     */
-  def enableDistinctSummaries(): Unit = withWriteLock {
-    distinctEnabled = true
-    graft.plans.SummaryRewrite.install(spark)
-    rebuildDistinct()
-    refreshDistinctRegistration()
-  }
-
-  /** Canonical sketch table from the committed WAL (plus the batch
-    * being applied, on replay) — the recovery twin of
-    * [[refreshSummaries]] for the distinct path.
-    */
-  private def rebuildDistinct(includeUncommittedTag: Option[String] = None): Unit =
-    writeVersioned("distinct_sketches",
-      DistinctSummary.summarizePerStream(readEvents(includeUncommittedTag), specOf)
-        .write.mode(SaveMode.Overwrite).parquet(_))
-
-  /** The current sketch table (empty schema-stable frame before any
-    * data).
-    */
-  def distinctSketches: org.apache.spark.sql.DataFrame =
-    currentVersion("distinct_sketches")
-      .map(v => spark.read.parquet(v.toString))
-      .getOrElse(DistinctSummary.summarizePerStream(spark.emptyDataset[Event], specOf))
-
-  private def appendIncrementalDistinct(prepared: Dataset[Event]): Unit = {
-    val old = distinctSketches.persist()
-    try {
-      val baseCounts = old.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-      val fine = prepared.toDF()
-        .join(baseCounts.withColumnRenamed("n", "base"), Seq("streamId"), "left")
-        .select($"streamId", $"ts", $"ts".as("te"),
-          ($"seq" + coalesce($"base", lit(0L))).as("cs"),
-          ($"seq" + coalesce($"base", lit(0L))).as("ce"), $"value")
-        .groupBy($"streamId", $"ts", $"te", $"cs", $"ce")
-        .agg(org.apache.spark.sql.functions
-          .hll_sketch_agg(DistinctSummary.canonicalValue($"value"), lit(12)).as("sketch"))
-        .select($"streamId", $"ts", $"te", $"cs", $"ce", $"sketch")
-      // Same write-amplification knob as the scalar path: re-coarsen
-      // only every mergeEvery-th append; in between, per-element fine
-      // sketches persist as-is (sketch merge is a monoid, so the state
-      // after the next merge is identical to always-merging).
-      val next =
-        if (mergeDue("distinct")) Compactor.recoarsenDistinct(old.unionByName(fine), specOf)
-        else old.unionByName(fine)
-      writeVersioned("distinct_sketches",
-        next.write.mode(SaveMode.Overwrite).parquet(_))
-    } finally old.unpersist()
-  }
-
-  // ------------------------------------------------ bloom/cms hookup
-
-  private var freqEnabled = false
-
-  /** Maintain a windowed bloom+cms table ([[FreqSummary]] schema)
-    * alongside the scalar summaries — the reference's declared-but-
-    * unimplemented bloom/cms window ops
-    * (`/root/reference/protos/summarydb.capnp:6-13`). Range membership
-    * ([[mightContain]]) and frequency ([[freqEstimate]]) then read
-    * O(log N) sketch rows instead of raw events. Incremental: appends
-    * union per-element sketches and re-coarsen on the [[mergeEvery]]
-    * cadence — no full-corpus recompute.
-    */
-  def enableFreqSummaries(): Unit = withWriteLock {
-    freqEnabled = true
-    graft.plans.SummaryRewrite.install(spark)
-    rebuildFreq()
-    refreshFreqRegistration()
-  }
-
-  private var freqKey: Option[Set[String]] = None
-
-  /** Keep the CMS count rewrite paired with the current freq table
-    * version, mirroring [[refreshDistinctRegistration]].
-    */
-  private def refreshFreqRegistration(): Unit = if (freqEnabled) {
-    freqKey.foreach(graft.plans.SummaryRewrite.unregisterFreqSet)
-    freqKey = {
-      val dirs = committedEventDirs()
-      currentVersion("freq_sketches") match {
-        case Some(sv) if dirs.nonEmpty =>
-          Some(graft.plans.SummaryRewrite.registerFreqSet(dirs.map(_.toString), sv.toString))
-        case _ => None
-      }
-    }
-  }
-
-  /** Canonical bloom/cms table from the committed WAL (plus the batch
-    * being applied, on replay) — the recovery twin of
-    * [[refreshSummaries]] for the freq path.
-    */
-  private def rebuildFreq(includeUncommittedTag: Option[String] = None): Unit =
-    writeVersioned("freq_sketches",
-      FreqSummary.summarizePerStream(readEvents(includeUncommittedTag), specOf)
-        .write.mode(SaveMode.Overwrite).parquet(_))
-
-  /** The current bloom/cms sketch table (empty schema-stable frame
-    * before any data).
-    */
-  def freqSketches: org.apache.spark.sql.DataFrame =
-    currentVersion("freq_sketches")
-      .map(v => spark.read.parquet(v.toString))
-      .getOrElse(FreqSummary.summarizePerStream(spark.emptyDataset[Event], specOf))
-
-  private def appendIncrementalFreq(prepared: Dataset[Event]): Unit = {
-    val old = freqSketches.persist()
-    try {
-      val baseCounts = old.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-      val rebased = prepared.toDF()
-        .join(baseCounts.withColumnRenamed("n", "base"), Seq("streamId"), "left")
-        .select($"streamId", $"ts",
-          ($"seq" + coalesce($"base", lit(0L))).as("seq"), $"value")
-      // The batch aggregates at the POST-APPEND canonical partition —
-      // O(log n) sketch rows per stream, which nest into every later
-      // partition. Per-element fine windows (the scalar/HLL path's
-      // delta shape) would write one fixed-size ~16 KB bloom+cms pair
-      // PER ELEMENT: bloom/cms have no sparse mode, so the delta must
-      // be pre-aggregated.
-      val newCounts = rebased.groupBy($"streamId").agg((max($"seq") + 1L).as("n"))
-      val delta = FreqSummary.partialsAt(rebased, specOf, newCounts)
-      val next =
-        if (mergeDue("freq")) Compactor.recoarsenFreq(old.unionByName(delta), specOf)
-        else old.unionByName(delta)
-      writeVersioned("freq_sketches",
-        next.write.mode(SaveMode.Overwrite).parquet(_))
-    } finally old.unpersist()
-  }
-
-  // ------------------------------------------------ sample hookup
-
-  private var sampleEnabled = false
   private var sampleK = SampleSummary.K
 
-  /** Maintain a windowed bottom-k sample table ([[SampleSummary]]
-    * schema) alongside the scalar summaries: "show me k events from
-    * [t0, t1]" ([[sampleEvents]]) then reads O(log N) sample rows
-    * instead of raw events. Bottom-k by the portable seq hash is an
-    * EXACT monoid, so the incrementally maintained table is
-    * bit-identical to a fresh build at every point. Incremental:
-    * appends aggregate at the post-append canonical partition and
-    * re-coarsen on the [[mergeEvery]] cadence.
+  /** Maintain `kind`'s table alongside the scalar summaries: built from
+    * the committed WAL now, then kept by every append — incrementally
+    * ([[appendIncremental]], re-coarsened on the `mergeEvery` cadence),
+    * or rebuilt from the WAL on replay — with its rewrite pairing, if
+    * any, kept registered.
+    */
+  private def enable(kind: SummaryKind): Unit = withWriteLock {
+    enabled(kind.table) = kind
+    if (kind.rewrite.nonEmpty) SummaryRewrite.install(spark)
+    rebuild(kind)
+    refreshRegistrations()
+  }
+
+  /** `kind`'s canonical table from the committed WAL (plus the batch
+    * being applied, on replay) — the recovery twin of
+    * [[refreshSummaries]].
+    */
+  private def rebuild(kind: SummaryKind, includeUncommittedTag: Option[String] = None): Unit =
+    writeVersioned(kind.table,
+      kind.summarize(readEvents(includeUncommittedTag), specOf)
+        .write.mode(SaveMode.Overwrite).parquet(_))
+
+  /** Maintain a windowed HLL distinct-count table ([[DistinctSummary]])
+    * and keep it paired for the distinct-count rewrite: with the
+    * approximate flag on, `approx_count_distinct`/`count(DISTINCT
+    * value)` over [[rawEvents]] read O(log N) sketch rows.
+    */
+  def enableDistinctSummaries(): Unit = enable(DistinctSummary.Kind)
+
+  /** Maintain a windowed bloom+cms table ([[FreqSummary]]) — the
+    * reference's declared-but-unimplemented bloom/cms window ops
+    * (`protos/summarydb.capnp:6-13`). Range membership
+    * ([[mightContain]]) and frequency ([[freqEstimate]]) then read
+    * O(log N) sketch rows instead of raw events.
+    */
+  def enableFreqSummaries(): Unit = enable(FreqSummary.Kind)
+
+  /** Maintain a windowed bottom-k sample table ([[SampleSummary]]):
+    * "show me k events from [t0, t1]" ([[sampleEvents]]) then reads
+    * O(log N) sample rows instead of raw events. Bottom-k by the
+    * portable seq hash is an EXACT monoid, so the incrementally
+    * maintained table is bit-identical to a fresh build at every point.
     */
   def enableSampleSummaries(k: Int = SampleSummary.K): Unit = withWriteLock {
-    sampleEnabled = true
     sampleK = k
-    rebuildSample()
+    enable(SampleSummary.kind(k))
   }
 
-  /** Canonical sample table from the committed WAL (plus the batch
-    * being applied, on replay) — the recovery twin of
-    * [[refreshSummaries]] for the sample path.
+  /** Maintain a windowed KLL-style quantile table ([[QuantileSummary]]):
+    * "p50/p99 of [t0, t1]" ([[rangeQuantiles]]) then reads O(log N)
+    * sketch rows instead of raw events, with the sketch's
+    * self-certified rank-error bound surviving every merge order.
     */
-  private def rebuildSample(includeUncommittedTag: Option[String] = None): Unit =
-    writeVersioned("sample_windows",
-      SampleSummary.summarizePerStream(readEvents(includeUncommittedTag), specOf, sampleK)
-        .write.mode(SaveMode.Overwrite).parquet(_))
+  def enableQuantileSummaries(k: Int = QuantileSummary.K): Unit =
+    enable(QuantileSummary.kind(k))
 
-  /** The current sample table (empty schema-stable frame before any
-    * data).
-    */
-  def sampleWindows: org.apache.spark.sql.DataFrame =
-    currentVersion("sample_windows")
-      .map(v => spark.read.parquet(v.toString))
-      .getOrElse(SampleSummary.summarizePerStream(spark.emptyDataset[Event], specOf, sampleK))
-
-  private def appendIncrementalSample(prepared: Dataset[Event]): Unit = {
-    val old = sampleWindows.persist()
-    try {
-      val baseCounts = old.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-      val rebased = prepared.toDF()
-        .join(baseCounts.withColumnRenamed("n", "base"), Seq("streamId"), "left")
-        .select($"streamId", $"ts",
-          ($"seq" + coalesce($"base", lit(0L))).as("seq"), $"value")
-      // Aggregate at the POST-APPEND canonical partition (the freq
-      // path's delta shape): O(log n) sample rows per stream, nesting
-      // into every later partition. The hash key is of the GLOBAL
-      // element index, so the incremental table samples identically to
-      // a full rebuild.
-      val newCounts = rebased.groupBy($"streamId").agg((max($"seq") + 1L).as("n"))
-      val delta = SampleSummary.partialsAt(rebased, specOf, newCounts, sampleK)
-      val next =
-        if (mergeDue("sample")) Compactor.recoarsenSample(old.unionByName(delta), specOf, sampleK)
-        else old.unionByName(delta)
-      writeVersioned("sample_windows",
-        next.write.mode(SaveMode.Overwrite).parquet(_))
-    } finally old.unpersist()
-  }
-
-  // ------------------------------------------------ quantile hookup
-
-  private var quantileEnabled = false
-  private var quantileK = QuantileSummary.K
-
-  /** Maintain a windowed KLL-style quantile table ([[QuantileSummary]]
-    * schema) alongside the scalar summaries: "p50/p99 of [t0, t1]"
-    * ([[rangeQuantiles]]) then reads O(log N) sketch rows instead of
-    * raw events, with the sketch's self-certified rank-error bound
-    * surviving every merge order. Incremental: appends aggregate at
-    * the post-append canonical partition (the freq/sample delta shape)
-    * and re-coarsen on the [[mergeEvery]] cadence.
-    */
-  def enableQuantileSummaries(k: Int = QuantileSummary.K): Unit = withWriteLock {
-    quantileEnabled = true
-    quantileK = k
-    rebuildQuantile()
-  }
-
-  /** Canonical quantile table from the committed WAL (plus the batch
-    * being applied, on replay) — the recovery twin of
-    * [[refreshSummaries]] for the quantile path.
-    */
-  private def rebuildQuantile(includeUncommittedTag: Option[String] = None): Unit =
-    writeVersioned("quantile_windows",
-      QuantileSummary.summarizePerStream(readEvents(includeUncommittedTag), specOf, quantileK)
-        .write.mode(SaveMode.Overwrite).parquet(_))
-
-  /** The current quantile sketch table (empty schema-stable frame
+  /** The current sketch/sample tables (empty schema-stable frames
     * before any data).
     */
-  def quantileWindows: org.apache.spark.sql.DataFrame =
-    currentVersion("quantile_windows")
-      .map(v => spark.read.parquet(v.toString))
-      .getOrElse(QuantileSummary.summarizePerStream(spark.emptyDataset[Event], specOf, quantileK))
+  def distinctSketches: DataFrame = table(DistinctSummary.Kind)
+  def freqSketches: DataFrame = table(FreqSummary.Kind)
+  def sampleWindows: DataFrame = table(SampleSummary.kind(sampleK))
+  def quantileWindows: DataFrame = table(QuantileSummary.kind())
 
-  private def appendIncrementalQuantile(prepared: Dataset[Event]): Unit = {
-    val old = quantileWindows.persist()
-    try {
-      val baseCounts = old.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-      val rebased = prepared.toDF()
-        .join(baseCounts.withColumnRenamed("n", "base"), Seq("streamId"), "left")
-        .select($"streamId", $"ts",
-          ($"seq" + coalesce($"base", lit(0L))).as("seq"), $"value")
-      // Aggregate at the POST-APPEND canonical partition, like the
-      // freq/sample paths: O(log n) sketch rows per stream that nest
-      // into every later partition; the KLL merge's error bounds add,
-      // so the maintained table stays within its certified contract
-      // whatever the merge history.
-      val newCounts = rebased.groupBy($"streamId").agg((max($"seq") + 1L).as("n"))
-      val delta = QuantileSummary.partialsAt(rebased, specOf, newCounts, quantileK)
-      val next =
-        if (mergeDue("quantile")) Compactor.recoarsenQuantile(old.unionByName(delta), specOf)
-        else old.unionByName(delta)
-      writeVersioned("quantile_windows",
-        next.write.mode(SaveMode.Overwrite).parquet(_))
-    } finally old.unpersist()
-  }
+  private def requireEnabled(kind: SummaryKind, enable: String): Unit =
+    require(enabled.contains(kind.table), s"call $enable() first")
 
   /** "p of [t0, t1]" per probe: (stream_id, p, est, rank_err, n) for
     * one stream — O(log N) sketch rows read, estimate is an actual
@@ -860,7 +671,7 @@ final class SummaryDB private (
     */
   def rangeQuantiles(streamId: Long, probs: Seq[Double],
       t0: Long = Long.MinValue, t1: Long = Long.MaxValue): Seq[(Double, Double, Long, Long)] = {
-    require(quantileEnabled, "call enableQuantileSummaries() first")
+    requireEnabled(QuantileSummary.kind(), "enableQuantileSummaries")
     requireDeclared(streamId, "quantile")
     QuantileSummary.rangeQuantiles(
         quantileWindows.filter($"streamId" === streamId), probs, t0, t1)
@@ -878,7 +689,7 @@ final class SummaryDB private (
     */
   def sampleEvents(streamId: Long, k: Int = SampleSummary.K,
       t0: Long = Long.MinValue, t1: Long = Long.MaxValue): Seq[(Long, Double)] = {
-    require(sampleEnabled, "call enableSampleSummaries() first")
+    requireEnabled(SampleSummary.kind(), "enableSampleSummaries")
     requireDeclared(streamId, "sample")
     SampleSummary.rangeSample(
         sampleWindows.filter($"streamId" === streamId), math.min(k, sampleK), t0, t1)
@@ -895,7 +706,7 @@ final class SummaryDB private (
     */
   def mightContain(streamId: Long, key: String, t0: Long = Long.MinValue,
       t1: Long = Long.MaxValue): Boolean = {
-    require(freqEnabled, "call enableFreqSummaries() first")
+    requireEnabled(FreqSummary.Kind, "enableFreqSummaries")
     requireDeclared(streamId, "bloom")
     FreqSummary.rangeMightContain(
         freqSketches.filter($"streamId" === streamId), Seq(key), t0, t1)
@@ -909,7 +720,7 @@ final class SummaryDB private (
     */
   def freqEstimate(streamId: Long, key: String, t0: Long = Long.MinValue,
       t1: Long = Long.MaxValue): Long = {
-    require(freqEnabled, "call enableFreqSummaries() first")
+    requireEnabled(FreqSummary.Kind, "enableFreqSummaries")
     requireDeclared(streamId, "cms")
     FreqSummary.rangeFreqEstimate(
         freqSketches.filter($"streamId" === streamId), Seq(key), t0, t1)
@@ -924,7 +735,7 @@ final class SummaryDB private (
     */
   def heavyHitters(streamId: Long, k: Int, t0: Long = Long.MinValue,
       t1: Long = Long.MaxValue): Seq[(String, Long)] = {
-    require(freqEnabled, "call enableFreqSummaries() first")
+    requireEnabled(FreqSummary.Kind, "enableFreqSummaries")
     requireDeclared(streamId, "freq")
     FreqSummary.rangeHeavyHitters(
         freqSketches.filter($"streamId" === streamId), k, t0, t1)
@@ -944,18 +755,6 @@ final class SummaryDB private (
           s"operator '$op' not declared for stream $streamId " +
             s"(declared: ${m.operators.mkString(", ")})")
     }
-
-  private def refreshDistinctRegistration(): Unit = if (distinctEnabled) {
-    distinctKey.foreach(graft.plans.SummaryRewrite.unregisterDistinctSet)
-    distinctKey = {
-      val dirs = committedEventDirs()
-      currentVersion("distinct_sketches") match {
-        case Some(sv) if dirs.nonEmpty =>
-          Some(graft.plans.SummaryRewrite.registerDistinctSet(dirs.map(_.toString), sv.toString))
-        case _ => None
-      }
-    }
-  }
 
   def summaryWindows: Dataset[SummaryWindow] =
     readVersioned("summary_windows")(path => spark.read.parquet(path).as[SummaryWindow])(

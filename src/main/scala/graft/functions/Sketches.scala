@@ -75,7 +75,7 @@ object Sketches {
   /** Union of already-serialized Bloom filters (binary column) — the
     * merge half of the aggregate split out on its own, for re-coarsening
     * stored per-window sketches without touching raw values
-    * (Compactor.recoarsenFreq). Buffer is the live filter with a lazy
+    * (Compactor.recoarsen). Buffer is the live filter with a lazy
     * null zero: `mergeInPlace` requires identical bit-array sizing, so
     * a parameterless zero cannot pre-allocate — all inputs must come
     * from one build configuration (enforced by FreqSummary's

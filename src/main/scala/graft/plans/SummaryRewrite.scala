@@ -45,123 +45,86 @@ import org.apache.spark.sql.SparkSessionExtensions
   */
 object SummaryRewrite {
 
-  // Normalized events root-path SET -> summary path. Keyed by the full
-  // set (not a prefix): a relation is rewritten only when it scans
-  // EXACTLY the registered batch directories — a query over a subset of
-  // batches is not a full-stream aggregate and must never silently
-  // become one. JVM-wide: rules constructed by different sessions see
-  // the same pairings.
-  private val registry = new ConcurrentHashMap[Set[String], String]()
+  /** Which summary table a raw-events relation is paired with; each
+    * pairing is answered by its own rewrite below.
+    */
+  sealed trait Pairing
+  object Pairing {
+    /** `summary_windows` (count/sum/min/max/avg, exact). */
+    case object Summary extends Pairing
+    /** [[graft.core.DistinctSummary]] HLL sketches (approximate mode). */
+    case object Distinct extends Pairing
+    /** [[graft.core.FreqSummary]] CMS count rewrite (approximate mode). */
+    case object Freq extends Pairing
+    /** [[graft.core.QuantileSummary]] percentiles (approximate mode). */
+    case object Quantile extends Pairing
+  }
+
+  // (pairing, normalized events root-path SET) -> table path. Keyed by
+  // the full set (not a prefix): a relation is rewritten only when it
+  // scans EXACTLY the registered batch directories — a query over a
+  // subset of batches is not a full-stream aggregate and must never
+  // silently become one. One map for every pairing, so [[clear]] cannot
+  // miss one. JVM-wide: rules constructed by different sessions see the
+  // same pairings.
+  private val registry = new ConcurrentHashMap[(Pairing, Set[String]), String]()
 
   private def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
 
-  /** Pair a raw-events parquet location with its summary parquet. */
-  def register(eventsPath: String, summaryPath: String): Unit =
-    registerSet(Seq(eventsPath), summaryPath)
-
   /** Pair a MULTI-DIRECTORY events relation (e.g. a store's committed
-    * batch dirs) with its summary parquet; replaces any previous
+    * batch dirs) with its `pairing` table; replaces any previous
     * registration with the same key returned, so a store can re-register
     * after each append.
     */
-  def registerSet(eventsPaths: Seq[String], summaryPath: String): Set[String] = {
+  def registerSet(
+      eventsPaths: Seq[String],
+      tablePath: String,
+      pairing: Pairing = Pairing.Summary): Set[String] = {
     val key = eventsPaths.map(norm).toSet
-    registry.put(key, norm(summaryPath))
+    registry.put((pairing, key), norm(tablePath))
     dfCache.clear() // pairings changed — cached summary plans may be stale
     key
   }
 
-  def unregister(eventsPath: String): Unit = { registry.remove(Set(norm(eventsPath))); dfCache.clear() }
-  def unregisterSet(key: Set[String]): Unit = { registry.remove(key); dfCache.clear() }
-  def clear(): Unit = {
-    registry.clear(); distinctRegistry.clear(); freqRegistry.clear(); dfCache.clear()
+  def unregisterSet(key: Set[String], pairing: Pairing = Pairing.Summary): Unit = {
+    registry.remove((pairing, key))
+    dfCache.clear()
   }
 
-  // Events root-path set -> windowed DistinctSummary sketch parquet
-  // (same keying discipline as `registry`).
-  private val distinctRegistry = new ConcurrentHashMap[Set[String], String]()
+  def clear(): Unit = { registry.clear(); dfCache.clear() }
 
-  /** Pair a raw-events parquet location with its [[graft.core.DistinctSummary]]
-    * sketch parquet, enabling the distinct-count rewrite (approximate
-    * mode only).
+  /** Pair a raw-events parquet location with its summary parquet. */
+  def register(eventsPath: String, summaryPath: String): Unit = {
+    registerSet(Seq(eventsPath), summaryPath); ()
+  }
+
+  def unregister(eventsPath: String): Unit = unregisterSet(Set(norm(eventsPath)))
+
+  /** Pair a raw-events location with its [[graft.core.DistinctSummary]]
+    * sketch parquet, enabling the distinct-count rewrite.
     */
   def registerDistinct(eventsPath: String, sketchPath: String): Unit = {
-    registerDistinctSet(Seq(eventsPath), sketchPath); ()
+    registerSet(Seq(eventsPath), sketchPath, Pairing.Distinct); ()
   }
 
-  /** Multi-directory variant (a store's committed batch dirs), like
-    * [[registerSet]].
-    */
-  def registerDistinctSet(eventsPaths: Seq[String], sketchPath: String): Set[String] = {
-    val key = eventsPaths.map(norm).toSet
-    distinctRegistry.put(key, norm(sketchPath))
-    dfCache.clear()
-    key
-  }
+  def unregisterDistinct(eventsPath: String): Unit =
+    unregisterSet(Set(norm(eventsPath)), Pairing.Distinct)
 
-  def unregisterDistinct(eventsPath: String): Unit = unregisterDistinctSet(Set(norm(eventsPath)))
+  def registerFreqSet(eventsPaths: Seq[String], freqPath: String): Set[String] =
+    registerSet(eventsPaths, freqPath, Pairing.Freq)
 
-  def unregisterDistinctSet(key: Set[String]): Unit = {
-    distinctRegistry.remove(key)
-    dfCache.clear()
-  }
+  def unregisterFreqSet(key: Set[String]): Unit = unregisterSet(key, Pairing.Freq)
 
-  // Events root-path set -> windowed FreqSummary (bloom/cms/cand)
-  // parquet, enabling the CMS count rewrite (approximate mode only).
-  private val freqRegistry = new ConcurrentHashMap[Set[String], String]()
+  def registerQuantileSet(eventsPaths: Seq[String], qskPath: String): Set[String] =
+    registerSet(eventsPaths, qskPath, Pairing.Quantile)
 
-  /** Pair a raw-events location with its [[graft.core.FreqSummary]]
-    * table; multi-directory variant like [[registerSet]].
-    */
-  def registerFreqSet(eventsPaths: Seq[String], freqPath: String): Set[String] = {
-    val key = eventsPaths.map(norm).toSet
-    freqRegistry.put(key, norm(freqPath))
-    dfCache.clear()
-    key
-  }
+  def unregisterQuantileSet(key: Set[String]): Unit = unregisterSet(key, Pairing.Quantile)
 
-  def unregisterFreqSet(key: Set[String]): Unit = {
-    freqRegistry.remove(key)
-    dfCache.clear()
-  }
-
-  private[plans] def freqTableFor(relation: LogicalRelation): Option[String] =
+  /** The table `relation` is paired with under `pairing`, if any. */
+  private[plans] def tableFor(pairing: Pairing, relation: LogicalRelation): Option[String] =
     relation.relation match {
       case fs: HadoopFsRelation =>
-        Option(freqRegistry.get(fs.location.rootPaths.map(p => norm(p.toString)).toSet))
-      case _ => None
-    }
-
-  // Events root-path set -> windowed QuantileSummary (qsk) parquet,
-  // enabling the percentile rewrite (approximate mode only).
-  private val quantileRegistry = new ConcurrentHashMap[Set[String], String]()
-
-  /** Pair a raw-events location with its [[graft.core.QuantileSummary]]
-    * sketch table; multi-directory variant like [[registerSet]].
-    */
-  def registerQuantileSet(eventsPaths: Seq[String], qskPath: String): Set[String] = {
-    val key = eventsPaths.map(norm).toSet
-    quantileRegistry.put(key, norm(qskPath))
-    dfCache.clear()
-    key
-  }
-
-  def unregisterQuantileSet(key: Set[String]): Unit = {
-    quantileRegistry.remove(key)
-    dfCache.clear()
-  }
-
-  private[plans] def quantileTableFor(relation: LogicalRelation): Option[String] =
-    relation.relation match {
-      case fs: HadoopFsRelation =>
-        Option(quantileRegistry.get(fs.location.rootPaths.map(p => norm(p.toString)).toSet))
-      case _ => None
-    }
-
-  private[plans] def sketchFor(relation: LogicalRelation): Option[String] =
-    relation.relation match {
-      case fs: HadoopFsRelation =>
-        Option(distinctRegistry.get(fs.location.rootPaths.map(p => norm(p.toString)).toSet))
+        Option(registry.get((pairing, fs.location.rootPaths.map(p => norm(p.toString)).toSet)))
       case _ => None
     }
 
@@ -205,13 +168,6 @@ object SummaryRewrite {
     if (!injected && !existing.exists(_.isInstanceOf[SummaryRewriteRule]))
       spark.experimental.extraOptimizations = existing :+ SummaryRewriteRule(spark)
   }
-
-  private[plans] def summaryFor(relation: LogicalRelation): Option[String] =
-    relation.relation match {
-      case fs: HadoopFsRelation =>
-        Option(registry.get(fs.location.rootPaths.map(p => norm(p.toString)).toSet))
-      case _ => None
-    }
 }
 
 final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
@@ -235,18 +191,18 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
     case agg @ Aggregate(groupExprs, aggExprs, child, _) =>
       unwrap(child) match {
         case Some((rel, filterCond)) =>
-          SummaryRewrite.summaryFor(rel)
+          SummaryRewrite.tableFor(SummaryRewrite.Pairing.Summary, rel)
             .flatMap { summaryPath =>
               rewrite(agg, groupExprs, aggExprs, rel, filterCond, summaryPath)
                 .orElse(rewriteApprox(groupExprs, aggExprs, rel, filterCond, summaryPath))
             }
-            .orElse(SummaryRewrite.sketchFor(rel).flatMap { sketchPath =>
+            .orElse(SummaryRewrite.tableFor(SummaryRewrite.Pairing.Distinct, rel).flatMap { sketchPath =>
               rewriteDistinct(groupExprs, aggExprs, rel, filterCond, sketchPath)
             })
-            .orElse(SummaryRewrite.freqTableFor(rel).flatMap { freqPath =>
+            .orElse(SummaryRewrite.tableFor(SummaryRewrite.Pairing.Freq, rel).flatMap { freqPath =>
               rewriteFreqCount(groupExprs, aggExprs, rel, filterCond, freqPath)
             })
-            .orElse(SummaryRewrite.quantileTableFor(rel).flatMap { qskPath =>
+            .orElse(SummaryRewrite.tableFor(SummaryRewrite.Pairing.Quantile, rel).flatMap { qskPath =>
               rewriteQuantile(groupExprs, aggExprs, rel, filterCond, qskPath)
             })
             .getOrElse(agg)

@@ -3,6 +3,10 @@ package graft
 import graft.core._
 import graft.windowing.{DecayModel, ExponentialWindowing, PowerWindowing}
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.functions.max
 
 class CompactorSpec extends SparkSpec {
   import spark.implicits._
@@ -157,5 +161,26 @@ class CompactorSpec extends SparkSpec {
     val got = sw.collect().sortBy(_.cs)
     assert(got.map(_.cs).toSeq == want.toSeq)
     assert(got.map(_.count).sum == 1000.0)
+  }
+
+  test("hot-path plans keep their exchange counts: scalar summarize and the append re-coarsen") {
+    // SummaryDB.append runs exactly these two shapes on the scalar table;
+    // an extra shuffle here is an extra stage on every append.
+    val exp2 = ExponentialWindowing(2.0)
+    def exchanges(df: DataFrame): Int = {
+      df.collect() // AQE settles the final plan only once the query runs
+      new AdaptiveSparkPlanHelper {}
+        .collect(df.queryExecution.executedPlan) { case e: Exchange => e }.size
+    }
+    val events = mkEvents(0, 200).unionByName(mkEvents(0, 120, sid = 1L))
+    val summarized = exchanges(Summarizer.summarizePerStream(events, _ => exp2).toDF())
+    val dir = Files.createTempDirectory("graft_plan").toString
+    Summarizer.summarize(events, exp2).write.mode("overwrite").parquet(dir)
+    val old = spark.read.parquet(dir).as[SummaryWindow]
+    val base = old.groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
+    val fine = Compactor.fineWindows(mkEvents(0, 50, sid = 1L), base)
+    val recoarsened = exchanges(Compactor.recoarsen(old.unionByName(fine), _ => exp2).toDF())
+    assert(summarized == 3, s"summarize plan has $summarized exchanges")
+    assert(recoarsened == 5, s"re-coarsen plan has $recoarsened exchanges")
   }
 }

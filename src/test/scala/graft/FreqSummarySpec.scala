@@ -59,9 +59,7 @@ class FreqSummarySpec extends SparkSpec {
     val values = Seq(3.0, 1.0, 4.0, 1.0, 5.0, 9.0, 2.0, 6.0, 5.0, 3.0, 5.0)
     val events = stream(values)
     val localSpec = ExponentialWindowing(2.0) // local: the closure must not drag the suite in
-    val fine = FreqSummary.finePerElement(
-      events, FreqSummary.ExpectedItems, FreqSummary.Fpp,
-      FreqSummary.Eps, FreqSummary.Confidence)
+    val fine = FreqSummary.Kind.perElement(events.toDF())
     def sig(df: org.apache.spark.sql.DataFrame) = df
       .select($"streamId", $"cs", $"ce", xxhash64($"bloom").as("hb"), xxhash64($"cms").as("hc"))
       .collect()

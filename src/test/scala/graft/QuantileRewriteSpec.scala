@@ -96,4 +96,15 @@ class QuantileRewriteSpec extends SparkSpec {
       .agg(percentile_approx($"value", array(lit(0.5), lit(0.9)), lit(10000)).as("ps"))
     assert(plan(q).contains("/events"))
   }
+
+  test("clear() drops the quantile pairing with the others") {
+    def q = raw.groupBy($"streamId")
+      .agg(percentile_approx($"value", lit(0.5), lit(10000)).as("p50"))
+    assert(plan(q).contains("/qsk"))
+    SummaryRewrite.clear()
+    try {
+      val p = plan(q)
+      assert(p.contains("/events") && !p.contains("/qsk"), s"pairing survived clear():\n$p")
+    } finally SummaryRewrite.registerQuantileSet(Seq(eventsPath), qskPath)
+  }
 }
