@@ -3,6 +3,7 @@ package graft.core
 import graft.windowing.WindowingSpec
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.plans.SummaryRewrite
+import graft.sources.WriterLock
 import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,8 +55,8 @@ final class SummaryDB private (
     * and the losers' versions get pruned mid-read. So every public
     * mutating call (append/appendOnce/newStream/landmark ops/enable*)
     * holds `dir/_writer.lock` for the CALL's duration: acquired by
-    * atomic create-if-absent, token-checked on release, reentrant
-    * within the instance. A second concurrent writer fails loudly
+    * [[WriterLock.acquire]]'s atomic create-if-absent, token-checked on
+    * release, reentrant within the instance. A second concurrent writer fails loudly
     * instead of racing. Readers never take the lock — the `_SUCCESS`
     * resolution already guarantees they see only complete versions.
     *
@@ -66,39 +67,21 @@ final class SummaryDB private (
     * left an uncommitted batch worth inspecting) and is cleared with
     * [[SummaryDB.breakLock]].
     */
-  private val lockPath = new Path(p("_writer.lock"))
+  private val lockPath = WriterLock.lockPath(dir)
+  // Depth is per INSTANCE, not per thread (WriterLock.withLock's
+  // reentrancy): two SummaryDB values on one thread must exclude each
+  // other.
   private var lockDepth = 0
   private var lockToken: String = _
 
-  private def readLockHolder(): String =
-    try {
-      val in = fs.open(lockPath)
-      try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    } catch { case _: Throwable => "<unreadable>" }
-
   private[graft] def withWriteLock[T](body: => T): T = {
-    if (lockDepth == 0) {
-      val token = java.util.UUID.randomUUID().toString +
-        " pid=" + ProcessHandle.current().pid() + " at=" + System.currentTimeMillis()
-      fs.mkdirs(new Path(dir))
-      val out =
-        try fs.create(lockPath, false)
-        catch {
-          case _: java.io.IOException => throw new IllegalStateException(
-            s"SummaryDB at $dir is locked by another writer (${readLockHolder()}); " +
-              "wait for it, or clear a stale lock from a dead writer with SummaryDB.breakLock")
-        }
-      try out.write(token.getBytes("UTF-8")) finally out.close()
-      lockToken = token
-    }
+    if (lockDepth == 0) lockToken = WriterLock.acquire(fs, lockPath, s"SummaryDB at $dir")
     lockDepth += 1
     try body
     finally {
       lockDepth -= 1
       if (lockDepth == 0) {
-        // Token check: never delete a lock someone re-acquired after a
-        // breakLock of ours.
-        if (readLockHolder() == lockToken) fs.delete(lockPath, false)
+        WriterLock.release(fs, lockPath, lockToken)
         lockToken = null
       }
     }
@@ -824,9 +807,7 @@ object SummaryDB {
     * complete table versions, and an uncommitted events batch is
     * skipped by readers and recovered by the next appendOnce replay.
     */
-  def breakLock(spark: SparkSession, dir: String): Boolean = {
-    val lock = new Path(s"$dir/_writer.lock")
-    val fs = lock.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.exists(lock) && fs.delete(lock, false)
-  }
+  def breakLock(spark: SparkSession, dir: String): Boolean =
+    WriterLock.break(new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      WriterLock.lockPath(dir))
 }

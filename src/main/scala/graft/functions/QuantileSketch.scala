@@ -232,7 +232,7 @@ final class QSketch(k0: Int) extends Serializable with KryoSerializable {
   private[functions] def loadLevel(w: Long, flip: Boolean, vs: Array[Double], cnt: Int): Unit = {
     if (w == 1L) {
       if (cnt > 0) {
-        l1 = if (cnt > _k) vs else java.util.Arrays.copyOf(vs, _k + 1)
+        l1 = java.util.Arrays.copyOf(vs, math.max(cnt, _k) + 1) // a spare slot for the next add
         l1n = cnt
       }
       // empty stored weight-1 entries are dropped on read, matching the

@@ -115,7 +115,7 @@ object AnnIndex {
       rows = rows,
       dataFiles = vec.sum,
       pqFiles = pq.sum,
-      tombstones = readTombstones(spark, dir).fold(0L)(_.count()),
+      tombstones = tombstones(spark, dir).count(),
       hasPqSidecar = fs.exists(new org.apache.hadoop.fs.Path(codebooksPath(dir))),
       builtRows = builtRows,
       appendedFraction =
@@ -312,7 +312,7 @@ object AnnIndex {
     //    an old tombstone, never resurrect a takedown. Stream markers
     //    are generation state too: a fresh stream restarts batchIds at
     //    0, and a stale marker would silently skip its first batches.
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
+    tombstones(spark, dir).clear()
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_stream_commits"), true)
     fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_stream_staging"), true)
     fs.delete(staging, true)
@@ -386,8 +386,7 @@ object AnnIndex {
   def merge(spark: SparkSession, dir: String, otherDir: String): Long =
     withWriterLock(spark, dir) {
       checkLayout(fsFor(spark, otherDir), otherDir)
-      val other = minusTombstones(spark, otherDir,
-        spark.read.parquet(vectorsPath(otherDir)), on = "vec_id")
+      val other = tombstones(spark, otherDir).minus(spark.read.parquet(vectorsPath(otherDir)))
         .drop("cell")
         .withColumnRenamed("v", "embedding")
         .localCheckpoint() // one evaluation feeds the count and the append
@@ -426,47 +425,15 @@ object AnnIndex {
       ids: DataFrame,
       idCol: String = "vec_id"): Long = withWriterLock(spark, dir) {
     checkLayout(fsFor(spark, dir), dir)
-    val requested = ids.select(col(idCol).cast("long").as("vec_id")).distinct()
-      .localCheckpoint()
     // one semi scan of the index's id column — no shuffle of
-    // index-sized data. The ids frame is caller-supplied, so its
-    // broadcast rides the same guard as the query-batch hints.
-    val reqSide =
-      if (requested.count() * 56L <= Similarity.BroadcastGuardBytes) broadcast(requested)
-      else requested
-    val present = spark.read.parquet(vectorsPath(dir)).select("vec_id")
-      .join(reqSide, Seq("vec_id"), "left_semi")
-      .distinct()
-    val doomed = readTombstones(spark, dir)
-      .fold(present)(t =>
-        present.join(Similarity.guardedRowBroadcast(t), Seq("vec_id"), "left_anti"))
-      .localCheckpoint()
-    val n = doomed.count()
-    if (n > 0)
-      doomed.write.mode("append").parquet(s"$dir/tombstones")
-    n
+    // index-sized data
+    tombstones(spark, dir).add(spark.read.parquet(vectorsPath(dir)).select("vec_id")
+      .join(Tombstones.requested(ids, idCol, "vec_id"), Seq("vec_id"), "left_semi")
+      .distinct())
   }
 
-  /** The live tombstoned vec_ids, if any — takedown-sized, so callers
-    * broadcast the anti-join (under the guard) and candidate scans
-    * keep their shape. Under the tininess guard the set is read
-    * DRIVER-SIDE into a LocalRelation (sorted distinct ids — no Spark
-    * job for the read, the distinct, or the broadcast-guard count, the
-    * probe path's fixed latency floor); past the guard it falls back to
-    * the Spark read with identical semantics.
-    */
-  private def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else graft.sources.TinyParquet.longsIfTiny(
-      spark.sparkContext.hadoopConfiguration, p.toString, "vec_id") match {
-      case Some(ids) =>
-        import spark.implicits._
-        Some(spark.createDataset(ids.distinct.sorted.toSeq).toDF("vec_id"))
-      case None => Some(spark.read.parquet(p.toString).select("vec_id").distinct())
-    }
-  }
+  private def tombstones(spark: SparkSession, dir: String): Tombstones =
+    new Tombstones(spark, s"$dir/tombstones", Tombstones.longKey("vec_id"))
 
   /** The frozen center table, cell-ascending — a k-row driver-side
     * parquet read ([[graft.sources.TinyParquet]]): every probe and
@@ -478,13 +445,6 @@ object AnnIndex {
       .map(g => (g.getInteger("cell", 0),
         graft.sources.TinyParquet.doubleArray(g, "center")))
       .sortBy(_._1).map(_._2).toArray
-
-  /** Exclude tombstoned vectors from a candidate frame keyed by `on`. */
-  private def minusTombstones(
-      spark: SparkSession, dir: String, df: DataFrame, on: String): DataFrame =
-    readTombstones(spark, dir).fold(df)(t =>
-      df.join(Similarity.guardedRowBroadcast(t.withColumnRenamed("vec_id", on)),
-        Seq(on), "left_anti"))
 
   /** The filterable metadata columns this index stores beside the
     * vectors — everything in `vectors/` that is not the id, the vector
@@ -569,7 +529,8 @@ object AnnIndex {
     // With live tombstones both trees are always rewritten (the
     // minFiles shortcut is disabled): a tombstoned row may sit in ANY
     // cell, and physical retirement is the point of this compact.
-    val tomb = readTombstones(spark, dir).map(_.localCheckpoint())
+    val tombs = tombstones(spark, dir)
+    val retiring = tombs.live.isDefined
     def dataFiles(p: org.apache.hadoop.fs.Path) =
       fs.listStatus(p).filter { st =>
         st.isFile && !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
@@ -607,7 +568,7 @@ object AnnIndex {
         .filter(cd => dataFiles(cd.getPath).length >= minFiles)
         .map(cd => cd.getPath.getName.stripPrefix("cell=").toInt)
         .sorted
-    if (tomb.isEmpty && trees.forall(fragmentedCells(_).isEmpty)) trees.map(countTree).sum
+    if (!retiring && trees.forall(fragmentedCells(_).isEmpty)) trees.map(countTree).sum
     else {
       // One Spark job per tree, however many cells: read, retire
       // tombstones, rewrite, swap. With live tombstones the WHOLE tree
@@ -625,14 +586,14 @@ object AnnIndex {
         // None = whole-tree rewrite + root swap: required for tombstone
         // retirement, and cheaper than per-cell swaps when every cell
         // is fragmented anyway (fresh-build salt, heavy streaming).
-        val frag = if (tomb.isDefined) Array.empty[Int] else fragmentedCells(root)
+        val frag = if (retiring) Array.empty[Int] else fragmentedCells(root)
         // Full-tree rewrite + root swap when: retiring tombstones (a
         // doomed row may sit anywhere), every cell is fragmented (one
         // rename beats per-cell swaps), or the fragmented set is too
         // large to push as an `isin` partition filter (a 32k-literal
         // list bloats the plan past what it saves).
         val only =
-          if (tomb.isDefined ||
+          if (retiring ||
               (cds.nonEmpty && frag.length == cds.length) ||
               frag.length > 4096) None
           else Some(frag)
@@ -646,8 +607,7 @@ object AnnIndex {
           val all = spark.read.parquet(root.toString)
           val src = only.fold(all)(cs =>
             all.filter(col("cell").isin(cs.map(Integer.valueOf).toIndexedSeq: _*)))
-          val live = tomb.fold(src)(t =>
-            src.join(Similarity.guardedRowBroadcast(t), Seq("vec_id"), "left_anti"))
+          val live = tombs.minus(src)
           live.repartition(col("cell"), pmod(hash(col("vec_id")), lit(nSalt)))
             .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
           graft.sources.SwapHooks.preSwap(root.toString)
@@ -674,8 +634,7 @@ object AnnIndex {
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_compact_old"), true)
       // Tombstones now physically retired from both trees — clear them.
-      if (tomb.isDefined)
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
+      if (retiring) tombs.clear()
       total
     }
   }
@@ -743,10 +702,10 @@ object AnnIndex {
     val probeRows = cellCounts.map(_._2).sum
     val scan0 = spark.read.parquet(vectorsPath(dir))
       .filter($"cell".isin(probedCells.map(Integer.valueOf).toIndexedSeq: _*))
-    val vectors = minusTombstones(spark, dir,
+    val vectors = tombstones(spark, dir).minus(
       filter.fold(scan0)(scan0.filter)
         .select($"vec_id".as("neighbor_id"), $"v".as("nv"), $"cell"),
-      on = "neighbor_id")
+      "neighbor_id")
     // The broadcast hint bypasses Spark's size threshold, so guard it:
     // the exploded probe frame is Q * nProbe rows EACH carrying the
     // full query vector — a large query batch would OOM executors as a
@@ -902,9 +861,7 @@ object AnnIndex {
     // filter pushes into the partition-pruned parquet read.
     val codesScan0 = spark.read.parquet(pqcodesPath(dir))
       .filter($"cell".isin(probedCells.map(Integer.valueOf).toIndexedSeq: _*))
-    val codesDf = minusTombstones(spark, dir,
-      filter.fold(codesScan0)(codesScan0.filter),
-      on = "vec_id")
+    val codesDf = tombstones(spark, dir).minus(filter.fold(codesScan0)(codesScan0.filter))
     // Broadcast guard, as in [[topK]]: the probe frame is Q * nProbe
     // rows each carrying an m * codes float LUT.
     val m = books.length

@@ -443,7 +443,7 @@ object Bm25Index {
       // Generation state: a rebuild starts with every given doc live,
       // and a fresh stream restarts batchIds at 0 — stale markers would
       // silently skip its first batches.
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
+      tombstones(spark, dir).clear()
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_stream_commits"), true)
       fs.delete(new org.apache.hadoop.fs.Path(s"$dir/_stream_staging"), true)
       fs.delete(staging, true)
@@ -591,41 +591,15 @@ object Bm25Index {
       ids: DataFrame,
       idCol: String = "doc_id"): Long = withWriterLock(spark, dir) {
     checkIndex(spark, dir)
-    val requested = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .localCheckpoint()
-    val reqSide =
-      if (requested.count() * 56L <= Similarity.BroadcastGuardBytes) broadcast(requested)
-      else requested
     // One column-pruned semi scan of the postings' doc_id column; the
     // distinct is takedown-bounded (post-semi).
-    val present = spark.read.parquet(postingsPath(dir)).select("doc_id")
-      .join(reqSide, Seq("doc_id"), "left_semi")
-      .distinct()
-    val doomed = readTombstones(spark, dir)
-      .fold(present)(t =>
-        present.join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
-      .localCheckpoint()
-    val n = doomed.count()
-    if (n > 0)
-      doomed.write.mode("append").parquet(s"$dir/tombstones")
-    n
+    tombstones(spark, dir).add(spark.read.parquet(postingsPath(dir)).select("doc_id")
+      .join(Tombstones.requested(ids, idCol, "doc_id"), Seq("doc_id"), "left_semi")
+      .distinct())
   }
 
-  private def readTombstones(spark: SparkSession, dir: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/tombstones")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    // takedown-sized: under the tininess guard the ids read DRIVER-SIDE
-    // into a LocalRelation (no read/distinct/guard-count jobs on the
-    // probe path); past it, the Spark read — identical distinct set
-    else graft.sources.TinyParquet.longsIfTiny(
-      spark.sparkContext.hadoopConfiguration, p.toString, "doc_id") match {
-      case Some(ids) =>
-        import spark.implicits._
-        Some(spark.createDataset(ids.distinct.sorted.toSeq).toDF("doc_id"))
-      case None => Some(spark.read.parquet(p.toString).select("doc_id").distinct())
-    }
-  }
+  private def tombstones(spark: SparkSession, dir: String): Tombstones =
+    new Tombstones(spark, s"$dir/tombstones", Tombstones.longKey("doc_id"))
 
   /** Physically retire tombstoned docs and re-collapse the delta
     * tables: ONE job per table (postings minus tombstones, df and
@@ -683,11 +657,8 @@ object Bm25Index {
           "— a crashed ingest attempt is pending redelivery; let the stream recover, then compact")
     val staging = new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp")
     fs.delete(staging, true)
-    val tomb = readTombstones(spark, dir)
-    val live = tomb.fold(spark.read.parquet(postingsPath(dir)))(t =>
-      spark.read.parquet(postingsPath(dir))
-        .join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
-      .localCheckpoint()
+    val tombs = tombstones(spark, dir)
+    val live = tombs.minus(spark.read.parquet(postingsPath(dir))).localCheckpoint()
     // Stats aggregation FIRST: its n_docs doubles as the zero-live
     // check (one job instead of a separate isEmpty round trip).
     val (nDocs, sumDl) = statsAggOf(spark, live)
@@ -731,7 +702,7 @@ object Bm25Index {
       new org.apache.hadoop.fs.Path(s"$dir/_compact_tmp/lex"),
       new org.apache.hadoop.fs.Path(lexPath(dir)),
       new org.apache.hadoop.fs.Path(s"$dir/_compact_old"))
-    fs.delete(new org.apache.hadoop.fs.Path(s"$dir/tombstones"), true)
+    tombs.clear()
     fs.delete(staging, true)
     invalidateProbeCache(dir)
     nDocs
@@ -755,9 +726,7 @@ object Bm25Index {
       val meta = indexMetaCols(spark, dir)
       val otherPosts = spark.read.parquet(postingsPath(otherDir))
       requireMeta(otherPosts, meta, dir)
-      val live = readTombstones(spark, otherDir)
-        .fold(otherPosts)(t =>
-          otherPosts.join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
+      val live = tombstones(spark, otherDir).minus(otherPosts)
         .select(Seq(col("term"), col("doc_id"), col("tf"), col("dl")) ++
           meta.map(col): _*)
         .withColumn("tb", tbOf(col("term"), nTb)) // THIS index's bucketing
@@ -829,7 +798,7 @@ object Bm25Index {
       if (nTermsSum >= 0L) nTermsSum
       else spark.read.parquet(dfdPath(dir))
         .agg(count_distinct($"term")).as[Long].head()
-    val tombCount = readTombstones(spark, dir).fold(0L)(_.count())
+    val tombCount = tombstones(spark, dir).count()
     IndexStats(
       docs = nDocs - tombCount,
       terms = nTerms,
@@ -1372,9 +1341,7 @@ object Bm25Index {
       .join(qtSide, "term")
     // Takedowns vanish immediately: candidate-bounded anti-join against
     // the (guarded-broadcast, takedown-sized) tombstone set.
-    val cands = readTombstones(spark, dir)
-      .fold(cands0)(t =>
-        cands0.join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
+    val cands = tombstones(spark, dir).minus(cands0)
     // Fused sum+rank ([[Similarity.sumRankTopKMicro]]): the exhaustive
     // candidate stream's (query, doc) keys are near-unique (each doc
     // matches most queries on one term), so the old
@@ -1660,7 +1627,7 @@ object Bm25Index {
         nDocs, avgdl, rep, preTermStats = Some(termStats),
         qtPairs = Some(qtPairsAll))
     rep.path = "pruned"
-    val tombSide = readTombstones(spark, dir).map(Similarity.guardedRowBroadcast(_))
+    val tombs = tombstones(spark, dir)
     // Exact scores of a (query, term, block-mask) pair list against
     // the postings: bucket-pruned scan, pushed term filter, metadata
     // filter pushed, the mask tested in-scan against the posting's
@@ -1710,7 +1677,7 @@ object Bm25Index {
         masked.join(s._2, Seq("query_id", "doc_id"), "left_semi"))
       val cands =
         if (surv.isDefined) paired
-        else tombSide.fold(paired)(t => paired.join(t, Seq("doc_id"), "left_anti"))
+        else tombs.minus(paired)
       cands.select($"query_id", $"doc_id",
           Bm25.contribMicro($"tf", $"dl", lit(avgdl), $"idf_micro", k1, b).as("c_micro"))
         .groupBy("query_id", "doc_id")

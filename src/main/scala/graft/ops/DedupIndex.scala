@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructType}
 
 import graft.sources.BucketedLayout
 
@@ -64,9 +65,10 @@ object DedupIndex {
   /** Catalog-root lookups run on the PROBE path too (the per-call
     * tombstone check), and `getTableMetadata` is a driver round-trip —
     * cache the root per table name for probes. Every mutator refreshes
-    * the entry from the catalog, so the worst staleness is one probe
-    * reading the previous location's tombstones after an out-of-band
-    * re-registration.
+    * the entry from the catalog, and a registered tombstone table is
+    * read from its own catalog location ([[Tombstones]]), so an
+    * out-of-band re-registration never serves the previous location's
+    * takedowns.
     */
   private val rootCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.hadoop.fs.Path]()
@@ -96,7 +98,7 @@ object DedupIndex {
     IndexStats(
       hashes = spark.table(table).count(),
       dataFiles = files.toLong,
-      tombstones = tombstones(spark, table).fold(0L)(_.count()))
+      tombstones = tombstones(spark, table).count())
   }
 
   /** The index root — the parent of the bucketed table's directory,
@@ -108,57 +110,18 @@ object DedupIndex {
     else rootCache.computeIfAbsent(table, _ => freshRoot(spark, table))
   }
 
-  /** The live tombstone set, if any: (text_hash, keep_id) rows retired
-    * from probe visibility but not yet physically removed. Tombstones
-    * are stored EXTERNAL under `<dir>/tombstones` — they are index
-    * state, not session state: a fresh session that re-registers the
-    * index must still see the takedowns, so a missing catalog entry
-    * falls back to the path.
+  /** The (text_hash, keep_id) takedown set under `<dir>/tombstones`
+    * (`dir` null: the catalog-derived root), registered as
+    * [[tombstonesTable]]. Subtracting it keeps the index side's
+    * bucketed partitioning (broadcast anti-join, no new exchange).
     */
-  private def tombstones(spark: SparkSession, table: String): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(indexRoot(spark, table), "tombstones")
-    val files = graft.sources.TinyParquet.dataFiles(conf, p.toString)
-    // takedown-sized: under the tininess guard the pairs read
-    // DRIVER-SIDE into a LocalRelation (the catalog table is external
-    // over exactly this path) — no read/distinct/guard-count jobs on
-    // the probe path; past the guard, the Spark read
-    if (files.nonEmpty && files.map(_.getLen).sum <= (8L << 20)) {
-      import spark.implicits._
-      val rows = graft.sources.TinyParquet.rows(conf, p.toString).iterator
-        .map(g => (g.getString("text_hash", 0), g.getLong("keep_id", 0)))
-        .toSeq.distinct.sorted
-      Some(spark.createDataset(rows).toDF("text_hash", "keep_id"))
-    } else if (spark.catalog.tableExists(tombstonesTable(table)))
-      Some(spark.table(tombstonesTable(table)).select("text_hash", "keep_id").distinct())
-    else {
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) None
-      else Some(spark.read.parquet(p.toString).select("text_hash", "keep_id").distinct())
-    }
+  private def tombstones(spark: SparkSession, table: String, dir: String = null): Tombstones = {
+    val root = if (dir != null) new org.apache.hadoop.fs.Path(dir) else indexRoot(spark, table)
+    new Tombstones(spark, new org.apache.hadoop.fs.Path(root, "tombstones").toString,
+      new StructType().add("text_hash", StringType, nullable = false)
+        .add("keep_id", LongType, nullable = false),
+      Some(tombstonesTable(table)), perRowBytes = 64L)
   }
-
-  /** Drop the tombstone catalog entry AND its files (the table is
-    * external, so DROP TABLE alone would leave the files to resurrect
-    * in the next session).
-    */
-  private def clearTombstones(spark: SparkSession, table: String,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${tombstonesTable(table)}")
-    val p = new org.apache.hadoop.fs.Path(root, "tombstones")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-  }
-
-  /** Exclude tombstoned rows from an index frame. Tombstone sets are
-    * takedown-sized (small by nature), so the anti-join broadcasts —
-    * under the guard — and the index side keeps its bucketed
-    * partitioning: no new exchange.
-    */
-  private def minusTombstones(
-      spark: SparkSession, table: String, index: DataFrame): DataFrame =
-    tombstones(spark, table).fold(index)(t =>
-      index.join(Similarity.guardedRowBroadcast(t, perRowBytes = 64L),
-        Seq("text_hash", "keep_id"), "left_anti"))
 
   /** Tombstone every index row whose `keep_id` is in `ids` — the
     * takedown path (copyright, PII, robots retroactivity). Effects:
@@ -175,34 +138,10 @@ object DedupIndex {
       table: String,
       ids: DataFrame,
       idCol: String = "doc_id"): Long = withWriterLock(spark, null, table) {
-    val keep = ids.select(col(idCol).cast("long").as("keep_id")).distinct()
-      .localCheckpoint()
-    // The ids frame is caller-supplied — broadcast only under the
-    // guard; already-tombstoned rows don't re-count (a redelivered
-    // takedown batch is a counted-once no-op, not tombstone growth).
-    val keepSide =
-      if (keep.count() * 56L <= Similarity.BroadcastGuardBytes) broadcast(keep)
-      else keep
-    val matched = spark.table(table)
-      .join(keepSide, "keep_id")
+    tombstones(spark, table).add(spark.table(table)
+      .join(Tombstones.requested(ids, idCol, "keep_id"), "keep_id")
       .select(col("text_hash"), col("keep_id"))
-      .distinct()
-    val doomed = tombstones(spark, table)
-      .fold(matched)(t =>
-        matched.join(Similarity.guardedRowBroadcast(t, perRowBytes = 64L),
-          Seq("text_hash", "keep_id"), "left_anti"))
-      .localCheckpoint()
-    val n = doomed.count()
-    if (n > 0) {
-      // External table at <dir>/tombstones. A fresh session appends to
-      // the EXISTING files (the path read in [[tombstones]] already
-      // honors them); only the catalog entry is (re)created here.
-      val p = new org.apache.hadoop.fs.Path(indexRoot(spark, table), "tombstones")
-      doomed.write.mode(SaveMode.Append).format("parquet")
-        .option("path", p.toString)
-        .saveAsTable(tombstonesTable(table))
-    }
-    n
+      .distinct())
   }
 
   /** Build the index from a seed corpus: one row per distinct
@@ -230,7 +169,7 @@ object DedupIndex {
       // clear a probe can transiently treat re-ingested deleted content
       // as new; it never resurrects a takedown against the old
       // generation, which clearing FIRST would).
-      clearTombstones(spark, table, new org.apache.hadoop.fs.Path(dir))
+      tombstones(spark, table, dir).clear()
     }
 
   /** Rows of `batch` whose content is NOT in the index, one survivor
@@ -250,8 +189,8 @@ object DedupIndex {
       textCol: String = "text",
       idCol: String = "doc_id"): DataFrame = {
     val cols = batch.columns
-    val seen = minusTombstones(spark, table,
-      BucketedLayout.readBucketed(spark, table).select("text_hash", "keep_id"))
+    val seen = tombstones(spark, table)
+      .minus(BucketedLayout.readBucketed(spark, table).select("text_hash", "keep_id"))
       .select("text_hash")
     batch
       .withColumn("text_hash", hashOf(textCol))
@@ -318,7 +257,7 @@ object DedupIndex {
       // every ingest history exactly once. The per-side groupBy reuses
       // the bucketed partitioning — no exchange.
       def liveCollapsed(t: String): DataFrame =
-        minusTombstones(spark, t, spark.table(t))
+        tombstones(spark, t).minus(spark.table(t))
           .groupBy("text_hash")
           .agg(max("n_dups").as("n_dups"), min("keep_id").as("keep_id"))
       val total = BucketedLayout.writeBucketedSwap(
@@ -331,7 +270,7 @@ object DedupIndex {
       // (cleared after the swap, the compact contract); the other
       // index's tombstones were honored by reading only its live rows
       // and belong to IT — untouched.
-      clearTombstones(spark, table, new org.apache.hadoop.fs.Path(dir))
+      tombstones(spark, table, dir).clear()
       total
     }
 
@@ -365,13 +304,13 @@ object DedupIndex {
     // resurrect through a later re-ingest row of the same hash.
     val total = BucketedLayout.writeBucketedSwap(
       spark,
-      minusTombstones(spark, table, spark.table(table))
+      tombstones(spark, table).minus(spark.table(table))
         .groupBy("text_hash")
         .agg(max("n_dups").as("n_dups"), min("keep_id").as("keep_id")),
       table, s"$dir/hashes", "text_hash", nBuckets)
     // Tombstones are now physically retired — clear them so a LATER
     // re-ingest of a deleted keeper id is not retroactively hidden.
-    clearTombstones(spark, table, new org.apache.hadoop.fs.Path(dir))
+    tombstones(spark, table, dir).clear()
     total
     }
 }

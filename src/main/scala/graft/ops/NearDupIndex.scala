@@ -75,7 +75,7 @@ object NearDupIndex {
         if (spark.catalog.tableExists(droppedTable(prefix)))
           spark.table(droppedTable(prefix)).count()
         else 0L,
-      tombstones = tombstones(spark, prefix).fold(0L)(_.count()))
+      tombstones = tombstones(spark, prefix).count())
   }
 
   /** Single-writer lock (see [[graft.sources.WriterLock]]) on
@@ -116,86 +116,33 @@ object NearDupIndex {
     else rootCache.computeIfAbsent(prefix, _ => freshRoot(spark, prefix))
   }
 
-  /** The live tombstone set, if any: indexed doc_ids retired from
-    * probe visibility but not yet physically removed. Stored EXTERNAL
-    * under `<dir>/tombstones` — index state, not session state: a
-    * fresh session that re-registers the index must still see the
-    * takedowns, so a missing catalog entry falls back to the path.
+  /** The doc_id takedown set under `<dir>/tombstones` (`dir` null: the
+    * catalog-derived root), registered as [[tombstonesTable]].
     */
-  private def tombstones(spark: SparkSession, prefix: String): Option[DataFrame] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(indexRoot(spark, prefix), "tombstones")
-    // takedown-sized: under the tininess guard the ids read DRIVER-SIDE
-    // into a LocalRelation (the catalog table is external over exactly
-    // this path) — no read/distinct/guard-count jobs on the probe path
-    graft.sources.TinyParquet.longsIfTiny(conf, p.toString, "doc_id") match {
-      case Some(ids) =>
-        import spark.implicits._
-        Some(spark.createDataset(ids.distinct.sorted.toSeq).toDF("doc_id"))
-      case None if spark.catalog.tableExists(tombstonesTable(prefix)) =>
-        Some(spark.table(tombstonesTable(prefix)).select("doc_id").distinct())
-      case None =>
-        val fs = p.getFileSystem(conf)
-        if (!fs.exists(p)) None
-        else Some(spark.read.parquet(p.toString).select("doc_id").distinct())
-    }
-  }
-
-  /** Drop the tombstone catalog entry AND its files (external table —
-    * DROP TABLE alone leaves the files to resurrect next session).
-    */
-  private def clearTombstones(spark: SparkSession, prefix: String,
-      root: org.apache.hadoop.fs.Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS ${tombstonesTable(prefix)}")
-    val p = new org.apache.hadoop.fs.Path(root, "tombstones")
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+  private def tombstones(spark: SparkSession, prefix: String, dir: String = null): Tombstones = {
+    val root = if (dir != null) new org.apache.hadoop.fs.Path(dir) else indexRoot(spark, prefix)
+    new Tombstones(spark, new org.apache.hadoop.fs.Path(root, "tombstones").toString,
+      Tombstones.longKey("doc_id"), Some(tombstonesTable(prefix)))
   }
 
   /** Tombstone indexed documents by id — the takedown path. A
     * tombstoned doc is never returned by [[probePairs]] (so
     * [[filterNovel]]/[[ingest]] treat a re-crawl of its content as
     * novel), and its postings/shingles are physically removed at the
-    * next [[compact]]. Returns the count of distinct ids tombstoned.
+    * next [[compact]]. Returns the count of distinct ids tombstoned
+    * (ids not indexed or already tombstoned do not count); the semi
+    * runs against the doc_id-bucketed shingles table — no index-sized
+    * shuffle.
     */
   def delete(
       spark: SparkSession,
       tablePrefix: String,
       ids: DataFrame,
       idCol: String = "doc_id"): Long = withWriterLock(spark, null, tablePrefix) {
-    val requested = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .localCheckpoint()
-    // count only ids actually indexed AND not already tombstoned
-    // ([[DedupIndex.delete]] semantics, counted-once on redelivery);
-    // semi against the doc_id-bucketed shingles table — no index-sized
-    // shuffle. The caller-supplied ids broadcast only under the guard.
-    val reqSide =
-      if (requested.count() * 56L <= Similarity.BroadcastGuardBytes) broadcast(requested)
-      else requested
-    val present = spark.table(shinglesTable(tablePrefix)).select("doc_id")
-      .join(reqSide, Seq("doc_id"), "left_semi")
-      .distinct()
-    val doomed = tombstones(spark, tablePrefix)
-      .fold(present)(t =>
-        present.join(Similarity.guardedRowBroadcast(t), Seq("doc_id"), "left_anti"))
-      .localCheckpoint()
-    val n = doomed.count()
-    if (n > 0) {
-      val p = new org.apache.hadoop.fs.Path(indexRoot(spark, tablePrefix), "tombstones")
-      doomed.write.mode(SaveMode.Append).format("parquet")
-        .option("path", p.toString)
-        .saveAsTable(tombstonesTable(tablePrefix))
-    }
-    n
+    tombstones(spark, tablePrefix).add(spark.table(shinglesTable(tablePrefix)).select("doc_id")
+      .join(Tombstones.requested(ids, idCol, "doc_id"), Seq("doc_id"), "left_semi")
+      .distinct())
   }
-
-  /** Exclude tombstoned indexed docs (small takedown sets — broadcast
-    * under the guard, no new exchange on the index side).
-    */
-  private def minusTombstones(
-      spark: SparkSession, prefix: String, df: DataFrame, on: String): DataFrame =
-    tombstones(spark, prefix).fold(df)(t =>
-      df.join(Similarity.guardedRowBroadcast(t.withColumnRenamed("doc_id", on)),
-        Seq(on), "left_anti"))
 
   /** (doc_id, bb) postings of `docs` under the shared banding. */
   private def postings(docs: DataFrame, textCol: String, idCol: String, k: Int): DataFrame =
@@ -256,7 +203,7 @@ object NearDupIndex {
     // AFTER the swaps — between swap and clear a probe can transiently
     // miss a pair against a re-indexed deleted doc (conservative), but
     // never resurrect a takedown against the OLD generation.
-    clearTombstones(spark, tablePrefix, new org.apache.hadoop.fs.Path(dir))
+    tombstones(spark, tablePrefix, dir).clear()
   }
 
   /** Append a batch's postings and shingles to the index (no cap
@@ -296,13 +243,13 @@ object NearDupIndex {
     // Tombstoned docs drop out at candidate time — before the shingle
     // joins, so a takedown also stops paying verification cost.
     val (sh, post) = shAndPostings(batch, textCol, idCol, k)
-    val cands = minusTombstones(spark, tablePrefix,
+    val cands = tombstones(spark, tablePrefix).minus(
       post
         .select(col("doc_id").as("doc_b"), col("bb"))
         .join(spark.table(bucketsTable(tablePrefix)), "bb")
         .select(col("doc_id").as("doc_a"), col("doc_b"))
         .distinct(),
-      on = "doc_a")
+      "doc_a")
     cands
       .join(spark.table(shinglesTable(tablePrefix))
         .select(col("doc_id").as("doc_a"), col("shh").as("ha")), "doc_a")
@@ -408,10 +355,9 @@ object NearDupIndex {
       dir: String,
       otherPrefix: String,
       maxBucket: Int = 64): Long = withWriterLock(spark, dir, tablePrefix) {
-    val post = minusTombstones(spark, tablePrefix,
-        spark.table(bucketsTable(tablePrefix)), on = "doc_id")
-      .unionByName(minusTombstones(spark, otherPrefix,
-        spark.table(bucketsTable(otherPrefix)), on = "doc_id"))
+    val (mine, theirs) = (tombstones(spark, tablePrefix), tombstones(spark, otherPrefix))
+    val post = mine.minus(spark.table(bucketsTable(tablePrefix)))
+      .unionByName(theirs.minus(spark.table(bucketsTable(otherPrefix))))
       .distinct().localCheckpoint()
     def droppedOf(p: String): Option[DataFrame] =
       if (spark.catalog.tableExists(droppedTable(p))) Some(spark.table(droppedTable(p)))
@@ -428,10 +374,8 @@ object NearDupIndex {
     val freshDropped = sizes.filter(col("n_docs") > maxBucket)
     val droppedDf = carried.fold(freshDropped)(c =>
       c.unionByName(freshDropped).groupBy("bb").agg(max(col("n_docs")).as("n_docs")))
-    val shingles = minusTombstones(spark, tablePrefix,
-        spark.table(shinglesTable(tablePrefix)), on = "doc_id")
-      .unionByName(minusTombstones(spark, otherPrefix,
-        spark.table(shinglesTable(otherPrefix)), on = "doc_id"))
+    val shingles = mine.minus(spark.table(shinglesTable(tablePrefix)))
+      .unionByName(theirs.minus(spark.table(shinglesTable(otherPrefix))))
       .groupBy("doc_id").agg(min(col("shh")).as("shh"))
     val nb = tableBuckets(spark, bucketsTable(tablePrefix))
     val staged = Seq(
@@ -445,7 +389,7 @@ object NearDupIndex {
     val total = staged.map(BucketedLayout.swapInStaged(spark, _)).sum
     // This side's tombstones are physically retired by the rewrite;
     // the other shard's belong to it and are untouched.
-    clearTombstones(spark, tablePrefix, new org.apache.hadoop.fs.Path(dir))
+    tombstones(spark, tablePrefix, dir).clear()
     total
   }
 
@@ -464,8 +408,8 @@ object NearDupIndex {
     // Tombstoned docs are dropped from BOTH tables before the rewrite
     // — physical retirement of takedowns rides the same pass as the
     // small-file collapse.
-    val post = minusTombstones(spark, tablePrefix,
-      spark.table(bucketsTable(tablePrefix)).distinct(), on = "doc_id")
+    val tombs = tombstones(spark, tablePrefix)
+    val post = tombs.minus(spark.table(bucketsTable(tablePrefix)).distinct())
       .localCheckpoint()
     val sizes = post.groupBy("bb").agg(count(lit(1)).as("n_docs")).localCheckpoint()
     val kept = post.join(
@@ -492,8 +436,7 @@ object NearDupIndex {
       BucketedLayout.stageBucketed(spark, kept,
         bucketsTable(tablePrefix), s"$dir/buckets", "bb", nb),
       BucketedLayout.stageBucketed(spark,
-        minusTombstones(spark, tablePrefix,
-          spark.table(shinglesTable(tablePrefix)), on = "doc_id")
+        tombs.minus(spark.table(shinglesTable(tablePrefix)))
           .groupBy("doc_id").agg(min(col("shh")).as("shh")),
         shinglesTable(tablePrefix), s"$dir/shingles", "doc_id", nb),
       BucketedLayout.stageBucketed(spark, droppedDf,
@@ -501,7 +444,7 @@ object NearDupIndex {
     graft.sources.SwapHooks.preSwap(dir)
     val total = staged.map(BucketedLayout.swapInStaged(spark, _)).sum
     // Retired physically — clear, so the ids can be reused as new docs.
-    clearTombstones(spark, tablePrefix, new org.apache.hadoop.fs.Path(dir))
+    tombstones(spark, tablePrefix, dir).clear()
     total
   }
 

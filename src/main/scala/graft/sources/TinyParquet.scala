@@ -49,23 +49,6 @@ private[graft] object TinyParquet {
       finally reader.close()
     }
 
-  /** One long column of a table known to be under `maxBytes` of data —
-    * `None` when the table is over the guard (caller falls back to a
-    * Spark read) or absent. Missing/null cells are skipped.
-    */
-  def longsIfTiny(
-      conf: Configuration,
-      dirStr: String,
-      column: String,
-      maxBytes: Long = 8L << 20): Option[Array[Long]] = {
-    val files = dataFiles(conf, dirStr)
-    if (files.isEmpty || files.map(_.getLen).sum > maxBytes) None
-    else Some(rows(conf, dirStr).iterator
-      .filter(g => g.getType.containsField(column) && g.getFieldRepetitionCount(column) > 0)
-      .map(_.getLong(column, 0))
-      .toArray)
-  }
-
   /** Write ONE flat row as a parquet data file under `dirStr` —
     * driver-side, no Spark job. The metadata tables this serves (index
     * meta rows, per-mutation stats deltas, buildinfo) are one row each,

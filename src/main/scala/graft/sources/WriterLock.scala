@@ -78,25 +78,29 @@ object WriterLock {
         try body
         finally m(key) = (m(key)._1 - 1, token)
       case None =>
-        val token = java.util.UUID.randomUUID().toString +
-          " pid=" + ProcessHandle.current().pid() + " at=" + System.currentTimeMillis()
-        fs.mkdirs(lock.getParent)
-        acquire(fs, lock, what, token)
+        val token = acquire(fs, lock, what)
         m(key) = (1, token)
         try body
         finally {
           m.remove(key)
-          if (holder(fs, lock) == token) fs.delete(lock, false)
+          release(fs, lock, token)
         }
     }
   }
+
+  /** Delete `lock` only if it still holds `token` — never a lock
+    * someone re-acquired after a [[break]] of ours.
+    */
+  private[graft] def release(fs: FileSystem, lock: Path, token: String): Unit =
+    if (holder(fs, lock) == token) fs.delete(lock, false)
 
   private def lockedBy(fs: FileSystem, lock: Path, what: String) =
     new IllegalStateException(
       s"$what is locked by another writer (${holder(fs, lock)}); " +
         "wait for it, or clear a stale lock from a dead writer with WriterLock.break")
 
-  /** Create the lock file with the token inside, atomically-if-absent.
+  /** Create the lock file with a fresh holder token (uuid, pid,
+    * acquisition time) inside, atomically-if-absent; returns the token.
     *
     * Only "already exists" maps to the locked-by-another-writer error;
     * any OTHER IOException (permissions, quota, transient FS failure)
@@ -107,7 +111,10 @@ object WriterLock {
     * empty lock with no holder bookkeeping would wedge every later
     * mutator until a manual break).
     */
-  private def acquire(fs: FileSystem, lock: Path, what: String, token: String): Unit =
+  private[graft] def acquire(fs: FileSystem, lock: Path, what: String): String = {
+    val token = java.util.UUID.randomUUID().toString +
+      " pid=" + ProcessHandle.current().pid() + " at=" + System.currentTimeMillis()
+    fs.mkdirs(lock.getParent)
     if (fs.getUri.getScheme == "file") {
       // Hadoop's local create(overwrite=false) is exists-check-then-
       // create — two processes can both win. O_EXCL via nio is atomic.
@@ -185,6 +192,8 @@ object WriterLock {
           }
       }
     }
+    token
+  }
 
   /** Forcibly clear a stale lock left by a dead writer. Returns true
     * when a lock file was removed.

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Bisect harness for the deep-scale cliff: replays the bench's exact
   * pre-deep sequence (warm-up, big pairTimed, base persist, fleet
@@ -13,17 +13,8 @@ import org.apache.spark.sql.SparkSession
 object DeepBisect {
   def main(args: Array[String]): Unit = {
     val stages = if (args.nonEmpty) args.toSet else Set("warm", "big", "fleet", "deep1g")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     import spark.implicits._
     import org.apache.spark.sql.functions._
 

@@ -1,18 +1,14 @@
 package graft.tools
 
 import graft.core._
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Library usage sample: the SummaryDB public API end-to-end.
   * Run: sbt "runMain graft.tools.Demo"
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 import org.apache.spark.sql.functions._
 
 /** Bench-side experiment for the Block-Max anchor: a MODERATELY skewed
@@ -20,16 +20,7 @@ object ModSkewProbe {
     val n = args.headOption.map(_.toLong).getOrElse(100000L)
     val spamEvery = args.lift(1).map(_.toLong).getOrElse(911L)
     val vocab = args.lift(2).map(_.toInt).getOrElse(10)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "2048")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     import spark.implicits._
 
     // Docs: 5 DISTINCT mids (consecutive window of a 10-term vocab,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 import org.apache.spark.sql.functions._
 
 /** Measures the pruned-vs-exhaustive BREAK-EVEN curve the MaxScore
@@ -22,16 +22,7 @@ object PruneBreakEven {
     val sizes = args.headOption
       .map(_.split(",").map(_.trim.toLong).toSeq)
       .getOrElse(Seq(10000L, 30000L, 100000L, 300000L, 1000000L))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.pushdown.inFilterThreshold", "2048")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     import spark.implicits._
 
     def force(df: org.apache.spark.sql.DataFrame): Unit =

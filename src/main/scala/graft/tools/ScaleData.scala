@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.Session
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -36,14 +37,7 @@ object ScaleData {
     val Array(src, out, factorS) = args
     val factor = factorS.toInt
     require(factor >= 1, s"factor must be >= 1: $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "8").toInt)
     scale(spark, src, out, factor)
     spark.stop()
   }

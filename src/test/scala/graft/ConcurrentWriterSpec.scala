@@ -119,4 +119,45 @@ class ConcurrentWriterSpec extends SparkSpec {
       intercept[IllegalStateException] { db2.enableSampleSummaries() }
     }
   }
+
+  test("create-if-absent is atomic under contention: 16 instances, one dir") {
+    // WriterLockSpec's O_EXCL test over SummaryDB values: each instance
+    // has its own depth counter, so every entry is a real acquire, and
+    // at most one may ever be inside; all 16 eventually get in. Five
+    // rounds, because a non-atomic create loses only some races.
+    (0 until 5).foreach { round =>
+      val dir = freshDir()
+      val dbs = (0 until 16).map(_ => SummaryDB.open(spark, dir))
+      val active = new java.util.concurrent.atomic.AtomicInteger(0)
+      val done = new java.util.concurrent.atomic.AtomicInteger(0)
+      @volatile var violation: Option[String] = None
+      val threads = dbs.map { db =>
+        new Thread(() => {
+          var acquired = false
+          while (!acquired && violation.isEmpty) {
+            try {
+              db.withWriteLock {
+                val now = active.incrementAndGet()
+                if (now != 1) violation = Some(s"$now writers inside the lock at once")
+                Thread.sleep(1)
+                active.decrementAndGet()
+              }
+              acquired = true
+              done.incrementAndGet()
+            } catch {
+              case _: IllegalStateException => Thread.sleep(1) // locked; retry
+            }
+          }
+        })
+      }
+      // daemon: a leaked lock must fail this test, not hang the JVM
+      threads.foreach { t => t.setDaemon(true); t.start() }
+      threads.foreach(_.join(30000))
+      assert(violation.isEmpty, s"round $round: $violation")
+      assert(done.get() == 16, s"round $round: all contenders must acquire, got ${done.get()}")
+      val fs = new org.apache.hadoop.fs.Path(dir)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration)
+      assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_writer.lock")))
+    }
+  }
 }

@@ -68,6 +68,20 @@ class QuantileSummarySpec extends SparkSpec {
     for (p <- Seq(0.1, 0.5, 0.9)) assert(r.quantile(p) == s.quantile(p))
   }
 
+  test("an over-full weight-1 level loads and keeps accepting adds") {
+    // QSK1 bytes no writer produces (10 weight-1 values at k = 8) but
+    // the reader accepts: the next add must compact, not overrun.
+    val buf = java.nio.ByteBuffer.allocate(4 + 4 + 8 + 8 + 4 + (8 + 1 + 4) + 10 * 8)
+    buf.putInt(0x51534b31).putInt(8).putLong(10L).putLong(0L).putInt(1)
+    buf.putLong(1L).put(0.toByte).putInt(10)
+    (1 to 10).foreach(i => buf.putDouble(i.toDouble))
+    val s = QuantileSketch.fromBytes(buf.array())
+    s.add(11.0)
+    assert(s.n == 11L)
+    assert(s.weighted.map(_._2).sum == 11L)
+    assert(s.quantile(1.0) == 11.0)
+  }
+
   // ---- Windowed summaries on Spark ----
 
   test("windows follow the canonical partition; union answers exact quantiles at tiny n") {
