@@ -9,6 +9,45 @@ import org.apache.spark.sql.SparkSession
   * explicit error entries, never as fake timings.
   */
 object Bench {
+  /** JSON string literal of `s`. */
+  private[graft] def jq(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
+  } + "\""
+
+  /** The run's FINAL line: a <= 1900-char JSON digest. The harness that
+    * captures the output keeps only its LAST 2000 characters and parses
+    * a JSON line out of that tail; the full line (~4 KB: 115 queries +
+    * spread map, the unchanged measurement contract) prints before it
+    * and lands in bench_full.json, so the tail always holds this one
+    * complete, parseable object — totals, the 12 slowest queries (the
+    * only ones above the run-to-run noise floor), the index/scale/skew
+    * blocks and the determinism anchors.
+    *
+    * `head` holds the always-kept `"key":value` members. Errors enter
+    * as their count plus the FIRST error only (each message is up to
+    * 200 chars, so the whole map could overflow the tail exactly when
+    * it matters; every error stays in the full line). `optional`
+    * members are kept in order while they fit.
+    */
+  private[graft] def digest(
+      head: String,
+      errors: collection.Map[String, String],
+      optional: Seq[String],
+      sfDir: String): String = {
+    val es = errors.headOption
+      .map { case (k, v) => s"${jq(k)}:${jq(v.take(200))}" }.mkString("{", "", "}")
+    val required = s"""{$head,"n_errors":${errors.size},"errors":$es"""
+    val tail = s""""sf":${jq(sfDir)}}"""
+    // keep the digest under the 2000-char tail with ~100 chars of slack
+    // for the runner's own trailing output
+    val budget = 1900 - required.length - tail.length - 2
+    val kept = optional.foldLeft(List.empty[String]) { (acc, p) =>
+      if ((acc.map(_.length + 1).sum + p.length) <= budget) acc :+ p else acc
+    }
+    (required +: kept :+ tail).mkString(",")
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
@@ -618,10 +657,6 @@ object Bench {
       (n / sec, runs.head._2, if (sec > 0) (secs(2) - secs(0)) / sec else 0.0)
     }
 
-    def jq(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-    } + "\""
     val qs = timings.map { case (k, v) => s"${jq(k)}:$v" }.mkString("{", ",", "}")
     val sp = spreads.map { case (k, v) => s"${jq(k)}:${f"$v%.4f"}" }.mkString("{", ",", "}")
     val es = errors.map { case (k, v) => s"${jq(k)}:${jq(v)}" }.mkString("{", ",", "}")
@@ -652,43 +687,23 @@ object Bench {
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => () } // reporting must never fail the bench
     println(line)
-    // The harness that captures this output keeps only its LAST 2000
-    // characters and parses a JSON line out of that tail; the full line
-    // above is ~4 KB (115 queries + spread map), so since r09 the tail
-    // held a truncated fragment and the harness's `parsed` came back
-    // null — the optimization rounds never got machine-readable
-    // per-query data. The full line (every query, every field — the
-    // unchanged measurement contract) still prints above and lands in
-    // bench_full.json; this FINAL line is a <= ~1900-char digest of the
-    // same run — totals, errors, the 12 slowest queries (the only ones
-    // above the sandbox noise floor), the index/scale/skew blocks and
-    // the determinism anchors — so the tail always contains one
-    // complete, parseable JSON object. Optional blocks drop in noise-
-    // tolerance order if an unusually long errors map would overflow.
-    val digestParts = List(
-      skewCheck.map(sc => s""""skew_check":$sc"""),
-      scaleCheck.map(sc => s""""scale_check":$sc"""),
-      // index_check can carry the (opt-in) deep-scale fields: too long
-      // for the digest, so cap it rather than drop the whole block
-      indexCheck.filter(_.length <= 400).map(ic => s""""index_check":$ic"""))
-    val digestHead =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$slowest,""" +
+    println(digest(
+      s""""metric":"total","value":$total,"unit":"sec","queries":$slowest,""" +
       s""""queries_all_in":"bench_full.json","n_queries":${timings.size},""" +
-      s""""errors":$es,"ingest_sec":${f"$ingestSec%.4f"},""" +
+      s""""ingest_sec":${f"$ingestSec%.4f"},""" +
       s""""ingest_rows_per_sec":${rowsPerSec.toLong},""" +
       s""""raw_rows":$rawRows,"summary_windows":$windowRows,""" +
       s""""compression_ratio":${f"$compression%.6f"},""" +
       s""""big_stream_rows_per_sec":${bigRowsPerSec.toLong},""" +
-      s""""big_stream_windows":$bigWindows"""
-    val digestTail = s""""sf":${jq(sfDir)}}"""
-    // keep the digest under the 2000-char tail with ~100 chars of slack
-    // for the runner's own trailing output
-    val budget = 1900 - digestHead.length - digestTail.length - 2
-    val kept = digestParts.flatten
-      .foldLeft(List.empty[String]) { (acc, p) =>
-        if ((acc.map(_.length + 1).sum + p.length) <= budget) acc :+ p else acc
-      }
-    println((digestHead +: kept).mkString(",") + "," + digestTail)
+      s""""big_stream_windows":$bigWindows""",
+      errors,
+      List(
+        skewCheck.map(sc => s""""skew_check":$sc"""),
+        scaleCheck.map(sc => s""""scale_check":$sc"""),
+        // index_check can carry the (opt-in) deep-scale fields: too long
+        // for the digest, so cap it rather than drop the whole block
+        indexCheck.filter(_.length <= 400).map(ic => s""""index_check":$ic""")).flatten,
+      sfDir))
     spark.stop()
   }
 }

@@ -34,24 +34,33 @@ object SparkEntry {
       lmSpans: Dataset[LandmarkSpan],
       lmElems: Dataset[LandmarkElem])
 
-  // Keyed weakly by the owning SparkSession: cached Datasets are bound
-  // to the session that built them (a later session reusing them would
-  // hit "SparkContext has been shut down"), and entries die with their
-  // session instead of leaking persisted Datasets for the JVM lifetime.
-  private val cache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, Tables]]()
+  /** One value per (session, sfDir), built on first use. Keyed weakly
+    * by the owning SparkSession: cached Datasets are bound to the
+    * session that built them (a later session reusing them would hit
+    * "SparkContext has been shut down"), and entries die with their
+    * session instead of leaking persisted Datasets for the JVM lifetime.
+    */
+  private final class Memo[T] {
+    private val bySession =
+      new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, T]]()
+
+    def apply(s: SparkSession, dir: String)(build: => T): T =
+      bySession.synchronized {
+        bySession.computeIfAbsent(s, _ => new java.util.concurrent.ConcurrentHashMap[String, T]())
+      }.computeIfAbsent(dir, _ => build)
+  }
+
+  private val cache = new Memo[Tables]
 
   private def tables(spark: SparkSession, sfDir: String): Tables =
-    cache.synchronized {
-      cache.computeIfAbsent(spark, _ => new java.util.concurrent.ConcurrentHashMap[String, Tables]())
-    }.computeIfAbsent(sfDir, { _ =>
+    cache(spark, sfDir) {
       // The ranked event stream feeds both pipelines — rank once.
       val events = Ingest.fromEventsTable(spark, sfDir).persist()
       val summary = Summarizer.summarize(events, Spec).persist()
       val (lmSummary, spans, elems) = Summarizer.summarizeWithLandmarkRowsPerStream(
         events, _ => Spec, Seq((LandmarkLo, LandmarkHi)))
       Tables(summary, lmSummary.persist(), spans.persist(), elems.persist())
-    })
+    }
 
   /** Intermediates shared by the dedup query family: the per-doc shingle
     * arrays and the two verified pair sets that four registered queries
@@ -65,14 +74,10 @@ object SparkEntry {
   private final case class DedupShared(
       shingles: DataFrame, pairs09: DataFrame, exact05: DataFrame)
 
-  private val dedupCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DedupShared]]()
+  private val dedupCache = new Memo[DedupShared]
 
   private def dedupShared(s: SparkSession, dir: String): DedupShared =
-    dedupCache.synchronized {
-      dedupCache.computeIfAbsent(
-        s, _ => new java.util.concurrent.ConcurrentHashMap[String, DedupShared]())
-    }.computeIfAbsent(dir, { _ =>
+    dedupCache(s, dir) {
       import s.implicits._
       val d = docs(s, dir)
       val sh = ops.Dedup.shingles(d).localCheckpoint()
@@ -84,15 +89,14 @@ object SparkEntry {
         .select($"doc_a", $"doc_b", $"n_inter", $"n_union")
         .localCheckpoint()
       DedupShared(sh, pairs09, exact05)
-    })
+    }
 
   /** The through-merge freq sketch table shared by the three windowed
     * sketch contracts (`q_window_bloom`/`_cms`/`_freq`) — same
     * (session, sfDir)-memoized pattern as [[dedupShared]]: one
     * materialization, three consumers, identical rows.
     */
-  private val freqCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val freqCache = new Memo[DataFrame]
 
   /** Spread a small derived frame across the session's cores before
     * pinning it: a tiny corpus plans as ONE scan split (parquet can't
@@ -107,29 +111,22 @@ object SparkEntry {
     graft.core.Spread.ifNarrow(df)
 
   private def freqShared(s: SparkSession, dir: String): DataFrame =
-    freqCache.synchronized {
-      freqCache.computeIfAbsent(
-        s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }.computeIfAbsent(dir, { _ =>
+    freqCache(s, dir) {
       FreqSummary.Kind.throughMerge(Ingest.fromEventsTable(s, dir), Spec).localCheckpoint()
-    })
+    }
 
   /** The flagged duplicated-window frame shared by the two substring
     * queries (`q_substring_spans` reads all rows, `q_substring_clean`
     * the `!kept` slice) — one fingerprint+count+keeper pipeline
     * instead of two.
     */
-  private val substrCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val substrCache = new Memo[DataFrame]
 
   private def substrShared(s: SparkSession, dir: String): DataFrame =
-    substrCache.synchronized {
-      substrCache.computeIfAbsent(
-        s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }.computeIfAbsent(dir, { _ =>
+    substrCache(s, dir) {
       ops.SubstringDedup.rankedDuplicatedWindows(docs(s, dir), minTokens = 8)
         .localCheckpoint()
-    })
+    }
 
   /** The synthetic media table shared by the five media queries
     * (features/meta/audio/video/dedup): payload generation is the
@@ -138,14 +135,10 @@ object SparkEntry {
     * Queries filter their modality from it; with a REAL media table
     * the same pruning comes from partitioning by media_type.
     */
-  private val mediaCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val mediaCache = new Memo[DataFrame]
 
   private def mediaShared(s: SparkSession, dir: String): DataFrame =
-    mediaCache.synchronized {
-      mediaCache.computeIfAbsent(
-        s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }.computeIfAbsent(dir, { _ =>
+    mediaCache(s, dir) {
       // spread the INPUT ids, not the generated output: the payload
       // UDF runs in the scan stage, so spreading afterwards would
       // leave generation serialized AND shuffle the payload bytes.
@@ -154,27 +147,18 @@ object SparkEntry {
       // corpus bytes for nothing.
       ops.Multimodal.syntheticMedia(spread(docs(s, dir).select("doc_id")))
         .localCheckpoint()
-    })
+    }
 
   /** The exploded line frame of the boilerplate-injected corpus,
     * shared by the two line-dedup queries (flags and rebuild) — one
     * explode instead of three, the substrShared discipline.
     */
-  private val lineCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, DataFrame]]()
+  private val lineCache = new Memo[DataFrame]
 
   private def lineShared(s: SparkSession, dir: String): DataFrame =
-    lineCache.synchronized {
-      lineCache.computeIfAbsent(
-        s, _ => new java.util.concurrent.ConcurrentHashMap[String, DataFrame]())
-    }.computeIfAbsent(dir, { _ =>
+    lineCache(s, dir) {
       ops.LineDedup.lines(lineInjected(docs(s, dir))).localCheckpoint()
-    })
-
-  private def emptyLandmarks(spark: SparkSession): Dataset[LandmarkWindow] = {
-    import spark.implicits._
-    spark.emptyDataset[LandmarkWindow]
-  }
+    }
 
   /** Flagship: summarize the sf0.001 events stream into decay windows. */
   def entry(spark: SparkSession): DataFrame =
@@ -235,8 +219,8 @@ object SparkEntry {
     //    hash-checked (reference contract `core/sum_estimator.go:34-118`).
     "q_range_count" -> ((s, dir) => {
       import s.implicits._
-      val b = QueryEngine.rangeBoundsAll(
-        tables(s, dir).summary, emptyLandmarks(s), "count", Jan10, Jan20)
+      val b = QueryEngine.rangeBoundsAll(tables(s, dir).summary,
+        s.emptyDataset[LandmarkSpan], s.emptyDataset[LandmarkElem], "count", Jan10, Jan20)
       val exact = Ingest.fromEventsTable(s, dir)
         .filter($"ts" >= Jan10 && $"ts" <= Jan20)
         .groupBy($"streamId".as("stream_id"))
@@ -247,8 +231,8 @@ object SparkEntry {
     }),
     "q_range_sum" -> ((s, dir) => {
       import s.implicits._
-      val b = QueryEngine.rangeBoundsAll(
-        tables(s, dir).summary, emptyLandmarks(s), "sum", Jan10, Jan20)
+      val b = QueryEngine.rangeBoundsAll(tables(s, dir).summary,
+        s.emptyDataset[LandmarkSpan], s.emptyDataset[LandmarkElem], "sum", Jan10, Jan20)
       val exact = Ingest.fromEventsTable(s, dir)
         .filter($"ts" >= Jan10 && $"ts" <= Jan20)
         .groupBy($"streamId".as("stream_id"))

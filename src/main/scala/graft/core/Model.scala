@@ -74,7 +74,8 @@ final case class LandmarkDigest(
     vmin: Double)
 
 object LandmarkDigest {
-  /** Digest a driver-side [[LandmarkWindow]] (legacy/test path). */
+  /** Digest a driver-side [[LandmarkWindow]] in memory: the reference
+    * that tests compare the distributed digests against. */
   def of(lw: LandmarkWindow, t0: Long, t1: Long): LandmarkDigest = {
     var cnt = 0L; var sum = 0.0
     var vmax = SummaryWindow.EmptyMax; var vmin = SummaryWindow.EmptyMin

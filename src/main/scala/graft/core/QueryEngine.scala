@@ -1,7 +1,7 @@
 package graft.core
 
 import graft.estimator.SumEstimator
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
 
 /** Distributed range-query execution over the summary + landmark tables.
@@ -22,8 +22,8 @@ import org.apache.spark.sql.functions._
   * one bounded [[LandmarkDigest]] row by a distributed aggregation, so
   * the estimator sees O(#intervals) digests per stream no matter how
   * many exact elements a landmark holds — no per-window element array
-  * ever materializes. The `Dataset[LandmarkWindow]` overloads (driver
-  * -side view, golden tests) remain and digest inside the cogroup.
+  * ever materializes. Callers without landmarks pass empty span and
+  * element Datasets.
   */
 object QueryEngine {
 
@@ -57,6 +57,27 @@ object QueryEngine {
       .as[LandmarkDigest]
   }
 
+  /** The one fleet-wide window walk: overlap filter, landmark digests,
+    * `cogroup` on stream, both sides in time order, then `f` per stream
+    * with any overlapping summary or landmark window.
+    */
+  private def perStream[T: Encoder](
+      sw: Dataset[SummaryWindow],
+      spans: Dataset[LandmarkSpan],
+      elems: Dataset[LandmarkElem],
+      t0: Long,
+      t1: Long)(f: (Long, Seq[SummaryWindow], Seq[LandmarkDigest]) => T): Dataset[T] = {
+    val spark = sw.sparkSession
+    import spark.implicits._
+    sw.filter($"te" >= t0 && $"ts" <= t1)
+      .groupByKey(_.streamId)
+      .cogroup(landmarkDigests(spans, elems, t0, t1).groupByKey(_.streamId)) { (sid, sws, lds) =>
+        val s = sws.toArray.sortBy(_.ts).toSeq
+        val l = lds.toArray.sortBy(_.ts).toSeq
+        if (s.isEmpty && l.isEmpty) Iterator.empty else Iterator(f(sid, s, l))
+      }
+  }
+
   /** Estimate `op` over [t0, t1] for every stream, over the row-layout
     * landmark tables. Output: (stream_id, estimate, ci_width). Streams
     * with no overlapping summary or landmark windows produce no row.
@@ -71,49 +92,10 @@ object QueryEngine {
       params: QueryParams): DataFrame = {
     val spark = sw.sparkSession
     import spark.implicits._
-    val swF = sw.filter($"te" >= t0 && $"ts" <= t1)
-    swF
-      .groupByKey(_.streamId)
-      .cogroup(landmarkDigests(spans, elems, t0, t1).groupByKey(_.streamId)) { (sid, sws, lds) =>
-        val s = sws.toArray.sortBy(_.ts).toSeq
-        val l = lds.toArray.sortBy(_.ts).toSeq
-        if (s.isEmpty && l.isEmpty) Iterator.empty
-        else {
-          val r = SumEstimator.queryDigest(op, t0, t1, s, l, params)
-          Iterator((sid, r.value, r.error))
-        }
-      }
-      .toDF("stream_id", "estimate", "ci_width")
-  }
-
-  /** [[rangeQueryAll]] over the driver-side landmark view (golden tests
-    * and empty-landmark callers); digests in-executor.
-    */
-  def rangeQueryAll(
-      sw: Dataset[SummaryWindow],
-      lw: Dataset[LandmarkWindow],
-      op: String,
-      t0: Long,
-      t1: Long,
-      params: QueryParams = QueryParams()): DataFrame = {
-    val spark = sw.sparkSession
-    import spark.implicits._
-
-    val swF = sw.filter($"te" >= t0 && $"ts" <= t1)
-    val lwF = lw.filter($"te" >= t0 && $"ts" <= t1)
-
-    swF
-      .groupByKey(_.streamId)
-      .cogroup(lwF.groupByKey(_.streamId)) { (sid, sws, lws) =>
-        val s = sws.toArray.sortBy(_.ts).toSeq
-        val l = lws.toArray.sortBy(_.ts).toSeq
-        if (s.isEmpty && l.isEmpty) Iterator.empty
-        else {
-          val r = SumEstimator.query(op, t0, t1, s, l, params)
-          Iterator((sid, r.value, r.error))
-        }
-      }
-      .toDF("stream_id", "estimate", "ci_width")
+    perStream(sw, spans, elems, t0, t1) { (sid, s, l) =>
+      val r = SumEstimator.queryDigest(op, t0, t1, s, l, params)
+      (sid, r.value, r.error)
+    }.toDF("stream_id", "estimate", "ci_width")
   }
 
   /** As [[rangeQueryAll]] for SEVERAL ops in one pass: a single
@@ -123,7 +105,8 @@ object QueryEngine {
     */
   def rangeQueryMultiAll(
       sw: Dataset[SummaryWindow],
-      lw: Dataset[LandmarkWindow],
+      spans: Dataset[LandmarkSpan],
+      elems: Dataset[LandmarkElem],
       ops: Seq[String],
       t0: Long,
       t1: Long,
@@ -131,24 +114,14 @@ object QueryEngine {
     val spark = sw.sparkSession
     import spark.implicits._
     val opList = ops.toList
-    val swF = sw.filter($"te" >= t0 && $"ts" <= t1)
-    val lwF = lw.filter($"te" >= t0 && $"ts" <= t1)
-    swF
-      .groupByKey(_.streamId)
-      .cogroup(lwF.groupByKey(_.streamId)) { (sid, sws, lws) =>
-        val s = sws.toArray.sortBy(_.ts).toSeq
-        val l = lws.toArray.sortBy(_.ts).toSeq
-        if (s.isEmpty && l.isEmpty) Iterator.empty
-        else {
-          // count_hi rides along: the hard count upper bound from the
-          // same window walk lets callers drop provably-empty streams
-          // (exact count <= count_hi < 1 means the exact query would
-          // emit no group for this stream at all).
-          val hi = SumEstimator.boundsQuery("count", t0, t1, s, l).upper
-          Iterator((sid, opList.map(op => SumEstimator.query(op, t0, t1, s, l, params).value), hi))
-        }
-      }
-      .toDF("stream_id", "estimates", "count_hi")
+    perStream(sw, spans, elems, t0, t1) { (sid, s, l) =>
+      // count_hi rides along: the hard count upper bound from the
+      // same window walk lets callers drop provably-empty streams
+      // (exact count <= count_hi < 1 means the exact query would
+      // emit no group for this stream at all).
+      val hi = SumEstimator.boundsQueryDigest("count", t0, t1, s, l).upper
+      (sid, opList.map(op => SumEstimator.queryDigest(op, t0, t1, s, l, params).value), hi)
+    }.toDF("stream_id", "estimates", "count_hi")
   }
 
   /** Hard deterministic answer bounds per stream over [t0, t1]:
@@ -160,26 +133,17 @@ object QueryEngine {
     */
   def rangeBoundsAll(
       sw: Dataset[SummaryWindow],
-      lw: Dataset[LandmarkWindow],
+      spans: Dataset[LandmarkSpan],
+      elems: Dataset[LandmarkElem],
       op: String,
       t0: Long,
       t1: Long): DataFrame = {
     val spark = sw.sparkSession
     import spark.implicits._
-    val swF = sw.filter($"te" >= t0 && $"ts" <= t1)
-    val lwF = lw.filter($"te" >= t0 && $"ts" <= t1)
-    swF
-      .groupByKey(_.streamId)
-      .cogroup(lwF.groupByKey(_.streamId)) { (sid, sws, lws) =>
-        val s = sws.toArray.sortBy(_.ts).toSeq
-        val l = lws.toArray.sortBy(_.ts).toSeq
-        if (s.isEmpty && l.isEmpty) Iterator.empty
-        else {
-          val b = SumEstimator.boundsQuery(op, t0, t1, s, l)
-          Iterator((sid, b.lower, b.upper))
-        }
-      }
-      .toDF("stream_id", "bound_lo", "bound_hi")
+    perStream(sw, spans, elems, t0, t1) { (sid, s, l) =>
+      val b = SumEstimator.boundsQueryDigest(op, t0, t1, s, l)
+      (sid, b.lower, b.upper)
+    }.toDF("stream_id", "bound_lo", "bound_hi")
   }
 
   /** Exact estimator answers over each stream's oldest `numWindows`
@@ -203,8 +167,8 @@ object QueryEngine {
           val t0 = s.head.ts
           val t1 = s(numWindows - 1).te
           val overlapping = s.filter(w => w.te >= t0 && w.ts <= t1)
-          val c = SumEstimator.countQuery(t0, t1, overlapping, Nil, QueryParams())
-          val m = SumEstimator.sumQuery(t0, t1, overlapping, Nil, QueryParams())
+          val c = SumEstimator.queryDigest("count", t0, t1, overlapping, Nil, QueryParams())
+          val m = SumEstimator.queryDigest("sum", t0, t1, overlapping, Nil, QueryParams())
           if (c.error != 0.0 || m.error != 0.0) Iterator.empty
           else Iterator((sid, math.rint(c.value).toLong, m.value))
         }
@@ -258,25 +222,5 @@ object QueryEngine {
         elems.filter($"streamId" === streamId), t0, t1)
       .collect().sortBy(_.ts).toSeq
     SumEstimator.queryDigest(op, t0, t1, s, l, params)
-  }
-
-  /** [[queryOne]] over the driver-side landmark view (golden tests). */
-  def queryOne(
-      sw: Dataset[SummaryWindow],
-      lw: Dataset[LandmarkWindow],
-      streamId: Long,
-      op: String,
-      t0: Long,
-      t1: Long,
-      params: QueryParams = QueryParams()): AggResult = {
-    val spark = sw.sparkSession
-    import spark.implicits._
-    val s = sw
-      .filter($"streamId" === streamId && $"te" >= t0 && $"ts" <= t1)
-      .collect().sortBy(_.ts).toSeq
-    val l = lw
-      .filter($"streamId" === streamId && $"te" >= t0 && $"ts" <= t1)
-      .collect().sortBy(_.ts).toSeq
-    SumEstimator.query(op, t0, t1, s, l, params)
   }
 }

@@ -78,43 +78,6 @@ object Summarizer {
       col("value").as("min"))),
     rewrite = Some(graft.plans.SummaryRewrite.Pairing.Summary))
 
-  /** Summarize with exact landmark intervals: elements whose timestamp
-    * falls inside a landmark interval are diverted verbatim into the
-    * `landmarks` table instead of being decayed — the batch equivalent of
-    * `StartLandmark`/`EndLandmark` (`/root/reference/core/stream.go:104-137`:
-    * while a landmark is open, appends bypass the summarizer pipeline).
-    *
-    * Landmark window [ts, te] is the declared interval (the reference
-    * stamps the start/end API timestamps, not element times,
-    * `/root/reference/core/landmark_window.go:16-26`); remaining elements
-    * are re-ranked densely per stream before decay, as the reference's
-    * element counter never saw the diverted ones.
-    */
-  def summarizeWithLandmarks(
-      events: Dataset[Event],
-      spec: WindowingSpec,
-      intervals: Seq[(Long, Long)],
-      bufferSize: Long = 0L): (Dataset[SummaryWindow], Dataset[LandmarkWindow]) =
-    summarizeWithLandmarksPerStream(events, _ => spec, intervals, bufferSize)
-
-  /** Per-stream-policy variant of [[summarizeWithLandmarks]]: assembles
-    * the driver-side [[LandmarkWindow]] view (one array value per
-    * window) from the row layout. Convenience for tests and small
-    * landmark sets; the SCALE path is
-    * [[summarizeWithLandmarkRowsPerStream]], whose output never holds a
-    * window's elements in one value.
-    */
-  def summarizeWithLandmarksPerStream(
-      events: Dataset[Event],
-      specOf: Long => WindowingSpec,
-      intervals: Seq[(Long, Long)],
-      bufferSize: Long = 0L,
-      perStream: Map[Long, Seq[(Long, Long)]] = Map.empty): (Dataset[SummaryWindow], Dataset[LandmarkWindow]) = {
-    val (sw, spans, elems) =
-      summarizeWithLandmarkRowsPerStream(events, specOf, intervals, bufferSize, perStream)
-    (sw, assembleLandmarkWindows(spans, elems))
-  }
-
   /** Driver-side view assembly: spans + element rows -> one
     * [[LandmarkWindow]] per declared interval, elements sorted by
     * (ts, value). The ONLY place the per-window element array
@@ -142,10 +105,21 @@ object Summarizer {
       }
   }
 
-  /** [[summarizeWithLandmarksPerStream]] with the landmark output in
-    * the SCALE layout: a bounded [[LandmarkSpan]] row per declared
-    * interval and one [[LandmarkElem]] row per exact element — constant
-    * row width however long a landmark stays open (SURVEY §1.5). The
+  /** Summarize with exact landmark intervals: elements whose timestamp
+    * falls inside a landmark interval are diverted verbatim into the
+    * landmark tables instead of being decayed — the batch equivalent of
+    * `StartLandmark`/`EndLandmark` (reference `core/stream.go:104-137`:
+    * while a landmark is open, appends bypass the summarizer pipeline).
+    * Landmark window [ts, te] is the declared interval (the reference
+    * stamps the start/end API timestamps, not element times,
+    * `core/landmark_window.go:16-26`); remaining elements are re-ranked
+    * densely per stream before decay, as the reference's element
+    * counter never saw the diverted ones.
+    *
+    * The landmark output is in the SCALE layout: a bounded
+    * [[LandmarkSpan]] row per declared interval and one
+    * [[LandmarkElem]] row per exact element — constant row width
+    * however long a landmark stays open (SURVEY §1.5). The
     * reference stores landmark elements verbatim
     * (`/root/reference/core/landmark_window.go:5-14`); their layout is
     * an implementation choice, and one array per window breaches

@@ -89,17 +89,22 @@ final class SummaryDB private (
 
   // ------------------------------------------------------- versioned tables
 
-  /** Newest complete version directory of `name`, if any. */
-  private def currentVersion(name: String): Option[Path] = {
+  /** Every `name__v<stamp>` directory of `name`, complete or not, as
+    * (stamp, path). */
+  private def versions(name: String): Seq[(Long, Path)] = {
     val base = new Path(dir)
-    if (!fs.exists(base)) return None
+    if (!fs.exists(base)) return Seq.empty
     val prefix = name + "__v"
-    val versions = fs.listStatus(base).toSeq
+    fs.listStatus(base).toSeq
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .filter(s => fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .sortBy(s => s.getPath.getName.stripPrefix(prefix).toLong)
-    versions.lastOption.map(_.getPath)
+      .map(s => s.getPath.getName.stripPrefix(prefix).toLong -> s.getPath)
   }
+
+  /** Newest complete version directory of `name`, if any. */
+  private def currentVersion(name: String): Option[Path] =
+    versions(name)
+      .filter { case (_, path) => fs.exists(new Path(path, "_SUCCESS")) }
+      .maxByOption(_._1).map(_._2)
 
   /** Write a fresh version of `name`, then prune older versions
     * (keeping one predecessor so a reader whose lazy plan still points
@@ -108,17 +113,12 @@ final class SummaryDB private (
     * JVM restarts, unlike nanoTime whose origin resets on reboot.
     */
   private def writeVersioned(name: String, write: String => Unit): Unit = {
-    val prefix = name + "__v"
-    def versionsOnDisk(): Seq[Long] =
-      if (!fs.exists(new Path(dir))) Seq.empty
-      else fs.listStatus(new Path(dir)).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-        .map(_.getPath.getName.stripPrefix(prefix).toLong)
-    val stamp = math.max(System.currentTimeMillis(), versionsOnDisk().maxOption.getOrElse(0L) + 1L)
-    write(p(s"$prefix$stamp"))
-    val stale = versionsOnDisk().filter(_ < stamp).sorted.dropRight(1)
-    stale.foreach { v =>
-      try fs.delete(new Path(p(s"$prefix$v")), true) catch { case _: Throwable => () }
+    val stamp =
+      math.max(System.currentTimeMillis(), versions(name).map(_._1).maxOption.getOrElse(0L) + 1L)
+    write(p(s"${name}__v$stamp"))
+    val stale = versions(name).filter(_._1 < stamp).sortBy(_._1).dropRight(1)
+    stale.foreach { case (_, path) =>
+      try fs.delete(path, true) catch { case _: Throwable => () }
     }
   }
 

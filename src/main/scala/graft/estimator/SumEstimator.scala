@@ -1,6 +1,6 @@
 package graft.estimator
 
-import graft.core.{AggResult, LandmarkDigest, LandmarkWindow, QueryParams, SummaryWindow}
+import graft.core.{AggResult, LandmarkDigest, QueryParams, SummaryWindow}
 
 /** Query-time estimation over the windows overlapping [t0, t1].
   *
@@ -16,9 +16,7 @@ import graft.core.{AggResult, LandmarkDigest, LandmarkWindow, QueryParams, Summa
   * declared span plus the in-range element aggregates — so the kernel
   * is O(overlapping windows) regardless of how many exact elements a
   * landmark holds; the digests are computed distributively from
-  * element ROWS ([[graft.core.QueryEngine.landmarkDigests]]). The
-  * `Seq[LandmarkWindow]` overloads (driver-side view, golden tests)
-  * digest in-memory and delegate.
+  * element ROWS ([[graft.core.QueryEngine.landmarkDigests]]).
   *
   * This is pure arithmetic over the O(log N) overlapping windows of one
   * stream; at scale it runs inside `mapGroups` on executors, one group
@@ -104,33 +102,6 @@ object SumEstimator {
     (Bounds(b(0), b(1)), MeanVar(s(0), s(1)))
   }
 
-  /** Legacy element-view kernel: digests each [[LandmarkWindow]] with
-    * the caller's per-element transform (count passes `_ => 1.0`, sum
-    * `identity`) folded into the digest's `sum`, then delegates.
-    */
-  def sumStats(
-      t0: Long,
-      t1: Long,
-      summaryWindows: Seq[SummaryWindow],
-      landmarkWindows: Seq[LandmarkWindow],
-      getSummaryData: SummaryWindow => Double,
-      getLandmarkData: Double => Double): (Bounds, MeanVar) = {
-    val ds = landmarkWindows.map { lw =>
-      var total = 0.0
-      var cnt = 0L
-      var vmax = SummaryWindow.EmptyMax; var vmin = SummaryWindow.EmptyMin
-      lw.elems.foreach { e =>
-        if (t0 <= e.ts && e.ts <= t1) {
-          total += getLandmarkData(e.value); cnt += 1
-          if (e.value > vmax) vmax = e.value
-          if (e.value < vmin) vmin = e.value
-        }
-      }
-      LandmarkDigest(lw.streamId, lw.ts, lw.te, cnt, total, vmax, vmin)
-    }
-    sumStatsDigest(t0, t1, summaryWindows, ds, getSummaryData, _.sum)
-  }
-
   private def ciQueryDigest(
       t0: Long,
       t1: Long,
@@ -144,45 +115,14 @@ object SumEstimator {
     AggResult(ci.mean, ci.width)
   }
 
-  /** count over [t0, t1] (reference `core/count_op.go:39-67`). */
-  def countQuery(
-      t0: Long, t1: Long, sw: Seq[SummaryWindow], lw: Seq[LandmarkWindow], params: QueryParams): AggResult =
-    queryDigest("count", t0, t1, sw, lw.map(LandmarkDigest.of(_, t0, t1)), params)
-
-  /** sum over [t0, t1] (reference `core/sum_op.go:40-68`). */
-  def sumQuery(
-      t0: Long, t1: Long, sw: Seq[SummaryWindow], lw: Seq[LandmarkWindow], params: QueryParams): AggResult =
-    queryDigest("sum", t0, t1, sw, lw.map(LandmarkDigest.of(_, t0, t1)), params)
-
-  /** max over [t0, t1]: upper-biased merge of overlapping windows; error
-    * drops to 0 only if a landmark element in range is seen (reference
-    * `core/max_op.go:32-63`). Not statistical.
-    */
-  def maxQuery(
-      t0: Long, t1: Long, sw: Seq[SummaryWindow], lw: Seq[LandmarkWindow]): AggResult =
-    queryDigest("max", t0, t1, sw, lw.map(LandmarkDigest.of(_, t0, t1)), QueryParams())
-
-  /** min over [t0, t1]: advertised in the reference README but absent
-    * from its code (`README.md:23` vs `core/data.go:9-13`); implemented
-    * here as the dual of max (SURVEY §7.3).
-    */
-  def minQuery(
-      t0: Long, t1: Long, sw: Seq[SummaryWindow], lw: Seq[LandmarkWindow]): AggResult =
-    queryDigest("min", t0, t1, sw, lw.map(LandmarkDigest.of(_, t0, t1)), QueryParams())
-
   /** Hard deterministic bounds on a count/sum range answer: lower = the
     * fully-covered windows plus landmark elements in range, upper = all
     * overlapping windows (the b-accumulators of [[sumStatsDigest]],
-    * mirroring `/root/reference/core/sum_estimator.go:96-101`). For
+    * mirroring the reference's `core/sum_estimator.go:96-101`). For
     * non-negative contributions the exact answer always lies within —
     * count contributions are 1 per element, so count bounds are
     * unconditional; sum bounds require non-negative values.
     */
-  def boundsQuery(
-      op: String, t0: Long, t1: Long, sw: Seq[SummaryWindow], lw: Seq[LandmarkWindow]): Bounds =
-    boundsQueryDigest(op, t0, t1, sw, lw.map(LandmarkDigest.of(_, t0, t1)))
-
-  /** [[boundsQuery]] over pre-digested landmark state. */
   def boundsQueryDigest(
       op: String, t0: Long, t1: Long, sw: Seq[SummaryWindow], lds: Seq[LandmarkDigest]): Bounds =
     op match {
@@ -191,8 +131,14 @@ object SumEstimator {
       case other   => throw new IllegalArgumentException(s"no hard bounds for operator: $other")
     }
 
-  /** Dispatch by operator name over pre-digested landmark state — the
-    * executor-side entry of the distributed query paths.
+  /** Dispatch by operator name, as the reference's OpSet does
+    * (`core/op_set.go:14-18`) — the executor-side entry
+    * of the distributed query paths. count/sum carry the CI (reference
+    * `core/count_op.go:39-67`, `core/sum_op.go:40-68`); max is the
+    * upper-biased merge of overlapping windows whose error drops to 0
+    * only if a landmark element in range is seen (`core/max_op.go:32-63`,
+    * not statistical); min is its dual (advertised in the reference
+    * README but absent from its code, SURVEY §7.3).
     */
   def queryDigest(
       op: String,
@@ -221,16 +167,4 @@ object SumEstimator {
       AggResult(value, error)
     case other => throw new IllegalArgumentException(s"unknown operator: $other")
   }
-
-  /** Dispatch by operator name, as the reference's OpSet does
-    * (`/root/reference/core/op_set.go:14-18`).
-    */
-  def query(
-      op: String,
-      t0: Long,
-      t1: Long,
-      sw: Seq[SummaryWindow],
-      lw: Seq[LandmarkWindow],
-      params: QueryParams): AggResult =
-    queryDigest(op, t0, t1, sw, lw.map(LandmarkDigest.of(_, t0, t1)), params)
 }

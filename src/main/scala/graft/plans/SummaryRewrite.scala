@@ -305,7 +305,7 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
   /** Approximate path (only under [[ApproximateConf]]): a ts-range
     * aggregate `events.filter(ts in [t0,t1]).groupBy(streamId)
     * .agg(count/sum/avg)` is re-planned as the summary-table ESTIMATOR —
-    * `QueryEngine.rangeQueryAll` per requested op, joined on stream —
+    * `QueryEngine.rangeQueryMultiAll` over every requested op —
     * reading O(log N) window rows instead of the raw range. Count
     * estimates are rounded to long. Supported filter: a conjunction of
     * ts-vs-literal comparisons only (any other predicate bails, so
@@ -390,7 +390,6 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
 
     import spark.implicits._
     val sumDs = SummaryRewrite.summaryDf(spark, summaryPath).as[graft.core.SummaryWindow]
-    val lwEmpty = spark.emptyDataset[graft.core.LandmarkWindow]
     // One cogroup pass computes every requested op (count+sum in one
     // shuffle — no per-column re-read of the summary table).
     val estOps = plans.collect {
@@ -402,7 +401,8 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
     }.flatten.distinct
     if (estOps.isEmpty) return None // aggregate with no estimator column
     val multi = graft.core.QueryEngine
-      .rangeQueryMultiAll(sumDs, lwEmpty, estOps, t0, t1)
+      .rangeQueryMultiAll(sumDs, spark.emptyDataset[graft.core.LandmarkSpan],
+        spark.emptyDataset[graft.core.LandmarkElem], estOps, t0, t1)
       // Boundary-straddle pruning: a stream whose summary windows merely
       // overlap [t0,t1] gets an estimator row, but when its HARD count
       // upper bound is < 1 the exact query provably emits no group for

@@ -33,10 +33,10 @@ object Profile {
           Summarizer.summarize(events, ExponentialWindowing(2.0)).count()
         }
         time(s"ingest[$round]: with landmarks") {
-          val (lm, l) = Summarizer.summarizeWithLandmarks(
-            events, ExponentialWindowing(2.0),
-            Seq((1704412800000000L, 1704671999999999L)))
-          lm.count(); l.count()
+          val spec = ExponentialWindowing(2.0)
+          val (lm, spans, elems) = Summarizer.summarizeWithLandmarkRowsPerStream(
+            events, _ => spec, Seq((1704412800000000L, 1704671999999999L)))
+          lm.count(); spans.count(); elems.count()
         }
         events.unpersist()
       }

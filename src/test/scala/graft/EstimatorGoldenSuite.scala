@@ -18,7 +18,7 @@ class EstimatorGoldenSuite extends AnyFunSuite {
   test("sum-estimator golden: [3,21] no landmarks -> Bounds(3,5), Mean 3.8, Var 0.48") {
     val overlapping = fiveWindows.filter(w => w.te >= 3 && w.ts <= 21)
     val (bounds, mv) =
-      SumEstimator.sumStats(3, 21, overlapping, Seq.empty, _.count, _ => 1.0)
+      SumEstimator.sumStatsDigest(3, 21, overlapping, Seq.empty, _.count, _.cnt.toDouble)
     assert(bounds == Bounds(3.0, 5.0))
     assert(math.abs(mv.mean - 3.8) < 1e-9)
     assert(math.abs(mv.variance - 0.48) < 1e-9)
@@ -33,7 +33,8 @@ class EstimatorGoldenSuite extends AnyFunSuite {
   test("sum-estimator landmark golden: [1,21] -> Bounds(6,8), Mean 6.9, Var 0.49") {
     val overlapping = fourWindows.filter(w => w.te >= 1 && w.ts <= 21)
     val (bounds, mv) =
-      SumEstimator.sumStats(1, 21, overlapping, lmWindows, _.count, _ => 1.0)
+      SumEstimator.sumStatsDigest(
+        1, 21, overlapping, lmWindows.map(LandmarkDigest.of(_, 1, 21)), _.count, _.cnt.toDouble)
     assert(bounds == Bounds(6.0, 8.0))
     assert(math.abs(mv.mean - 6.9) < 1e-9)
     assert(math.abs(mv.variance - 0.49) < 1e-9)
@@ -41,7 +42,8 @@ class EstimatorGoldenSuite extends AnyFunSuite {
 
   test("count query with CI golden: conf 0.5, sd 1 -> value 6.9, error 0.9442857") {
     val overlapping = fourWindows.filter(w => w.te >= 1 && w.ts <= 21)
-    val r = SumEstimator.countQuery(1, 21, overlapping, lmWindows, QueryParams(0.5, 1.0))
+    val r = SumEstimator.queryDigest(
+      "count", 1, 21, overlapping, lmWindows.map(LandmarkDigest.of(_, 1, 21)), QueryParams(0.5, 1.0))
     assert(math.abs(r.value - 6.9) / 6.9 < 1e-6)
     assert(math.abs(r.error - 0.9442857) / 0.9442857 < 1e-7)
   }
@@ -59,13 +61,15 @@ class EstimatorGoldenSuite extends AnyFunSuite {
     val windows = Seq(
       sw(0, 4, 1.0).copy(max = 10.0),
       sw(5, 9, 1.0).copy(max = 7.0))
-    val noLm = SumEstimator.maxQuery(2, 8, windows, Seq.empty)
+    val noLm = SumEstimator.queryDigest("max", 2, 8, windows, Seq.empty, QueryParams())
     assert(noLm == AggResult(10.0, 1.0))
     val withLm =
-      SumEstimator.maxQuery(2, 8, windows, Seq(LandmarkWindow(0L, 5, 9, Seq(Landmark(6, 42.0)))))
+      SumEstimator.queryDigest("max", 2, 8, windows,
+        Seq(LandmarkWindow(0L, 5, 9, Seq(Landmark(6, 42.0)))).map(LandmarkDigest.of(_, 2, 8)), QueryParams())
     assert(withLm == AggResult(42.0, 0.0))
     val lmOutOfRange =
-      SumEstimator.maxQuery(2, 8, windows, Seq(LandmarkWindow(0L, 5, 20, Seq(Landmark(15, 42.0)))))
+      SumEstimator.queryDigest("max", 2, 8, windows,
+        Seq(LandmarkWindow(0L, 5, 20, Seq(Landmark(15, 42.0)))).map(LandmarkDigest.of(_, 2, 8)), QueryParams())
     assert(lmOutOfRange == AggResult(10.0, 1.0))
   }
 
@@ -73,12 +77,12 @@ class EstimatorGoldenSuite extends AnyFunSuite {
     val windows = Seq(
       sw(0, 4, 1.0).copy(min = -3.0),
       sw(5, 9, 1.0).copy(min = 2.0))
-    assert(SumEstimator.minQuery(2, 8, windows, Seq.empty) == AggResult(-3.0, 1.0))
+    assert(SumEstimator.queryDigest("min", 2, 8, windows, Seq.empty, QueryParams()) == AggResult(-3.0, 1.0))
   }
 
   test("full-overlap query is exact with zero error at any confidence") {
     val windows = fiveWindows
-    val r = SumEstimator.countQuery(0, 24, windows, Seq.empty, QueryParams(0.95, 1.0))
+    val r = SumEstimator.queryDigest("count", 0, 24, windows, Seq.empty, QueryParams(0.95, 1.0))
     assert(r == AggResult(5.0, 0.0))
   }
 }

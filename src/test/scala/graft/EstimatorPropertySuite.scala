@@ -67,34 +67,34 @@ class EstimatorPropertySuite extends AnyFunSuite {
         val (t0, t1) = (math.min(a, b), math.max(a, b))
         val inRange = all.filter { case (ts, _) => ts >= t0 && ts <= t1 }
         val swF = sw.filter(w => w.te >= t0 && w.ts <= t1)
-        val lwF = lw.filter(w => w.te >= t0 && w.ts <= t1)
+        val ldF = lw.filter(w => w.te >= t0 && w.ts <= t1).map(LandmarkDigest.of(_, t0, t1))
 
         val exactCount = inRange.size.toDouble
         // At confidence 1.0 the CI degrades to the hard bounds: the
         // reported interval [value - error, value + error-ish] must be
         // the bounds themselves — check containment via the bounds.
-        val c = SumEstimator.countQuery(t0, t1, swF, lwF, certain)
-        val (bounds, _) = SumEstimator.sumStats(t0, t1, swF, lwF, _.count, _ => 1.0)
+        val c = SumEstimator.queryDigest("count", t0, t1, swF, ldF, certain)
+        val (bounds, _) = SumEstimator.sumStatsDigest(t0, t1, swF, ldF, _.count, _.cnt.toDouble)
         assert(c.error <= bounds.upper - bounds.lower + 1e-9,
           s"ci wider than hard bounds: trial $trial [$t0,$t1]")
         assert(bounds.lower - 1e-9 <= exactCount && exactCount <= bounds.upper + 1e-9,
           s"count bounds violated: trial $trial range [$t0,$t1] exact=$exactCount bounds=$bounds")
 
         val exactSum = inRange.map(_._2).sum
-        val (sb, _) = SumEstimator.sumStats(t0, t1, swF, lwF, _.sum, (v: Double) => v)
+        val (sb, _) = SumEstimator.sumStatsDigest(t0, t1, swF, ldF, _.sum, _.sum)
         assert(sb.lower - 1e-6 <= exactSum && exactSum <= sb.upper + 1e-6,
           s"sum bounds violated: trial $trial range [$t0,$t1] exact=$exactSum bounds=$sb")
 
-        // boundsQuery is the oracle-facing wrapper over the same
-        // kernels — it must agree with sumStats exactly.
-        val bq = SumEstimator.boundsQuery("count", t0, t1, swF, lwF)
-        assert(bq == bounds, s"boundsQuery(count) != sumStats bounds: trial $trial")
-        val bqs = SumEstimator.boundsQuery("sum", t0, t1, swF, lwF)
-        assert(bqs == sb, s"boundsQuery(sum) != sumStats bounds: trial $trial")
+        // boundsQueryDigest is the oracle-facing wrapper over the same
+        // kernels — it must agree with sumStatsDigest exactly.
+        val bq = SumEstimator.boundsQueryDigest("count", t0, t1, swF, ldF)
+        assert(bq == bounds, s"boundsQueryDigest(count) != sumStatsDigest bounds: trial $trial")
+        val bqs = SumEstimator.boundsQueryDigest("sum", t0, t1, swF, ldF)
+        assert(bqs == sb, s"boundsQueryDigest(sum) != sumStatsDigest bounds: trial $trial")
 
         // Max: upper-biased — reported value must be >= exact max in range.
         if (inRange.nonEmpty) {
-          val m = SumEstimator.maxQuery(t0, t1, swF, lwF)
+          val m = SumEstimator.queryDigest("max", t0, t1, swF, ldF, QueryParams())
           assert(m.value >= inRange.map(_._2).max - 1e-9,
             s"max not upper-biased: trial $trial")
         }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core._
+import graft.estimator.SumEstimator
 import graft.windowing.ExponentialWindowing
 import java.nio.file.Files
 import org.apache.spark.sql.functions._
@@ -9,8 +10,9 @@ import org.apache.spark.sql.functions._
   * spans + one row per exact element, queries fold them into bounded
   * per-window digests distributively, and a wide-open landmark holding
   * 10^6 elements ingests and answers without ever materializing one
-  * giant array value. Parity: the digest path answers exactly like the
-  * legacy element-array path on the same data.
+  * giant array value. Parity: every distributed query path answers
+  * exactly like the estimator over the in-memory digests of the
+  * element-array view of the same data.
   */
 class LandmarkRowsSpec extends SparkSpec {
   import spark.implicits._
@@ -67,21 +69,36 @@ class LandmarkRowsSpec extends SparkSpec {
     val events = (0 until 500).map(i => Event(3L, i.toLong, i.toLong, (i % 13).toDouble)).toDS()
     val (sw, spans, elems) = Summarizer.summarizeWithLandmarkRowsPerStream(
       events, specOf, Seq((120L, 180L), (300L, 340L)))
-    val lw = Summarizer.assembleLandmarkWindows(spans, elems)
+    val lw = Summarizer.assembleLandmarkWindows(spans, elems).collect().toSeq
+    val windows = sw.collect().sortBy(_.ts).toSeq
     // Ranges chosen to exercise: inside a landmark, straddling a
-    // landmark edge, covering both landmarks, fully decayed.
+    // landmark edge, covering both landmarks, fully decayed. Values are
+    // integers, so distributed sums are exact in any order.
     for {
       (t0, t1) <- Seq((125L, 175L), (100L, 200L), (0L, 499L), (350L, 480L), (130L, 320L))
       op <- Seq("count", "sum", "max", "min")
     } {
+      // In-memory reference: the overlapping windows plus the element
+      // arrays digested on the driver.
+      val s = windows.filter(w => w.te >= t0 && w.ts <= t1)
+      val l = lw.filter(w => w.te >= t0 && w.ts <= t1).sortBy(_.ts).map(LandmarkDigest.of(_, t0, t1))
+      val ref = SumEstimator.queryDigest(op, t0, t1, s, l, params)
       val rows = QueryEngine.queryOne(sw, spans, elems, 3L, op, t0, t1, params)
-      val legacy = QueryEngine.queryOne(sw, lw, 3L, op, t0, t1, params)
-      assert(rows == legacy, s"op=$op range=[$t0,$t1]: rows=$rows legacy=$legacy")
+      assert(rows == ref, s"op=$op range=[$t0,$t1]: rows=$rows reference=$ref")
       val fleet = QueryEngine.rangeQueryAll(sw, spans, elems, op, t0, t1, params)
         .as[(Long, Double, Double)].collect().toSeq
-      val fleetLegacy = QueryEngine.rangeQueryAll(sw, lw, op, t0, t1, params)
-        .as[(Long, Double, Double)].collect().toSeq
-      assert(fleet == fleetLegacy, s"fleet op=$op range=[$t0,$t1]")
+      assert(fleet == Seq((3L, ref.value, ref.error)), s"fleet op=$op range=[$t0,$t1]")
+      val multi = QueryEngine.rangeQueryMultiAll(sw, spans, elems, Seq(op, "count"), t0, t1, params)
+        .as[(Long, Seq[Double], Double)].collect().toSeq
+      val countRef = SumEstimator.queryDigest("count", t0, t1, s, l, params)
+      val countHi = SumEstimator.boundsQueryDigest("count", t0, t1, s, l).upper
+      assert(multi == Seq((3L, Seq(ref.value, countRef.value), countHi)), s"multi op=$op range=[$t0,$t1]")
+      if (op == "count" || op == "sum") {
+        val b = SumEstimator.boundsQueryDigest(op, t0, t1, s, l)
+        val bounds = QueryEngine.rangeBoundsAll(sw, spans, elems, op, t0, t1)
+          .as[(Long, Double, Double)].collect().toSeq
+        assert(bounds == Seq((3L, b.lower, b.upper)), s"bounds op=$op range=[$t0,$t1]")
+      }
     }
   }
 

@@ -30,13 +30,14 @@ class ScaleDemoSpec extends SparkSpec {
     assert(nWindows < 64, s"compression failed: $nWindows windows for $n elements")
     info(f"1M rows -> $nWindows windows in $buildSec%.1fs (${n / buildSec}%.0f rows/s)")
 
-    val lw = spark.emptyDataset[LandmarkWindow]
-    val c = QueryEngine.queryOne(sw, lw, 11L, "count", 0, n - 1L)
+    val spans = spark.emptyDataset[LandmarkSpan]
+    val elems = spark.emptyDataset[LandmarkElem]
+    val c = QueryEngine.queryOne(sw, spans, elems, 11L, "count", 0, n - 1L, QueryParams())
     assert(c.value == n.toDouble && c.error == 0.0)
 
     // Partial range: answered from O(log N) windows with a bounded CI.
     val tq = System.nanoTime()
-    val part = QueryEngine.queryOne(sw, lw, 11L, "count", n / 4L, n / 2L)
+    val part = QueryEngine.queryOne(sw, spans, elems, 11L, "count", n / 4L, n / 2L, QueryParams())
     val qMs = (System.nanoTime() - tq) / 1e6
     val exact = (n / 2L - n / 4L + 1).toDouble
     assert(math.abs(part.value - exact) <= part.error + 1e-6 || part.error == 0.0)

@@ -151,9 +151,10 @@ class SummaryRewriteSpec extends SparkSpec {
 
       // Estimates must respect the estimator's hard-bounds contract.
       val sumDs = spark.read.parquet(summaryPath).as[graft.core.SummaryWindow]
-      val lw = spark.emptyDataset[graft.core.LandmarkWindow]
+      val spans = spark.emptyDataset[graft.core.LandmarkSpan]
+      val elems = spark.emptyDataset[graft.core.LandmarkElem]
       val bounds = graft.core.QueryEngine
-        .rangeBoundsAll(sumDs, lw, "count", 1000L, 6000L)
+        .rangeBoundsAll(sumDs, spans, elems, "count", 1000L, 6000L)
         .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
       val rows = q.collect()
       assert(rows.length == 7)
@@ -244,9 +245,10 @@ class SummaryRewriteSpec extends SparkSpec {
 
       // Global count bound = sum of per-stream hard bounds.
       val sumDs = spark.read.parquet(summaryPath).as[graft.core.SummaryWindow]
-      val lw = spark.emptyDataset[graft.core.LandmarkWindow]
+      val spans = spark.emptyDataset[graft.core.LandmarkSpan]
+      val elems = spark.emptyDataset[graft.core.LandmarkElem]
       val bounds = graft.core.QueryEngine
-        .rangeBoundsAll(sumDs, lw, "count", 1000L, 6000L)
+        .rangeBoundsAll(sumDs, spans, elems, "count", 1000L, 6000L)
         .collect().map(b => (b.getDouble(1), b.getDouble(2)))
       val (lo, hi) = (bounds.map(_._1).sum, bounds.map(_._2).sum)
       val n = r.getLong(0).toDouble
