@@ -74,20 +74,34 @@ final case class LandmarkDigest(
     vmin: Double)
 
 object LandmarkDigest {
+  /** Fold span rows and their element rows into one digest per span:
+    * the span's declared [ts, te] with the count/sum/max/min of its
+    * elements (matched on (streamId, windowId)) inside [t0, t1]. The
+    * one driver-side fold: the point query's bucket read and [[of]]
+    * both use it; [[QueryEngine.landmarkDigests]] is its distributed
+    * twin. Spans are kept whether or not they overlap [t0, t1].
+    */
+  def fold(spans: Seq[LandmarkSpan], elems: Seq[LandmarkElem], t0: Long, t1: Long): Seq[LandmarkDigest] = {
+    val byWindow = elems.groupBy(e => (e.streamId, e.windowId))
+    spans.map { sp =>
+      var cnt = 0L; var sum = 0.0
+      var vmax = SummaryWindow.EmptyMax; var vmin = SummaryWindow.EmptyMin
+      byWindow.getOrElse((sp.streamId, sp.windowId), Nil).foreach { e =>
+        if (t0 <= e.ts && e.ts <= t1) {
+          cnt += 1; sum += e.value
+          if (e.value > vmax) vmax = e.value
+          if (e.value < vmin) vmin = e.value
+        }
+      }
+      LandmarkDigest(sp.streamId, sp.ts, sp.te, cnt, sum, vmax, vmin)
+    }
+  }
+
   /** Digest a driver-side [[LandmarkWindow]] in memory: the reference
     * that tests compare the distributed digests against. */
-  def of(lw: LandmarkWindow, t0: Long, t1: Long): LandmarkDigest = {
-    var cnt = 0L; var sum = 0.0
-    var vmax = SummaryWindow.EmptyMax; var vmin = SummaryWindow.EmptyMin
-    lw.elems.foreach { e =>
-      if (t0 <= e.ts && e.ts <= t1) {
-        cnt += 1; sum += e.value
-        if (e.value > vmax) vmax = e.value
-        if (e.value < vmin) vmin = e.value
-      }
-    }
-    LandmarkDigest(lw.streamId, lw.ts, lw.te, cnt, sum, vmax, vmin)
-  }
+  def of(lw: LandmarkWindow, t0: Long, t1: Long): LandmarkDigest =
+    fold(Seq(LandmarkSpan(lw.streamId, 0L, lw.ts, lw.te)),
+      lw.elems.map(e => LandmarkElem(lw.streamId, 0L, e.ts, e.value)), t0, t1).head
 }
 
 /** Query parameters (reference `core/op.go:5-8`). */

@@ -1,11 +1,16 @@
 package graft.core
 
+import graft.estimator.SumEstimator
+import graft.ops.Tombstones
 import graft.windowing.WindowingSpec
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import graft.plans.SummaryRewrite
-import graft.sources.WriterLock
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import graft.sources.{TinyParquet, WriterLock}
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.hash.Murmur3_x86_32
 
 /** The persistent multi-stream store: catalog + events + summary +
   * landmark tables under one directory — the Spark-native analogue of
@@ -20,6 +25,12 @@ import org.apache.spark.sql.functions._
   *   dir/landmark_elems__vN     exact landmark elements, ONE PER ROW
   *   dir/landmark_intervals__vN declared exact [t0,t1] spans
   *   dir/commits                batch-id markers for streaming replay
+  *
+  * Every stream table (summary windows, landmark spans and elements,
+  * and each enabled [[SummaryKind]]'s table) is bucketed by stream
+  * ([[writeStreamTable]]): bucket b of `streamId` in the version's
+  * `part-<b, 5 digits>-*` file(s), rows sorted by (streamId, ts), and a
+  * `_buckets` marker. [[query]] reads only its stream's bucket.
   *
   * Landmark elements are rows keyed by (streamId, windowId), never one
   * array per window: a landmark left open across a billion-event
@@ -122,17 +133,39 @@ final class SummaryDB private (
     }
   }
 
-  private def readVersioned[T](name: String)(read: String => Dataset[T])(empty: => Dataset[T]): Dataset[T] =
-    currentVersion(name).map(path => read(path.toString)).getOrElse(empty)
+  /** Write `df` as a fresh version of the stream table `name`, bucketed
+    * by stream: [[SummaryDB.Buckets]] hash partitions of `streamId`
+    * (Spark's `HashPartitioning`, so bucket b is written by task b, as
+    * `part-<b>-*`), each sorted by (streamId, ts), then the `_buckets`
+    * marker that lets [[query]] read one bucket. A repartition by
+    * number is never coalesced by AQE.
+    */
+  private def writeStreamTable(name: String, df: DataFrame): Unit =
+    writeVersioned(name, { path =>
+      df.repartition(SummaryDB.Buckets, col("streamId"))
+        .sortWithinPartitions("streamId", "ts")
+        .write.mode(SaveMode.Overwrite).parquet(path)
+      val out = fs.create(new Path(path, SummaryDB.BucketsMarker), true)
+      try out.write(SummaryDB.Buckets.toString.getBytes("UTF-8"))
+      finally out.close()
+    })
+
+  /** `paths` as a table of `T`, read with `T`'s own schema — no
+    * schema-inference job; empty when there are no paths.
+    */
+  private def readFiles[T: Encoder](paths: Seq[String]): Dataset[T] =
+    if (paths.isEmpty) spark.emptyDataset[T]
+    else spark.read.schema(implicitly[Encoder[T]].schema).parquet(paths: _*).as[T]
+
+  private def readVersioned[T: Encoder](name: String): Dataset[T] =
+    readFiles[T](currentVersion(name).toSeq.map(_.toString))
 
   // --------------------------------------------------------------- catalog
 
   private var metas: Map[Long, StreamMeta] = loadMetas()
 
   private def loadMetas(): Map[Long, StreamMeta] =
-    readVersioned("stream_meta")(path => spark.read.parquet(path).as[StreamMeta])(
-      spark.emptyDataset[StreamMeta])
-      .collect().map(m => m.streamId -> m).toMap
+    readVersioned[StreamMeta]("stream_meta").collect().map(m => m.streamId -> m).toMap
 
   def streams: Map[Long, StreamMeta] = metas
 
@@ -164,9 +197,7 @@ final class SummaryDB private (
     * (applies to every stream).
     */
   private def storedIntervals: Seq[(Long, Long, Long)] =
-    readVersioned("landmark_intervals")(path => spark.read.parquet(path).as[(Long, Long, Long)])(
-      spark.emptyDataset[(Long, Long, Long)])
-      .collect().toSeq.sorted
+    readVersioned[(Long, Long, Long)]("landmark_intervals").collect().toSeq.sorted
 
   def landmarkIntervals: Seq[(Long, Long)] =
     storedIntervals.filter(_._1 == -1L).map(r => (r._2, r._3))
@@ -309,11 +340,14 @@ final class SummaryDB private (
       .as[(Long, Long)].collect().toMap
 
     val bstamp = nextBatchStamp()
-    val prepared = Ingest.prepare(
-      batch.toDF().withColumn("arrival", col("seq")), baseTs = frontier)
-    prepared.toDF()
+    val tagDir = s"${p("events")}/$tag"
+    Ingest.prepare(batch.toDF().withColumn("arrival", col("seq")), baseTs = frontier)
+      .toDF()
       .withColumn("bstamp", lit(bstamp))
-      .write.mode(SaveMode.Overwrite).parquet(s"${p("events")}/$tag")
+      .write.mode(SaveMode.Overwrite).parquet(tagDir)
+    // The summaries absorb the batch as the WAL holds it: read back, not
+    // re-ranked by a second run of prepare's shuffle per summary kind.
+    val prepared = readFiles[Event](Seq(tagDir))
 
     if (newIntervals.nonEmpty)
       saveIntervals((storedIntervals ++ newIntervals.map(iv => (-1L, iv._1, iv._2))).distinct)
@@ -378,17 +412,17 @@ final class SummaryDB private (
         if (mergeDue(kind.table))
           Compactor.recoarsen(old.unionByName(delta), specOf, kind.mergeAggs, 0L)
         else old.unionByName(delta)
-      writeVersioned(kind.table, next.write.mode(SaveMode.Overwrite).parquet(_))
+      writeStreamTable(kind.table, next)
     } finally old.unpersist()
   }
 
   /** The current table of `kind` (an empty frame of its schema before
     * any data).
     */
-  private def table(kind: SummaryKind): DataFrame =
-    currentVersion(kind.table)
-      .map(v => spark.read.parquet(v.toString))
-      .getOrElse(kind.summarize(spark.emptyDataset[Event], specOf))
+  private def table(kind: SummaryKind): DataFrame = {
+    val empty = kind.summarize(spark.emptyDataset[Event], specOf)
+    currentVersion(kind.table).fold(empty)(v => spark.read.schema(empty.schema).parquet(v.toString))
+  }
 
   /** Recompute summary + landmark tables from the persisted events.
     * `includeUncommittedTag`: the batch currently being applied — its
@@ -406,9 +440,9 @@ final class SummaryDB private (
           spark.emptyDataset[LandmarkSpan], spark.emptyDataset[LandmarkElem])
       else Summarizer.summarizeWithLandmarkRowsPerStream(
         events, specOf, intervals, perStream = perStream)
-    writeVersioned("summary_windows", sw.toDF().write.mode(SaveMode.Overwrite).parquet(_))
-    writeVersioned("landmark_spans", spans.toDF().write.mode(SaveMode.Overwrite).parquet(_))
-    writeVersioned("landmark_elems", elems.toDF().write.mode(SaveMode.Overwrite).parquet(_))
+    writeStreamTable("summary_windows", sw.toDF())
+    writeStreamTable("landmark_spans", spans.toDF())
+    writeStreamTable("landmark_elems", elems.toDF())
   }
 
   /** Re-rank the persisted events into dense per-stream order. Arrival
@@ -599,9 +633,7 @@ final class SummaryDB private (
     * [[refreshSummaries]].
     */
   private def rebuild(kind: SummaryKind, includeUncommittedTag: Option[String] = None): Unit =
-    writeVersioned(kind.table,
-      kind.summarize(readEvents(includeUncommittedTag), specOf)
-        .write.mode(SaveMode.Overwrite).parquet(_))
+    writeStreamTable(kind.table, kind.summarize(readEvents(includeUncommittedTag), specOf))
 
   /** Maintain a windowed HLL distinct-count table ([[DistinctSummary]])
     * and keep it paired for the distinct-count rewrite: with the
@@ -739,21 +771,15 @@ final class SummaryDB private (
             s"(declared: ${m.operators.mkString(", ")})")
     }
 
-  def summaryWindows: Dataset[SummaryWindow] =
-    readVersioned("summary_windows")(path => spark.read.parquet(path).as[SummaryWindow])(
-      spark.emptyDataset[SummaryWindow])
+  def summaryWindows: Dataset[SummaryWindow] = readVersioned[SummaryWindow]("summary_windows")
 
   /** Declared spans of landmark windows that matched elements — one
     * bounded row per (stream, interval). */
-  def landmarkSpans: Dataset[LandmarkSpan] =
-    readVersioned("landmark_spans")(path => spark.read.parquet(path).as[LandmarkSpan])(
-      spark.emptyDataset[LandmarkSpan])
+  def landmarkSpans: Dataset[LandmarkSpan] = readVersioned[LandmarkSpan]("landmark_spans")
 
   /** Exact landmark elements, one row each — the scale layout queries
     * aggregate over. */
-  def landmarkElems: Dataset[LandmarkElem] =
-    readVersioned("landmark_elems")(path => spark.read.parquet(path).as[LandmarkElem])(
-      spark.emptyDataset[LandmarkElem])
+  def landmarkElems: Dataset[LandmarkElem] = readVersioned[LandmarkElem]("landmark_elems")
 
   /** Driver-side landmark VIEW: elements assembled into one array per
     * window. Small-landmark convenience (tests, inspection) — queries
@@ -775,14 +801,91 @@ final class SummaryDB private (
       op: String,
       t0: Long,
       t1: Long,
-      params: QueryParams = QueryParams()): AggResult = {
+      params: QueryParams = QueryParams()): AggResult =
+    query(streamId, op, t0, t1, params, Tombstones.TinyBytes)
+
+  /** [[query]] with the driver read's byte guard explicit (0 forces the
+    * Spark path). The stream's bucket files of the three tables, read
+    * on the driver when every version is bucketed and they hold at most
+    * `tinyBytes` together: 0 Spark jobs. Otherwise [[QueryEngine.queryOne]]
+    * over the same files (whole tables for an unbucketed version). Both
+    * paths hand the estimator the same windows and digests in ts order.
+    */
+  private[graft] def query(
+      streamId: Long,
+      op: String,
+      t0: Long,
+      t1: Long,
+      params: QueryParams,
+      tinyBytes: Long): AggResult = {
     requireDeclared(streamId, op)
-    QueryEngine.queryOne(
-      summaryWindows, landmarkSpans, landmarkElems, streamId, op, t0, t1, params)
+    val tables = Seq("summary_windows", "landmark_spans", "landmark_elems").map { name =>
+      currentVersion(name).fold[Either[Path, Seq[FileStatus]]](Right(Nil)) { v =>
+        bucketFiles(v, streamId).toRight(v)
+      }
+    }
+    tables match {
+      case Seq(Right(sw), Right(spans), Right(elems))
+          if (sw ++ spans ++ elems).map(_.getLen).sum <= tinyBytes =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        val Seq(sid, ts, te) = Seq("streamId", "ts", "te").map(FilterApi.longColumn)
+        // this stream's rows with lo >= t0 and ts <= t1
+        def rows(files: Seq[FileStatus], lo: Operators.LongColumn) = TinyParquet.fileRows(conf,
+          files.map(_.getPath), FilterCompat.get(FilterApi.and(
+            FilterApi.eq(sid, java.lang.Long.valueOf(streamId)),
+            FilterApi.and(FilterApi.gtEq(lo, java.lang.Long.valueOf(t0)),
+              FilterApi.ltEq(ts, java.lang.Long.valueOf(t1))))))
+        val s = rows(sw, te).map(g => SummaryWindow(g.getLong("streamId", 0),
+          g.getLong("ts", 0), g.getLong("te", 0), g.getLong("cs", 0), g.getLong("ce", 0),
+          g.getDouble("count", 0), g.getDouble("sum", 0), g.getDouble("max", 0), g.getDouble("min", 0)))
+        val l = LandmarkDigest.fold(
+          rows(spans, te).map(g => LandmarkSpan(g.getLong("streamId", 0),
+            g.getLong("windowId", 0), g.getLong("ts", 0), g.getLong("te", 0))),
+          rows(elems, ts).map(g => LandmarkElem(g.getLong("streamId", 0),
+            g.getLong("windowId", 0), g.getLong("ts", 0), g.getDouble("value", 0))),
+          t0, t1)
+        SumEstimator.queryDigest(op, t0, t1, s.sortBy(_.ts), l.sortBy(_.ts), params)
+      case Seq(sw, spans, elems) =>
+        def paths(t: Either[Path, Seq[FileStatus]]) = t.fold(v => Seq(v.toString), _.map(_.getPath.toString))
+        QueryEngine.queryOne(readFiles[SummaryWindow](paths(sw)), readFiles[LandmarkSpan](paths(spans)),
+          readFiles[LandmarkElem](paths(elems)), streamId, op, t0, t1, params)
+    }
+  }
+
+  /** The data files of `streamId`'s bucket in a bucketed `version` (none
+    * when the bucket is empty), or None when the version carries no
+    * `_buckets` marker. The bucket count comes from the marker, so a
+    * version written under another count is still read by its own
+    * buckets, never by a wrong one.
+    */
+  private def bucketFiles(version: Path, streamId: Long): Option[Seq[FileStatus]] = {
+    val marker = new Path(version, SummaryDB.BucketsMarker)
+    if (!fs.exists(marker)) None
+    else {
+      val in = fs.open(marker)
+      val n = try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
+      val prefix = f"part-${SummaryDB.bucketOf(streamId, n)}%05d-"
+      Some(TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, version.toString)
+        .filter(_.getPath.getName.startsWith(prefix)))
+    }
   }
 }
 
 object SummaryDB {
+  /** Hash buckets of every stream table, well under Spark's 32-path
+    * parallel-listing threshold. */
+  private[graft] val Buckets = 16
+
+  /** The file a bucketed version carries, holding its bucket count. */
+  private[graft] val BucketsMarker = "_buckets"
+
+  /** The bucket of `streamId` among `n`: the partition id Spark's
+    * `HashPartitioning` gives one long key (Murmur3, seed 42,
+    * non-negative modulo).
+    */
+  private[graft] def bucketOf(streamId: Long, n: Int): Int =
+    Math.floorMod(Murmur3_x86_32.hashLong(streamId, 42), n)
+
   /** Open an existing DB directory (or start an empty one).
     *
     * `mergeEvery` is the persistence-cadence knob mirroring the

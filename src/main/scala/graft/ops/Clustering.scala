@@ -246,8 +246,11 @@ object Clustering {
     *     2-3 jobs per Lloyd iteration.
     *   - shuffle (the at-scale fallback): the typed-Aggregator groupByKey
     *     collect, whose driver traffic is k rows, not partitions * k —
-    *     taken when `defaultParallelism * keys * dim` partial bytes
-    *     could not sit on the driver.
+    *     taken when `partitions * keys * dim` partial bytes could not sit
+    *     on the driver. Every partition emits its own partials, and a
+    *     frame out of a shuffle has `spark.sql.shuffle.partitions` of
+    *     them, however few the cores: the estimate counts the larger of
+    *     that and `defaultParallelism`.
     */
   private[graft] def centroidRows[V](
       pairs: org.apache.spark.sql.Dataset[(Int, V)],
@@ -256,8 +259,9 @@ object Clustering {
       dim: Long): Array[(Int, CentroidAcc)] = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val partialBytes =
-      spark.sparkContext.defaultParallelism.toLong * keys * (dim * 24L + 64L)
+    val partitions = math.max(spark.sparkContext.defaultParallelism,
+      spark.conf.get("spark.sql.shuffle.partitions", "200").toInt)
+    val partialBytes = partitions.toLong * keys * (dim * 24L + 64L)
     if (partialBytes <= DriverCombineMaxBytes) {
       val parts = pairs.mapPartitions { it =>
         val accs = new java.util.HashMap[Integer, CentroidAcc]()

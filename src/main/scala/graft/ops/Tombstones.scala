@@ -99,7 +99,8 @@ private[graft] final class Tombstones(
 
 private[graft] object Tombstones {
 
-  /** Data bytes under which a set is read driver-side. */
+  /** Data bytes under which a set is read driver-side; also the guard
+    * of [[graft.core.SummaryDB.query]]'s driver-side bucket read. */
   val TinyBytes: Long = 8L << 20
 
   /** Caller-supplied takedown ids as one distinct long column `as`,

@@ -3,7 +3,8 @@ package graft.sources
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.filter2.compat.FilterCompat
+import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetReader}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 
 /** Driver-side reads of TINY parquet tables (index metadata, takedown
@@ -40,14 +41,26 @@ private[graft] object TinyParquet {
 
   /** Every row of every data file, in lexicographic file order. */
   def rows(conf: Configuration, dirStr: String): Seq[Group] =
-    dataFiles(conf, dirStr).flatMap { st =>
+    fileRows(conf, dataFiles(conf, dirStr).map(_.getPath))
+
+  /** The rows of `files`, in the given order, that pass `filter`: row
+    * groups and pages whose statistics rule the predicate out are not
+    * read, and failing records are never assembled.
+    */
+  def fileRows(conf: Configuration, files: Seq[Path],
+      filter: FilterCompat.Filter = FilterCompat.NOOP): Seq[Group] = {
+    val c = new Configuration(conf)
+    c.setBoolean(ParquetInputFormat.RECORD_FILTERING_ENABLED, true)
+    files.flatMap { f =>
       val reader = ParquetReader
-        .builder(new GroupReadSupport(), st.getPath)
-        .withConf(conf)
+        .builder(new GroupReadSupport(), f)
+        .withConf(c)
+        .withFilter(filter)
         .build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
       finally reader.close()
     }
+  }
 
   /** Write ONE flat row as a parquet data file under `dirStr` —
     * driver-side, no Spark job. The metadata tables this serves (index

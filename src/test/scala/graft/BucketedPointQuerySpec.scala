@@ -1,0 +1,190 @@
+package graft
+
+import graft.core._
+import graft.sources.TinyParquet
+import java.nio.file.Files
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.Dataset
+
+/** Stream-bucketed stream tables and the zero-job point query: every
+  * committed version of a stream table is `SummaryDB.Buckets` hash
+  * buckets of `streamId` (Spark's own partition id), sorted by
+  * (streamId, ts) and marked `_buckets`; `SummaryDB.query` answers from
+  * the stream's bucket read on the driver, bit-identical to the Spark
+  * path that a zero byte guard forces.
+  */
+class BucketedPointQuerySpec extends SparkSpec {
+  import spark.implicits._
+
+  private val params = QueryParams()
+  private val ops = Seq("count", "sum", "max", "min")
+
+  private def fs(dir: String): FileSystem =
+    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  /** Integer values, so a distributed sum cannot differ by order. */
+  private def events(sids: Seq[Long], from: Int, until: Int): Dataset[Event] =
+    (for (sid <- sids; i <- from until until)
+      yield Event(sid, i.toLong, i.toLong * 10L, ((i * 7 + sid) % 23).toDouble)).toDS()
+
+  /** Committed version directories of every table, as (table, dir). */
+  private def committed(dir: String): Seq[(String, Path)] =
+    fs(dir).listStatus(new Path(dir)).toSeq
+      .filter(s => s.isDirectory && s.getPath.getName.contains("__v"))
+      .filter(s => fs(dir).exists(new Path(s.getPath, "_SUCCESS")))
+      .map(s => s.getPath.getName.split("__v").head -> s.getPath)
+
+  private val catalogTables = Set("stream_meta", "landmark_intervals")
+
+  /** Every committed version of every stream table is bucketed. */
+  private def assertBucketed(dir: String): Unit = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val versions = committed(dir).filterNot(v => catalogTables(v._1))
+    assert(versions.nonEmpty)
+    versions.foreach { case (table, v) =>
+      assert(fs(dir).exists(new Path(v, "_buckets")), s"$v has no _buckets marker")
+      val files = TinyParquet.dataFiles(conf, v.toString)
+      assert(files.size <= SummaryDB.Buckets, s"$v has ${files.size} data files")
+      files.foreach { f =>
+        val b = f.getPath.getName.stripPrefix("part-").take(5).toInt
+        val keys = TinyParquet.fileRows(conf, Seq(f.getPath))
+          .map(g => (g.getLong("streamId", 0), g.getLong("ts", 0)))
+        keys.foreach { case (sid, _) =>
+          assert(SummaryDB.bucketOf(sid, SummaryDB.Buckets) == b, s"$table: stream $sid in ${f.getPath}")
+        }
+        assert(keys == keys.sorted, s"$table: ${f.getPath} is not sorted by (streamId, ts)")
+      }
+    }
+  }
+
+  private def bits(r: AggResult): (Long, Long) =
+    (java.lang.Double.doubleToRawLongBits(r.value), java.lang.Double.doubleToRawLongBits(r.error))
+
+  /** The default point query answers bit-identically to the one a zero
+    * guard forces onto Spark and to one over the whole tables; the
+    * forced one runs at least `forcedJobs` jobs;
+    * with `zeroJobs` the default one reads on the driver and runs none.
+    */
+  private def assertParity(db: SummaryDB, sid: Long, ranges: Seq[(Long, Long)],
+      zeroJobs: Boolean = true, forcedJobs: Long = 1L): Unit =
+    for ((t0, t1) <- ranges; op <- ops) {
+      val (fast, fc) = SparkCounts.of(spark)(db.query(sid, op, t0, t1, params))
+      val (slow, sc) = SparkCounts.of(spark)(db.query(sid, op, t0, t1, params, tinyBytes = 0L))
+      assert(bits(fast) == bits(slow), s"stream $sid $op [$t0, $t1]: $fast vs $slow")
+      val whole = QueryEngine.queryOne(db.summaryWindows, db.landmarkSpans, db.landmarkElems,
+        sid, op, t0, t1, params)
+      assert(bits(whole) == bits(slow), s"stream $sid $op [$t0, $t1]: whole tables $whole vs $slow")
+      if (zeroJobs) assert(fc.jobs == 0L, s"stream $sid $op [$t0, $t1] ran ${fc.jobs} jobs")
+      assert(sc.jobs >= forcedJobs, s"stream $sid $op [$t0, $t1]: forced run took the driver path")
+    }
+
+  private val sids = (1L to 6L)
+  // 1 and 2 take both appends of storeWithData, 5 only the first; 2
+  // also holds the open landmark.
+  private val probed = Seq(1L, 2L, 5L)
+  private val ranges = Seq((0L, 3000L), (450L, 1210L), (1990L, 2990L), (5000L, 6000L))
+
+  private def storeWithData(): (String, SummaryDB) = {
+    val dir = Files.createTempDirectory("graft_bucketed").toString
+    val db = SummaryDB.open(spark, dir)
+    db.append(events(sids, 0, 200))
+    db.append(events(sids.take(3), 200, 300))
+    (dir, db)
+  }
+
+  test("stream tables read with their known schema: no inference job") {
+    val (dir, db) = storeWithData()
+    val (_, reads) = SparkCounts.of(spark) {
+      db.summaryWindows; db.landmarkSpans; db.landmarkElems; ()
+    }
+    assert(reads.jobs == 0L, s"resolving the three tables ran ${reads.jobs} jobs")
+    val v = committed(dir).filter(_._1 == "summary_windows").map(_._2.toString).max
+    def fleet(sw: Dataset[SummaryWindow]) = QueryEngine.rangeQueryAll(
+      sw, db.landmarkSpans, db.landmarkElems, "count", 0L, 3000L, params).collect().toSet
+    val (inferred, bare) = SparkCounts.of(spark)(fleet(spark.read.parquet(v).as[SummaryWindow]))
+    val (known, typed) = SparkCounts.of(spark)(fleet(db.summaryWindows))
+    assert(known == inferred)
+    assert(typed.jobs == bare.jobs - 1, s"fleet query: ${typed.jobs} jobs with the schema, ${bare.jobs} inferring it")
+  }
+
+  test("point query parity: plain store, absent streams, empty buckets") {
+    val (dir, db) = storeWithData()
+    probed.foreach(sid => assertParity(db, sid, ranges))
+    val swVersion = committed(dir).filter(_._1 == "summary_windows").map(_._2).maxBy(_.getName)
+    val occupied = TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, swVersion.toString)
+      .map(_.getPath.getName.stripPrefix("part-").take(5).toInt).toSet
+    val absent = Iterator.from(100).map(_.toLong)
+    // Absent from the store, but its bucket holds other streams' rows.
+    val sharing = absent.find(s => occupied(SummaryDB.bucketOf(s, SummaryDB.Buckets))).get
+    assertParity(db, sharing, ranges)
+    // A bucket with no file is an empty bucket: nothing to read either way.
+    val lonely = absent.find(s => !occupied(SummaryDB.bucketOf(s, SummaryDB.Buckets))).get
+    assertParity(db, lonely, ranges, forcedJobs = 0L)
+    assert(bits(db.query(lonely, "count", 0L, 3000L, params)) ==
+      bits(db.query(sharing, "count", 0L, 3000L, params)))
+  }
+
+  test("point query parity: global landmarks and an open per-stream landmark") {
+    val (_, db) = storeWithData()
+    db.append(events(sids, 300, 320), landmarkIntervals = Seq((3000L, 3100L)))
+    db.startLandmark(2L, 3150L)
+    db.append(events(Seq(2L, 5L), 320, 400))
+    assert(db.hasOpenLandmark(2L))
+    val lmRanges = ranges ++ Seq((2990L, 3120L), (3050L, 3990L), (3160L, 3170L), (0L, 4000L))
+    probed.foreach(sid => assertParity(db, sid, lmRanges))
+    val c = db.query(2L, "count", 3200L, 3990L, params)
+    val raw = db.rawEvents.filter($"streamId" === 2L && $"ts".between(3200L, 3990L)).count()
+    assert(c.value == raw.toDouble && c.error == 0.0, s"open landmark is exact: $c, $raw rows")
+  }
+
+  test("point query parity: an unbucketed (old-layout) version takes the Spark path") {
+    val (dir, db) = storeWithData()
+    db.append(events(sids, 300, 320), landmarkIntervals = Seq((3000L, 3100L)))
+    committed(dir).filterNot(v => catalogTables(v._1))
+      .foreach { case (_, v) => fs(dir).delete(new Path(v, "_buckets"), false) }
+    probed.foreach(sid => assertParity(db, sid, ranges :+ ((2990L, 3120L)), zeroJobs = false))
+    val (_, old) = SparkCounts.of(spark)(db.query(1L, "sum", 0L, 3000L, params))
+    assert(old.jobs > 0L, "an unmarked version cannot be read by bucket")
+  }
+
+  test("layout: every committed stream-table version is bucketed, sorted and marked") {
+    val dir = Files.createTempDirectory("graft_layout").toString
+    val db = SummaryDB.open(spark, dir)
+    db.append(events(sids, 0, 150))
+    assertBucketed(dir)
+    db.appendOnce(0L, events(sids, 150, 200))
+    db.appendOnce(0L, events(sids, 150, 200)) // committed: skipped
+    // A crash between the events write and the commit marker: the
+    // replay recomputes the summaries from the WAL.
+    db.appendOnce(1L, events(sids, 200, 220))
+    fs(dir).delete(new Path(s"$dir/commits/batch-1"), false)
+    db.appendOnce(1L, events(sids, 200, 220))
+    assertBucketed(dir)
+    db.enableDistinctSummaries()
+    db.enableFreqSummaries()
+    db.enableSampleSummaries()
+    db.enableQuantileSummaries()
+    assertBucketed(dir)
+    db.append(events(sids, 220, 260))
+    assertBucketed(dir)
+    db.newLandmark(3L, 2000L, 2100L)
+    db.startLandmark(4L, 2500L)
+    db.append(events(sids, 260, 280))
+    db.endLandmark(4L, 2700L)
+    assertBucketed(dir)
+    val tables = committed(dir).map(_._1).toSet -- catalogTables
+    assert(tables == Set("summary_windows", "landmark_spans", "landmark_elems", DistinctSummary.Kind.table,
+      FreqSummary.Kind.table, SampleSummary.kind().table, QuantileSummary.kind().table))
+    // The known schema each table is read with is the one it was written with.
+    def types(s: org.apache.spark.sql.types.StructType) = s.fields.map(f => f.name -> f.dataType).toMap
+    Seq(DistinctSummary.Kind.table -> db.distinctSketches, FreqSummary.Kind.table -> db.freqSketches,
+      SampleSummary.kind().table -> db.sampleWindows, QuantileSummary.kind().table -> db.quantileWindows,
+      "summary_windows" -> db.summaryWindows.toDF(), "landmark_spans" -> db.landmarkSpans.toDF(),
+      "landmark_elems" -> db.landmarkElems.toDF()).foreach { case (table, read) =>
+      val v = committed(dir).filter(_._1 == table).map(_._2.toString).max
+      assert(types(spark.read.parquet(v).schema) == types(read.schema), table)
+      assert(read.count() > 0L, table)
+    }
+    assert(db.query(3L, "count", 0L, 2790L, params).value == 280.0)
+  }
+}

@@ -34,4 +34,30 @@ class ClusteringSpec extends SparkSpec {
     // query, strictly less than brute force.
     assert(ivf.size <= exact.size)
   }
+
+  test("centroidRows budget counts shuffle partitions, not only cores") {
+    // 64 partitions on 4 cores: every partition emits its own partials,
+    // so 16x the bytes a cores-only estimate expects reach the driver.
+    val keys = 4L; val dim = 8L
+    val pairs = spark.range(0L, 640L, 1L, 64)
+      .map(i => ((i % keys).toInt, Seq.fill(dim.toInt)(i.toDouble)))
+    val perPartition = keys * (dim * 24L + 64L)
+    def run() = SparkCounts.of(spark)(
+      Clustering.centroidRows(pairs, Clustering.CentroidAggD, keys, dim)
+        .sortBy(_._1).map { case (k, a) => (k, a.sums.toSeq, a.counts.toSeq) })
+    val (combined, direct) = run() // default budget: driver combine
+    assert(direct.shuffleBytes == 0L)
+    val budget = Clustering.DriverCombineMaxBytes
+    val partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    Clustering.DriverCombineMaxBytes = spark.sparkContext.defaultParallelism * perPartition
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
+    try {
+      val (shuffled, counts) = run()
+      assert(counts.shuffleBytes > 0L, "64 partitions of partials passed a budget sized for the cores")
+      assert(shuffled.toSeq == combined.toSeq)
+    } finally {
+      Clustering.DriverCombineMaxBytes = budget
+      spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    }
+  }
 }
