@@ -126,7 +126,7 @@ object Bench {
       // union spent its wall-clock in LambdaDeserializer/
       // ClassLoader.loadClass under classloader-lock contention that
       // GREW with thread count (3x slower at 32 threads than 4 —
-      // stack-sampled via tools/DeepBisect, BENCH_NOTES §7). The
+      // stack-sampled, BENCH_NOTES §7). The
       // crossJoin shape ships one closure set per task at any copy
       // count AND keeps size stats honest (estimate = |base| x copies
       // — an explode-based replica was estimated at |base| and made
@@ -380,28 +380,9 @@ object Bench {
           // exhaustive control (single timed sample — it is the
           // expensive side being priced) shows what the same batch
           // costs scoring every posting of the common terms.
-          import org.apache.spark.sql.functions.{array_repeat, concat, concat_ws, when}
           val zn = 500000L
-          // filler varies dl 7..10 so tf-saturation differs per doc —
-          // without it every tf=1 match scores identically and the
-          // top-k boundary becomes a corpus-wide tie plateau
-          val zipfFiller = when(pmod(hash($"id", lit(6)), lit(4)) === 0, lit(""))
-            .when(pmod(hash($"id", lit(6)), lit(4)) === 1, lit("and"))
-            .when(pmod(hash($"id", lit(6)), lit(4)) === 2, lit("and and"))
-            .otherwise(lit("and and and"))
-          val zipfDocs = spark.range(zn).select($"id".as("doc_id"),
-            concat_ws(" ",
-              lit("the"), lit("of"), lit("and"), zipfFiller,
-              concat(lit("mid"), pmod(hash($"id", lit(1)), lit(50))),
-              concat(lit("mid"), pmod(hash($"id", lit(2)), lit(50))),
-              concat(lit("rare"), pmod(hash($"id", lit(4)), lit(100000))),
-              concat(lit("rare"), pmod(hash($"id", lit(5)), lit(100000)))
-            ).as("text")).localCheckpoint()
-          val zipfQueries = spark.range(200).select($"id".as("query_id"),
-            concat_ws(" ", lit("the"), lit("of"),
-              concat(lit("mid"), pmod(hash($"id", lit(9)), lit(50))),
-              concat(lit("rare"), pmod(hash($"id", lit(10)), lit(100000)))
-            ).as("text")).localCheckpoint()
+          val zipfDocs = Bm25Corpora.zipfDocs(spark, zn)
+          val zipfQueries = Bm25Corpora.zipfQueries(spark)
           val zipfDir = s"$tmp/graft_bench_bm_zipf_$tag"
           val zipfBuild = timed(() =>
             graft.ops.Bm25Index.build(zipfDocs, zipfDir, nTb = 64, blockMax = true))
@@ -418,14 +399,7 @@ object Bench {
           // probe's work tracks the ESSENTIAL (rare-term) postings,
           // not the corpus.
           val zn2 = 5000000L
-          val zipfDocs2 = spark.range(zn2).select($"id".as("doc_id"),
-            concat_ws(" ",
-              lit("the"), lit("of"), lit("and"), zipfFiller,
-              concat(lit("mid"), pmod(hash($"id", lit(1)), lit(50))),
-              concat(lit("mid"), pmod(hash($"id", lit(2)), lit(50))),
-              concat(lit("rare"), pmod(hash($"id", lit(4)), lit(100000))),
-              concat(lit("rare"), pmod(hash($"id", lit(5)), lit(100000)))
-            ).as("text")).localCheckpoint()
+          val zipfDocs2 = Bm25Corpora.zipfDocs(spark, zn2)
           val zipfDir2 = s"$tmp/graft_bench_bm_zipf10_$tag"
           val zipfBuild2 = timed(() =>
             graft.ops.Bm25Index.build(zipfDocs2, zipfDir2, nTb = 64, blockMax = true))
@@ -441,23 +415,8 @@ object Bench {
           // exhaustive control (single sample — it is the expensive
           // side being priced).
           val mn = 1000000L
-          val mh = pmod(hash($"id", lit(1)), lit(10))
-          def midAt(off: Int) = concat(lit("mid"), pmod(mh + lit(off), lit(10)))
-          val modDocs = spark.range(mn).select($"id".as("doc_id"),
-            when(pmod($"id", lit(mn / 70L)) === 0,
-              concat_ws(" ", array_repeat(midAt(0), 6)))
-              .otherwise(concat_ws(" ",
-                midAt(0), midAt(1), midAt(2), midAt(3), midAt(4),
-                concat(lit("rare"), pmod(hash($"id", lit(2)), lit(66))),
-                lit("pada padb padc padd pade padf")))
-              .as("text")).localCheckpoint()
-          val mg = pmod(hash($"id", lit(21)), lit(10))
-          def qmidAt(off: Int) = concat(lit("mid"), pmod(mg + lit(off), lit(10)))
-          val modQueries = spark.range(100).select($"id".as("query_id"),
-            concat_ws(" ", qmidAt(0), qmidAt(1), qmidAt(2), qmidAt(3), qmidAt(4),
-              qmidAt(5), qmidAt(6),
-              concat(lit("rare"), pmod(hash($"id", lit(22)), lit(66)))
-            ).as("text")).localCheckpoint()
+          val modDocs = Bm25Corpora.modskewDocs(spark, mn, mn / 70L)
+          val modQueries = Bm25Corpora.modskewQueries(spark)
           val modDir = s"$tmp/graft_bench_bm_mod_$tag"
           val modBuild = timed(() =>
             graft.ops.Bm25Index.build(modDocs, modDir, nTb = 64, blockMax = true))
@@ -486,14 +445,7 @@ object Bench {
           // per-block-surviving) postings grow linearly and the
           // honest question is how far below 10x the probe stays.
           val mn2 = 10000000L
-          val modDocs2 = spark.range(mn2).select($"id".as("doc_id"),
-            when(pmod($"id", lit(mn2 / 700L)) === 0,
-              concat_ws(" ", array_repeat(midAt(0), 6)))
-              .otherwise(concat_ws(" ",
-                midAt(0), midAt(1), midAt(2), midAt(3), midAt(4),
-                concat(lit("rare"), pmod(hash($"id", lit(2)), lit(66))),
-                lit("pada padb padc padd pade padf")))
-              .as("text")).localCheckpoint()
+          val modDocs2 = Bm25Corpora.modskewDocs(spark, mn2, mn2 / 700L)
           val modDir2 = s"$tmp/graft_bench_bm_mod10_$tag"
           val modBuild2 = timed(() =>
             graft.ops.Bm25Index.build(modDocs2, modDir2, nTb = 64, blockMax = true))

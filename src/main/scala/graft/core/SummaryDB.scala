@@ -1,7 +1,6 @@
 package graft.core
 
 import graft.estimator.SumEstimator
-import graft.ops.Tombstones
 import graft.windowing.WindowingSpec
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import graft.plans.SummaryRewrite
@@ -332,9 +331,13 @@ final class SummaryDB private (
       newIntervals: Seq[(Long, Long)],
       forceRecompute: Boolean): Unit = {
     // Frontier: newest stored timestamp per stream (summary + landmark
-    // spans — the span te IS the old landmark-window te).
+    // spans — the span te IS the old landmark-window te). An open span's
+    // te is OpenT1, so it counts by its elements' ts instead (a closed
+    // span's elements lie inside its te).
     val fromSummary = summaryWindows.groupBy($"streamId").agg(max($"te").as("t"))
-    val fromLandmarks = landmarkSpans.toDF().groupBy($"streamId").agg(max($"te").as("t"))
+    val fromLandmarks = landmarkSpans.filter($"te" =!= OpenT1).select($"streamId", $"te".as("t"))
+      .unionByName(landmarkElems.select($"streamId", $"ts".as("t")))
+      .groupBy($"streamId").agg(max($"t").as("t"))
     val frontier: Map[Long, Long] = fromSummary.unionByName(fromLandmarks)
       .groupBy($"streamId").agg(max($"t"))
       .as[(Long, Long)].collect().toMap
@@ -802,7 +805,7 @@ final class SummaryDB private (
       t0: Long,
       t1: Long,
       params: QueryParams = QueryParams()): AggResult =
-    query(streamId, op, t0, t1, params, Tombstones.TinyBytes)
+    query(streamId, op, t0, t1, params, TinyParquet.TinyBytes)
 
   /** [[query]] with the driver read's byte guard explicit (0 forces the
     * Spark path). The stream's bucket files of the three tables, read

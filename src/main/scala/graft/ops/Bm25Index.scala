@@ -989,7 +989,7 @@ object Bm25Index {
     * even at a high skip FRACTION (the relative criterion alone
     * routes mid-size skewed corpora pruned and loses wall-clock to a
     * sub-second exhaustive aggregation). Calibrated from the
-    * [[graft.tools.PruneBreakEven]] sweep (BENCH_NOTES §19): on this
+    * `graft.tools.Profile bm25` sweep (BENCH_NOTES §19): on this
     * class of box the pruned pipeline floors at ~2-4 s while the
     * exhaustive path aggregates roughly 1-2 M postings/s through the
     * same scan+join kernel, so the crossover sits at ~2-5 M skippable
@@ -1383,14 +1383,6 @@ object Bm25Index {
       entry: ProbeCacheEntry, rep: ReportState): DataFrame = {
     val nDblkOpt = entry.nDblk
     import spark.implicits._
-    // phase timing to stderr, bench-diagnostic only
-    val debugT = sys.env.contains("GRAFT_BM25_DEBUG")
-    var tLast = System.nanoTime()
-    def mark(phase: String): Unit = if (debugT) {
-      val now = System.nanoTime()
-      System.err.println(f"[bm25prune] $phase%-22s ${(now - tLast) / 1e9}%.3f s")
-      tLast = now
-    }
     // Driver mirror of the SHARED contribution expression's
     // tf-saturation (same IEEE ops in the same order — JVM doubles are
     // strict, so this equals the codegen'd value bit-for-bit given the
@@ -1704,7 +1696,6 @@ object Bm25Index {
     // to the full top-2 list (the r13 seed — heavy-Zipf queries whose
     // rare term matches < k docs take this path, keeping that
     // anchor's θ intact).
-    mark("plan")
     val top2Of: Map[Long, Seq[String]] = byQuery.map { case (q, ts) =>
       q -> ts.sortBy(t => (-ubOf(t), t)).take(2).toSeq
     }
@@ -1712,7 +1703,6 @@ object Bm25Index {
     val seed2Pairs = top2Of.toSeq.collect { case (q, ts) if ts.length > 1 => (q, ts(1)) }
     val seedA = scoreSubset(seed1Pairs.map(p => (p._1, p._2, fullMask)), None)
       .localCheckpoint()
-    mark("seed1-score")
     val thetaProbe =
       if (seed2Pairs.isEmpty) seedA
       else {
@@ -1724,7 +1714,6 @@ object Bm25Index {
           .groupBy("query_id", "doc_id").agg(sum("score_micro").as("score_micro"))
       }
     val theta1a = kthScore(thetaProbe)
-    mark("theta1a")
     // fallback: fewer than k docs matched the top-1 list — take the
     // full top-2 list for THOSE queries only; its scores then also
     // serve as that pair's essential installment (the pair is pinned)
@@ -1742,7 +1731,6 @@ object Bm25Index {
           .groupBy("query_id", "doc_id").agg(sum("score_micro").as("score_micro"))
         (Some(fb), theta1a ++ kthScore(fbAll))
       }
-    mark("theta1")
     // the pinned-essential pairs: top-1 everywhere; top-2 where the
     // fallback scored it fully (a restricted top-2 score can never
     // enter the partial — docs matching top-2 but not top-1 would be
@@ -1822,7 +1810,6 @@ object Bm25Index {
       else seedParts.reduce(_.unionByName(_))
         .groupBy("query_id", "doc_id").agg(sum("score_micro").as("score_micro"))
         .localCheckpoint()
-    mark("partial")
     if (demPairs.isEmpty)
       return rankTail(partial, k) // everything essential: partial IS exact
 
@@ -1832,7 +1819,6 @@ object Bm25Index {
     // doc_id tie-break), then complete ONLY the survivors against the
     // demoted (term, block) postings.
     val theta2 = kthScore(partial)
-    mark("theta2")
     val metaRows = splits.toSeq.flatMap { case (q, s) =>
       val th = math.max(theta1.getOrElse(q, 0L), theta2.getOrElse(q, 0L))
       (0 until nB).map(blk => (q, blk, s.slack(blk), th))
@@ -1848,7 +1834,6 @@ object Bm25Index {
       .filter(col("score_micro") + col("__slack") >= col("__theta"))
       .select($"query_id", $"doc_id", $"score_micro")
       .localCheckpoint()
-    mark("survivors")
     // Completion join order routes on the survivor-pair size. SMALL
     // survivor sets broadcast into the term-major kernel (semi during
     // the scan, then per-pair). A LARGE survivor set would force that
@@ -1899,7 +1884,6 @@ object Bm25Index {
           .agg(sum("c_micro").as("score_micro"))
       })
       .withColumnRenamed("score_micro", "add_micro")
-    mark("completion-plan")
     val scores = survivors.join(addC, Seq("query_id", "doc_id"), "left_outer")
       .select($"query_id", $"doc_id",
         ($"score_micro" + coalesce($"add_micro", lit(0L))).as("score_micro"))

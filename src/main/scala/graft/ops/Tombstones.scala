@@ -41,7 +41,7 @@ private[graft] final class Tombstones(
     * read, distinct or broadcast-guard-count job on the probe path;
     * past it, the Spark read of the same files.
     */
-  def read(tinyBytes: Long = Tombstones.TinyBytes): Option[DataFrame] = {
+  def read(tinyBytes: Long = TinyParquet.TinyBytes): Option[DataFrame] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val bytes = TinyParquet.dataBytes(conf, location)
     val names = keys.fieldNames.toSeq
@@ -98,10 +98,6 @@ private[graft] final class Tombstones(
 }
 
 private[graft] object Tombstones {
-
-  /** Data bytes under which a set is read driver-side; also the guard
-    * of [[graft.core.SummaryDB.query]]'s driver-side bucket read. */
-  val TinyBytes: Long = 8L << 20
 
   /** Caller-supplied takedown ids as one distinct long column `as`,
     * pinned (one evaluation feeds the guard's count and the join) and

@@ -22,6 +22,12 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
   */
 private[graft] object TinyParquet {
 
+  /** Data bytes under which a guarded table is read driver-side: the
+    * takedown sets of `ops.Tombstones` and the stream buckets of
+    * [[graft.core.SummaryDB.query]].
+    */
+  val TinyBytes: Long = 8L << 20
+
   /** The table's data files, lexicographically sorted. */
   def dataFiles(conf: Configuration, dirStr: String): Seq[org.apache.hadoop.fs.FileStatus] = {
     val dirPath = new Path(dirStr)

@@ -449,8 +449,8 @@ object DecayModel {
     // at once. With a few hundred cached stream lengths, a hot key
     // landing second in its bin serialized all 32 threads on one
     // monitor: the 10^9-row bench point ran 10x slower AFTER a fleet
-    // run had populated the cache (found by stack-sampling in
-    // tools/DeepBisect). get() never locks.
+    // run had populated the cache (found by stack-sampling, BENCH_NOTES
+    // §6). get() never locks.
     val key = (spec, bufferSize, n)
     val hit = cache.get(key)
     if (hit != null) return hit

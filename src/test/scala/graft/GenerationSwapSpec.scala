@@ -121,19 +121,8 @@ class GenerationSwapSpec extends SparkSpec {
     // 16 cells; the old per-cell loop would run >= 16 write jobs here
     AnnIndex.build(vecs(0 until 400, seed = 41), dir, nClusters = 16, iters = 1)
     AnnIndex.append(spark, dir, vecs(2000 until 2080, seed = 42))
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      AnnIndex.compact(spark, dir)
-      Thread.sleep(1000) // listener bus is async; let the events drain
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() <= 8,
-      s"compact must be O(1) Spark jobs regardless of the 16 cells, ran ${jobs.get()}")
+    val (_, counts) = SparkCounts.of(spark)(AnnIndex.compact(spark, dir))
+    assert(counts.jobs <= 8,
+      s"compact must be O(1) Spark jobs regardless of the 16 cells, ran ${counts.jobs}")
   }
 }

@@ -51,6 +51,19 @@ class LandmarkApiSpec extends SparkSpec {
     assert(db.landmarks.collect().head.elems.size == 20)
   }
 
+  test("appends into an open landmark clamp from its last element, not its open end") {
+    val dir = Files.createTempDirectory("graftdb").toString
+    val db = SummaryDB.open(spark, dir)
+    def tens(range: Range) = range.map(i => Event(2L, i.toLong, i * 10L, (i % 23).toDouble)).toDS()
+    db.append(tens(0 until 315))
+    db.startLandmark(2L, 3150L)
+    val batches = Seq(320 until 400, 400 until 480) // ts 3200..3990, then 4000..4790
+    batches.foreach(b => db.append(tens(b)))
+    assert(db.rawEvents.filter($"ts" === Long.MinValue).count() == 0L, "a clamp overflowed")
+    val c = db.query(2L, "count", 4000L, 4790L, params)
+    assert(c.value == batches(1).size.toDouble && c.error == 0.0, s"open landmark is exact: $c")
+  }
+
   test("landmark state errors: double start, end without start") {
     val dir = Files.createTempDirectory("graftdb").toString
     val db = SummaryDB.open(spark, dir)
