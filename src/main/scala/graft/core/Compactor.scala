@@ -36,13 +36,37 @@ object Compactor {
       windows: DataFrame,
       specOf: Long => WindowingSpec,
       mergeAggs: Seq[Column],
+      bufferSize: Long): DataFrame =
+    merge(windows.join(windows.groupBy(col("streamId")).agg((max(col("ce")) + 1L).as("n")), "streamId"),
+      specOf, mergeAggs, bufferSize)
+
+  /** [[recoarsen]] at known element counts `counts` (streamId, n) —
+    * typically a driver-built local relation, so no aggregation runs to
+    * find them. Windows of streams absent from `counts` pass through
+    * unchanged. Both branches share one join, so the counts are
+    * broadcast once.
+    */
+  def recoarsenAt(
+      windows: DataFrame,
+      counts: DataFrame,
+      specOf: Long => WindowingSpec,
+      mergeAggs: Seq[Column],
       bufferSize: Long): DataFrame = {
-    val counts = windows.groupBy(col("streamId")).agg((max(col("ce")) + 1L).as("n"))
+    val joined = windows.join(counts, Seq("streamId"), "left")
+    merge(joined.filter(col("n").isNotNull), specOf, mergeAggs, bufferSize)
+      .unionByName(joined.filter(col("n").isNull).drop("n"))
+  }
+
+  /** Windows carrying their stream's count `n` → the canonical windows at n. */
+  private def merge(
+      windows: DataFrame,
+      specOf: Long => WindowingSpec,
+      mergeAggs: Seq[Column],
+      bufferSize: Long): DataFrame = {
     val aggs = Seq(
       min(col("ts")).as("ts"), max(col("te")).as("te"),
       min(col("cs")).as("cs"), max(col("ce")).as("ce")) ++ mergeAggs
     windows
-      .join(counts, "streamId")
       .withColumn("windowId",
         graft.functions.WindowId.column(specOf, bufferSize, col("streamId"), col("n"), col("cs")))
       .groupBy(col("streamId"), col("windowId"))

@@ -2,14 +2,16 @@ package graft.core
 
 import graft.estimator.SumEstimator
 import graft.windowing.WindowingSpec
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.plans.SummaryRewrite
 import graft.sources.{TinyParquet, WriterLock}
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
+import scala.jdk.CollectionConverters._
 
 /** The persistent multi-stream store: catalog + events + summary +
   * landmark tables under one directory — the Spark-native analogue of
@@ -26,10 +28,14 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *   dir/commits                batch-id markers for streaming replay
   *
   * Every stream table (summary windows, landmark spans and elements,
-  * and each enabled [[SummaryKind]]'s table) is bucketed by stream
-  * ([[writeStreamTable]]): bucket b of `streamId` in the version's
-  * `part-<b, 5 digits>-*` file(s), rows sorted by (streamId, ts), and a
-  * `_buckets` marker. [[query]] reads only its stream's bucket.
+  * and each enabled [[SummaryKind]]'s table) is [[SummaryDB.Buckets]]
+  * hash buckets of `streamId`, each bucket's rows sorted by
+  * (streamId, ts), and each version of it is one [[BucketManifest]]:
+  * `dir/<table>__vN/_manifest` lists every bucket's file(s), relative to
+  * `dir`. A version directory holds only the files of the buckets its
+  * write touched; the other buckets point at files in older versions,
+  * so an append rewrites only its streams' buckets
+  * ([[writeStreamTable]]). [[query]] reads one bucket.
   *
   * Landmark elements are rows keyed by (streamId, windowId), never one
   * array per window: a landmark left open across a billion-event
@@ -39,10 +45,16 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   *
   * Crash safety (the reference's atomic "brew" commits,
   * `/root/reference/storage/badger_backend.go:210-263`): every table
-  * rewrite lands in a fresh `__v<stamp>` directory; readers resolve the
-  * highest version that carries Spark's `_SUCCESS` marker, so a crash at
-  * any point leaves a complete older or newer table — never a partial
-  * one. Older versions are pruned best-effort after a successful write.
+  * write lands in a fresh `__v<stamp>` directory, and readers resolve the
+  * newest version that is complete: a stream table's once its manifest
+  * is renamed into place after the data (its Spark write leaves no
+  * `_SUCCESS`), a catalog table's once Spark's `_SUCCESS` marker lands.
+  * A crash at any point leaves a complete older or newer table, never a
+  * partial one. After a successful write, whatever neither the newest
+  * version nor its predecessor references is pruned best-effort.
+  * Tables written before manifests (a `_SUCCESS` version, bucketed by a
+  * `_buckets` marker or not at all) stay readable, and their next write
+  * migrates them.
   */
 final class SummaryDB private (
     val spark: SparkSession,
@@ -110,21 +122,29 @@ final class SummaryDB private (
       .map(s => s.getPath.getName.stripPrefix(prefix).toLong -> s.getPath)
   }
 
-  /** Newest complete version directory of `name`, if any. */
-  private def currentVersion(name: String): Option[Path] =
-    versions(name)
-      .filter { case (_, path) => fs.exists(new Path(path, "_SUCCESS")) }
-      .maxByOption(_._1).map(_._2)
+  /** Newest complete version directory of `name`, if any: one with a
+    * published manifest (a stream table) or Spark's `_SUCCESS` (a
+    * catalog table, or a stream table written before manifests).
+    */
+  private def currentVersion(name: String): Option[Path] = complete(name).headOption
 
-  /** Write a fresh version of `name`, then prune older versions
-    * (keeping one predecessor so a reader whose lazy plan still points
-    * at the previous version is not yanked mid-query; older ones go).
-    * Stamps are max(wall clock, newest existing + 1) — monotonic across
+  /** The complete versions of `name`, newest first (checked lazily). */
+  private def complete(name: String): LazyList[Path] =
+    versions(name).sortBy(-_._1).to(LazyList).map(_._2)
+      .filter(v => fs.exists(new Path(v, BucketManifest.Name)) || fs.exists(new Path(v, "_SUCCESS")))
+
+  /** Stamps are max(wall clock, newest existing + 1) — monotonic across
     * JVM restarts, unlike nanoTime whose origin resets on reboot.
     */
+  private def nextStamp(name: String): Long =
+    math.max(System.currentTimeMillis(), versions(name).map(_._1).maxOption.getOrElse(0L) + 1L)
+
+  /** Write a fresh version of the catalog table `name`, then prune older
+    * versions (keeping one predecessor so a reader whose lazy plan still
+    * points at the previous version is not yanked mid-query).
+    */
   private def writeVersioned(name: String, write: String => Unit): Unit = {
-    val stamp =
-      math.max(System.currentTimeMillis(), versions(name).map(_._1).maxOption.getOrElse(0L) + 1L)
+    val stamp = nextStamp(name)
     write(p(s"${name}__v$stamp"))
     val stale = versions(name).filter(_._1 < stamp).sortBy(_._1).dropRight(1)
     stale.foreach { case (_, path) =>
@@ -132,22 +152,75 @@ final class SummaryDB private (
     }
   }
 
-  /** Write `df` as a fresh version of the stream table `name`, bucketed
-    * by stream: [[SummaryDB.Buckets]] hash partitions of `streamId`
-    * (Spark's `HashPartitioning`, so bucket b is written by task b, as
-    * `part-<b>-*`), each sorted by (streamId, ts), then the `_buckets`
-    * marker that lets [[query]] read one bucket. A repartition by
-    * number is never coalesced by AQE.
+  /** The current version of the stream table `name`, if any. */
+  private def streamTable(name: String): Option[BucketManifest] =
+    currentVersion(name).map(BucketManifest.read(fs, _))
+
+  /** The paths that read the stream table `name`'s current version: its
+    * directory when its own write holds every file the manifest lists
+    * (a full rewrite: Spark lists one directory several times faster
+    * than it checks 16 files), else those files.
     */
-  private def writeStreamTable(name: String, df: DataFrame): Unit =
-    writeVersioned(name, { path =>
-      df.repartition(SummaryDB.Buckets, col("streamId"))
-        .sortWithinPartitions("streamId", "ts")
-        .write.mode(SaveMode.Overwrite).parquet(path)
-      val out = fs.create(new Path(path, SummaryDB.BucketsMarker), true)
-      try out.write(SummaryDB.Buckets.toString.getBytes("UTF-8"))
-      finally out.close()
-    })
+  private def tableFiles(name: String): Seq[String] = currentVersion(name).toSeq.flatMap { v =>
+    val files = BucketManifest.read(fs, v).files.map(_.path)
+    if (files.nonEmpty && files.forall(_.startsWith(s"${v.getName}/"))) Seq(v.toString) else files.map(p)
+  }
+
+  /** Publish a new version of the stream table `name`: the buckets in
+    * `carried` keep their files by reference, and every other bucket
+    * holds `df`'s rows (so `df` holds rows of those buckets only) with
+    * the merge cadence in `cadence` (none by default). `df` is written
+    * as [[SummaryDB.Buckets]] hash partitions of `streamId` — Spark's
+    * `HashPartitioning`, so bucket b is written by task b, as
+    * `part-<b>-*`; a repartition by number is never coalesced by AQE —
+    * each sorted by (streamId, ts), without Spark's `_SUCCESS`: the
+    * manifest, published after the data, is what completes the version.
+    * Then [[prune]].
+    */
+  private def writeStreamTable(
+      name: String,
+      df: DataFrame,
+      carried: Map[Int, BucketManifest.Bucket] = Map.empty,
+      cadence: Map[Int, (Int, Set[Long])] = Map.empty): Unit = {
+    val version = new Path(p(s"${name}__v${nextStamp(name)}"))
+    df.repartition(SummaryDB.Buckets, col("streamId"))
+      .sortWithinPartitions("streamId", "ts")
+      .write.mode(SaveMode.Overwrite)
+      .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
+      .parquet(version.toString)
+    val (written, stray) = TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, version.toString)
+      .groupBy(_.getPath.getName.stripPrefix("part-").take(5).toInt).partition(f => !carried.contains(f._1))
+    // Spark's task 0 always writes a file: an empty one when bucket 0 is carried
+    stray.values.flatten.foreach(f => fs.delete(f.getPath, false))
+    BucketManifest(hashed = true, Vector.tabulate(SummaryDB.Buckets) { b =>
+      carried.getOrElse(b, {
+        val (since, pending) = cadence.getOrElse(b, (0, Set.empty[Long]))
+        BucketManifest.Bucket(written.getOrElse(b, Nil)
+          .map(f => BucketManifest.File(s"${version.getName}/${f.getPath.getName}", f.getLen)),
+          since, pending)
+      })
+    }).publish(fs, version)
+    prune(name)
+  }
+
+  /** Delete what no kept version of the stream table `name` references.
+    * Kept are the newest complete version and its complete predecessor,
+    * so a reader whose lazy plan still points at the previous version is
+    * not yanked mid-query. Every other version directory, torn ones
+    * included, loses each file neither kept manifest lists (its markers
+    * too, so it is never resolved again), and goes once none is left.
+    */
+  private def prune(name: String): Unit = {
+    val kept = complete(name).take(2)
+    val referenced = kept.flatMap(v => BucketManifest.read(fs, v).files.map(_.path)).toSet
+    versions(name).map(_._2).filterNot(kept.contains).foreach { v =>
+      try {
+        val (live, dead) = fs.listStatus(v).toSeq.filterNot(_.getPath.getName.startsWith("."))
+          .partition(f => referenced(s"${v.getName}/${f.getPath.getName}"))
+        if (live.isEmpty) fs.delete(v, true) else dead.foreach(f => fs.delete(f.getPath, true))
+      } catch { case _: Throwable => () } // retried by the next write
+    }
+  }
 
   /** `paths` as a table of `T`, read with `T`'s own schema — no
     * schema-inference job; empty when there are no paths.
@@ -156,15 +229,13 @@ final class SummaryDB private (
     if (paths.isEmpty) spark.emptyDataset[T]
     else spark.read.schema(implicitly[Encoder[T]].schema).parquet(paths: _*).as[T]
 
-  private def readVersioned[T: Encoder](name: String): Dataset[T] =
-    readFiles[T](currentVersion(name).toSeq.map(_.toString))
-
   // --------------------------------------------------------------- catalog
 
   private var metas: Map[Long, StreamMeta] = loadMetas()
 
   private def loadMetas(): Map[Long, StreamMeta] =
-    readVersioned[StreamMeta]("stream_meta").collect().map(m => m.streamId -> m).toMap
+    readFiles[StreamMeta](currentVersion("stream_meta").toSeq.map(_.toString))
+      .collect().map(m => m.streamId -> m).toMap
 
   def streams: Map[Long, StreamMeta] = metas
 
@@ -193,19 +264,33 @@ final class SummaryDB private (
   /** All landmark intervals ever declared (they are properties of the
     * DB's timeline, persisted so later appends keep honoring them).
     * Stored rows are (streamId, t0, t1); streamId = -1 means global
-    * (applies to every stream).
+    * (applies to every stream). The table holds one row per declared
+    * interval, so it is read on the driver (0 jobs) under the
+    * [[TinyParquet.TinyBytes]] guard; every mutating call reads it once
+    * and passes the rows down.
     */
-  private def storedIntervals: Seq[(Long, Long, Long)] =
-    readVersioned[(Long, Long, Long)]("landmark_intervals").collect().toSeq.sorted
+  private def storedIntervals: Seq[(Long, Long, Long)] = currentVersion("landmark_intervals").fold(
+    Seq.empty[(Long, Long, Long)]) { v =>
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = TinyParquet.dataFiles(conf, v.toString)
+    if (files.map(_.getLen).sum > TinyParquet.TinyBytes)
+      readFiles[(Long, Long, Long)](Seq(v.toString)).collect().toSeq
+    else TinyParquet.fileRows(conf, files.map(_.getPath))
+      .map(g => (g.getLong("_1", 0), g.getLong("_2", 0), g.getLong("_3", 0)))
+  }.sorted
 
-  def landmarkIntervals: Seq[(Long, Long)] =
-    storedIntervals.filter(_._1 == -1L).map(r => (r._2, r._3))
+  def landmarkIntervals: Seq[(Long, Long)] = globalIntervals(storedIntervals)
+
+  private def globalIntervals(stored: Seq[(Long, Long, Long)]): Seq[(Long, Long)] =
+    stored.filter(_._1 == -1L).map(r => (r._2, r._3))
 
   /** Per-stream exact intervals (the reference's per-stream
     * StartLandmark/EndLandmark surface).
     */
-  def streamLandmarks: Map[Long, Seq[(Long, Long)]] =
-    storedIntervals.filter(_._1 != -1L)
+  def streamLandmarks: Map[Long, Seq[(Long, Long)]] = perStreamIntervals(storedIntervals)
+
+  private def perStreamIntervals(stored: Seq[(Long, Long, Long)]): Map[Long, Seq[(Long, Long)]] =
+    stored.filter(_._1 != -1L)
       .groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3))).toMap
 
   /** Declare an exact interval for one stream and re-summarize —
@@ -214,9 +299,7 @@ final class SummaryDB private (
     */
   def newLandmark(streamId: Long, t0: Long, t1: Long): Unit = withWriteLock {
     require(t0 <= t1, s"bad landmark interval [$t0, $t1]")
-    saveIntervals((storedIntervals :+ ((streamId, t0, t1))).distinct)
-    refreshSummaries(landmarkIntervals)
-    refreshRegistrations()
+    relandmark((storedIntervals :+ ((streamId, t0, t1))).distinct)
   }
 
   /** The open-interval sentinel: an un-ended landmark absorbs every
@@ -225,8 +308,10 @@ final class SummaryDB private (
   private val OpenT1 = Long.MaxValue
 
   /** True iff the stream has a started-but-not-ended landmark. */
-  def hasOpenLandmark(streamId: Long): Boolean =
-    storedIntervals.exists(r => r._1 == streamId && r._3 == OpenT1)
+  def hasOpenLandmark(streamId: Long): Boolean = openLandmark(storedIntervals, streamId).nonEmpty
+
+  private def openLandmark(stored: Seq[(Long, Long, Long)], streamId: Long): Option[(Long, Long, Long)] =
+    stored.find(r => r._1 == streamId && r._3 == OpenT1)
 
   /** Open-ended landmark: from here on, the stream's elements with
     * ts >= t0 are stored exactly (diverted from decay), across any
@@ -235,11 +320,10 @@ final class SummaryDB private (
     * Callable before any append (an empty DB just records the interval).
     */
   def startLandmark(streamId: Long, t0: Long): Unit = withWriteLock {
-    require(!hasOpenLandmark(streamId),
+    val stored = storedIntervals
+    require(openLandmark(stored, streamId).isEmpty,
       s"stream $streamId already has an open landmark")
-    saveIntervals((storedIntervals :+ ((streamId, t0, OpenT1))).distinct)
-    refreshSummaries(landmarkIntervals)
-    refreshRegistrations()
+    relandmark((stored :+ ((streamId, t0, OpenT1))).distinct)
   }
 
   /** Close the stream's open landmark at t1 — the reference's
@@ -247,14 +331,19 @@ final class SummaryDB private (
     * appended while it was open stay exact; later ones decay normally.
     */
   def endLandmark(streamId: Long, t1: Long): Unit = withWriteLock {
-    val open = storedIntervals
-      .find(r => r._1 == streamId && r._3 == OpenT1)
+    val stored = storedIntervals
+    val open = openLandmark(stored, streamId)
       .getOrElse(throw new IllegalStateException(
         s"stream $streamId has no open landmark"))
     require(t1 >= open._2, s"endLandmark($t1) precedes startLandmark(${open._2})")
-    saveIntervals(storedIntervals.filterNot(_ == open) :+ ((streamId, open._2, t1)))
-    refreshSummaries(landmarkIntervals)
-    refreshRegistrations()
+    relandmark(stored.filterNot(_ == open) :+ ((streamId, open._2, t1)))
+  }
+
+  /** Store `stored` as the declared intervals and re-summarize under them. */
+  private def relandmark(stored: Seq[(Long, Long, Long)]): Unit = {
+    saveIntervals(stored)
+    refreshSummaries(stored)
+    refreshRegistrations(stored)
   }
 
   private def saveIntervals(rows: Seq[(Long, Long, Long)]): Unit =
@@ -278,15 +367,25 @@ final class SummaryDB private (
     * idempotent per tag.
     *
     * Without any landmark intervals the append is INCREMENTAL: the
-    * batch becomes per-element fine windows and the summary table
-    * re-coarsens by monoid merge ([[Compactor]]) — the WAL is never
-    * re-read to maintain decay.
+    * batch becomes per-element fine windows and the buckets of its
+    * streams re-coarsen by monoid merge ([[Compactor]]) — the WAL is
+    * never re-read to maintain decay, and other buckets are not
+    * rewritten ([[appendTo]]).
     */
   def append(
       events: Dataset[Event],
-      landmarkIntervals: Seq[(Long, Long)] = Nil): Unit = withWriteLock {
-    val tag = f"adhoc-${nextBatchStamp()}%09d"
-    appendTagged(tag, events, landmarkIntervals, forceRecompute = false)
+      landmarkIntervals: Seq[(Long, Long)] = Nil): Unit =
+    append(events, landmarkIntervals, TinyParquet.TinyBytes)
+
+  /** [[append]] with the byte guard of its driver reads explicit (0
+    * forces their Spark fallback).
+    */
+  private[graft] def append(
+      events: Dataset[Event],
+      landmarkIntervals: Seq[(Long, Long)],
+      tinyBytes: Long): Unit = withWriteLock {
+    val bstamp = nextBatchStamp()
+    appendTagged(f"adhoc-$bstamp%09d", bstamp, events, landmarkIntervals, forceRecompute = false, tinyBytes)
   }
 
   /** Idempotent append keyed by a streaming micro-batch id. A batch id
@@ -307,7 +406,8 @@ final class SummaryDB private (
     val partialReplay = fs.exists(new Path(p("events"), tag))
     // appendTagged writes the commit marker itself (same path) once the
     // summaries reflect the batch.
-    appendTagged(tag, events, landmarkIntervals, forceRecompute = partialReplay)
+    appendTagged(tag, nextBatchStamp(), events, landmarkIntervals,
+      forceRecompute = partialReplay, TinyParquet.TinyBytes)
   }
 
   private def nextBatchStamp(): Long = {
@@ -327,22 +427,28 @@ final class SummaryDB private (
 
   private def appendTagged(
       tag: String,
+      bstamp: Long,
       batch: Dataset[Event],
       newIntervals: Seq[(Long, Long)],
-      forceRecompute: Boolean): Unit = {
-    // Frontier: newest stored timestamp per stream (summary + landmark
-    // spans — the span te IS the old landmark-window te). An open span's
-    // te is OpenT1, so it counts by its elements' ts instead (a closed
-    // span's elements lie inside its te).
-    val fromSummary = summaryWindows.groupBy($"streamId").agg(max($"te").as("t"))
-    val fromLandmarks = landmarkSpans.filter($"te" =!= OpenT1).select($"streamId", $"te".as("t"))
-      .unionByName(landmarkElems.select($"streamId", $"ts".as("t")))
-      .groupBy($"streamId").agg(max($"t").as("t"))
-    val frontier: Map[Long, Long] = fromSummary.unionByName(fromLandmarks)
-      .groupBy($"streamId").agg(max($"t"))
-      .as[(Long, Long)].collect().toMap
+      forceRecompute: Boolean,
+      tinyBytes: Long): Unit = {
+    val stored = {
+      val old = storedIntervals
+      if (newIntervals.isEmpty) old else (old ++ newIntervals.map(iv => (-1L, iv._1, iv._2))).distinct
+    }
+    // Under landmarks the scalar tables are recomputed from the WAL, and
+    // on a crash REPLAY every table is (below); the rest absorb the batch.
+    val recompute = stored.nonEmpty || forceRecompute
+    val incremental = (if (recompute) Nil else Seq(Summarizer.Kind)) ++
+      (if (forceRecompute) Nil else enabled.values.toSeq)
+    val tables = (FrontierColumns.map(_._1) ++ incremental.map(_.table)).distinct
+      .map(name => name -> streamTable(name)).toMap
+    val counts = batchCounts(batch, needed = mergeEvery > 1 || tables.values.exists(_.nonEmpty))
+    val sids = counts.fold(Set.empty[Long])(_.keySet)
+    val frontier: Map[Long, Long] = FrontierColumns.flatMap { case (name, c) =>
+      tables(name).toSeq.flatMap(m => streamMaxima(bucketsOf(m, sids), sids, c, tinyBytes))
+    }.groupMapReduce(_._1)(_._2)(math.max)
 
-    val bstamp = nextBatchStamp()
     val tagDir = s"${p("events")}/$tag"
     Ingest.prepare(batch.toDF().withColumn("arrival", col("seq")), baseTs = frontier)
       .toDF()
@@ -352,12 +458,8 @@ final class SummaryDB private (
     // re-ranked by a second run of prepare's shuffle per summary kind.
     val prepared = readFiles[Event](Seq(tagDir))
 
-    if (newIntervals.nonEmpty)
-      saveIntervals((storedIntervals ++ newIntervals.map(iv => (-1L, iv._1, iv._2))).distinct)
-    val all = this.landmarkIntervals
-    if (all.nonEmpty || streamLandmarks.nonEmpty || forceRecompute)
-      refreshSummaries(all, includeUncommittedTag = Some(tag))
-    else appendIncremental(Summarizer.Kind, prepared)
+    if (newIntervals.nonEmpty) saveIntervals(stored)
+    if (recompute) refreshSummaries(stored, includeUncommittedTag = Some(tag))
     // The enabled kinds rank over ALL elements (landmark diversion never
     // removes a value from a sketch or sample), so the incremental path
     // applies even to landmarked stores. On crash REPLAY it would
@@ -366,10 +468,8 @@ final class SummaryDB private (
     // double-count and drift the partition off the canonical decay
     // (and KLL sketch weights would double) — rebuild from the WAL
     // instead, like the scalar refreshSummaries path.
-    enabled.values.foreach { kind =>
-      if (forceRecompute) rebuild(kind, includeUncommittedTag = Some(tag))
-      else appendIncremental(kind, prepared)
-    }
+    incremental.foreach(kind => appendTo(kind, prepared, tables(kind.table), counts, tinyBytes))
+    if (forceRecompute) enabled.values.foreach(rebuild(_, includeUncommittedTag = Some(tag)))
     // The summaries now reflect this batch: commit it. A crash before
     // this line leaves an unmarked events/<tag> dir that readEvents
     // skips, so a later recompute can never resurrect a batch the
@@ -377,66 +477,130 @@ final class SummaryDB private (
     // summary table must agree under every crash point).
     fs.mkdirs(new Path(p("commits")))
     fs.create(new Path(p("commits"), tag), true).close()
-    refreshRegistrations()
+    refreshRegistrations(stored)
   }
 
-  // ---------------------------------------------------------- merge cadence
-
-  /** One re-coarsening cadence counter per summary kind, keyed by its
-    * table, all sharing [[SummaryDB.open]]'s `mergeEvery` knob — a
-    * single controller, so the kinds cannot drift behaviorally.
-    * Counters are session-scoped by design (cadence restarts on reopen
-    * — it is not durable state) and advance independently: not every
-    * kind is exercised by every append (the scalar path skips
-    * landmarked stores; the enabled kinds run regardless).
+  /** Where the frontier — the newest stored timestamp per stream — is
+    * read: summary windows and landmark spans by `te` (the span te IS
+    * the old landmark-window te), landmark elements by `ts`. An open
+    * span's te is the OpenT1 sentinel, which [[streamMaxima]] skips, so
+    * the span counts by its elements' ts instead (a closed span's
+    * elements lie inside its te).
     */
-  private val sinceMerge = collection.mutable.Map.empty[String, Int]
+  private val FrontierColumns =
+    Seq("summary_windows" -> "te", "landmark_spans" -> "te", "landmark_elems" -> "ts")
 
-  /** Advance `kind`'s cadence; true on every `mergeEvery`-th call. */
-  private def mergeDue(kind: String): Boolean = {
-    val n = sinceMerge.getOrElse(kind, 0) + 1
-    sinceMerge(kind) = if (n >= mergeEvery) 0 else n
-    n >= mergeEvery
+  /** The batch's per-stream element counts: read on the driver when the
+    * batch is a local relation (0 jobs), else collected by one
+    * aggregate — or, when not `needed` (an append into an empty store
+    * that merges at once), left unknown for a non-local batch.
+    */
+  private def batchCounts(batch: Dataset[Event], needed: Boolean): Option[Map[Long, Long]] =
+    batch.queryExecution.optimizedPlan match {
+      case _: LocalRelation =>
+        Some(batch.select($"streamId").as[Long].collect().groupMapReduce(identity)(_ => 1L)(_ + _))
+      case _ if needed => Some(batch.groupBy($"streamId").count().as[(Long, Long)].collect().toMap)
+      case _ => None
+    }
+
+  /** The files of `m`'s buckets that hold `sids` (every file of an
+    * unhashed version).
+    */
+  private def bucketsOf(m: BucketManifest, sids: Set[Long]): Seq[BucketManifest.File] =
+    if (m.hashed) sids.map(m.bucketOf).toSeq.sorted.flatMap(m.buckets(_).files) else m.files
+
+  /** Per-stream maximum of the long `column` over the rows of `sids` in
+    * `files`, skipping the open-landmark sentinel OpenT1. Read on the
+    * driver (0 jobs, only the two columns decoded) when the files hold
+    * at most `tinyBytes`, else by one Spark aggregate over the same
+    * files.
+    */
+  private def streamMaxima(files: Seq[BucketManifest.File], sids: Set[Long], column: String,
+      tinyBytes: Long): Map[Long, Long] =
+    if (sids.isEmpty || files.isEmpty) Map.empty
+    else if (files.map(_.bytes).sum <= tinyBytes) {
+      val sid = FilterApi.longColumn("streamId")
+      TinyParquet.fileRows(spark.sparkContext.hadoopConfiguration, files.map(f => new Path(p(f.path))),
+          FilterCompat.get(FilterApi.and(FilterApi.in(sid, sids.map(java.lang.Long.valueOf).asJava),
+            FilterApi.notEq(FilterApi.longColumn(column), java.lang.Long.valueOf(OpenT1)))),
+          Seq("streamId", column))
+        .map(g => g.getLong("streamId", 0) -> g.getLong(column, 0))
+        .filter(r => sids(r._1) && r._2 != OpenT1)
+        .groupMapReduce(_._1)(_._2)(math.max)
+    } else spark.read.schema(s"streamId BIGINT, $column BIGINT").parquet(files.map(f => p(f.path)): _*)
+      .filter($"streamId".isin(sids.toSeq: _*) && col(column) =!= OpenT1)
+      .groupBy($"streamId").agg(max(col(column)))
+      .as[(Long, Long)].collect().toMap
+
+  /** Absorb the clamped batch `prepared` into `kind`'s table, rewriting
+    * only the buckets of its streams; `counts` are its per-stream element
+    * counts, and `stored` the table's current version.
+    *
+    * Each touched bucket advances its own merge cadence, kept in the
+    * manifest: on its `mergeEvery`-th append since its last merge, the
+    * streams of the batch and those earlier appends left unmerged there
+    * re-coarsen to the canonical partition at their element counts —
+    * stored counts read like the frontier, plus the batch's, joined as a
+    * local relation, so no aggregation finds them. Below the cadence the
+    * batch's delta windows are kept as they are: the merge is a monoid,
+    * so the state after the next merge is identical to always-merging.
+    * Rows of a touched bucket's other streams pass through unchanged.
+    *
+    * Unknown `counts` (an empty table that merges at once, as a bulk
+    * load) rewrite every bucket, counts found in the rewrite itself. A
+    * version written before manifests is migrated: all its rows are
+    * rewritten into the current buckets.
+    */
+  private def appendTo(kind: SummaryKind, prepared: Dataset[Event], stored: Option[BucketManifest],
+      counts: Option[Map[Long, Long]], tinyBytes: Long): Unit = counts match {
+    case None =>
+      writeStreamTable(kind.table, Compactor.recoarsen(
+        kind.appendDelta(prepared, Seq.empty[(Long, Long)].toDF("streamId", "n"), specOf),
+        specOf, kind.mergeAggs, 0L))
+    case Some(batch) if batch.nonEmpty =>
+      def bucketOf(sid: Long) = SummaryDB.bucketOf(sid, SummaryDB.Buckets)
+      val layout = stored.filter(m => m.hashed && m.buckets.size == SummaryDB.Buckets)
+      val bucket = (b: Int) => layout.fold(BucketManifest.Bucket(Nil))(_.buckets(b))
+      val touched = batch.keySet.map(bucketOf)
+      val due = touched.filter(bucket(_).sinceMerge + 1 >= mergeEvery)
+      val merging = batch.keySet.filter(s => due(bucketOf(s))) ++ due.flatMap(bucket(_).pending)
+      val oldFiles = layout.fold(stored.toSeq.flatMap(_.files))(m => touched.toSeq.sorted.flatMap(m.buckets(_).files))
+      val base = streamMaxima(oldFiles, batch.keySet ++ merging, "ce", tinyBytes).view.mapValues(_ + 1L).toMap
+      val all = readTable(kind, oldFiles.map(f => p(f.path)))
+        .unionByName(kind.appendDelta(prepared, base.toSeq.toDF("streamId", "n"), specOf))
+      val next = if (merging.isEmpty) all else Compactor.recoarsenAt(all,
+        merging.toSeq.map(s => (s, base.getOrElse(s, 0L) + batch.getOrElse(s, 0L))).toDF("streamId", "n"),
+        specOf, kind.mergeAggs, 0L)
+      writeStreamTable(kind.table, next,
+        carried = layout.fold(Map.empty[Int, BucketManifest.Bucket])(m =>
+          (0 until SummaryDB.Buckets).filterNot(touched).map(b => b -> m.buckets(b)).toMap),
+        cadence = (touched -- due).map(b => b ->
+          ((bucket(b).sinceMerge + 1, bucket(b).pending ++ batch.keySet.filter(bucketOf(_) == b)))).toMap)
+    case _ => () // an empty batch changes no bucket
   }
 
-  /** `kind`'s table + the append delta of the (already clamped) batch
-    * -> canonical partition at the new N, by pure monoid re-merge. Below
-    * the `mergeEvery` cadence the delta persists as-is: the merge is a
-    * monoid, so the state after the next merge is identical to
-    * always-merging.
+  /** `kind`'s table over `files` (an empty frame of its schema when there
+    * are none).
     */
-  private def appendIncremental(kind: SummaryKind, prepared: Dataset[Event]): Unit = {
-    val old = table(kind).persist()
-    try {
-      val baseCounts = old
-        .groupBy($"streamId").agg((max($"ce") + 1L).as("n"))
-      val delta = kind.appendDelta(prepared, baseCounts, specOf)
-      val next =
-        if (mergeDue(kind.table))
-          Compactor.recoarsen(old.unionByName(delta), specOf, kind.mergeAggs, 0L)
-        else old.unionByName(delta)
-      writeStreamTable(kind.table, next)
-    } finally old.unpersist()
-  }
-
-  /** The current table of `kind` (an empty frame of its schema before
-    * any data).
-    */
-  private def table(kind: SummaryKind): DataFrame = {
+  private def readTable(kind: SummaryKind, files: Seq[String]): DataFrame = {
     val empty = kind.summarize(spark.emptyDataset[Event], specOf)
-    currentVersion(kind.table).fold(empty)(v => spark.read.schema(empty.schema).parquet(v.toString))
+    if (files.isEmpty) empty else spark.read.schema(empty.schema).parquet(files: _*)
   }
 
-  /** Recompute summary + landmark tables from the persisted events.
-    * `includeUncommittedTag`: the batch currently being applied — its
-    * events dir exists but its commit marker is written only after this
-    * refresh succeeds.
+  /** The current table of `kind`. */
+  private def table(kind: SummaryKind): DataFrame = readTable(kind, tableFiles(kind.table))
+
+  /** Recompute summary + landmark tables from the persisted events under
+    * the declared intervals `stored`. `includeUncommittedTag`: the batch
+    * currently being applied — its events dir exists but its commit
+    * marker is written only after this refresh succeeds.
     */
   private def refreshSummaries(
-      intervals: Seq[(Long, Long)],
+      stored: Seq[(Long, Long, Long)],
       includeUncommittedTag: Option[String] = None): Unit = {
     val events = readEvents(includeUncommittedTag)
-    val perStream = streamLandmarks
+    val intervals = globalIntervals(stored)
+    val perStream = perStreamIntervals(stored)
     val (sw, spans, elems) =
       if (intervals.isEmpty && perStream.isEmpty)
         (Summarizer.summarizePerStream(events, specOf),
@@ -529,7 +693,7 @@ final class SummaryDB private (
     try out.write(dirs.map(_.getName).mkString("\n").getBytes("UTF-8"))
     finally out.close()
     gcReplacedDirs()
-    refreshRegistrations()
+    refreshRegistrations(storedIntervals)
   }
 
   /** Delete superseded event dirs and their markers (never a compact
@@ -582,7 +746,7 @@ final class SummaryDB private (
   def enableQueryRewrite(): Unit = {
     rewriteEnabled = true
     SummaryRewrite.install(spark)
-    refreshRegistrations()
+    refreshRegistrations(storedIntervals)
   }
 
   /** The rewrite keys this store has registered, per pairing. */
@@ -590,9 +754,11 @@ final class SummaryDB private (
 
   /** Re-pair each maintained table that has a rewrite (the scalar one
     * once [[enableQueryRewrite]] is on, every enabled kind) with the
-    * committed-events relation, at the table's current version.
+    * committed-events relation, at the table's current version;
+    * `stored` are the declared landmark intervals, evaluated
+    * only when the scalar table is maintained.
     */
-  private def refreshRegistrations(): Unit = {
+  private def refreshRegistrations(stored: => Seq[(Long, Long, Long)]): Unit = {
     lazy val dirs = committedEventDirs().map(_.toString)
     val maintained = (if (rewriteEnabled) Seq(Summarizer.Kind) else Nil) ++ enabled.values
     for (kind <- maintained; pairing <- kind.rewrite) {
@@ -601,10 +767,10 @@ final class SummaryDB private (
       // summary_windows — a full-stream aggregate over raw events is
       // only answerable from it when no landmarks exist. The other
       // kinds rank over every element.
-      def complete = kind.ne(Summarizer.Kind) || storedIntervals.isEmpty
-      currentVersion(kind.table).filter(_ => dirs.nonEmpty && complete).foreach { v =>
-        registered(pairing) = SummaryRewrite.registerSet(dirs, v.toString, pairing)
-      }
+      def complete = kind.ne(Summarizer.Kind) || stored.isEmpty
+      val table = tableFiles(kind.table)
+      if (table.nonEmpty && dirs.nonEmpty && complete)
+        registered(pairing) = SummaryRewrite.registerSet(dirs, table, pairing)
     }
   }
 
@@ -620,7 +786,7 @@ final class SummaryDB private (
 
   /** Maintain `kind`'s table alongside the scalar summaries: built from
     * the committed WAL now, then kept by every append — incrementally
-    * ([[appendIncremental]], re-coarsened on the `mergeEvery` cadence),
+    * ([[appendTo]], re-coarsened on the `mergeEvery` cadence),
     * or rebuilt from the WAL on replay — with its rewrite pairing, if
     * any, kept registered.
     */
@@ -628,7 +794,7 @@ final class SummaryDB private (
     enabled(kind.table) = kind
     if (kind.rewrite.nonEmpty) SummaryRewrite.install(spark)
     rebuild(kind)
-    refreshRegistrations()
+    refreshRegistrations(storedIntervals)
   }
 
   /** `kind`'s canonical table from the committed WAL (plus the batch
@@ -774,15 +940,15 @@ final class SummaryDB private (
             s"(declared: ${m.operators.mkString(", ")})")
     }
 
-  def summaryWindows: Dataset[SummaryWindow] = readVersioned[SummaryWindow]("summary_windows")
+  def summaryWindows: Dataset[SummaryWindow] = readFiles[SummaryWindow](tableFiles("summary_windows"))
 
   /** Declared spans of landmark windows that matched elements — one
     * bounded row per (stream, interval). */
-  def landmarkSpans: Dataset[LandmarkSpan] = readVersioned[LandmarkSpan]("landmark_spans")
+  def landmarkSpans: Dataset[LandmarkSpan] = readFiles[LandmarkSpan](tableFiles("landmark_spans"))
 
   /** Exact landmark elements, one row each — the scale layout queries
     * aggregate over. */
-  def landmarkElems: Dataset[LandmarkElem] = readVersioned[LandmarkElem]("landmark_elems")
+  def landmarkElems: Dataset[LandmarkElem] = readFiles[LandmarkElem](tableFiles("landmark_elems"))
 
   /** Driver-side landmark VIEW: elements assembled into one array per
     * window. Small-landmark convenience (tests, inspection) — queries
@@ -808,11 +974,12 @@ final class SummaryDB private (
     query(streamId, op, t0, t1, params, TinyParquet.TinyBytes)
 
   /** [[query]] with the driver read's byte guard explicit (0 forces the
-    * Spark path). The stream's bucket files of the three tables, read
-    * on the driver when every version is bucketed and they hold at most
-    * `tinyBytes` together: 0 Spark jobs. Otherwise [[QueryEngine.queryOne]]
-    * over the same files (whole tables for an unbucketed version). Both
-    * paths hand the estimator the same windows and digests in ts order.
+    * Spark path). The stream's bucket files of the three tables, named by
+    * their manifests, read on the driver when every version is hashed and
+    * they hold at most `tinyBytes` together: 0 Spark jobs. Otherwise
+    * [[QueryEngine.queryOne]] over the same files (every file of an
+    * unhashed version). Both paths hand the estimator the same windows
+    * and digests in ts order.
     */
   private[graft] def query(
       streamId: Long,
@@ -822,19 +989,20 @@ final class SummaryDB private (
       params: QueryParams,
       tinyBytes: Long): AggResult = {
     requireDeclared(streamId, op)
+    // Right(the stream's bucket) of a hashed version, Left(every file)
     val tables = Seq("summary_windows", "landmark_spans", "landmark_elems").map { name =>
-      currentVersion(name).fold[Either[Path, Seq[FileStatus]]](Right(Nil)) { v =>
-        bucketFiles(v, streamId).toRight(v)
+      streamTable(name).fold[Either[Seq[BucketManifest.File], Seq[BucketManifest.File]]](Right(Nil)) { m =>
+        if (m.hashed) Right(m.buckets(m.bucketOf(streamId)).files) else Left(m.files)
       }
     }
     tables match {
       case Seq(Right(sw), Right(spans), Right(elems))
-          if (sw ++ spans ++ elems).map(_.getLen).sum <= tinyBytes =>
+          if (sw ++ spans ++ elems).map(_.bytes).sum <= tinyBytes =>
         val conf = spark.sparkContext.hadoopConfiguration
         val Seq(sid, ts, te) = Seq("streamId", "ts", "te").map(FilterApi.longColumn)
         // this stream's rows with lo >= t0 and ts <= t1
-        def rows(files: Seq[FileStatus], lo: Operators.LongColumn) = TinyParquet.fileRows(conf,
-          files.map(_.getPath), FilterCompat.get(FilterApi.and(
+        def rows(files: Seq[BucketManifest.File], lo: Operators.LongColumn) = TinyParquet.fileRows(conf,
+          files.map(f => new Path(p(f.path))), FilterCompat.get(FilterApi.and(
             FilterApi.eq(sid, java.lang.Long.valueOf(streamId)),
             FilterApi.and(FilterApi.gtEq(lo, java.lang.Long.valueOf(t0)),
               FilterApi.ltEq(ts, java.lang.Long.valueOf(t1))))))
@@ -849,27 +1017,9 @@ final class SummaryDB private (
           t0, t1)
         SumEstimator.queryDigest(op, t0, t1, s.sortBy(_.ts), l.sortBy(_.ts), params)
       case Seq(sw, spans, elems) =>
-        def paths(t: Either[Path, Seq[FileStatus]]) = t.fold(v => Seq(v.toString), _.map(_.getPath.toString))
+        def paths(t: Either[Seq[BucketManifest.File], Seq[BucketManifest.File]]) = t.merge.map(f => p(f.path))
         QueryEngine.queryOne(readFiles[SummaryWindow](paths(sw)), readFiles[LandmarkSpan](paths(spans)),
           readFiles[LandmarkElem](paths(elems)), streamId, op, t0, t1, params)
-    }
-  }
-
-  /** The data files of `streamId`'s bucket in a bucketed `version` (none
-    * when the bucket is empty), or None when the version carries no
-    * `_buckets` marker. The bucket count comes from the marker, so a
-    * version written under another count is still read by its own
-    * buckets, never by a wrong one.
-    */
-  private def bucketFiles(version: Path, streamId: Long): Option[Seq[FileStatus]] = {
-    val marker = new Path(version, SummaryDB.BucketsMarker)
-    if (!fs.exists(marker)) None
-    else {
-      val in = fs.open(marker)
-      val n = try new String(in.readAllBytes(), "UTF-8").trim.toInt finally in.close()
-      val prefix = f"part-${SummaryDB.bucketOf(streamId, n)}%05d-"
-      Some(TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, version.toString)
-        .filter(_.getPath.getName.startsWith(prefix)))
     }
   }
 }
@@ -879,7 +1029,7 @@ object SummaryDB {
     * parallel-listing threshold. */
   private[graft] val Buckets = 16
 
-  /** The file a bucketed version carries, holding its bucket count. */
+  /** The marker of a version written before manifests: its bucket count. */
   private[graft] val BucketsMarker = "_buckets"
 
   /** The bucket of `streamId` among `n`: the partition id Spark's
@@ -893,14 +1043,17 @@ object SummaryDB {
     *
     * `mergeEvery` is the persistence-cadence knob mirroring the
     * reference's `windowsPerMerge` (`/root/reference/core/pipeline.go`
-    * merge batching): decay re-coarsening runs only every `mergeEvery`-th
-    * incremental append; in between, fresh batches persist as
-    * per-element fine windows. Purely a write-amplification/latency
-    * trade — window aggregates are monoids, so the state after the next
-    * merge is identical to always-merging (CompactorSpec), and queries
-    * over the lagged table stay correct (any nested partition of the
-    * stream answers exactly; estimates only get tighter from finer
-    * windows). Cadence restarts on reopen — it is not durable state.
+    * merge batching): decay re-coarsening of a bucket runs only on every
+    * `mergeEvery`-th incremental append that touches it; in between,
+    * fresh batches persist as per-element fine windows. The cadence is
+    * per bucket and durable: each bucket's count of appends since its
+    * last merge, and the streams they left unmerged, live in the table's
+    * manifest, so it survives a reopen. Purely a
+    * write-amplification/latency trade — window aggregates are monoids,
+    * so the state after a bucket's next merge is identical to
+    * always-merging (CompactorSpec, MergeCadenceSpec), and queries over
+    * the lagged table stay correct (any nested partition of the stream
+    * answers exactly; estimates only get tighter from finer windows).
     */
   def open(spark: SparkSession, dir: String, mergeEvery: Int = 1): SummaryDB =
     new SummaryDB(spark, dir, mergeEvery)

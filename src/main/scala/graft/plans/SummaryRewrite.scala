@@ -60,28 +60,29 @@ object SummaryRewrite {
     case object Quantile extends Pairing
   }
 
-  // (pairing, normalized events root-path SET) -> table path. Keyed by
+  // (pairing, normalized events root-path SET) -> table files. Keyed by
   // the full set (not a prefix): a relation is rewritten only when it
   // scans EXACTLY the registered batch directories — a query over a
   // subset of batches is not a full-stream aggregate and must never
   // silently become one. One map for every pairing, so [[clear]] cannot
   // miss one. JVM-wide: rules constructed by different sessions see the
   // same pairings.
-  private val registry = new ConcurrentHashMap[(Pairing, Set[String]), String]()
+  private val registry = new ConcurrentHashMap[(Pairing, Set[String]), Seq[String]]()
 
   private def norm(p: String): String = new org.apache.hadoop.fs.Path(p).toUri.getPath
 
   /** Pair a MULTI-DIRECTORY events relation (e.g. a store's committed
-    * batch dirs) with its `pairing` table; replaces any previous
+    * batch dirs) with its `pairing` table, read from `tablePaths` (a
+    * directory, or a table version's files); replaces any previous
     * registration with the same key returned, so a store can re-register
     * after each append.
     */
   def registerSet(
       eventsPaths: Seq[String],
-      tablePath: String,
+      tablePaths: Seq[String],
       pairing: Pairing = Pairing.Summary): Set[String] = {
     val key = eventsPaths.map(norm).toSet
-    registry.put((pairing, key), norm(tablePath))
+    registry.put((pairing, key), tablePaths.map(norm))
     dfCache.clear() // pairings changed — cached summary plans may be stale
     key
   }
@@ -95,7 +96,7 @@ object SummaryRewrite {
 
   /** Pair a raw-events parquet location with its summary parquet. */
   def register(eventsPath: String, summaryPath: String): Unit = {
-    registerSet(Seq(eventsPath), summaryPath); ()
+    registerSet(Seq(eventsPath), Seq(summaryPath)); ()
   }
 
   def unregister(eventsPath: String): Unit = unregisterSet(Set(norm(eventsPath)))
@@ -104,45 +105,45 @@ object SummaryRewrite {
     * sketch parquet, enabling the distinct-count rewrite.
     */
   def registerDistinct(eventsPath: String, sketchPath: String): Unit = {
-    registerSet(Seq(eventsPath), sketchPath, Pairing.Distinct); ()
+    registerSet(Seq(eventsPath), Seq(sketchPath), Pairing.Distinct); ()
   }
 
   def unregisterDistinct(eventsPath: String): Unit =
     unregisterSet(Set(norm(eventsPath)), Pairing.Distinct)
 
   def registerFreqSet(eventsPaths: Seq[String], freqPath: String): Set[String] =
-    registerSet(eventsPaths, freqPath, Pairing.Freq)
+    registerSet(eventsPaths, Seq(freqPath), Pairing.Freq)
 
   def unregisterFreqSet(key: Set[String]): Unit = unregisterSet(key, Pairing.Freq)
 
   def registerQuantileSet(eventsPaths: Seq[String], qskPath: String): Set[String] =
-    registerSet(eventsPaths, qskPath, Pairing.Quantile)
+    registerSet(eventsPaths, Seq(qskPath), Pairing.Quantile)
 
   def unregisterQuantileSet(key: Set[String]): Unit = unregisterSet(key, Pairing.Quantile)
 
   /** The table `relation` is paired with under `pairing`, if any. */
-  private[plans] def tableFor(pairing: Pairing, relation: LogicalRelation): Option[String] =
+  private[plans] def tableFor(pairing: Pairing, relation: LogicalRelation): Option[Seq[String]] =
     relation.relation match {
       case fs: HadoopFsRelation =>
         Option(registry.get((pairing, fs.location.rootPaths.map(p => norm(p.toString)).toSet)))
       case _ => None
     }
 
-  // Resolved summary relation per (session, normalized path). The
+  // Resolved summary relation per (session, normalized paths). The
   // loader (file listing + schema read + analysis) would otherwise run
   // inside apply() for EVERY optimization of every eligible aggregate.
   // Invalidated whenever a pairing changes (stores re-register after
   // each append, which is exactly when the summary parquet content
   // moves). `loads` counts real loader runs for the memoization spec.
   private val dfCache =
-    new ConcurrentHashMap[(SparkSession, String), org.apache.spark.sql.DataFrame]()
+    new ConcurrentHashMap[(SparkSession, Seq[String]), org.apache.spark.sql.DataFrame]()
   private val loadCounter = new java.util.concurrent.atomic.AtomicLong(0L)
   private[graft] def parquetLoads: Long = loadCounter.get()
 
-  private[plans] def summaryDf(spark: SparkSession, path: String): org.apache.spark.sql.DataFrame =
-    dfCache.computeIfAbsent((spark, path), { _ =>
+  private[plans] def summaryDf(spark: SparkSession, paths: Seq[String]): org.apache.spark.sql.DataFrame =
+    dfCache.computeIfAbsent((spark, paths), { _ =>
       loadCounter.incrementAndGet()
-      spark.read.parquet(path)
+      spark.read.parquet(paths: _*)
     })
 
   /** The cached relation with FRESH output exprIds: plan nodes are
@@ -150,8 +151,8 @@ object SummaryRewrite {
     * twice could collide in multi-branch plans; `newInstance()` keeps
     * the (expensive) file index and schema, renews only the ids.
     */
-  private[plans] def summaryRelation(spark: SparkSession, path: String): Option[LogicalPlan] =
-    summaryDf(spark, path).queryExecution.analyzed match {
+  private[plans] def summaryRelation(spark: SparkSession, paths: Seq[String]): Option[LogicalPlan] =
+    summaryDf(spark, paths).queryExecution.analyzed match {
       case lr: LogicalRelation => Some(lr.newInstance())
       case _                   => None
     }
@@ -232,7 +233,7 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
       aggExprs: Seq[NamedExpression],
       rel: LogicalRelation,
       filterCond: Option[Expression],
-      summaryPath: String): Option[LogicalPlan] = {
+      summaryPath: Seq[String]): Option[LogicalPlan] = {
 
     // Eligibility: grouped by exactly the raw streamId column, or a
     // GLOBAL aggregate (no grouping at all — count/sum/max/min over the
@@ -317,7 +318,7 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
       aggExprs: Seq[NamedExpression],
       rel: LogicalRelation,
       filterCond: Option[Expression],
-      summaryPath: String): Option[LogicalPlan] = {
+      summaryPath: Seq[String]): Option[LogicalPlan] = {
     if (spark.conf.get(ApproximateConf, "false") != "true") return None
     // Grouped by streamId, or a GLOBAL ts-range aggregate (no grouping):
     // per-stream estimates merge losslessly across streams (count/sum
@@ -522,7 +523,7 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
       aggExprs: Seq[NamedExpression],
       rel: LogicalRelation,
       filterCond: Option[Expression],
-      freqPath: String): Option[LogicalPlan] = {
+      freqPath: Seq[String]): Option[LogicalPlan] = {
     if (spark.conf.get(ApproximateConf, "false") != "true") return None
     val evStreamOpt = groupExprs match {
       case Seq(a: AttributeReference) if a.name == "streamId" => Some(a)
@@ -635,7 +636,7 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
       aggExprs: Seq[NamedExpression],
       rel: LogicalRelation,
       filterCond: Option[Expression],
-      qskPath: String): Option[LogicalPlan] = {
+      qskPath: Seq[String]): Option[LogicalPlan] = {
     if (spark.conf.get(ApproximateConf, "false") != "true") return None
     val evStreamOpt = groupExprs match {
       case Seq(a: AttributeReference) if a.name == "streamId" => Some(a)
@@ -731,7 +732,7 @@ final case class SummaryRewriteRule(spark: SparkSession) extends Rule[LogicalPla
       aggExprs: Seq[NamedExpression],
       rel: LogicalRelation,
       filterCond: Option[Expression],
-      sketchPath: String): Option[LogicalPlan] = {
+      sketchPath: Seq[String]): Option[LogicalPlan] = {
     if (spark.conf.get(ApproximateConf, "false") != "true") return None
     val evStreamOpt = groupExprs match {
       case Seq(a: AttributeReference) if a.name == "streamId" => Some(a)

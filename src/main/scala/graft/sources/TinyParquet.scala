@@ -5,7 +5,10 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.hadoop.{ParquetInputFormat, ParquetReader}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.schema.MessageType
+import scala.jdk.CollectionConverters._
 
 /** Driver-side reads of TINY parquet tables (index metadata, takedown
   * sets, k-row center tables) via parquet-hadoop directly — NO Spark
@@ -23,8 +26,9 @@ import org.apache.parquet.hadoop.example.GroupReadSupport
 private[graft] object TinyParquet {
 
   /** Data bytes under which a guarded table is read driver-side: the
-    * takedown sets of `ops.Tombstones` and the stream buckets of
-    * [[graft.core.SummaryDB.query]].
+    * takedown sets of `ops.Tombstones`, and the stream buckets (point
+    * queries, an append's frontier and counts) and declared landmark
+    * intervals of [[graft.core.SummaryDB]].
     */
   val TinyBytes: Long = 8L << 20
 
@@ -51,20 +55,32 @@ private[graft] object TinyParquet {
 
   /** The rows of `files`, in the given order, that pass `filter`: row
     * groups and pages whose statistics rule the predicate out are not
-    * read, and failing records are never assembled.
+    * read, and failing records are never assembled. A non-empty
+    * `columns` reads only those top-level columns (the filter's among
+    * them), so wide sketch columns are never decoded.
     */
   def fileRows(conf: Configuration, files: Seq[Path],
-      filter: FilterCompat.Filter = FilterCompat.NOOP): Seq[Group] = {
+      filter: FilterCompat.Filter = FilterCompat.NOOP,
+      columns: Seq[String] = Nil): Seq[Group] = {
     val c = new Configuration(conf)
     c.setBoolean(ParquetInputFormat.RECORD_FILTERING_ENABLED, true)
     files.flatMap { f =>
       val reader = ParquetReader
-        .builder(new GroupReadSupport(), f)
+        .builder(if (columns.isEmpty) new GroupReadSupport() else new Projected(columns.toSet), f)
         .withConf(c)
         .withFilter(filter)
         .build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
       finally reader.close()
+    }
+  }
+
+  /** Group reads of the file schema's `columns` only, in file order. */
+  private final class Projected(columns: Set[String]) extends GroupReadSupport {
+    override def init(context: InitContext): ReadSupport.ReadContext = {
+      val file = context.getFileSchema
+      new ReadSupport.ReadContext(
+        new MessageType(file.getName, file.getFields.asScala.filter(f => columns(f.getName)).asJava))
     }
   }
 

@@ -7,11 +7,12 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.Dataset
 
 /** Stream-bucketed stream tables and the zero-job point query: every
-  * committed version of a stream table is `SummaryDB.Buckets` hash
-  * buckets of `streamId` (Spark's own partition id), sorted by
-  * (streamId, ts) and marked `_buckets`; `SummaryDB.query` answers from
-  * the stream's bucket read on the driver, bit-identical to the Spark
-  * path that a zero byte guard forces.
+  * committed version of a stream table is a manifest over
+  * `SummaryDB.Buckets` hash buckets of `streamId` (Spark's own partition
+  * id), each bucket's files sorted by (streamId, ts); `SummaryDB.query`
+  * answers from the stream's bucket read on the driver, bit-identical to
+  * the Spark path that a zero byte guard forces. Stores written before
+  * manifests stay readable and migrate on their next write.
   */
 class BucketedPointQuerySpec extends SparkSpec {
   import spark.implicits._
@@ -27,35 +28,44 @@ class BucketedPointQuerySpec extends SparkSpec {
     (for (sid <- sids; i <- from until until)
       yield Event(sid, i.toLong, i.toLong * 10L, ((i * 7 + sid) % 23).toDouble)).toDS()
 
-  /** Committed version directories of every table, as (table, dir). */
+  /** Committed version directories of every table, as (table, dir): a
+    * stream table's carries its manifest, a catalog table's `_SUCCESS`.
+    */
   private def committed(dir: String): Seq[(String, Path)] =
-    fs(dir).listStatus(new Path(dir)).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.contains("__v"))
-      .filter(s => fs(dir).exists(new Path(s.getPath, "_SUCCESS")))
-      .map(s => s.getPath.getName.split("__v").head -> s.getPath)
+    StoreLayout.versionDirs(spark, dir)
+      .filter(v => Seq(BucketManifest.Name, "_SUCCESS").exists(m => fs(dir).exists(new Path(v._3, m))))
+      .map(v => v._1 -> v._3)
 
   private val catalogTables = Set("stream_meta", "landmark_intervals")
 
-  /** Every committed version of every stream table is bucketed. */
+  /** Every committed version of every stream table has a manifest that
+    * covers all buckets, and every file it references holds rows of its
+    * bucket only, sorted by (streamId, ts).
+    */
   private def assertBucketed(dir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val versions = committed(dir).filterNot(v => catalogTables(v._1))
     assert(versions.nonEmpty)
     versions.foreach { case (table, v) =>
-      assert(fs(dir).exists(new Path(v, "_buckets")), s"$v has no _buckets marker")
-      val files = TinyParquet.dataFiles(conf, v.toString)
-      assert(files.size <= SummaryDB.Buckets, s"$v has ${files.size} data files")
-      files.foreach { f =>
-        val b = f.getPath.getName.stripPrefix("part-").take(5).toInt
-        val keys = TinyParquet.fileRows(conf, Seq(f.getPath))
+      assert(fs(dir).exists(new Path(v, BucketManifest.Name)), s"$v has no manifest")
+      val m = BucketManifest.read(fs(dir), v)
+      assert(m.hashed && m.buckets.size == SummaryDB.Buckets, s"$v covers ${m.buckets.size} buckets")
+      for ((bucket, b) <- m.buckets.zipWithIndex; f <- bucket.files) {
+        val file = new Path(s"$dir/${f.path}")
+        assert(fs(dir).getFileStatus(file).getLen == f.bytes, s"$table: $file")
+        val keys = TinyParquet.fileRows(conf, Seq(file))
           .map(g => (g.getLong("streamId", 0), g.getLong("ts", 0)))
         keys.foreach { case (sid, _) =>
-          assert(SummaryDB.bucketOf(sid, SummaryDB.Buckets) == b, s"$table: stream $sid in ${f.getPath}")
+          assert(SummaryDB.bucketOf(sid, SummaryDB.Buckets) == b, s"$table: stream $sid in $file")
         }
-        assert(keys == keys.sorted, s"$table: ${f.getPath} is not sorted by (streamId, ts)")
+        assert(keys == keys.sorted, s"$table: $file is not sorted by (streamId, ts)")
       }
     }
   }
+
+  /** The buckets whose files differ between two manifests. */
+  private def changed(a: BucketManifest, b: BucketManifest): Set[Int] =
+    a.buckets.indices.filter(i => a.buckets(i).files != b.buckets(i).files).toSet
 
   private def bits(r: AggResult): (Long, Long) =
     (java.lang.Double.doubleToRawLongBits(r.value), java.lang.Double.doubleToRawLongBits(r.error))
@@ -98,10 +108,10 @@ class BucketedPointQuerySpec extends SparkSpec {
       db.summaryWindows; db.landmarkSpans; db.landmarkElems; ()
     }
     assert(reads.jobs == 0L, s"resolving the three tables ran ${reads.jobs} jobs")
-    val v = committed(dir).filter(_._1 == "summary_windows").map(_._2.toString).max
+    val files = StoreLayout.paths(dir, StoreLayout.current(spark, dir, "summary_windows"))
     def fleet(sw: Dataset[SummaryWindow]) = QueryEngine.rangeQueryAll(
       sw, db.landmarkSpans, db.landmarkElems, "count", 0L, 3000L, params).collect().toSet
-    val (inferred, bare) = SparkCounts.of(spark)(fleet(spark.read.parquet(v).as[SummaryWindow]))
+    val (inferred, bare) = SparkCounts.of(spark)(fleet(spark.read.parquet(files: _*).as[SummaryWindow]))
     val (known, typed) = SparkCounts.of(spark)(fleet(db.summaryWindows))
     assert(known == inferred)
     assert(typed.jobs == bare.jobs - 1, s"fleet query: ${typed.jobs} jobs with the schema, ${bare.jobs} inferring it")
@@ -110,9 +120,8 @@ class BucketedPointQuerySpec extends SparkSpec {
   test("point query parity: plain store, absent streams, empty buckets") {
     val (dir, db) = storeWithData()
     probed.foreach(sid => assertParity(db, sid, ranges))
-    val swVersion = committed(dir).filter(_._1 == "summary_windows").map(_._2).maxBy(_.getName)
-    val occupied = TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, swVersion.toString)
-      .map(_.getPath.getName.stripPrefix("part-").take(5).toInt).toSet
+    val occupied = StoreLayout.current(spark, dir, "summary_windows").buckets.zipWithIndex
+      .collect { case (b, i) if b.files.nonEmpty => i }.toSet
     val absent = Iterator.from(100).map(_.toLong)
     // Absent from the store, but its bucket holds other streams' rows.
     val sharing = absent.find(s => occupied(SummaryDB.bucketOf(s, SummaryDB.Buckets))).get
@@ -140,8 +149,7 @@ class BucketedPointQuerySpec extends SparkSpec {
   test("point query parity: an unbucketed (old-layout) version takes the Spark path") {
     val (dir, db) = storeWithData()
     db.append(events(sids, 300, 320), landmarkIntervals = Seq((3000L, 3100L)))
-    committed(dir).filterNot(v => catalogTables(v._1))
-      .foreach { case (_, v) => fs(dir).delete(new Path(v, "_buckets"), false) }
+    StoreLayout.toLegacy(spark, dir, bucketed = false)
     probed.foreach(sid => assertParity(db, sid, ranges :+ ((2990L, 3120L)), zeroJobs = false))
     val (_, old) = SparkCounts.of(spark)(db.query(1L, "sum", 0L, 3000L, params))
     assert(old.jobs > 0L, "an unmarked version cannot be read by bucket")
@@ -165,7 +173,21 @@ class BucketedPointQuerySpec extends SparkSpec {
     db.enableSampleSummaries()
     db.enableQuantileSummaries()
     assertBucketed(dir)
+    // An append to k buckets writes one file for each of those k in every
+    // table it absorbs into, and the manifests change those k only.
+    val k = sids.map(SummaryDB.bucketOf(_, SummaryDB.Buckets)).toSet
+    assert(k.size < SummaryDB.Buckets)
+    val absorbing = Seq("summary_windows", DistinctSummary.Kind.table, FreqSummary.Kind.table,
+      SampleSummary.kind().table, QuantileSummary.kind().table)
+    val before = absorbing.map(t => t -> StoreLayout.current(spark, dir, t)).toMap
     db.append(events(sids, 220, 260))
+    absorbing.foreach { t =>
+      val (v, after) = StoreLayout.manifests(spark, dir, t).head
+      assert(changed(before(t), after) == k, t)
+      val written = TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, v.toString)
+        .map(_.getPath.getName.stripPrefix("part-").take(5).toInt)
+      assert(written.sorted == k.toSeq.sorted, s"$t: files for buckets $written, appended to $k")
+    }
     assertBucketed(dir)
     db.newLandmark(3L, 2000L, 2100L)
     db.startLandmark(4L, 2500L)
@@ -181,10 +203,43 @@ class BucketedPointQuerySpec extends SparkSpec {
       SampleSummary.kind().table -> db.sampleWindows, QuantileSummary.kind().table -> db.quantileWindows,
       "summary_windows" -> db.summaryWindows.toDF(), "landmark_spans" -> db.landmarkSpans.toDF(),
       "landmark_elems" -> db.landmarkElems.toDF()).foreach { case (table, read) =>
-      val v = committed(dir).filter(_._1 == table).map(_._2.toString).max
-      assert(types(spark.read.parquet(v).schema) == types(read.schema), table)
+      val files = StoreLayout.paths(dir, StoreLayout.current(spark, dir, table))
+      assert(types(spark.read.parquet(files: _*).schema) == types(read.schema), table)
       assert(read.count() > 0L, table)
     }
     assert(db.query(3L, "count", 0L, 2790L, params).value == 280.0)
+  }
+
+  test("migration: a store written before manifests, appended to once, reads as one that never was") {
+    for (bucketed <- Seq(true, false)) {
+      val (dir, db) = storeWithData()
+      val (_, twin) = storeWithData()
+      Seq(db, twin).foreach(_.enableSampleSummaries(k = 8))
+      StoreLayout.toLegacy(spark, dir, bucketed)
+      assert(StoreLayout.manifests(spark, dir, "summary_windows").isEmpty)
+      // Readable as it is: by bucket when it was bucketed, else by Spark.
+      probed.foreach(sid => assertParity(db, sid, ranges, zeroJobs = bucketed))
+      val more = events(sids.take(2), 300, 340)
+      db.append(more)
+      twin.append(more)
+      Seq("summary_windows", SampleSummary.kind(8).table).foreach { t =>
+        val m = StoreLayout.current(spark, dir, t)
+        assert(m.hashed && m.buckets.size == SummaryDB.Buckets, s"$t was not migrated")
+      }
+      def windows(d: SummaryDB) = d.summaryWindows.collect().sortBy(w => (w.streamId, w.cs)).toSeq
+      def samples(d: SummaryDB) = d.sampleWindows
+        .selectExpr("streamId", "cs", "ce", "transform(sample, s -> s.seq) AS seqs")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getAs[scala.collection.Seq[Long]](3).toVector)).sortBy(t => (t._1, t._2)).toSeq
+      assert(windows(db) == windows(twin), s"bucketed=$bucketed")
+      assert(samples(db) == samples(twin), s"bucketed=$bucketed")
+      for (sid <- probed; (t0, t1) <- ranges :+ ((0L, 3400L)); op <- ops)
+        assert(bits(db.query(sid, op, t0, t1, params)) == bits(twin.query(sid, op, t0, t1, params)))
+      probed.foreach(sid => assertParity(db, sid, ranges))
+      // The next write prunes the old-layout version: every version left
+      // is a manifest's.
+      db.append(events(sids.takeRight(2), 300, 320))
+      assertBucketed(dir)
+    }
   }
 }

@@ -1,13 +1,15 @@
 package graft
 
-import graft.core.{Event, StreamMeta, SummaryDB}
+import graft.core.{BucketManifest, Event, StreamMeta, SummaryDB}
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
 
 /** The single-writer guard on the versioned swap: a second concurrent
   * writer fails loudly instead of racing the version pointer, readers
   * never block on (or see) the lock, sequential writers need no
   * handshake, and a stale lock from a dead writer is cleared with
-  * [[SummaryDB.breakLock]]. (The reference is single-writer by
+  * [[SummaryDB.breakLock]]. A version without its published manifest is
+  * invisible, and pruning keeps exactly what the kept manifests list. (The reference is single-writer by
   * construction — one process, one store; at cluster scale two jobs can
   * open the same dir, so the contract must be enforced, not assumed.)
   */
@@ -158,6 +160,90 @@ class ConcurrentWriterSpec extends SparkSpec {
       val fs = new org.apache.hadoop.fs.Path(dir)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/_writer.lock")))
+    }
+  }
+
+  private def fs(dir: String) = StoreLayout.fs(spark, dir)
+
+  /** Streams 1..n, `per` elements each from element `from` on. */
+  private def fleet(sids: Seq[Long], from: Int, per: Int) =
+    (for (sid <- sids; i <- from until from + per) yield Event(sid, i.toLong, i.toLong, (i % 5).toDouble)).toDS()
+
+  private def rows(db: SummaryDB) =
+    db.summaryWindows.collect().sortBy(w => (w.streamId, w.cs)).toSeq
+
+  test("a torn manifest is invisible to readers and superseded by the next write") {
+    for (torn <- Seq("temp manifest", "no manifest")) {
+      val dir = freshDir()
+      val db = SummaryDB.open(spark, dir)
+      db.append(fleet(1L to 8L, 0, 30))
+      val (current, m) = StoreLayout.manifests(spark, dir, "summary_windows").head
+      val committed = rows(db)
+      // A writer that died after its data files, before the manifest's
+      // rename: a copy of one real bucket file, and a partial manifest
+      // under its temp name or none at all.
+      val junk = new Path(s"$dir/summary_windows__v${current.getName.split("__v").last.toLong + 1}")
+      fs(dir).mkdirs(junk)
+      val src = m.buckets.find(_.files.nonEmpty).get.files.head
+      org.apache.hadoop.fs.FileUtil.copy(fs(dir), new Path(s"$dir/${src.path}"), fs(dir),
+        new Path(junk, new Path(src.path).getName), false, spark.sparkContext.hadoopConfiguration)
+      if (torn == "temp manifest") {
+        val out = fs(dir).create(new Path(junk, s"${BucketManifest.Name}.tmp"), false)
+        out.write(s"buckets\t${SummaryDB.Buckets}\n".getBytes("UTF-8")); out.close()
+      }
+      val reader = SummaryDB.open(spark, dir)
+      assert(rows(reader) == committed, torn)
+      assert(reader.query(3L, "count", 0L, 100L).value == 30.0, torn)
+      // The next write gets a newer stamp, and its prune drops the torn one.
+      db.append(fleet(Seq(2L), 30, 10))
+      assert(!fs(dir).exists(junk), s"$torn: the torn version survived the next write")
+      assert(reader.query(2L, "count", 0L, 100L).value == 40.0, torn)
+      assert(reader.query(3L, "count", 0L, 100L).value == 30.0, torn)
+    }
+  }
+
+  test("20 appends to one bucket carry the untouched buckets' original files by reference") {
+    val dir = freshDir()
+    val db = SummaryDB.open(spark, dir)
+    val sids = 1L to 40L
+    db.append(fleet(sids, 0, 20))
+    val first = StoreLayout.current(spark, dir, "summary_windows")
+    val hot = SummaryDB.bucketOf(1L, SummaryDB.Buckets)
+    val inHot = sids.filter(SummaryDB.bucketOf(_, SummaryDB.Buckets) == hot)
+    (1 to 20).foreach(i => db.append(fleet(inHot, 20 * i, 20)))
+    val last = StoreLayout.current(spark, dir, "summary_windows")
+    val untouched = (0 until SummaryDB.Buckets).filter(_ != hot)
+    assert(untouched.exists(first.buckets(_).files.nonEmpty))
+    untouched.foreach { b =>
+      assert(last.buckets(b).files == first.buckets(b).files, s"bucket $b")
+      first.buckets(b).files.foreach(f => assert(fs(dir).exists(new Path(s"$dir/${f.path}")), f.path))
+    }
+    assert(last.buckets(hot).files != first.buckets(hot).files)
+    inHot.foreach(s => assert(db.query(s, "count", 0L, 1000L).value == 420.0))
+    sids.filterNot(inHot.contains).foreach(s => assert(db.query(s, "count", 0L, 1000L).value == 20.0))
+  }
+
+  test("pruning leaves no file that neither the current manifest nor its predecessor references") {
+    val dir = freshDir()
+    val db = SummaryDB.open(spark, dir)
+    db.enableDistinctSummaries()
+    val sids = (1L to 24L).toVector
+    db.append(fleet(sids, 0, 10))
+    val rng = new scala.util.Random(7)
+    (1 to 8).foreach { i =>
+      db.append(fleet(rng.shuffle(sids).take(1 + rng.nextInt(5)), 10 * i, 10))
+      Seq("summary_windows", "distinct_sketches").foreach { t =>
+        val kept = StoreLayout.manifests(spark, dir, t).take(2)
+        val referenced = kept.flatMap(_._2.files.map(f => new Path(s"$dir/${f.path}").toUri.getPath)).toSet
+        val onDisk = StoreLayout.versionDirs(spark, dir).filter(_._1 == t).flatMap(v => fs(dir).listStatus(v._3))
+          .map(_.getPath).filter(_.getName.endsWith(".parquet")).map(_.toUri.getPath)
+        assert(onDisk.toSet == referenced, s"append $i, $t")
+        // Each version directory left is a kept version or holds a kept file.
+        StoreLayout.versionDirs(spark, dir).filter(_._1 == t).foreach { v =>
+          assert(kept.exists(_._1.getName == v._3.getName) ||
+            referenced.exists(_.startsWith(v._3.toUri.getPath + "/")), s"append $i: ${v._3}")
+        }
+      }
     }
   }
 }

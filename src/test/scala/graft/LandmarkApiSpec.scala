@@ -106,4 +106,26 @@ class LandmarkApiSpec extends SparkSpec {
     val c = db2.query(15L, "count", 0, 99, params)
     assert(c.value == 50.0, s"orphan batch resurrected: count=${c.value}")
   }
+
+  test("declared intervals are read on the driver: landmarkIntervals and streamLandmarks run no job") {
+    val dir = Files.createTempDirectory("graftdb_iv").toString
+    val db = SummaryDB.open(spark, dir)
+    db.append(ev(1L, 0 until 50), landmarkIntervals = Seq((10L, 20L), (30L, 35L)))
+    db.newLandmark(2L, 5L, 8L)
+    db.append(ev(2L, 0 until 40))
+    db.startLandmark(1L, 60L)
+    // What the table holds, read by Spark as before.
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val table = fs.listStatus(new Path(dir)).map(_.getPath)
+      .filter(p => p.getName.startsWith("landmark_intervals__v") && fs.exists(new Path(p, "_SUCCESS")))
+      .maxBy(_.getName.stripPrefix("landmark_intervals__v").toLong)
+    val stored = spark.read.parquet(table.toString).as[(Long, Long, Long)].collect().toSeq.sorted
+    val (global, g) = SparkCounts.of(spark)(db.landmarkIntervals)
+    val (perStream, s) = SparkCounts.of(spark)(db.streamLandmarks)
+    assert(g.jobs == 0L && s.jobs == 0L, s"landmarkIntervals ran ${g.jobs} jobs, streamLandmarks ${s.jobs}")
+    assert(global == stored.filter(_._1 == -1L).map(r => (r._2, r._3)))
+    assert(global == Seq((10L, 20L), (30L, 35L)))
+    assert(perStream == Map(1L -> Seq((60L, Long.MaxValue)), 2L -> Seq((5L, 8L))))
+    assert(perStream == stored.filter(_._1 != -1L).groupBy(_._1).view.mapValues(_.map(r => (r._2, r._3))).toMap)
+  }
 }

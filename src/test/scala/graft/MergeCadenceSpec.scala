@@ -1,12 +1,12 @@
 package graft
 
-import graft.core.{Event, QueryParams, SummaryDB}
+import graft.core.{Event, QueryParams, SummaryDB, SummaryWindow}
 import org.apache.spark.sql.functions._
 
 /** The mergeEvery persistence-cadence knob (reference windowsPerMerge):
   * deferred re-coarsening keeps fine windows on disk between merges,
   * queries stay exact throughout, and the post-merge state is identical
-  * to always-merging.
+  * to always-merging. The cadence is per bucket and survives a reopen.
   */
 class MergeCadenceSpec extends SparkSpec {
   import spark.implicits._
@@ -138,5 +138,68 @@ class MergeCadenceSpec extends SparkSpec {
     assert(state(every) == state(lazy3),
       "post-merge sample state must equal the always-merge state")
     assert(every.sampleEvents(5L, k = 8) == lazy3.sampleEvents(5L, k = 8))
+  }
+
+  /** Two streams in different buckets. */
+  private val (sa, sb) = {
+    val a = 5L
+    (a, Iterator.from(6).map(_.toLong)
+      .find(s => SummaryDB.bucketOf(s, SummaryDB.Buckets) != SummaryDB.bucketOf(a, SummaryDB.Buckets)).get)
+  }
+
+  /** `n` elements of `sid` from element `from` on: integer values, 10 time
+    * units apart.
+    */
+  private def local(sid: Long, from: Int, n: Int) =
+    (from until from + n).map(i => Event(sid, i.toLong, i * 10L, (i % 9).toDouble)).toDS()
+
+  private def rowsOf(db: SummaryDB, sid: Long): Seq[SummaryWindow] =
+    db.summaryWindows.filter($"streamId" === sid).collect().sortBy(_.cs).toSeq
+
+  /** Appends of (stream, first element, count), each with the streams
+    * whose buckets have merged since their last append: a's bucket
+    * reaches the cadence of 3 on append 4, b's on append 6.
+    */
+  private val plan = Seq(
+    ((sa, 0, 40), Set.empty[Long]), ((sb, 0, 30), Set.empty[Long]), ((sa, 40, 25), Set.empty[Long]),
+    ((sa, 65, 35), Set(sa)), ((sb, 30, 50), Set(sa)), ((sb, 80, 20), Set(sa, sb)))
+
+  private def runCadence(reopenAfter: Option[Int]): Unit = {
+    val dLazy = java.nio.file.Files.createTempDirectory("graft_bcad3").toString
+    val dEvery = java.nio.file.Files.createTempDirectory("graft_bcad1").toString
+    var lazy3 = SummaryDB.open(spark, dLazy, mergeEvery = 3)
+    val every = SummaryDB.open(spark, dEvery)
+    val total = collection.mutable.Map(sa -> 0, sb -> 0)
+    plan.zipWithIndex.foreach { case (((sid, from, n), merged), i) =>
+      lazy3.append(local(sid, from, n))
+      every.append(local(sid, from, n))
+      total(sid) += n
+      Seq(sa, sb).filter(total(_) > 0).foreach { s =>
+        // A merged bucket's streams equal the always-merge twin's rows;
+        // the other bucket still holds its fine windows.
+        if (merged(s)) assert(rowsOf(lazy3, s) == rowsOf(every, s), s"append ${i + 1}: stream $s")
+        else assert(rowsOf(lazy3, s).size > rowsOf(every, s).size, s"append ${i + 1}: stream $s merged early")
+        // Queries stay exact in between.
+        val c = lazy3.query(s, "count", 0L, 10000L, QueryParams())
+        val sum = lazy3.query(s, "sum", 0L, 10000L, QueryParams())
+        assert(c.value == total(s).toDouble && c.error == 0.0, s"append ${i + 1}: stream $s count $c")
+        assert(sum.value == (0 until total(s)).map(_ % 9).sum.toDouble && sum.error == 0.0,
+          s"append ${i + 1}: stream $s sum $sum")
+      }
+      if (reopenAfter.contains(i + 1)) lazy3 = SummaryDB.open(spark, dLazy, mergeEvery = 3)
+    }
+    assert(lazy3.summaryWindows.collect().sortBy(w => (w.streamId, w.cs)).toSeq ==
+      every.summaryWindows.collect().sortBy(w => (w.streamId, w.cs)).toSeq)
+  }
+
+  test("per-bucket cadence: two buckets reach their merges at different appends") {
+    runCadence(reopenAfter = None)
+  }
+
+  test("per-bucket cadence is durable: a store reopened mid-cadence merges on schedule") {
+    // Reopened after append 3: stream a's bucket has taken 2 appends, so
+    // append 4 is its third and merges — a count restarted by the reopen
+    // would not.
+    runCadence(reopenAfter = Some(3))
   }
 }
