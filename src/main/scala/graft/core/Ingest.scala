@@ -63,24 +63,37 @@ object Ingest {
       .repartition(col("streamId"))
       .sortWithinPartitions(sortCols.map(col): _*)
       .as[(Long, Long, Double, Long)]
-      .mapPartitions { it =>
-        var curStream = Long.MinValue
-        var lastTs = Long.MinValue
-        var seq = 0L
-        it.map { case (streamId, ts, value, _) =>
-          if (streamId != curStream) {
-            curStream = streamId
-            lastTs = bcBase.value.getOrElse(streamId, Long.MinValue)
-            seq = 0L
-          }
-          val clamped = if (lastTs != Long.MinValue && ts < lastTs) lastTs + 1 else ts
-          lastTs = clamped
-          val e = Event(streamId, seq, clamped, value)
-          seq += 1
-          e
-        }
-      }
+      .mapPartitions(clamp(_, sid => (bcBase.value.getOrElse(sid, Long.MinValue), 0L)))
   }
+
+  /** The clamp over (streamId, ts, value, arrival) rows grouped by
+    * stream and each stream in processing order: every stream starts at
+    * `start(streamId)` = (incoming frontier, first seq) — Long.MinValue
+    * for no frontier — and each element gets the next seq and its
+    * [[clampTs]]. The one body of [[prepare]], [[prepareRangeParallel]]
+    * and the driver-side append of a local batch.
+    */
+  def clamp(rows: Iterator[(Long, Long, Double, Long)], start: Long => (Long, Long)): Iterator[Event] = {
+    var curStream = Long.MinValue
+    var lastTs = Long.MinValue
+    var seq = 0L
+    rows.map { case (streamId, ts, value, _) =>
+      if (streamId != curStream) {
+        curStream = streamId
+        val (l0, s0) = start(streamId)
+        lastTs = l0; seq = s0
+      }
+      lastTs = clampTs(lastTs, ts)
+      val e = Event(streamId, seq, lastTs, value)
+      seq += 1
+      e
+    }
+  }
+
+  /** The reference's repair rule: a timestamp before the frontier
+    * `lastTs` (Long.MinValue: none yet) becomes `lastTs + 1`.
+    */
+  def clampTs(lastTs: Long, ts: Long): Long = if (lastTs != Long.MinValue && ts < lastTs) lastTs + 1 else ts
 
   /** As [[prepare]] (default ts-order mode), but parallel WITHIN a
     * stream: rows are globally range-sorted by (streamId, ts, arrival),
@@ -178,22 +191,7 @@ object Ingest {
       // Pass 2: same persisted partitioning; replay the sequential
       // clamp per run from its known start state.
       val out = sortedRdd.zipPartitions(runStarts) { (dataIt, startIt) =>
-        val starts = startIt.map { case (_, (sid, l, off)) => sid -> ((l, off)) }.toMap
-        var curSid = Long.MinValue
-        var last = Long.MinValue
-        var seq = 0L
-        dataIt.map { case (sid, ts, value, _) =>
-          if (sid != curSid) {
-            curSid = sid
-            val (l0, o0) = starts(sid)
-            last = l0; seq = o0
-          }
-          val clamped = if (last != Long.MinValue && ts < last) last + 1 else ts
-          last = clamped
-          val e = Event(sid, seq, clamped, value)
-          seq += 1
-          e
-        }
+        clamp(dataIt, startIt.map { case (_, (sid, l, off)) => sid -> ((l, off)) }.toMap)
       }
       spark.createDataset(out)
     }

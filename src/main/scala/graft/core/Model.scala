@@ -29,6 +29,13 @@ object SummaryWindow {
   /** Reference init: `core/data.go:15-21`. */
   val EmptyMax: Double = -Double.MaxValue
   val EmptyMin: Double = Double.MaxValue
+
+  /** The monoid merge of two windows of one stream: the driver twin of
+    * the scalar kind's `mergeAggs` ([[Summarizer.Kind]]).
+    */
+  def merge(a: SummaryWindow, b: SummaryWindow): SummaryWindow =
+    SummaryWindow(a.streamId, math.min(a.ts, b.ts), math.max(a.te, b.te), math.min(a.cs, b.cs),
+      math.max(a.ce, b.ce), a.count + b.count, a.sum + b.sum, math.max(a.max, b.max), math.min(a.min, b.min))
 }
 
 /** One exact element inside a landmark window. */

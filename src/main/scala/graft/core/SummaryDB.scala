@@ -1,15 +1,17 @@
 package graft.core
 
 import graft.estimator.SumEstimator
-import graft.windowing.WindowingSpec
+import graft.windowing.{DecayModel, WindowingSpec}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.plans.SummaryRewrite
 import graft.sources.{TinyParquet, WriterLock}
+import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
 import scala.jdk.CollectionConverters._
 
@@ -37,6 +39,14 @@ import scala.jdk.CollectionConverters._
   * so an append rewrites only its streams' buckets
   * ([[writeStreamTable]]). [[query]] reads one bucket.
   *
+  * Small work runs on the driver, with no Spark job, whenever what it
+  * reads holds at most [[TinyParquet.TinyBytes]]: [[open]]'s catalog
+  * read, a point query's bucket read, and the append of a local batch
+  * (a local relation) to a store without landmark intervals, whose
+  * WAL file and touched `summary_windows` buckets are built and written
+  * there ([[appendOnDriver]]). Both append paths share the bucket
+  * bookkeeping ([[bucketPlan]]) and the manifest publish ([[publish]]).
+  *
   * Landmark elements are rows keyed by (streamId, windowId), never one
   * array per window: a landmark left open across a billion-event
   * stretch stays at constant row width instead of building toward
@@ -61,6 +71,7 @@ final class SummaryDB private (
     dir: String,
     mergeEvery: Int = 1) {
   import spark.implicits._
+  import SummaryDB.BucketPlan
   require(mergeEvery >= 1, s"mergeEvery must be >= 1: $mergeEvery")
 
   private def p(name: String) = s"$dir/$name"
@@ -166,22 +177,17 @@ final class SummaryDB private (
     if (files.nonEmpty && files.forall(_.startsWith(s"${v.getName}/"))) Seq(v.toString) else files.map(p)
   }
 
-  /** Publish a new version of the stream table `name`: the buckets in
-    * `carried` keep their files by reference, and every other bucket
-    * holds `df`'s rows (so `df` holds rows of those buckets only) with
-    * the merge cadence in `cadence` (none by default). `df` is written
-    * as [[SummaryDB.Buckets]] hash partitions of `streamId` — Spark's
-    * `HashPartitioning`, so bucket b is written by task b, as
-    * `part-<b>-*`; a repartition by number is never coalesced by AQE —
-    * each sorted by (streamId, ts), without Spark's `_SUCCESS`: the
-    * manifest, published after the data, is what completes the version.
-    * Then [[prune]].
+  /** Write a new version of the stream table `name`: the buckets `plan`
+    * rewrites hold `df`'s rows (so `df` holds rows of those buckets only)
+    * and the others keep their files by reference (a full rewrite by
+    * default). `df` is written as [[SummaryDB.Buckets]] hash partitions
+    * of `streamId` — Spark's `HashPartitioning`, so bucket b is written
+    * by task b, as `part-<b>-*`; a repartition by number is never
+    * coalesced by AQE — each sorted by (streamId, ts), without Spark's
+    * `_SUCCESS`: the manifest, published after the data, is what
+    * completes the version ([[publish]]).
     */
-  private def writeStreamTable(
-      name: String,
-      df: DataFrame,
-      carried: Map[Int, BucketManifest.Bucket] = Map.empty,
-      cadence: Map[Int, (Int, Set[Long])] = Map.empty): Unit = {
+  private def writeStreamTable(name: String, df: DataFrame, plan: BucketPlan = BucketPlan.Full): Unit = {
     val version = new Path(p(s"${name}__v${nextStamp(name)}"))
     df.repartition(SummaryDB.Buckets, col("streamId"))
       .sortWithinPartitions("streamId", "ts")
@@ -189,19 +195,27 @@ final class SummaryDB private (
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(version.toString)
     val (written, stray) = TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, version.toString)
-      .groupBy(_.getPath.getName.stripPrefix("part-").take(5).toInt).partition(f => !carried.contains(f._1))
+      .groupBy(_.getPath.getName.stripPrefix("part-").take(5).toInt).partition(f => !plan.carried.contains(f._1))
     // Spark's task 0 always writes a file: an empty one when bucket 0 is carried
     stray.values.flatten.foreach(f => fs.delete(f.getPath, false))
-    BucketManifest(hashed = true, Vector.tabulate(SummaryDB.Buckets) { b =>
-      carried.getOrElse(b, {
-        val (since, pending) = cadence.getOrElse(b, (0, Set.empty[Long]))
-        BucketManifest.Bucket(written.getOrElse(b, Nil)
-          .map(f => BucketManifest.File(s"${version.getName}/${f.getPath.getName}", f.getLen)),
-          since, pending)
-      })
-    }).publish(fs, version)
+    publish(name, version, plan, written.map { case (b, files) =>
+      b -> files.map(f => BucketManifest.File(s"${version.getName}/${f.getPath.getName}", f.getLen))
+    })
+  }
+
+  /** Complete `version` of the stream table `name` — its manifest: the
+    * buckets `plan` carries by reference, the others holding their
+    * `written` files at the plan's merge cadence — then [[prune]]. The
+    * one publish of the Spark write above and the driver-side append.
+    */
+  private def publish(name: String, version: Path, plan: BucketPlan,
+      written: Map[Int, Seq[BucketManifest.File]]): Unit = {
+    plan.manifest(written).publish(fs, version)
     prune(name)
   }
+
+  /** A new data file name of bucket `b`, in the form Spark's writer uses. */
+  private def partName(b: Int): String = f"part-$b%05d-${java.util.UUID.randomUUID()}-c000.parquet"
 
   /** Delete what no kept version of the stream table `name` references.
     * Kept are the newest complete version and its complete predecessor,
@@ -231,11 +245,23 @@ final class SummaryDB private (
 
   // --------------------------------------------------------------- catalog
 
-  private var metas: Map[Long, StreamMeta] = loadMetas()
+  /** The rows of the current version of the catalog table `name`: read
+    * on the driver by `of` (0 jobs) when its files hold at most
+    * [[TinyParquet.TinyBytes]], else by a Spark collect.
+    */
+  private def catalogRows[T: Encoder](name: String)(of: Group => T): Seq[T] =
+    currentVersion(name).fold(Seq.empty[T]) { v =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val files = TinyParquet.dataFiles(conf, v.toString)
+      if (files.map(_.getLen).sum > TinyParquet.TinyBytes) readFiles[T](Seq(v.toString)).collect().toSeq
+      else TinyParquet.fileRows(conf, files.map(_.getPath)).map(of)
+    }
 
-  private def loadMetas(): Map[Long, StreamMeta] =
-    readFiles[StreamMeta](currentVersion("stream_meta").toSeq.map(_.toString))
-      .collect().map(m => m.streamId -> m).toMap
+  private var metas: Map[Long, StreamMeta] = catalogRows[StreamMeta]("stream_meta") { g =>
+    StreamMeta(g.getLong("streamId", 0), TinyParquet.stringArray(g, "operators").toSeq,
+      g.getString("windowKind", 0), g.getDouble("base", 0),
+      g.getLong("p", 0), g.getLong("q", 0), g.getLong("r", 0), g.getLong("s", 0))
+  }.map(m => m.streamId -> m).toMap
 
   def streams: Map[Long, StreamMeta] = metas
 
@@ -265,18 +291,11 @@ final class SummaryDB private (
     * DB's timeline, persisted so later appends keep honoring them).
     * Stored rows are (streamId, t0, t1); streamId = -1 means global
     * (applies to every stream). The table holds one row per declared
-    * interval, so it is read on the driver (0 jobs) under the
-    * [[TinyParquet.TinyBytes]] guard; every mutating call reads it once
-    * and passes the rows down.
+    * interval, so it is read on the driver ([[catalogRows]]); every
+    * mutating call reads it once and passes the rows down.
     */
-  private def storedIntervals: Seq[(Long, Long, Long)] = currentVersion("landmark_intervals").fold(
-    Seq.empty[(Long, Long, Long)]) { v =>
-    val conf = spark.sparkContext.hadoopConfiguration
-    val files = TinyParquet.dataFiles(conf, v.toString)
-    if (files.map(_.getLen).sum > TinyParquet.TinyBytes)
-      readFiles[(Long, Long, Long)](Seq(v.toString)).collect().toSeq
-    else TinyParquet.fileRows(conf, files.map(_.getPath))
-      .map(g => (g.getLong("_1", 0), g.getLong("_2", 0), g.getLong("_3", 0)))
+  private def storedIntervals: Seq[(Long, Long, Long)] = catalogRows[(Long, Long, Long)]("landmark_intervals") {
+    g => (g.getLong("_1", 0), g.getLong("_2", 0), g.getLong("_3", 0))
   }.sorted
 
   def landmarkIntervals: Seq[(Long, Long)] = globalIntervals(storedIntervals)
@@ -371,6 +390,15 @@ final class SummaryDB private (
     * streams re-coarsen by monoid merge ([[Compactor]]) — the WAL is
     * never re-read to maintain decay, and other buckets are not
     * rewritten ([[appendTo]]).
+    *
+    * A batch that is a local relation (built from a driver-side
+    * collection) whose streams' `summary_windows` buckets hold at most
+    * [[TinyParquet.TinyBytes]] is appended on the driver, with no Spark
+    * job: its clamp, WAL file, fine windows, re-coarsening and bucket
+    * files ([[appendOnDriver]]). Enabled summary kinds still absorb it
+    * by Spark from the WAL. Any other batch, a store with landmark
+    * intervals, a crash replay and a table written before manifests
+    * take the Spark path.
     */
   def append(
       events: Dataset[Event],
@@ -443,20 +471,38 @@ final class SummaryDB private (
       (if (forceRecompute) Nil else enabled.values.toSeq)
     val tables = (FrontierColumns.map(_._1) ++ incremental.map(_.table)).distinct
       .map(name => name -> streamTable(name)).toMap
-    val counts = batchCounts(batch, needed = mergeEvery > 1 || tables.values.exists(_.nonEmpty))
+    // a local relation is collected with no job
+    val local = batch.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(batch.collect().toSeq)
+      case _ => None
+    }
+    val counts = batchCounts(batch, local, needed = mergeEvery > 1 || tables.values.exists(_.nonEmpty))
     val sids = counts.fold(Set.empty[Long])(_.keySet)
-    val frontier: Map[Long, Long] = FrontierColumns.flatMap { case (name, c) =>
+    def frontier(columns: Seq[(String, String)]): Seq[(Long, Long)] = columns.flatMap { case (name, c) =>
       tables(name).toSeq.flatMap(m => streamMaxima(bucketsOf(m, sids), sids, c, tinyBytes))
-    }.groupMapReduce(_._1)(_._2)(math.max)
+    }
+    // tinyBytes 0 forces the Spark path
+    val onDriver = for {
+      rows <- local if !recompute
+      plan = bucketPlan(tables("summary_windows"), sids)
+      if !plan.migrates && tinyBytes > 0 && plan.oldFiles.map(_.bytes).sum <= tinyBytes
+    } yield (rows, plan)
 
     val tagDir = s"${p("events")}/$tag"
-    Ingest.prepare(batch.toDF().withColumn("arrival", col("seq")), baseTs = frontier)
-      .toDF()
-      .withColumn("bstamp", lit(bstamp))
-      .write.mode(SaveMode.Overwrite).parquet(tagDir)
+    onDriver match {
+      case Some((rows, plan)) =>
+        // summary_windows' frontier comes from the buckets the driver reads
+        appendOnDriver(tagDir, bstamp, rows, counts.get, plan, frontier(FrontierColumns.tail))
+      case None =>
+        Ingest.prepare(batch.toDF().withColumn("arrival", col("seq")),
+            baseTs = frontier(FrontierColumns).groupMapReduce(_._1)(_._2)(math.max))
+          .toDF()
+          .withColumn("bstamp", lit(bstamp))
+          .write.mode(SaveMode.Overwrite).parquet(tagDir)
+    }
     // The summaries absorb the batch as the WAL holds it: read back, not
     // re-ranked by a second run of prepare's shuffle per summary kind.
-    val prepared = readFiles[Event](Seq(tagDir))
+    lazy val prepared = readFiles[Event](Seq(tagDir))
 
     if (newIntervals.nonEmpty) saveIntervals(stored)
     if (recompute) refreshSummaries(stored, includeUncommittedTag = Some(tag))
@@ -468,7 +514,8 @@ final class SummaryDB private (
     // double-count and drift the partition off the canonical decay
     // (and KLL sketch weights would double) — rebuild from the WAL
     // instead, like the scalar refreshSummaries path.
-    incremental.foreach(kind => appendTo(kind, prepared, tables(kind.table), counts, tinyBytes))
+    incremental.filterNot(kind => onDriver.nonEmpty && kind == Summarizer.Kind)
+      .foreach(kind => appendTo(kind, prepared, tables(kind.table), counts, tinyBytes))
     if (forceRecompute) enabled.values.foreach(rebuild(_, includeUncommittedTag = Some(tag)))
     // The summaries now reflect this batch: commit it. A crash before
     // this line leaves an unmarked events/<tag> dir that readEvents
@@ -480,6 +527,76 @@ final class SummaryDB private (
     refreshRegistrations(stored)
   }
 
+  /** Append the local batch `rows` to `summary_windows` on the driver,
+    * with no Spark job: `counts` are its per-stream element counts,
+    * `plan` the table's [[bucketPlan]] for them, and `landmarkFrontier`
+    * the streams' frontier in the landmark tables. The touched buckets
+    * are read once ([[windowRows]]): their rows give the streams'
+    * frontier (max `te`) and base counts (max `ce` + 1), and are the rows
+    * rewritten. The batch is clamped
+    * ([[Ingest.clamp]] over the (streamId, ts, arrival) order of
+    * [[Ingest.prepare]]) and written as the one WAL file of `tagDir`;
+    * each element becomes its fine window — the scalar kind's
+    * `Singleton` delta — and the streams `plan` merges re-coarsen by the
+    * window ids of [[DecayModel.windowIdJ]] (the kernel of
+    * [[graft.functions.WindowId]]), each window folded with
+    * [[SummaryWindow.merge]] in `cs` order. Each touched bucket is then
+    * one file sorted by (streamId, ts), and the version is published as
+    * by the Spark path ([[publish]]).
+    */
+  private def appendOnDriver(tagDir: String, bstamp: Long, rows: Seq[Event], counts: Map[Long, Long],
+      plan: BucketPlan, landmarkFrontier: Seq[(Long, Long)]): Unit = {
+    val old = windowRows(plan.oldFiles)
+    val sids = counts.keySet
+    val frontier = (landmarkFrontier ++ old.collect {
+      case w if sids(w.streamId) && w.te != OpenT1 => w.streamId -> w.te
+    }).groupMapReduce(_._1)(_._2)(math.max)
+    val base = old.filter(w => sids(w.streamId) || plan.merging(w.streamId))
+      .groupMapReduce(_.streamId)(_.ce + 1L)(math.max)
+    val events = Ingest.clamp(
+      rows.sortBy(e => (e.streamId, e.ts, e.seq)).iterator.map(e => (e.streamId, e.ts, e.value, e.seq)),
+      sid => (frontier.getOrElse(sid, Long.MinValue), 0L)).toVector
+    val wal = new Path(tagDir)
+    fs.delete(wal, true) // a replaced tag, as Spark's overwrite
+    TinyParquet.writeRows(spark, new Path(wal, partName(0)), WalSchema,
+      events.iterator.map(e => Row(e.streamId, e.seq, e.ts, e.value, bstamp)))
+    if (events.isEmpty) return // an empty batch changes no bucket
+
+    val fine = events.map { e =>
+      val r = e.seq + base.getOrElse(e.streamId, 0L)
+      SummaryWindow(e.streamId, e.ts, e.ts, r, r, 1.0, e.value, e.value, e.value)
+    }
+    val n = plan.merging.map(s => s -> (base.getOrElse(s, 0L) + counts.getOrElse(s, 0L))).toMap
+    val spec = specOf
+    val (merging, kept) = (old ++ fine).partition(w => plan.merging(w.streamId))
+    val merged = merging.sortBy(w => (w.streamId, w.cs))
+      .groupBy(w => (w.streamId, DecayModel.windowIdJ(spec, 0L, w.streamId, n(w.streamId), w.cs)))
+      .values.map(_.reduce(SummaryWindow.merge))
+    val version = new Path(p(s"summary_windows__v${nextStamp("summary_windows")}"))
+    val written = (kept ++ merged).groupBy(w => SummaryDB.bucketOf(w.streamId, SummaryDB.Buckets)).map {
+      case (b, ws) =>
+        val file = new Path(version, partName(b))
+        b -> Seq(BucketManifest.File(s"${version.getName}/${file.getName}", TinyParquet.writeRows(spark, file,
+          WindowSchema, ws.sortBy(w => (w.streamId, w.ts, w.cs)).iterator.map(Row.fromTuple))))
+    }
+    publish("summary_windows", version, plan, written)
+  }
+
+  /** The WAL's columns: a clamped [[Event]] and its batch stamp. */
+  private val WalSchema = Encoders.product[Event].schema.add("bstamp", LongType, nullable = false)
+  private val WindowSchema = Encoders.product[SummaryWindow].schema
+
+  /** The summary windows of `files` that pass `filter`, read on the
+    * driver: the one typed reader of the point query and the driver-side
+    * append.
+    */
+  private def windowRows(files: Seq[BucketManifest.File],
+      filter: FilterCompat.Filter = FilterCompat.NOOP): Seq[SummaryWindow] =
+    TinyParquet.fileRows(spark.sparkContext.hadoopConfiguration, files.map(f => new Path(p(f.path))), filter)
+      .map(g => SummaryWindow(g.getLong("streamId", 0), g.getLong("ts", 0), g.getLong("te", 0),
+        g.getLong("cs", 0), g.getLong("ce", 0), g.getDouble("count", 0), g.getDouble("sum", 0),
+        g.getDouble("max", 0), g.getDouble("min", 0)))
+
   /** Where the frontier — the newest stored timestamp per stream — is
     * read: summary windows and landmark spans by `te` (the span te IS
     * the old landmark-window te), landmark elements by `ts`. An open
@@ -490,18 +607,15 @@ final class SummaryDB private (
   private val FrontierColumns =
     Seq("summary_windows" -> "te", "landmark_spans" -> "te", "landmark_elems" -> "ts")
 
-  /** The batch's per-stream element counts: read on the driver when the
-    * batch is a local relation (0 jobs), else collected by one
-    * aggregate — or, when not `needed` (an append into an empty store
-    * that merges at once), left unknown for a non-local batch.
+  /** The batch's per-stream element counts: from its `local` rows when
+    * it is a local relation, else collected by one aggregate — or, when
+    * not `needed` (an append into an empty store that merges at once),
+    * left unknown for a non-local batch.
     */
-  private def batchCounts(batch: Dataset[Event], needed: Boolean): Option[Map[Long, Long]] =
-    batch.queryExecution.optimizedPlan match {
-      case _: LocalRelation =>
-        Some(batch.select($"streamId").as[Long].collect().groupMapReduce(identity)(_ => 1L)(_ + _))
-      case _ if needed => Some(batch.groupBy($"streamId").count().as[(Long, Long)].collect().toMap)
-      case _ => None
-    }
+  private def batchCounts(batch: Dataset[Event], local: Option[Seq[Event]],
+      needed: Boolean): Option[Map[Long, Long]] =
+    local.map(_.groupMapReduce(_.streamId)(_ => 1L)(_ + _)).orElse(
+      if (needed) Some(batch.groupBy($"streamId").count().as[(Long, Long)].collect().toMap) else None)
 
   /** The files of `m`'s buckets that hold `sids` (every file of an
     * unhashed version).
@@ -533,8 +647,8 @@ final class SummaryDB private (
       .as[(Long, Long)].collect().toMap
 
   /** Absorb the clamped batch `prepared` into `kind`'s table, rewriting
-    * only the buckets of its streams; `counts` are its per-stream element
-    * counts, and `stored` the table's current version.
+    * only the buckets of its streams ([[bucketPlan]]); `counts` are its
+    * per-stream element counts, and `stored` the table's current version.
     *
     * Each touched bucket advances its own merge cadence, kept in the
     * manifest: on its `mergeEvery`-th append since its last merge, the
@@ -547,9 +661,7 @@ final class SummaryDB private (
     * Rows of a touched bucket's other streams pass through unchanged.
     *
     * Unknown `counts` (an empty table that merges at once, as a bulk
-    * load) rewrite every bucket, counts found in the rewrite itself. A
-    * version written before manifests is migrated: all its rows are
-    * rewritten into the current buckets.
+    * load) rewrite every bucket, counts found in the rewrite itself.
     */
   private def appendTo(kind: SummaryKind, prepared: Dataset[Event], stored: Option[BucketManifest],
       counts: Option[Map[Long, Long]], tinyBytes: Long): Unit = counts match {
@@ -558,25 +670,40 @@ final class SummaryDB private (
         kind.appendDelta(prepared, Seq.empty[(Long, Long)].toDF("streamId", "n"), specOf),
         specOf, kind.mergeAggs, 0L))
     case Some(batch) if batch.nonEmpty =>
-      def bucketOf(sid: Long) = SummaryDB.bucketOf(sid, SummaryDB.Buckets)
-      val layout = stored.filter(m => m.hashed && m.buckets.size == SummaryDB.Buckets)
-      val bucket = (b: Int) => layout.fold(BucketManifest.Bucket(Nil))(_.buckets(b))
-      val touched = batch.keySet.map(bucketOf)
-      val due = touched.filter(bucket(_).sinceMerge + 1 >= mergeEvery)
-      val merging = batch.keySet.filter(s => due(bucketOf(s))) ++ due.flatMap(bucket(_).pending)
-      val oldFiles = layout.fold(stored.toSeq.flatMap(_.files))(m => touched.toSeq.sorted.flatMap(m.buckets(_).files))
-      val base = streamMaxima(oldFiles, batch.keySet ++ merging, "ce", tinyBytes).view.mapValues(_ + 1L).toMap
-      val all = readTable(kind, oldFiles.map(f => p(f.path)))
+      val plan = bucketPlan(stored, batch.keySet)
+      val base = streamMaxima(plan.oldFiles, batch.keySet ++ plan.merging, "ce", tinyBytes)
+        .view.mapValues(_ + 1L).toMap
+      val all = readTable(kind, plan.oldFiles.map(f => p(f.path)))
         .unionByName(kind.appendDelta(prepared, base.toSeq.toDF("streamId", "n"), specOf))
-      val next = if (merging.isEmpty) all else Compactor.recoarsenAt(all,
-        merging.toSeq.map(s => (s, base.getOrElse(s, 0L) + batch.getOrElse(s, 0L))).toDF("streamId", "n"),
+      val next = if (plan.merging.isEmpty) all else Compactor.recoarsenAt(all,
+        plan.merging.toSeq.map(s => (s, base.getOrElse(s, 0L) + batch.getOrElse(s, 0L))).toDF("streamId", "n"),
         specOf, kind.mergeAggs, 0L)
-      writeStreamTable(kind.table, next,
-        carried = layout.fold(Map.empty[Int, BucketManifest.Bucket])(m =>
-          (0 until SummaryDB.Buckets).filterNot(touched).map(b => b -> m.buckets(b)).toMap),
-        cadence = (touched -- due).map(b => b ->
-          ((bucket(b).sinceMerge + 1, bucket(b).pending ++ batch.keySet.filter(bucketOf(_) == b)))).toMap)
+      writeStreamTable(kind.table, next, plan)
     case _ => () // an empty batch changes no bucket
+  }
+
+  /** What appending the streams `sids` does to the buckets of a stream
+    * table whose current version is `stored` — the bookkeeping both
+    * append paths share. The buckets of `sids` are rewritten, each
+    * advancing its merge cadence; the rest are carried by reference. A
+    * version written before manifests is migrated: all its rows are
+    * rewritten into the current buckets.
+    */
+  private def bucketPlan(stored: Option[BucketManifest], sids: Set[Long]): BucketPlan = {
+    def bucketOf(sid: Long) = SummaryDB.bucketOf(sid, SummaryDB.Buckets)
+    val layout = stored.filter(m => m.hashed && m.buckets.size == SummaryDB.Buckets)
+    val bucket = (b: Int) => layout.fold(BucketManifest.Bucket(Nil))(_.buckets(b))
+    val migrates = stored.nonEmpty && layout.isEmpty
+    val touched = sids.map(bucketOf)
+    val due = touched.filter(bucket(_).sinceMerge + 1 >= mergeEvery)
+    BucketPlan(
+      migrates,
+      merging = sids.filter(s => due(bucketOf(s))) ++ due.flatMap(bucket(_).pending),
+      oldFiles = layout.fold(stored.toSeq.flatMap(_.files))(m => touched.toSeq.sorted.flatMap(m.buckets(_).files)),
+      carried = if (migrates) Map.empty
+        else (0 until SummaryDB.Buckets).filterNot(touched).map(b => b -> bucket(b)).toMap,
+      cadence = (touched -- due).map(b => b ->
+        ((bucket(b).sinceMerge + 1, bucket(b).pending ++ sids.filter(bucketOf(_) == b)))).toMap)
   }
 
   /** `kind`'s table over `files` (an empty frame of its schema when there
@@ -998,17 +1125,15 @@ final class SummaryDB private (
     tables match {
       case Seq(Right(sw), Right(spans), Right(elems))
           if (sw ++ spans ++ elems).map(_.bytes).sum <= tinyBytes =>
-        val conf = spark.sparkContext.hadoopConfiguration
         val Seq(sid, ts, te) = Seq("streamId", "ts", "te").map(FilterApi.longColumn)
         // this stream's rows with lo >= t0 and ts <= t1
-        def rows(files: Seq[BucketManifest.File], lo: Operators.LongColumn) = TinyParquet.fileRows(conf,
-          files.map(f => new Path(p(f.path))), FilterCompat.get(FilterApi.and(
-            FilterApi.eq(sid, java.lang.Long.valueOf(streamId)),
-            FilterApi.and(FilterApi.gtEq(lo, java.lang.Long.valueOf(t0)),
-              FilterApi.ltEq(ts, java.lang.Long.valueOf(t1))))))
-        val s = rows(sw, te).map(g => SummaryWindow(g.getLong("streamId", 0),
-          g.getLong("ts", 0), g.getLong("te", 0), g.getLong("cs", 0), g.getLong("ce", 0),
-          g.getDouble("count", 0), g.getDouble("sum", 0), g.getDouble("max", 0), g.getDouble("min", 0)))
+        def inRange(lo: Operators.LongColumn) = FilterCompat.get(FilterApi.and(
+          FilterApi.eq(sid, java.lang.Long.valueOf(streamId)),
+          FilterApi.and(FilterApi.gtEq(lo, java.lang.Long.valueOf(t0)),
+            FilterApi.ltEq(ts, java.lang.Long.valueOf(t1)))))
+        def rows(files: Seq[BucketManifest.File], lo: Operators.LongColumn) = TinyParquet.fileRows(
+          spark.sparkContext.hadoopConfiguration, files.map(f => new Path(p(f.path))), inRange(lo))
+        val s = windowRows(sw, inRange(te))
         val l = LandmarkDigest.fold(
           rows(spans, te).map(g => LandmarkSpan(g.getLong("streamId", 0),
             g.getLong("windowId", 0), g.getLong("ts", 0), g.getLong("te", 0))),
@@ -1028,6 +1153,38 @@ object SummaryDB {
   /** Hash buckets of every stream table, well under Spark's 32-path
     * parallel-listing threshold. */
   private[graft] val Buckets = 16
+
+  /** What an append does to a stream table's buckets ([[SummaryDB]]'s
+    * `bucketPlan`): `migrates` when the current version was written
+    * before manifests; `merging` are the streams that re-coarsen now
+    * (the batch's in buckets on their `mergeEvery`-th append since their
+    * last merge, and those earlier appends left unmerged there);
+    * `oldFiles` hold the rows the new version rewrites; `carried`
+    * buckets keep their files by reference; `cadence` is a rewritten
+    * bucket's (appends since its last merge, unmerged streams) when it
+    * does not merge now.
+    */
+  private[core] final case class BucketPlan(
+      migrates: Boolean,
+      merging: Set[Long],
+      oldFiles: Seq[BucketManifest.File],
+      carried: Map[Int, BucketManifest.Bucket],
+      cadence: Map[Int, (Int, Set[Long])]) {
+
+    /** The manifest of the version whose rewritten buckets hold `written`. */
+    def manifest(written: Map[Int, Seq[BucketManifest.File]]): BucketManifest =
+      BucketManifest(hashed = true, Vector.tabulate(Buckets) { b =>
+        carried.getOrElse(b, {
+          val (since, pending) = cadence.getOrElse(b, (0, Set.empty[Long]))
+          BucketManifest.Bucket(written.getOrElse(b, Nil), since, pending)
+        })
+      })
+  }
+
+  private[core] object BucketPlan {
+    /** A full rewrite: every bucket rewritten, none left unmerged. */
+    val Full: BucketPlan = BucketPlan(migrates = false, Set.empty, Nil, Map.empty, Map.empty)
+  }
 
   /** The marker of a version written before manifests: its bucket count. */
   private[graft] val BucketsMarker = "_buckets"

@@ -285,7 +285,7 @@ object AnnIndex {
       (buildObs.get("n").asInstanceOf[Long], buildObs.get("sim").asInstanceOf[Double])
     // one row, driver-side — the Spark write paid a full job per build
     graft.sources.TinyParquet.writeFlatRow(
-      spark.sparkContext.hadoopConfiguration, s"$dir/_build_tmp/ivf/buildinfo",
+      spark, s"$dir/_build_tmp/ivf/buildinfo",
       overwrite = true,
       longs = Seq("built_rows" -> builtRows),
       doubles = Seq("mean_center_sim" -> builtSim))

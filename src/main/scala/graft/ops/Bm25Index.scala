@@ -265,7 +265,7 @@ object Bm25Index {
     // one row, driver-side ([[graft.sources.TinyParquet.writeFlatRow]])
     // — the Spark write paid a full job per build/compact
     graft.sources.TinyParquet.writeFlatRow(
-      spark.sparkContext.hadoopConfiguration, path, overwrite = true,
+      spark, path, overwrite = true,
       ints = Seq("n_tb" -> nTb) ++ (if (blockMax) Seq("n_dblk" -> NDblk) else Nil))
 
   /** Refresh the generation marker (`lex/_generation`) — ONE tiny file
@@ -489,7 +489,7 @@ object Bm25Index {
     // one row, driver-side ([[graft.sources.TinyParquet.writeFlatRow]])
     // — the Spark write paid a full job per build/append/merge/compact
     graft.sources.TinyParquet.writeFlatRow(
-      spark.sparkContext.hadoopConfiguration, path, overwrite = mode == "overwrite",
+      spark, path, overwrite = mode == "overwrite",
       longs = Seq("n_docs" -> nDocs, "sum_dl" -> sumDl, "n_terms" -> nTerms))
 
   /** Count of `batchTerms` (a distinct single-column `term` frame) NOT

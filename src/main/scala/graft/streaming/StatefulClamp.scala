@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.Event
+import graft.core.{Event, Ingest}
 import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
@@ -39,7 +39,7 @@ object StatefulClamp {
           var st = state.getOption.getOrElse(ClampState(Long.MinValue, 0L))
           val out = Vector.newBuilder[Event]
           it.toArray.sortBy(_.arrival).foreach { r =>
-            val clamped = if (st.lastTs != Long.MinValue && r.ts < st.lastTs) st.lastTs + 1 else r.ts
+            val clamped = Ingest.clampTs(st.lastTs, r.ts)
             out += Event(sid, st.nextSeq, clamped, r.value)
             st = ClampState(math.max(clamped, st.lastTs), st.nextSeq + 1)
           }

@@ -114,9 +114,129 @@ class BucketAppendSpec extends SparkSpec {
     val batch = rows(Seq(4L, 9L, 17L), 30, 10, 2)
     val (_, driver) = SparkCounts.of(spark)(db.append(batch.toDS()))
     val (_, spark0) = SparkCounts.of(spark)(forced.append(batch.toDS(), Nil, tinyBytes = 0L))
-    assert(driver.jobs <= 7L, driver.jobLines)
+    assert(driver.jobs == 0L, driver.jobLines)
     // the fallback runs a Spark aggregate for the frontier and one for the counts
     assert(spark0.jobs >= driver.jobs + 2L, s"driver path ${driver.jobs} jobs, fallback ${spark0.jobs}")
     assert(exact(db.summaryWindows.toDF()) == exact(forced.summaryWindows.toDF()))
+    // A batch that is not a local relation takes the Spark path, to the same tables.
+    val more = rows(Seq(9L, 23L), 42, 8, 1)
+    val (_, distributed) = SparkCounts.of(spark)(db.append(spark.createDataFrame(more).as[Event].repartition(2)))
+    forced.append(more.toDS(), Nil, tinyBytes = 0L)
+    assert(distributed.jobs > 0L)
+    assert(wal(db) == wal(forced))
+    assert(exact(db.summaryWindows.toDF()) == exact(forced.summaryWindows.toDF()))
+  }
+
+  /** Each bucket of `table`'s current manifest: whether it holds files,
+    * and its merge cadence.
+    */
+  private def layout(dir: String, table: String): Seq[(Boolean, Int, Set[Long])] =
+    StoreLayout.current(spark, dir, table).buckets.map(b => (b.files.nonEmpty, b.sinceMerge, b.pending))
+
+  /** A stream that is not stream 1 but hashes to its bucket. */
+  private val fresh = Iterator.from(100).map(_.toLong)
+    .find(s => SummaryDB.bucketOf(s, SummaryDB.Buckets) == SummaryDB.bucketOf(1L, SummaryDB.Buckets)).get
+
+  /** Twelve elements of each stream in `sids` sharing timestamps four at a
+    * time, from `from` * 10 on, their arrival order (`seq`) shuffled
+    * against their values.
+    */
+  private def ties(sids: Seq[Long], from: Int): Seq[Event] = {
+    val arrival = new scala.util.Random(7).shuffle((0 until 12).toList)
+    for (sid <- sids; i <- 0 until 12)
+      yield Event(sid, arrival(i).toLong, (from + i / 4) * 10L, ((i * 5 + sid) % 13).toDouble)
+  }
+
+  /** Local batches with integer values: the first into an empty store,
+    * late rows, equal timestamps, a new stream in a populated bucket.
+    */
+  private val localAppends: Seq[Seq[Event]] = Seq(
+    rows(1L to 12L, 0, 40, 0),
+    rows(Seq(2L, 3L), 40, 25, 4),
+    ties(Seq(5L, 6L), 200),
+    rows(Seq(fresh), 0, 30, 2) ++ rows(Seq(1L), 40, 10, 0),
+    rows(5L to 9L, 300, 15, 1),
+    rows(Seq(2L, 3L, 7L, fresh), 320, 12, 2))
+
+  /** Two stores that take the same appends, `db` by the driver guard and
+    * `forced` with it at 0 (the Spark path); `reopenAfter` appends, both
+    * are reopened.
+    */
+  private def twins(mergeEvery: Int, withKinds: Boolean, reopenAfter: Int): Unit = {
+    val dirs = Seq("graft_twin", "graft_twin0").map(Files.createTempDirectory(_).toString)
+    def open(d: String) = {
+      val store = SummaryDB.open(spark, d, mergeEvery)
+      if (withKinds) enableAll(store)
+      store
+    }
+    var Seq(db, forced) = dirs.map(open)
+    val tables = "summary_windows" +: (if (withKinds) kinds.map(_._2.table) else Nil)
+    localAppends.zipWithIndex.foreach { case (batch, i) =>
+      val (_, counts) = SparkCounts.of(spark)(db.append(batch.toDS()))
+      if (!withKinds) assert(counts.jobs == 0L, s"append ${i + 1}: ${counts.jobLines}")
+      forced.append(batch.toDS(), Nil, tinyBytes = 0L)
+      assert(wal(db) == wal(forced), s"append ${i + 1}")
+      tables.foreach(t => assert(layout(dirs(0), t) == layout(dirs(1), t), s"append ${i + 1}: $t"))
+      if (i + 1 == reopenAfter) { db = open(dirs(0)); forced = open(dirs(1)) }
+    }
+    assert(db.rawEvents.filter($"streamId" === 2L && $"ts".between(391L, 394L)).count() == 4L,
+      "late rows must have been clamped")
+    assert(exact(db.summaryWindows.toDF()) == exact(forced.summaryWindows.toDF()))
+    if (withKinds) kinds.foreach { case (tableOf, kind, state) =>
+      if (kind.table == QuantileSummary.kind().table)
+        assert(observed(tableOf(db), state) == observed(tableOf(forced), state), kind.table)
+      else assert(exact(tableOf(db)) == exact(tableOf(forced)), kind.table)
+    }
+    val events = walEvents(db)
+    def windows(ds: Dataset[SummaryWindow]) = ds.collect().sortBy(w => (w.streamId, w.cs)).toSeq
+    if (mergeEvery == 1)
+      assert(windows(db.summaryWindows) == windows(Summarizer.summarizePerStream(events, specOf)))
+    ((1L to 12L) :+ fresh).foreach { sid =>
+      val c = db.query(sid, "count", Long.MinValue, Long.MaxValue)
+      assert(c.value == events.filter($"streamId" === sid).count().toDouble && c.error == 0.0, s"stream $sid")
+    }
+  }
+
+  test("driver and Spark appends leave identical stores: mergeEvery = 1") {
+    twins(mergeEvery = 1, withKinds = false, reopenAfter = 0)
+  }
+
+  test("driver and Spark appends leave identical stores: mergeEvery = 3, reopened mid-cadence") {
+    twins(mergeEvery = 3, withKinds = false, reopenAfter = 4)
+  }
+
+  test("driver and Spark appends leave identical stores: every summary kind") {
+    twins(mergeEvery = 1, withKinds = true, reopenAfter = 0)
+  }
+
+  test("a WAL of driver- and Spark-written batches reads, replays and recomputes as an all-Spark one") {
+    val dirs = Seq("graft_mixed", "graft_mixed0").map(Files.createTempDirectory(_).toString)
+    val Seq(mixed, allSpark) = dirs.map(SummaryDB.open(spark, _))
+    def nonLocal(b: Seq[Event]) = spark.createDataFrame(b).as[Event].repartition(2)
+    val Seq(b1, b2, b3, b4, b5, _) = localAppends
+    mixed.append(b1.toDS()); allSpark.append(b1.toDS(), Nil, tinyBytes = 0L)
+    mixed.append(b2.toDS(), Nil, tinyBytes = 0L); allSpark.append(b2.toDS(), Nil, tinyBytes = 0L)
+    mixed.appendOnce(7L, b3.toDS()); allSpark.appendOnce(7L, nonLocal(b3))
+    mixed.append(nonLocal(b4)); allSpark.append(nonLocal(b4))
+    mixed.append(b5.toDS()); allSpark.append(b5.toDS(), Nil, tinyBytes = 0L)
+    def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString).toSeq
+    def same(label: String): Unit = {
+      assert(mixed.rawEvents.schema == allSpark.rawEvents.schema, label)
+      assert(wal(mixed) == wal(allSpark), label)
+      Seq[SummaryDB => DataFrame](_.summaryWindows.toDF(), _.landmarkSpans.toDF(), _.landmarkElems.toDF())
+        .foreach(table => assert(sorted(table(mixed)) == sorted(table(allSpark)), label))
+    }
+    same("interleaved")
+    // A crash between batch 7's driver-written WAL and its commit marker:
+    // the replay rewrites the tag and recomputes from the WAL.
+    dirs.foreach(d => StoreLayout.fs(spark, d).delete(new org.apache.hadoop.fs.Path(s"$d/commits/batch-7"), false))
+    mixed.appendOnce(7L, b3.toDS()); allSpark.appendOnce(7L, nonLocal(b3))
+    same("replayed")
+    Seq(mixed, allSpark).foreach { store =>
+      store.compactWal()
+      store.newLandmark(3L, 100L, 300L)
+    }
+    assert(mixed.landmarkElems.count() > 0L)
+    same("recomputed")
   }
 }
