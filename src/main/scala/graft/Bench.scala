@@ -19,7 +19,7 @@ object Bench {
     * captures the output keeps only its LAST 2000 characters and parses
     * a JSON line out of that tail; the full line (~4 KB: 115 queries +
     * spread map, the unchanged measurement contract) prints before it
-    * and lands in bench_full.json, so the tail always holds this one
+    * and lands in bench_full_c<cpus>.json, so the tail always holds this one
     * complete, parseable object — totals, the 12 slowest queries (the
     * only ones above the run-to-run noise floor), the index/scale/skew
     * blocks and the determinism anchors.
@@ -50,7 +50,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+    val spark = Session.local(cpus)
+    // one full line per core count: a 4-core and a 32-core run keep both
+    val fullFile = s"bench_full_c$cpus.json"
 
     val timings = collection.mutable.LinkedHashMap.empty[String, Double]
     val errors = collection.mutable.LinkedHashMap.empty[String, String]
@@ -616,7 +619,7 @@ object Bench {
     // characters, which used to leave nothing but the spread map
     // visible — per-query SPREADS were then read as per-query TIMES
     // (a 0.03 "time" for a 10 s k-means query). Two defenses: the
-    // full JSON also goes to bench_full.json next to the run, and the
+    // full JSON also goes to bench_full_c<cpus>.json next to the run, and the
     // tail end of the line carries a queries_slowest map with the
     // real timings that matter for regression reading.
     val slowest = timings.toSeq.sortBy(-_._2).take(12)
@@ -635,13 +638,13 @@ object Bench {
       indexCheck.map(ic => s""""index_check":$ic,""").getOrElse("") +
       s""""sf":${jq(sfDir)}}"""
     try java.nio.file.Files.write(
-      java.nio.file.Paths.get("bench_full.json"),
+      java.nio.file.Paths.get(fullFile),
       line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case _: Throwable => () } // reporting must never fail the bench
     println(line)
     println(digest(
       s""""metric":"total","value":$total,"unit":"sec","queries":$slowest,""" +
-      s""""queries_all_in":"bench_full.json","n_queries":${timings.size},""" +
+      s""""queries_all_in":${jq(fullFile)},"n_queries":${timings.size},""" +
       s""""ingest_sec":${f"$ingestSec%.4f"},""" +
       s""""ingest_rows_per_sec":${rowsPerSec.toLong},""" +
       s""""raw_rows":$rawRows,"summary_windows":$windowRows,""" +

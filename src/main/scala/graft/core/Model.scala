@@ -1,6 +1,9 @@
 package graft.core
 
+import graft.sources.TinyParquet
 import graft.windowing.{ExponentialWindowing, PowerWindowing, WindowingSpec}
+import org.apache.spark.sql.Encoders
+import org.apache.spark.sql.types.StructType
 
 /** Raw ingest element (reference `core/stream.go:104`: `(ts, value)`
   * appended to a stream). `seq` is the 0-based element rank within the
@@ -84,9 +87,10 @@ object LandmarkDigest {
   /** Fold span rows and their element rows into one digest per span:
     * the span's declared [ts, te] with the count/sum/max/min of its
     * elements (matched on (streamId, windowId)) inside [t0, t1]. The
-    * one driver-side fold: the point query's bucket read and [[of]]
-    * both use it; [[QueryEngine.landmarkDigests]] is its distributed
-    * twin. Spans are kept whether or not they overlap [t0, t1].
+    * one driver-side fold: the driver walk of point and tiny fleet
+    * queries ([[QueryEngine.walk]]) and [[of]] both use it;
+    * [[QueryEngine.landmarkDigests]] is its distributed twin. Spans are
+    * kept whether or not they overlap [t0, t1].
     */
   def fold(spans: Seq[LandmarkSpan], elems: Seq[LandmarkElem], t0: Long, t1: Long): Seq[LandmarkDigest] = {
     val byWindow = elems.groupBy(e => (e.streamId, e.windowId))
@@ -109,6 +113,42 @@ object LandmarkDigest {
   def of(lw: LandmarkWindow, t0: Long, t1: Long): LandmarkDigest =
     fold(Seq(LandmarkSpan(lw.streamId, 0L, lw.ts, lw.te)),
       lw.elems.map(e => LandmarkElem(lw.streamId, 0L, e.ts, e.value)), t0, t1).head
+}
+
+/** One of the three flat stream tables read as typed rows on the
+  * driver, over its decoded [[TinyParquet.Columns]]: `lo` is the column
+  * a range's t0 bounds below (`te` for windows and spans, whose time
+  * spans must overlap the range; `ts` for elements).
+  */
+private[graft] final class StreamTable[T] private (val schema: StructType, lo: String,
+    row: TinyParquet.Columns => Int => T) {
+
+  /** The rows of `c` of the streams `sids` with `lo >= t0` and
+    * `ts <= t1`, in column order. The predicate runs on the arrays, so
+    * no other row is built.
+    */
+  def rows(c: TinyParquet.Columns, sids: Long => Boolean = _ => true,
+      t0: Long = Long.MinValue, t1: Long = Long.MaxValue): Vector[T] = {
+    val (sid, from, ts, at) = (c.long("streamId"), c.long(lo), c.long("ts"), row(c))
+    (0 until c.size).iterator.filter(i => sids(sid(i)) && from(i) >= t0 && ts(i) <= t1).map(at).toVector
+  }
+}
+
+private[graft] object StreamTable {
+  val Windows = new StreamTable[SummaryWindow](Encoders.product[SummaryWindow].schema, "te", { c =>
+    val Seq(sid, ts, te, cs, ce) = Seq("streamId", "ts", "te", "cs", "ce").map(c.long)
+    val Seq(n, sum, max, min) = Seq("count", "sum", "max", "min").map(c.double)
+    i => SummaryWindow(sid(i), ts(i), te(i), cs(i), ce(i), n(i), sum(i), max(i), min(i))
+  })
+  val Spans = new StreamTable[LandmarkSpan](Encoders.product[LandmarkSpan].schema, "te", { c =>
+    val Seq(sid, w, ts, te) = Seq("streamId", "windowId", "ts", "te").map(c.long)
+    i => LandmarkSpan(sid(i), w(i), ts(i), te(i))
+  })
+  val Elems = new StreamTable[LandmarkElem](Encoders.product[LandmarkElem].schema, "ts", { c =>
+    val Seq(sid, w, ts) = Seq("streamId", "windowId", "ts").map(c.long)
+    val v = c.double("value")
+    i => LandmarkElem(sid(i), w(i), ts(i), v(i))
+  })
 }
 
 /** Query parameters (reference `core/op.go:5-8`). */

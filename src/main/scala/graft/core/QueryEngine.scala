@@ -1,29 +1,37 @@
 package graft.core
 
 import graft.estimator.SumEstimator
+import graft.sources.TinyParquet
+import graft.sources.TinyParquet.Columns
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder}
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.SortedMap
 
-/** Distributed range-query execution over the summary + landmark tables.
+/** Fleet-wide range-query execution over the summary + landmark tables.
   *
   * The reference answers one stream at a time on a single node
   * (`/root/reference/core/stream.go:156-192`): probe the time index for
   * overlapping windows, then run the op's estimator. Here the probe is a
-  * pushed-down range filter (`te >= t0 && ts <= t1` — exactly the
+  * range filter (`te >= t0 && ts <= t1` — exactly the
   * index-probe-plus-edge-filter of
   * `/root/reference/storage/query_index.go:48-74` +
   * `/root/reference/core/stream_window_manager.go:78-93`), and the
-  * estimator runs per stream inside `cogroup` on executors — every
-  * stream in parallel, O(log N) window rows each, nothing collected to
-  * the driver.
+  * estimator runs once per stream over its windows in ts order. Tiny
+  * inputs (bare scans of the stream tables or local relations holding
+  * at most [[TinyParquet.TinyBytes]] together, [[TinyParquet.input]])
+  * are decoded and walked on the driver, with no Spark job, and the
+  * answer is a local relation. Any other input is walked inside
+  * `cogroup` on executors — every stream in parallel, O(log N) window
+  * rows each, nothing collected to the driver. Both walks hand the
+  * estimator the same windows and digests.
   *
   * Landmark state enters as [[LandmarkSpan]] + [[LandmarkElem]] ROWS:
   * [[landmarkDigests]] folds the in-range elements of each window into
-  * one bounded [[LandmarkDigest]] row by a distributed aggregation, so
-  * the estimator sees O(#intervals) digests per stream no matter how
-  * many exact elements a landmark holds — no per-window element array
-  * ever materializes. Callers without landmarks pass empty span and
-  * element Datasets.
+  * one bounded [[LandmarkDigest]] row by a distributed aggregation (on
+  * the driver path, [[LandmarkDigest.fold]]), so the estimator sees
+  * O(#intervals) digests per stream no matter how many exact elements a
+  * landmark holds — no per-window element array ever materializes.
+  * Callers without landmarks pass empty span and element Datasets.
   */
 object QueryEngine {
 
@@ -58,24 +66,72 @@ object QueryEngine {
   }
 
   /** The one fleet-wide window walk: overlap filter, landmark digests,
-    * `cogroup` on stream, both sides in time order, then `f` per stream
-    * with any overlapping summary or landmark window.
+    * both sides of each stream in time order, then `f` per stream with
+    * any overlapping summary or landmark window. On the driver, rows
+    * sorted by stream, when the inputs are tiny ([[onDriver]]); else by
+    * `cogroup` on stream.
     */
   private def perStream[T: Encoder](
       sw: Dataset[SummaryWindow],
       spans: Dataset[LandmarkSpan],
       elems: Dataset[LandmarkElem],
       t0: Long,
-      t1: Long)(f: (Long, Seq[SummaryWindow], Seq[LandmarkDigest]) => T): Dataset[T] = {
+      t1: Long,
+      tinyBytes: Long)(f: (Long, Seq[SummaryWindow], Seq[LandmarkDigest]) => T): Dataset[T] = {
     val spark = sw.sparkSession
     import spark.implicits._
-    sw.filter($"te" >= t0 && $"ts" <= t1)
-      .groupByKey(_.streamId)
-      .cogroup(landmarkDigests(spans, elems, t0, t1).groupByKey(_.streamId)) { (sid, sws, lds) =>
-        val s = sws.toArray.sortBy(_.ts).toSeq
-        val l = lds.toArray.sortBy(_.ts).toSeq
-        if (s.isEmpty && l.isEmpty) Iterator.empty else Iterator(f(sid, s, l))
-      }
+    onDriver(sw, spans, elems, tinyBytes) match {
+      case Some((w, s, e)) =>
+        spark.createDataset(walk(w, s, e, _ => true, t0, t1).map { case (sid, (s, l)) => f(sid, s, l) }.toSeq)
+      case None =>
+        sw.filter($"te" >= t0 && $"ts" <= t1)
+          .groupByKey(_.streamId)
+          .cogroup(landmarkDigests(spans, elems, t0, t1).groupByKey(_.streamId)) { (sid, sws, lds) =>
+            val s = sws.toArray.sortBy(_.ts).toSeq
+            val l = lds.toArray.sortBy(_.ts).toSeq
+            if (s.isEmpty && l.isEmpty) Iterator.empty else Iterator(f(sid, s, l))
+          }
+    }
+  }
+
+  /** The decoded columns of the three inputs, when each is a
+    * [[TinyParquet.input]] and together they hold at most `tinyBytes`
+    * (0 forces Spark without looking at them); None otherwise, and when
+    * one lacks a column or stores it as a type Spark would convert.
+    */
+  private def onDriver(
+      sw: Dataset[SummaryWindow],
+      spans: Dataset[LandmarkSpan],
+      elems: Dataset[LandmarkElem],
+      tinyBytes: Long): Option[(Columns, Columns, Columns)] =
+    if (tinyBytes <= 0) None
+    else Seq(sw, spans, elems).flatMap(TinyParquet.input) match {
+      case Seq(w, s, e) if w.bytes + s.bytes + e.bytes <= tinyBytes =>
+        (for {
+          ws <- w.read(StreamTable.Windows.schema)
+          ss <- s.read(StreamTable.Spans.schema)
+          es <- e.read(StreamTable.Elems.schema)
+        } yield (ws, ss, es)).toOption
+      case _ => None
+    }
+
+  /** The driver twin of the `cogroup` walk, over decoded stream tables:
+    * each stream of `sids` with a summary window or landmark span that
+    * overlaps [t0, t1], by stream id, with those windows and its
+    * landmark digests, each in ts order.
+    */
+  private[graft] def walk(
+      sw: Columns,
+      spans: Columns,
+      elems: Columns,
+      sids: Long => Boolean,
+      t0: Long,
+      t1: Long): SortedMap[Long, (Seq[SummaryWindow], Seq[LandmarkDigest])] = {
+    val ws = StreamTable.Windows.rows(sw, sids, t0, t1).groupBy(_.streamId)
+    val ls = LandmarkDigest.fold(StreamTable.Spans.rows(spans, sids, t0, t1),
+      StreamTable.Elems.rows(elems, sids, t0, t1), t0, t1).groupBy(_.streamId)
+    SortedMap.from((ws.keySet ++ ls.keySet).iterator.map(sid =>
+      sid -> (ws.getOrElse(sid, Nil).sortBy(_.ts), ls.getOrElse(sid, Nil).sortBy(_.ts))))
   }
 
   /** Estimate `op` over [t0, t1] for every stream, over the row-layout
@@ -89,10 +145,24 @@ object QueryEngine {
       op: String,
       t0: Long,
       t1: Long,
-      params: QueryParams): DataFrame = {
+      params: QueryParams): DataFrame =
+    rangeQueryAll(sw, spans, elems, op, t0, t1, params, TinyParquet.TinyBytes)
+
+  /** [[rangeQueryAll]] with the byte guard of its driver path explicit
+    * (0 forces the Spark path).
+    */
+  private[graft] def rangeQueryAll(
+      sw: Dataset[SummaryWindow],
+      spans: Dataset[LandmarkSpan],
+      elems: Dataset[LandmarkElem],
+      op: String,
+      t0: Long,
+      t1: Long,
+      params: QueryParams,
+      tinyBytes: Long): DataFrame = {
     val spark = sw.sparkSession
     import spark.implicits._
-    perStream(sw, spans, elems, t0, t1) { (sid, s, l) =>
+    perStream(sw, spans, elems, t0, t1, tinyBytes) { (sid, s, l) =>
       val r = SumEstimator.queryDigest(op, t0, t1, s, l, params)
       (sid, r.value, r.error)
     }.toDF("stream_id", "estimate", "ci_width")
@@ -102,6 +172,8 @@ object QueryEngine {
     * cogroup walks each stream's windows once and emits every requested
     * estimate — (stream_id, estimates[i] for ops[i]). Used by the
     * approximate query rewrite so count+sum cost one shuffle, not two.
+    * Always a lazy Spark plan: the rewrite builds it inside an optimizer
+    * rule, which must not read files.
     */
   def rangeQueryMultiAll(
       sw: Dataset[SummaryWindow],
@@ -114,7 +186,7 @@ object QueryEngine {
     val spark = sw.sparkSession
     import spark.implicits._
     val opList = ops.toList
-    perStream(sw, spans, elems, t0, t1) { (sid, s, l) =>
+    perStream(sw, spans, elems, t0, t1, tinyBytes = 0L) { (sid, s, l) =>
       // count_hi rides along: the hard count upper bound from the
       // same window walk lets callers drop provably-empty streams
       // (exact count <= count_hi < 1 means the exact query would
@@ -137,10 +209,23 @@ object QueryEngine {
       elems: Dataset[LandmarkElem],
       op: String,
       t0: Long,
-      t1: Long): DataFrame = {
+      t1: Long): DataFrame =
+    rangeBoundsAll(sw, spans, elems, op, t0, t1, TinyParquet.TinyBytes)
+
+  /** [[rangeBoundsAll]] with the byte guard of its driver path explicit
+    * (0 forces the Spark path).
+    */
+  private[graft] def rangeBoundsAll(
+      sw: Dataset[SummaryWindow],
+      spans: Dataset[LandmarkSpan],
+      elems: Dataset[LandmarkElem],
+      op: String,
+      t0: Long,
+      t1: Long,
+      tinyBytes: Long): DataFrame = {
     val spark = sw.sparkSession
     import spark.implicits._
-    perStream(sw, spans, elems, t0, t1) { (sid, s, l) =>
+    perStream(sw, spans, elems, t0, t1, tinyBytes) { (sid, s, l) =>
       val b = SumEstimator.boundsQueryDigest(op, t0, t1, s, l)
       (sid, b.lower, b.upper)
     }.toDF("stream_id", "bound_lo", "bound_hi")

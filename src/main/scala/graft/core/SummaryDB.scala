@@ -6,14 +6,11 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.plans.SummaryRewrite
 import graft.sources.{TinyParquet, WriterLock}
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
 import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{LongType, StructType}
 import org.apache.spark.unsafe.hash.Murmur3_x86_32
-import scala.jdk.CollectionConverters._
 
 /** The persistent multi-stream store: catalog + events + summary +
   * landmark tables under one directory — the Spark-native analogue of
@@ -41,11 +38,16 @@ import scala.jdk.CollectionConverters._
   *
   * Small work runs on the driver, with no Spark job, whenever what it
   * reads holds at most [[TinyParquet.TinyBytes]]: [[open]]'s catalog
-  * read, a point query's bucket read, and the append of a local batch
-  * (a local relation) to a store without landmark intervals, whose
-  * WAL file and touched `summary_windows` buckets are built and written
-  * there ([[appendOnDriver]]). Both append paths share the bucket
-  * bookkeeping ([[bucketPlan]]) and the manifest publish ([[publish]]).
+  * read, a point query's bucket read, a fleet query
+  * ([[QueryEngine.rangeQueryAll]]) over [[summaryWindows]],
+  * [[landmarkSpans]] and [[landmarkElems]] (bare scans of the current
+  * versions), and the append of a local batch (a local relation) to a
+  * store without landmark intervals, whose WAL file and touched
+  * `summary_windows` buckets are built and written there
+  * ([[appendOnDriver]]). The three stream tables are read there by one
+  * column-wise reader ([[TinyParquet.columns]], typed by
+  * [[StreamTable]]). Both append paths share the bucket bookkeeping
+  * ([[bucketPlan]]) and the manifest publish ([[publish]]).
   *
   * Landmark elements are rows keyed by (streamId, windowId), never one
   * array per window: a landmark left open across a billion-event
@@ -417,8 +419,9 @@ final class SummaryDB private (
   }
 
   /** Idempotent append keyed by a streaming micro-batch id. A batch id
-    * with a commit marker is skipped entirely (checkpoint REPLAY of
-    * committed batches is a no-op). If the batch's events directory
+    * with a commit marker, or absorbed into a compact WAL segment (whose
+    * compaction deletes the marker), is skipped entirely (checkpoint
+    * REPLAY of committed batches is a no-op). If the batch's events directory
     * exists without a marker — a crash landed between the data write
     * and the marker — the events are overwritten (same data, same tag)
     * and the summaries are recomputed from the WAL, which de-duplicates
@@ -428,9 +431,8 @@ final class SummaryDB private (
       batchId: Long,
       events: Dataset[Event],
       landmarkIntervals: Seq[(Long, Long)] = Nil): Unit = withWriteLock {
-    val marker = new Path(p("commits"), s"batch-$batchId")
-    if (fs.exists(marker)) return
     val tag = s"batch-$batchId"
+    if (fs.exists(new Path(p("commits"), tag)) || replacedTags()(tag)) return
     val partialReplay = fs.exists(new Path(p("events"), tag))
     // appendTagged writes the commit marker itself (same path) once the
     // summaries reflect the batch.
@@ -531,7 +533,7 @@ final class SummaryDB private (
     * with no Spark job: `counts` are its per-stream element counts,
     * `plan` the table's [[bucketPlan]] for them, and `landmarkFrontier`
     * the streams' frontier in the landmark tables. The touched buckets
-    * are read once ([[windowRows]]): their rows give the streams'
+    * are read once ([[columns]]): their rows give the streams'
     * frontier (max `te`) and base counts (max `ce` + 1), and are the rows
     * rewritten. The batch is clamped
     * ([[Ingest.clamp]] over the (streamId, ts, arrival) order of
@@ -546,7 +548,7 @@ final class SummaryDB private (
     */
   private def appendOnDriver(tagDir: String, bstamp: Long, rows: Seq[Event], counts: Map[Long, Long],
       plan: BucketPlan, landmarkFrontier: Seq[(Long, Long)]): Unit = {
-    val old = windowRows(plan.oldFiles)
+    val old = StreamTable.Windows.rows(columns(plan.oldFiles, StreamTable.Windows.schema))
     val sids = counts.keySet
     val frontier = (landmarkFrontier ++ old.collect {
       case w if sids(w.streamId) && w.te != OpenT1 => w.streamId -> w.te
@@ -586,16 +588,15 @@ final class SummaryDB private (
   private val WalSchema = Encoders.product[Event].schema.add("bstamp", LongType, nullable = false)
   private val WindowSchema = Encoders.product[SummaryWindow].schema
 
-  /** The summary windows of `files` that pass `filter`, read on the
-    * driver: the one typed reader of the point query and the driver-side
-    * append.
+  /** The `schema` columns of the stream-table `files`, decoded on the
+    * driver ([[TinyParquet.columns]]): the one reader of the point
+    * query, the driver-side append and [[streamMaxima]]. The store
+    * writes every such column as INT64 or DOUBLE, so any other type is
+    * a damaged file.
     */
-  private def windowRows(files: Seq[BucketManifest.File],
-      filter: FilterCompat.Filter = FilterCompat.NOOP): Seq[SummaryWindow] =
-    TinyParquet.fileRows(spark.sparkContext.hadoopConfiguration, files.map(f => new Path(p(f.path))), filter)
-      .map(g => SummaryWindow(g.getLong("streamId", 0), g.getLong("ts", 0), g.getLong("te", 0),
-        g.getLong("cs", 0), g.getLong("ce", 0), g.getDouble("count", 0), g.getDouble("sum", 0),
-        g.getDouble("max", 0), g.getDouble("min", 0)))
+  private def columns(files: Seq[BucketManifest.File], schema: StructType): TinyParquet.Columns =
+    TinyParquet.columns(spark.sparkContext.hadoopConfiguration, files.map(f => new Path(p(f.path))), schema)
+      .fold(e => throw new IllegalStateException(e), identity)
 
   /** Where the frontier — the newest stored timestamp per stream — is
     * read: summary windows and landmark spans by `te` (the span te IS
@@ -633,14 +634,9 @@ final class SummaryDB private (
       tinyBytes: Long): Map[Long, Long] =
     if (sids.isEmpty || files.isEmpty) Map.empty
     else if (files.map(_.bytes).sum <= tinyBytes) {
-      val sid = FilterApi.longColumn("streamId")
-      TinyParquet.fileRows(spark.sparkContext.hadoopConfiguration, files.map(f => new Path(p(f.path))),
-          FilterCompat.get(FilterApi.and(FilterApi.in(sid, sids.map(java.lang.Long.valueOf).asJava),
-            FilterApi.notEq(FilterApi.longColumn(column), java.lang.Long.valueOf(OpenT1)))),
-          Seq("streamId", column))
-        .map(g => g.getLong("streamId", 0) -> g.getLong(column, 0))
-        .filter(r => sids(r._1) && r._2 != OpenT1)
-        .groupMapReduce(_._1)(_._2)(math.max)
+      val c = columns(files, new StructType().add("streamId", LongType).add(column, LongType))
+      val (sid, v) = (c.long("streamId"), c.long(column))
+      (0 until c.size).filter(i => sids(sid(i)) && v(i) != OpenT1).groupMapReduce(sid)(v)(math.max)
     } else spark.read.schema(s"streamId BIGINT, $column BIGINT").parquet(files.map(f => p(f.path)): _*)
       .filter($"streamId".isin(sids.toSeq: _*) && col(column) =!= OpenT1)
       .groupBy($"streamId").agg(max(col(column)))
@@ -1125,22 +1121,11 @@ final class SummaryDB private (
     tables match {
       case Seq(Right(sw), Right(spans), Right(elems))
           if (sw ++ spans ++ elems).map(_.bytes).sum <= tinyBytes =>
-        val Seq(sid, ts, te) = Seq("streamId", "ts", "te").map(FilterApi.longColumn)
-        // this stream's rows with lo >= t0 and ts <= t1
-        def inRange(lo: Operators.LongColumn) = FilterCompat.get(FilterApi.and(
-          FilterApi.eq(sid, java.lang.Long.valueOf(streamId)),
-          FilterApi.and(FilterApi.gtEq(lo, java.lang.Long.valueOf(t0)),
-            FilterApi.ltEq(ts, java.lang.Long.valueOf(t1)))))
-        def rows(files: Seq[BucketManifest.File], lo: Operators.LongColumn) = TinyParquet.fileRows(
-          spark.sparkContext.hadoopConfiguration, files.map(f => new Path(p(f.path))), inRange(lo))
-        val s = windowRows(sw, inRange(te))
-        val l = LandmarkDigest.fold(
-          rows(spans, te).map(g => LandmarkSpan(g.getLong("streamId", 0),
-            g.getLong("windowId", 0), g.getLong("ts", 0), g.getLong("te", 0))),
-          rows(elems, ts).map(g => LandmarkElem(g.getLong("streamId", 0),
-            g.getLong("windowId", 0), g.getLong("ts", 0), g.getDouble("value", 0))),
-          t0, t1)
-        SumEstimator.queryDigest(op, t0, t1, s.sortBy(_.ts), l.sortBy(_.ts), params)
+        val (s, l) = QueryEngine.walk(columns(sw, StreamTable.Windows.schema),
+            columns(spans, StreamTable.Spans.schema), columns(elems, StreamTable.Elems.schema),
+            _ == streamId, t0, t1)
+          .getOrElse(streamId, (Nil, Nil))
+        SumEstimator.queryDigest(op, t0, t1, s, l, params)
       case Seq(sw, spans, elems) =>
         def paths(t: Either[Seq[BucketManifest.File], Seq[BucketManifest.File]]) = t.merge.map(f => p(f.path))
         QueryEngine.queryOne(readFiles[SummaryWindow](paths(sw)), readFiles[LandmarkSpan](paths(spans)),

@@ -2,29 +2,38 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.Group
-import org.apache.parquet.filter2.compat.FilterCompat
-import org.apache.parquet.hadoop.{ParquetReader, ParquetWriter}
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport, WriteSupport}
+import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader, ParquetWriter}
+import org.apache.parquet.hadoop.api.{ReadSupport, WriteSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.{InputFile, OutputFile}
 import org.apache.parquet.io.api.{Binary, RecordConsumer}
-import org.apache.parquet.schema.MessageType
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.parquet.schema.{MessageType, Type}
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types._
+import scala.collection.mutable.ArrayBuilder
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
 
 /** Driver-side reads and writes of TINY parquet tables (index metadata,
-  * takedown sets, k-row center tables, a small append's stream buckets)
+  * takedown sets, k-row center tables, the stream buckets of a point
+  * query or a small append, the stream tables of a tiny fleet query)
   * via parquet-hadoop directly — NO Spark job. A Spark read of a one-row table costs a full plan + schedule +
   * task round trip (~100 ms of fixed latency per read on the serving
   * path); the direct read is small-file IO at any corpus size. Callers
   * must only point this at tables that are small BY CONSTRUCTION
   * (one-row-per-mutation deltas that compaction collapses, k-row center
-  * tables) or guard with [[dataBytes]] and fall back to a Spark read —
+  * tables) or guard with [[dataBytes]] or [[input]] and fall back to a Spark read —
   * on an object store this is O(files) GETs with no task parallelism.
   *
   * File order is the lexicographic file-name sort (deterministic across
@@ -33,10 +42,11 @@ import scala.reflect.ClassTag
 private[graft] object TinyParquet {
 
   /** Data bytes under which a guarded table is read driver-side: the
-    * takedown sets of `ops.Tombstones`, and the stream buckets (point
+    * takedown sets of `ops.Tombstones`, the stream buckets (point
     * queries; the buckets a local batch's append reads and rewrites on
     * the driver), declared landmark intervals and stream catalog of
-    * [[graft.core.SummaryDB]].
+    * [[graft.core.SummaryDB]], and the three stream tables of a fleet
+    * query ([[graft.core.QueryEngine]]).
     */
   val TinyBytes: Long = 8L << 20
 
@@ -61,21 +71,10 @@ private[graft] object TinyParquet {
   def rows(conf: Configuration, dirStr: String): Seq[Group] =
     fileRows(conf, dataFiles(conf, dirStr).map(_.getPath))
 
-  /** The rows of `files`, in the given order, that pass `filter`: row
-    * groups and pages whose statistics rule the predicate out are not
-    * read, and failing records are never assembled. A non-empty
-    * `columns` reads only those top-level columns (the filter's among
-    * them), so wide sketch columns are never decoded.
-    */
-  def fileRows(conf: Configuration, files: Seq[Path],
-      filter: FilterCompat.Filter = FilterCompat.NOOP,
-      columns: Seq[String] = Nil): Seq[Group] =
+  /** The rows of `files`, in the given order. */
+  def fileRows(conf: Configuration, files: Seq[Path]): Seq[Group] =
     files.flatMap { f =>
-      val reader = new GroupReader(HadoopInputFile.fromPath(f, conf),
-          if (columns.isEmpty) new GroupReadSupport() else new Projected(columns.toSet))
-        .withFilter(filter)
-        .useRecordFilter()
-        .build()
+      val reader = new GroupReader(HadoopInputFile.fromPath(f, conf)).build()
       try Iterator.continually(reader.read()).takeWhile(_ != null).toVector
       finally reader.close()
     }
@@ -84,19 +83,113 @@ private[graft] object TinyParquet {
     * builds a fresh Hadoop `Configuration` per file, which re-parses the
     * default resources (about as long as reading a small bucket file).
     */
-  private final class GroupReader(file: InputFile, support: ReadSupport[Group])
-      extends ParquetReader.Builder[Group](file) {
-    override protected def getReadSupport(): ReadSupport[Group] = support
+  private final class GroupReader(file: InputFile) extends ParquetReader.Builder[Group](file) {
+    override protected def getReadSupport(): ReadSupport[Group] = new GroupReadSupport()
   }
 
-  /** Group reads of the file schema's `columns` only, in file order. */
-  private final class Projected(columns: Set[String]) extends GroupReadSupport {
-    override def init(context: InitContext): ReadSupport.ReadContext = {
-      val file = context.getFileSchema
-      new ReadSupport.ReadContext(
-        new MessageType(file.getName, file.getFields.asScala.filter(f => columns(f.getName)).asJava))
-    }
+  /** The columns of a flat table decoded into primitive arrays, each
+    * `size` long: `long` for a `LongType` field of the schema read,
+    * `double` for a `DoubleType` one.
+    */
+  final class Columns private[TinyParquet] (val size: Int, cols: Map[String, AnyRef]) {
+    def long(name: String): Array[Long] = cols(name).asInstanceOf[Array[Long]]
+    def double(name: String): Array[Double] = cols(name).asInstanceOf[Array[Double]]
   }
+
+  /** The `schema` columns (long or double) of the flat parquet `files`,
+    * in file order, decoded column by column: no record is assembled
+    * and only those columns are read. Left when a file lacks a column or
+    * stores it as another physical type than INT64 or DOUBLE (a Spark
+    * read of `schema` may still convert it); a null throws, naming the
+    * file and the column, since every such column is non-null.
+    */
+  def columns(conf: Configuration, files: Seq[Path], schema: StructType): Either[String, Columns] = {
+    // one options object: opening a file without it builds a Configuration
+    val options = HadoopReadOptions.builder(conf).build()
+    val out = schema.fields.map(f => f.name -> (if (f.dataType == LongType) new ArrayBuilder.ofLong
+      else new ArrayBuilder.ofDouble))
+    var size = 0
+    files.foldLeft[Either[String, Unit]](Right(())) { (done, f) =>
+      done.flatMap { _ =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf), options)
+        try {
+          val file = reader.getFileMetaData.getSchema
+          val typeOf = file.getFields.asScala.map(t => t.getName -> t).toMap
+          schema.fields.find { c =>
+            val physical = if (c.dataType == LongType) PrimitiveTypeName.INT64 else PrimitiveTypeName.DOUBLE
+            !typeOf.get(c.name).exists(t => t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
+              t.asPrimitiveType.getPrimitiveTypeName == physical)
+          }.map(c => s"$f: column ${c.name} is not a flat ${c.dataType.simpleString}").toLeft {
+            val projection = new MessageType(file.getName, schema.fields.map(c => typeOf(c.name)).toList.asJava)
+            reader.setRequestedSchema(projection)
+            Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).foreach { pages =>
+              size += pages.getRowCount.toInt
+              // the store asks for converters; values are read off its column readers instead
+              val store = new ColumnReadStoreImpl(pages, new GroupRecordConverter(projection).getRootConverter,
+                projection, reader.getFileMetaData.getCreatedBy)
+              out.foreach { case (name, values) =>
+                val column = store.getColumnReader(projection.getColumnDescription(Array(name)))
+                val defined = column.getDescriptor.getMaxDefinitionLevel
+                def decode(add: => Unit): Unit = {
+                  var row = 0L
+                  while (row < pages.getRowCount) {
+                    if (column.getCurrentDefinitionLevel < defined)
+                      throw new IllegalStateException(s"$f: null in non-null column $name")
+                    add
+                    column.consume()
+                    row += 1
+                  }
+                }
+                (values: @unchecked) match {
+                  case l: ArrayBuilder.ofLong => decode(l += column.getLong)
+                  case d: ArrayBuilder.ofDouble => decode(d += column.getDouble)
+                }
+              }
+            }
+          }
+        } finally reader.close()
+      }
+    }.map(_ => new Columns(size, out.map { case (name, values) => name -> values.result().asInstanceOf[AnyRef] }.toMap))
+  }
+
+  /** A Dataset the driver can read without Spark, holding `bytes`: its
+    * [[columns]] by `read`.
+    */
+  final class Input private[TinyParquet] (val bytes: Long, val read: StructType => Either[String, Columns])
+
+  /** `ds` as an [[Input]] when its plan is a bare scan of unpartitioned
+    * parquet files (the files and bytes its listing already holds: no
+    * IO) or a local relation (sized by its statistics); None for any
+    * other plan — a filter, a join — and for a cached Dataset, whose plan
+    * is its cache. A column the plan lacks or types otherwise reads as
+    * Left.
+    */
+  def input(ds: Dataset[_]): Option[Input] = ds.queryExecution.withCachedData match {
+    case l: LogicalRelation => l.relation match {
+      case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] &&
+          h.partitionSchema.isEmpty && h.bucketSpec.isEmpty =>
+        val files = h.location.inputFiles.toSeq.map(new Path(_))
+        Some(new Input(h.location.sizeInBytes, schema => lacking(l.output, schema, nonNull = false).toLeft(())
+          .flatMap(_ => columns(ds.sparkSession.sparkContext.hadoopConfiguration, files, schema))))
+      case _ => None
+    }
+    case l: LocalRelation =>
+      Some(new Input(l.computeStats().sizeInBytes.toLong, schema => lacking(l.output, schema, nonNull = true).toLeft {
+        new Columns(l.data.size, schema.fields.map { c =>
+          val i = l.output.indexWhere(_.name == c.name)
+          c.name -> (if (c.dataType == LongType) l.data.map(_.getLong(i)).toArray
+            else l.data.map(_.getDouble(i)).toArray)
+        }.toMap)
+      }))
+    case _ => None
+  }
+
+  /** The first column of `schema` that `output` lacks or holds with
+    * another type — or nullable, when `nonNull` — as Left's message.
+    */
+  private def lacking(output: Seq[Attribute], schema: StructType, nonNull: Boolean): Option[String] =
+    schema.fields.find(c => !output.exists(a => a.name == c.name && a.dataType == c.dataType && !(nonNull && a.nullable)))
+      .map(c => s"the plan has no such ${c.dataType.simpleString} column: ${c.name}")
 
   /** Write ONE flat row as a parquet data file under `dirStr` —
     * driver-side, no Spark job. The metadata tables this serves (index

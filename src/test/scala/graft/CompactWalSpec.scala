@@ -90,6 +90,18 @@ class CompactWalSpec extends SparkSpec {
     assert(eventDirs(dir).count(_.startsWith("compact-")) == 1)
   }
 
+  test("a replayed batch that a compaction absorbed is not applied again") {
+    val dir = tmp("graft_cw5")
+    val db = SummaryDB.open(spark, dir)
+    db.appendOnce(0L, batch(0L, 10L, sid = 1L))
+    db.appendOnce(1L, batch(10L, 20L, sid = 1L))
+    db.compactWal() // deletes batch-0's commit marker
+    db.appendOnce(0L, batch(0L, 10L, sid = 1L)) // a checkpoint replay
+    val c = db.query(1L, "count", 0L, 1000L, QueryParams())
+    assert(c.value == 20.0 && c.error == 0.0, s"20 input rows, counted $c")
+    assert(db.rawEvents.count() == 20L)
+  }
+
   test("single-segment store: compactWal is a no-op") {
     val dir = tmp("graft_cw4")
     val db = SummaryDB.open(spark, dir)
