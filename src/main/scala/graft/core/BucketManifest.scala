@@ -1,6 +1,5 @@
 package graft.core
 
-import graft.sources.TinyParquet
 import java.nio.charset.StandardCharsets.UTF_8
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -8,19 +7,23 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * the data files that hold it and its merge cadence. A version
   * directory holds only the files of the buckets its write touched; the
   * manifest points the other buckets at files in older versions, so an
-  * append that touches k buckets writes k files, not the table.
-  *
-  * `hashed` is false only for a table written before stream tables were
-  * bucketed: all its files sit in one pseudo-bucket and no stream can be
-  * read by bucket.
+  * append that touches k buckets writes k files, not the table. The
+  * manifest is what completes a version: readers resolve no other
+  * layout. The files it names for a read are decoded on the driver
+  * while they are tiny ([[graft.sources.TinyParquet.onDriver]], which
+  * specs switch to Spark with `TinyParquet.forcingSpark`), else read by
+  * Spark.
   */
-private[graft] final case class BucketManifest(hashed: Boolean, buckets: Vector[BucketManifest.Bucket]) {
+private[graft] final case class BucketManifest(buckets: Vector[BucketManifest.Bucket]) {
   import BucketManifest._
 
   def files: Seq[File] = buckets.flatMap(_.files)
 
-  /** The bucket index of `streamId` (meaningful when `hashed`). */
+  /** The bucket index of `streamId`. */
   def bucketOf(streamId: Long): Int = SummaryDB.bucketOf(streamId, buckets.size)
+
+  /** The files of the buckets that hold `sids`, in bucket order. */
+  def filesOf(sids: Set[Long]): Seq[File] = sids.map(bucketOf).toSeq.sorted.flatMap(buckets(_).files)
 
   /** Write the manifest into `version` atomically: a temp file, then a
     * rename, so a reader sees the whole manifest or none.
@@ -58,41 +61,48 @@ private[graft] object BucketManifest {
   final case class Bucket(files: Seq[File], sinceMerge: Int = 0, pending: Set[Long] = Set.empty)
 
   /** The manifest of the complete `version` of a stream table. A version
-    * written before manifests existed is listed instead: bucketed by the
-    * count in its `_buckets` marker, else one unhashed pseudo-bucket.
+    * with no manifest was written before manifests existed (its Spark
+    * write left `_SUCCESS`): it throws, naming the version, rather than
+    * read as empty.
     */
   def read(fs: FileSystem, version: Path): BucketManifest = {
     val manifest = new Path(version, Name)
-    if (fs.exists(manifest)) parse(text(fs, manifest))
-    else {
-      val files = TinyParquet.dataFiles(fs.getConf, version.toString)
-        .map(f => File(s"${version.getName}/${f.getPath.getName}", f.getLen))
-      val marker = new Path(version, SummaryDB.BucketsMarker)
-      if (!fs.exists(marker)) BucketManifest(hashed = false, Vector(Bucket(files)))
-      else {
-        val byBucket = files.groupBy(f => f.path.split('/').last.stripPrefix("part-").take(5).toInt)
-        BucketManifest(hashed = true,
-          Vector.tabulate(text(fs, marker).trim.toInt)(b => Bucket(byBucket.getOrElse(b, Nil))))
-      }
+    val in = try fs.open(manifest) catch {
+      case _: java.io.FileNotFoundException => throw new IllegalStateException(
+        s"$version has no $Name: a stream-table version written before manifests, a layout no longer read")
     }
+    parse(manifest, try new String(in.readAllBytes(), UTF_8) finally in.close())
   }
 
-  private def text(fs: FileSystem, path: Path): String = {
-    val in = fs.open(path)
-    try new String(in.readAllBytes(), UTF_8) finally in.close()
-  }
-
-  private def parse(text: String): BucketManifest = {
-    val lines = text.split('\n').filter(_.nonEmpty)
-    val n = lines.head.stripPrefix("buckets\t").toInt
+  /** The manifest `text` of [[render]]'s form, read from `manifest`: a
+    * line out of bucket order, with a field too few or too many, or with
+    * a count or size that is not a number throws, naming the file and
+    * the line.
+    */
+  private def parse(manifest: Path, text: String): BucketManifest = {
+    val lines = text.split('\n')
+    def fail(i: Int, why: String): Nothing = throw new IllegalStateException(
+      s"malformed manifest $manifest, line ${i + 1} '${lines.lift(i).getOrElse("")}': $why")
+    def number[T](i: Int, s: String)(of: String => T): T =
+      try of(s) catch { case _: NumberFormatException => fail(i, s"'$s' is not a number") }
     def list(s: String) = s.split(',').toSeq.filter(_.nonEmpty)
-    val buckets = lines.tail.map(_.split("\t", -1)).map { case Array(_, since, pending, files) =>
-      Bucket(list(files).map { f =>
-        val at = f.lastIndexOf(':')
-        File(f.take(at), f.drop(at + 1).toLong)
-      }, since.toInt, list(pending).map(_.toLong).toSet)
-    }.toVector
-    require(buckets.size == n, s"manifest lists ${buckets.size} of $n buckets")
-    BucketManifest(hashed = true, buckets)
+    val n = lines.head.split('\t') match {
+      case Array("buckets", count) => number(0, count)(_.toInt)
+      case _ => fail(0, "not a bucket count")
+    }
+    if (lines.length != n + 1) fail(lines.length - 1, s"lists ${lines.length - 1} of $n buckets")
+    BucketManifest(Vector.tabulate(n) { b =>
+      val i = b + 1
+      lines(i).split("\t", -1) match {
+        case Array(index, since, pending, files) =>
+          if (number(i, index)(_.toInt) != b) fail(i, s"bucket $b expected")
+          Bucket(list(files).map { f =>
+            val at = f.lastIndexOf(':')
+            if (at < 1) fail(i, s"file '$f' has no size")
+            File(f.take(at), number(i, f.drop(at + 1))(_.toLong))
+          }, number(i, since)(_.toInt), list(pending).map(number(i, _)(_.toLong)).toSet)
+        case fields => fail(i, s"${fields.length} fields, not 4")
+      }
+    })
   }
 }

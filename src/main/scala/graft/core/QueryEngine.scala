@@ -17,8 +17,8 @@ import scala.collection.immutable.SortedMap
   * `/root/reference/storage/query_index.go:48-74` +
   * `/root/reference/core/stream_window_manager.go:78-93`), and the
   * estimator runs once per stream over its windows in ts order. Tiny
-  * inputs (bare scans of the stream tables or local relations holding
-  * at most [[TinyParquet.TinyBytes]] together, [[TinyParquet.input]])
+  * inputs (bare scans of the stream tables or local relations,
+  * [[TinyParquet.input]], tiny together by [[TinyParquet.onDriver]])
   * are decoded and walked on the driver, with no Spark job, and the
   * answer is a local relation. Any other input is walked inside
   * `cogroup` on executors — every stream in parallel, O(log N) window
@@ -69,44 +69,51 @@ object QueryEngine {
     * both sides of each stream in time order, then `f` per stream with
     * any overlapping summary or landmark window. On the driver, rows
     * sorted by stream, when the inputs are tiny ([[onDriver]]); else by
-    * `cogroup` on stream.
+    * [[cogroupWalk]].
     */
   private def perStream[T: Encoder](
       sw: Dataset[SummaryWindow],
       spans: Dataset[LandmarkSpan],
       elems: Dataset[LandmarkElem],
       t0: Long,
-      t1: Long,
-      tinyBytes: Long)(f: (Long, Seq[SummaryWindow], Seq[LandmarkDigest]) => T): Dataset[T] = {
+      t1: Long)(f: (Long, Seq[SummaryWindow], Seq[LandmarkDigest]) => T): Dataset[T] =
+    onDriver(sw, spans, elems) match {
+      case Some((w, s, e)) =>
+        sw.sparkSession.createDataset(walk(w, s, e, _ => true, t0, t1).map { case (sid, (s, l)) => f(sid, s, l) }.toSeq)
+      case None => cogroupWalk(sw, spans, elems, t0, t1)(f)
+    }
+
+  /** [[perStream]]'s Spark side: `cogroup` on stream, a lazy plan that
+    * reads no file until it runs.
+    */
+  private def cogroupWalk[T: Encoder](
+      sw: Dataset[SummaryWindow],
+      spans: Dataset[LandmarkSpan],
+      elems: Dataset[LandmarkElem],
+      t0: Long,
+      t1: Long)(f: (Long, Seq[SummaryWindow], Seq[LandmarkDigest]) => T): Dataset[T] = {
     val spark = sw.sparkSession
     import spark.implicits._
-    onDriver(sw, spans, elems, tinyBytes) match {
-      case Some((w, s, e)) =>
-        spark.createDataset(walk(w, s, e, _ => true, t0, t1).map { case (sid, (s, l)) => f(sid, s, l) }.toSeq)
-      case None =>
-        sw.filter($"te" >= t0 && $"ts" <= t1)
-          .groupByKey(_.streamId)
-          .cogroup(landmarkDigests(spans, elems, t0, t1).groupByKey(_.streamId)) { (sid, sws, lds) =>
-            val s = sws.toArray.sortBy(_.ts).toSeq
-            val l = lds.toArray.sortBy(_.ts).toSeq
-            if (s.isEmpty && l.isEmpty) Iterator.empty else Iterator(f(sid, s, l))
-          }
-    }
+    sw.filter($"te" >= t0 && $"ts" <= t1)
+      .groupByKey(_.streamId)
+      .cogroup(landmarkDigests(spans, elems, t0, t1).groupByKey(_.streamId)) { (sid, sws, lds) =>
+        val s = sws.toArray.sortBy(_.ts).toSeq
+        val l = lds.toArray.sortBy(_.ts).toSeq
+        if (s.isEmpty && l.isEmpty) Iterator.empty else Iterator(f(sid, s, l))
+      }
   }
 
   /** The decoded columns of the three inputs, when each is a
-    * [[TinyParquet.input]] and together they hold at most `tinyBytes`
-    * (0 forces Spark without looking at them); None otherwise, and when
-    * one lacks a column or stores it as a type Spark would convert.
+    * [[TinyParquet.input]] and together they are tiny
+    * ([[TinyParquet.onDriver]]); None otherwise, and when one lacks a
+    * column or stores it as a type Spark would convert.
     */
   private def onDriver(
       sw: Dataset[SummaryWindow],
       spans: Dataset[LandmarkSpan],
-      elems: Dataset[LandmarkElem],
-      tinyBytes: Long): Option[(Columns, Columns, Columns)] =
-    if (tinyBytes <= 0) None
-    else Seq(sw, spans, elems).flatMap(TinyParquet.input) match {
-      case Seq(w, s, e) if w.bytes + s.bytes + e.bytes <= tinyBytes =>
+      elems: Dataset[LandmarkElem]): Option[(Columns, Columns, Columns)] =
+    Seq(sw, spans, elems).flatMap(TinyParquet.input) match {
+      case Seq(w, s, e) if TinyParquet.onDriver(w.bytes + s.bytes + e.bytes) =>
         (for {
           ws <- w.read(StreamTable.Windows.schema)
           ss <- s.read(StreamTable.Spans.schema)
@@ -145,24 +152,10 @@ object QueryEngine {
       op: String,
       t0: Long,
       t1: Long,
-      params: QueryParams): DataFrame =
-    rangeQueryAll(sw, spans, elems, op, t0, t1, params, TinyParquet.TinyBytes)
-
-  /** [[rangeQueryAll]] with the byte guard of its driver path explicit
-    * (0 forces the Spark path).
-    */
-  private[graft] def rangeQueryAll(
-      sw: Dataset[SummaryWindow],
-      spans: Dataset[LandmarkSpan],
-      elems: Dataset[LandmarkElem],
-      op: String,
-      t0: Long,
-      t1: Long,
-      params: QueryParams,
-      tinyBytes: Long): DataFrame = {
+      params: QueryParams): DataFrame = {
     val spark = sw.sparkSession
     import spark.implicits._
-    perStream(sw, spans, elems, t0, t1, tinyBytes) { (sid, s, l) =>
+    perStream(sw, spans, elems, t0, t1) { (sid, s, l) =>
       val r = SumEstimator.queryDigest(op, t0, t1, s, l, params)
       (sid, r.value, r.error)
     }.toDF("stream_id", "estimate", "ci_width")
@@ -186,7 +179,7 @@ object QueryEngine {
     val spark = sw.sparkSession
     import spark.implicits._
     val opList = ops.toList
-    perStream(sw, spans, elems, t0, t1, tinyBytes = 0L) { (sid, s, l) =>
+    cogroupWalk(sw, spans, elems, t0, t1) { (sid, s, l) =>
       // count_hi rides along: the hard count upper bound from the
       // same window walk lets callers drop provably-empty streams
       // (exact count <= count_hi < 1 means the exact query would
@@ -209,23 +202,10 @@ object QueryEngine {
       elems: Dataset[LandmarkElem],
       op: String,
       t0: Long,
-      t1: Long): DataFrame =
-    rangeBoundsAll(sw, spans, elems, op, t0, t1, TinyParquet.TinyBytes)
-
-  /** [[rangeBoundsAll]] with the byte guard of its driver path explicit
-    * (0 forces the Spark path).
-    */
-  private[graft] def rangeBoundsAll(
-      sw: Dataset[SummaryWindow],
-      spans: Dataset[LandmarkSpan],
-      elems: Dataset[LandmarkElem],
-      op: String,
-      t0: Long,
-      t1: Long,
-      tinyBytes: Long): DataFrame = {
+      t1: Long): DataFrame = {
     val spark = sw.sparkSession
     import spark.implicits._
-    perStream(sw, spans, elems, t0, t1, tinyBytes) { (sid, s, l) =>
+    perStream(sw, spans, elems, t0, t1) { (sid, s, l) =>
       val b = SumEstimator.boundsQueryDigest(op, t0, t1, s, l)
       (sid, b.lower, b.upper)
     }.toDF("stream_id", "bound_lo", "bound_hi")

@@ -37,8 +37,8 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * ([[writeStreamTable]]). [[query]] reads one bucket.
   *
   * Small work runs on the driver, with no Spark job, whenever what it
-  * reads holds at most [[TinyParquet.TinyBytes]]: [[open]]'s catalog
-  * read, a point query's bucket read, a fleet query
+  * reads is tiny by the one guard [[TinyParquet.onDriver]]: [[open]]'s
+  * catalog read, a point query's bucket read, a fleet query
   * ([[QueryEngine.rangeQueryAll]]) over [[summaryWindows]],
   * [[landmarkSpans]] and [[landmarkElems]] (bare scans of the current
   * versions), and the append of a local batch (a local relation) to a
@@ -63,10 +63,9 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * `_SUCCESS`), a catalog table's once Spark's `_SUCCESS` marker lands.
   * A crash at any point leaves a complete older or newer table, never a
   * partial one. After a successful write, whatever neither the newest
-  * version nor its predecessor references is pruned best-effort.
-  * Tables written before manifests (a `_SUCCESS` version, bucketed by a
-  * `_buckets` marker or not at all) stay readable, and their next write
-  * migrates them.
+  * version nor its predecessor references is pruned best-effort. A
+  * stream-table version with `_SUCCESS` but no manifest was written
+  * before manifests existed: resolving it throws, naming it.
   */
 final class SummaryDB private (
     val spark: SparkSession,
@@ -92,8 +91,9 @@ final class SummaryDB private (
     * holds `dir/_writer.lock` for the CALL's duration: acquired by
     * [[WriterLock.acquire]]'s atomic create-if-absent, token-checked on
     * release, reentrant within the instance. A second concurrent writer fails loudly
-    * instead of racing. Readers never take the lock — the `_SUCCESS`
-    * resolution already guarantees they see only complete versions.
+    * instead of racing. Readers never take the lock — they resolve only
+    * complete versions (a stream table's manifest, a catalog table's
+    * `_SUCCESS`).
     *
     * Scoped (per call, not per instance) so sequential writers — the
     * normal reopen-after-restart flow, including streaming checkpoint
@@ -137,7 +137,8 @@ final class SummaryDB private (
 
   /** Newest complete version directory of `name`, if any: one with a
     * published manifest (a stream table) or Spark's `_SUCCESS` (a
-    * catalog table, or a stream table written before manifests).
+    * catalog table; on a stream table it marks a version written before
+    * manifests, which [[BucketManifest.read]] refuses).
     */
   private def currentVersion(name: String): Option[Path] = complete(name).headOption
 
@@ -248,15 +249,15 @@ final class SummaryDB private (
   // --------------------------------------------------------------- catalog
 
   /** The rows of the current version of the catalog table `name`: read
-    * on the driver by `of` (0 jobs) when its files hold at most
-    * [[TinyParquet.TinyBytes]], else by a Spark collect.
+    * on the driver by `of` (0 jobs) while its files are tiny
+    * ([[TinyParquet.onDriver]]), else by a Spark collect.
     */
   private def catalogRows[T: Encoder](name: String)(of: Group => T): Seq[T] =
     currentVersion(name).fold(Seq.empty[T]) { v =>
       val conf = spark.sparkContext.hadoopConfiguration
       val files = TinyParquet.dataFiles(conf, v.toString)
-      if (files.map(_.getLen).sum > TinyParquet.TinyBytes) readFiles[T](Seq(v.toString)).collect().toSeq
-      else TinyParquet.fileRows(conf, files.map(_.getPath)).map(of)
+      if (TinyParquet.onDriver(files.map(_.getLen).sum)) TinyParquet.fileRows(conf, files.map(_.getPath)).map(of)
+      else readFiles[T](Seq(v.toString)).collect().toSeq
     }
 
   private var metas: Map[Long, StreamMeta] = catalogRows[StreamMeta]("stream_meta") { g =>
@@ -394,28 +395,18 @@ final class SummaryDB private (
     * rewritten ([[appendTo]]).
     *
     * A batch that is a local relation (built from a driver-side
-    * collection) whose streams' `summary_windows` buckets hold at most
-    * [[TinyParquet.TinyBytes]] is appended on the driver, with no Spark
+    * collection) whose streams' `summary_windows` buckets are tiny
+    * ([[TinyParquet.onDriver]]) is appended on the driver, with no Spark
     * job: its clamp, WAL file, fine windows, re-coarsening and bucket
     * files ([[appendOnDriver]]). Enabled summary kinds still absorb it
     * by Spark from the WAL. Any other batch, a store with landmark
-    * intervals, a crash replay and a table written before manifests
-    * take the Spark path.
+    * intervals and a crash replay take the Spark path.
     */
   def append(
       events: Dataset[Event],
-      landmarkIntervals: Seq[(Long, Long)] = Nil): Unit =
-    append(events, landmarkIntervals, TinyParquet.TinyBytes)
-
-  /** [[append]] with the byte guard of its driver reads explicit (0
-    * forces their Spark fallback).
-    */
-  private[graft] def append(
-      events: Dataset[Event],
-      landmarkIntervals: Seq[(Long, Long)],
-      tinyBytes: Long): Unit = withWriteLock {
+      landmarkIntervals: Seq[(Long, Long)] = Nil): Unit = withWriteLock {
     val bstamp = nextBatchStamp()
-    appendTagged(f"adhoc-$bstamp%09d", bstamp, events, landmarkIntervals, forceRecompute = false, tinyBytes)
+    appendTagged(f"adhoc-$bstamp%09d", bstamp, events, landmarkIntervals, forceRecompute = false)
   }
 
   /** Idempotent append keyed by a streaming micro-batch id. A batch id
@@ -437,7 +428,7 @@ final class SummaryDB private (
     // appendTagged writes the commit marker itself (same path) once the
     // summaries reflect the batch.
     appendTagged(tag, nextBatchStamp(), events, landmarkIntervals,
-      forceRecompute = partialReplay, TinyParquet.TinyBytes)
+      forceRecompute = partialReplay)
   }
 
   private def nextBatchStamp(): Long = {
@@ -460,8 +451,7 @@ final class SummaryDB private (
       bstamp: Long,
       batch: Dataset[Event],
       newIntervals: Seq[(Long, Long)],
-      forceRecompute: Boolean,
-      tinyBytes: Long): Unit = {
+      forceRecompute: Boolean): Unit = {
     val stored = {
       val old = storedIntervals
       if (newIntervals.isEmpty) old else (old ++ newIntervals.map(iv => (-1L, iv._1, iv._2))).distinct
@@ -481,13 +471,12 @@ final class SummaryDB private (
     val counts = batchCounts(batch, local, needed = mergeEvery > 1 || tables.values.exists(_.nonEmpty))
     val sids = counts.fold(Set.empty[Long])(_.keySet)
     def frontier(columns: Seq[(String, String)]): Seq[(Long, Long)] = columns.flatMap { case (name, c) =>
-      tables(name).toSeq.flatMap(m => streamMaxima(bucketsOf(m, sids), sids, c, tinyBytes))
+      tables(name).toSeq.flatMap(m => streamMaxima(m.filesOf(sids), sids, c))
     }
-    // tinyBytes 0 forces the Spark path
     val onDriver = for {
       rows <- local if !recompute
       plan = bucketPlan(tables("summary_windows"), sids)
-      if !plan.migrates && tinyBytes > 0 && plan.oldFiles.map(_.bytes).sum <= tinyBytes
+      if TinyParquet.onDriver(plan.oldFiles.map(_.bytes).sum)
     } yield (rows, plan)
 
     val tagDir = s"${p("events")}/$tag"
@@ -517,7 +506,7 @@ final class SummaryDB private (
     // (and KLL sketch weights would double) — rebuild from the WAL
     // instead, like the scalar refreshSummaries path.
     incremental.filterNot(kind => onDriver.nonEmpty && kind == Summarizer.Kind)
-      .foreach(kind => appendTo(kind, prepared, tables(kind.table), counts, tinyBytes))
+      .foreach(kind => appendTo(kind, prepared, tables(kind.table), counts))
     if (forceRecompute) enabled.values.foreach(rebuild(_, includeUncommittedTag = Some(tag)))
     // The summaries now reflect this batch: commit it. A crash before
     // this line leaves an unmarked events/<tag> dir that readEvents
@@ -618,22 +607,15 @@ final class SummaryDB private (
     local.map(_.groupMapReduce(_.streamId)(_ => 1L)(_ + _)).orElse(
       if (needed) Some(batch.groupBy($"streamId").count().as[(Long, Long)].collect().toMap) else None)
 
-  /** The files of `m`'s buckets that hold `sids` (every file of an
-    * unhashed version).
-    */
-  private def bucketsOf(m: BucketManifest, sids: Set[Long]): Seq[BucketManifest.File] =
-    if (m.hashed) sids.map(m.bucketOf).toSeq.sorted.flatMap(m.buckets(_).files) else m.files
-
   /** Per-stream maximum of the long `column` over the rows of `sids` in
     * `files`, skipping the open-landmark sentinel OpenT1. Read on the
-    * driver (0 jobs, only the two columns decoded) when the files hold
-    * at most `tinyBytes`, else by one Spark aggregate over the same
-    * files.
+    * driver (0 jobs, only the two columns decoded) while the files are
+    * tiny ([[TinyParquet.onDriver]]), else by one Spark aggregate over
+    * the same files.
     */
-  private def streamMaxima(files: Seq[BucketManifest.File], sids: Set[Long], column: String,
-      tinyBytes: Long): Map[Long, Long] =
+  private def streamMaxima(files: Seq[BucketManifest.File], sids: Set[Long], column: String): Map[Long, Long] =
     if (sids.isEmpty || files.isEmpty) Map.empty
-    else if (files.map(_.bytes).sum <= tinyBytes) {
+    else if (TinyParquet.onDriver(files.map(_.bytes).sum)) {
       val c = columns(files, new StructType().add("streamId", LongType).add(column, LongType))
       val (sid, v) = (c.long("streamId"), c.long(column))
       (0 until c.size).filter(i => sids(sid(i)) && v(i) != OpenT1).groupMapReduce(sid)(v)(math.max)
@@ -660,14 +642,14 @@ final class SummaryDB private (
     * load) rewrite every bucket, counts found in the rewrite itself.
     */
   private def appendTo(kind: SummaryKind, prepared: Dataset[Event], stored: Option[BucketManifest],
-      counts: Option[Map[Long, Long]], tinyBytes: Long): Unit = counts match {
+      counts: Option[Map[Long, Long]]): Unit = counts match {
     case None =>
       writeStreamTable(kind.table, Compactor.recoarsen(
         kind.appendDelta(prepared, Seq.empty[(Long, Long)].toDF("streamId", "n"), specOf),
         specOf, kind.mergeAggs, 0L))
     case Some(batch) if batch.nonEmpty =>
       val plan = bucketPlan(stored, batch.keySet)
-      val base = streamMaxima(plan.oldFiles, batch.keySet ++ plan.merging, "ce", tinyBytes)
+      val base = streamMaxima(plan.oldFiles, batch.keySet ++ plan.merging, "ce")
         .view.mapValues(_ + 1L).toMap
       val all = readTable(kind, plan.oldFiles.map(f => p(f.path)))
         .unionByName(kind.appendDelta(prepared, base.toSeq.toDF("streamId", "n"), specOf))
@@ -681,23 +663,19 @@ final class SummaryDB private (
   /** What appending the streams `sids` does to the buckets of a stream
     * table whose current version is `stored` — the bookkeeping both
     * append paths share. The buckets of `sids` are rewritten, each
-    * advancing its merge cadence; the rest are carried by reference. A
-    * version written before manifests is migrated: all its rows are
-    * rewritten into the current buckets.
+    * advancing its merge cadence; the rest are carried by reference.
     */
   private def bucketPlan(stored: Option[BucketManifest], sids: Set[Long]): BucketPlan = {
     def bucketOf(sid: Long) = SummaryDB.bucketOf(sid, SummaryDB.Buckets)
-    val layout = stored.filter(m => m.hashed && m.buckets.size == SummaryDB.Buckets)
-    val bucket = (b: Int) => layout.fold(BucketManifest.Bucket(Nil))(_.buckets(b))
-    val migrates = stored.nonEmpty && layout.isEmpty
+    stored.foreach(m => require(m.buckets.size == SummaryDB.Buckets,
+      s"a stream table of ${m.buckets.size} buckets, not ${SummaryDB.Buckets}"))
+    val bucket = (b: Int) => stored.fold(BucketManifest.Bucket(Nil))(_.buckets(b))
     val touched = sids.map(bucketOf)
     val due = touched.filter(bucket(_).sinceMerge + 1 >= mergeEvery)
     BucketPlan(
-      migrates,
       merging = sids.filter(s => due(bucketOf(s))) ++ due.flatMap(bucket(_).pending),
-      oldFiles = layout.fold(stored.toSeq.flatMap(_.files))(m => touched.toSeq.sorted.flatMap(m.buckets(_).files)),
-      carried = if (migrates) Map.empty
-        else (0 until SummaryDB.Buckets).filterNot(touched).map(b => b -> bucket(b)).toMap,
+      oldFiles = touched.toSeq.sorted.flatMap(bucket(_).files),
+      carried = (0 until SummaryDB.Buckets).filterNot(touched).map(b => b -> bucket(b)).toMap,
       cadence = (touched -- due).map(b => b ->
         ((bucket(b).sinceMerge + 1, bucket(b).pending ++ sids.filter(bucketOf(_) == b)))).toMap)
   }
@@ -1087,49 +1065,32 @@ final class SummaryDB private (
     * op is an error, as in the reference's OpSet lookup
     * (`/root/reference/core/op_set.go:14-18`). Undeclared streams (data
     * ingested without a catalog entry) answer all ops.
+    *
+    * Reads the stream's bucket files of the three tables, named by their
+    * manifests: decoded and walked on the driver while they are tiny
+    * ([[TinyParquet.onDriver]]), with no Spark job; else by
+    * [[QueryEngine.queryOne]] over the same files. Both paths hand the
+    * estimator the same windows and digests in ts order.
     */
   def query(
       streamId: Long,
       op: String,
       t0: Long,
       t1: Long,
-      params: QueryParams = QueryParams()): AggResult =
-    query(streamId, op, t0, t1, params, TinyParquet.TinyBytes)
-
-  /** [[query]] with the driver read's byte guard explicit (0 forces the
-    * Spark path). The stream's bucket files of the three tables, named by
-    * their manifests, read on the driver when every version is hashed and
-    * they hold at most `tinyBytes` together: 0 Spark jobs. Otherwise
-    * [[QueryEngine.queryOne]] over the same files (every file of an
-    * unhashed version). Both paths hand the estimator the same windows
-    * and digests in ts order.
-    */
-  private[graft] def query(
-      streamId: Long,
-      op: String,
-      t0: Long,
-      t1: Long,
-      params: QueryParams,
-      tinyBytes: Long): AggResult = {
+      params: QueryParams = QueryParams()): AggResult = {
     requireDeclared(streamId, op)
-    // Right(the stream's bucket) of a hashed version, Left(every file)
-    val tables = Seq("summary_windows", "landmark_spans", "landmark_elems").map { name =>
-      streamTable(name).fold[Either[Seq[BucketManifest.File], Seq[BucketManifest.File]]](Right(Nil)) { m =>
-        if (m.hashed) Right(m.buckets(m.bucketOf(streamId)).files) else Left(m.files)
-      }
-    }
-    tables match {
-      case Seq(Right(sw), Right(spans), Right(elems))
-          if (sw ++ spans ++ elems).map(_.bytes).sum <= tinyBytes =>
-        val (s, l) = QueryEngine.walk(columns(sw, StreamTable.Windows.schema),
-            columns(spans, StreamTable.Spans.schema), columns(elems, StreamTable.Elems.schema),
-            _ == streamId, t0, t1)
-          .getOrElse(streamId, (Nil, Nil))
-        SumEstimator.queryDigest(op, t0, t1, s, l, params)
-      case Seq(sw, spans, elems) =>
-        def paths(t: Either[Seq[BucketManifest.File], Seq[BucketManifest.File]]) = t.merge.map(f => p(f.path))
-        QueryEngine.queryOne(readFiles[SummaryWindow](paths(sw)), readFiles[LandmarkSpan](paths(spans)),
-          readFiles[LandmarkElem](paths(elems)), streamId, op, t0, t1, params)
+    val Seq(sw, spans, elems) = Seq("summary_windows", "landmark_spans", "landmark_elems")
+      .map(streamTable(_).fold(Seq.empty[BucketManifest.File])(_.filesOf(Set(streamId))))
+    if (TinyParquet.onDriver((sw ++ spans ++ elems).map(_.bytes).sum)) {
+      val (s, l) = QueryEngine.walk(columns(sw, StreamTable.Windows.schema),
+          columns(spans, StreamTable.Spans.schema), columns(elems, StreamTable.Elems.schema),
+          _ == streamId, t0, t1)
+        .getOrElse(streamId, (Nil, Nil))
+      SumEstimator.queryDigest(op, t0, t1, s, l, params)
+    } else {
+      def paths(files: Seq[BucketManifest.File]) = files.map(f => p(f.path))
+      QueryEngine.queryOne(readFiles[SummaryWindow](paths(sw)), readFiles[LandmarkSpan](paths(spans)),
+        readFiles[LandmarkElem](paths(elems)), streamId, op, t0, t1, params)
     }
   }
 }
@@ -1140,8 +1101,7 @@ object SummaryDB {
   private[graft] val Buckets = 16
 
   /** What an append does to a stream table's buckets ([[SummaryDB]]'s
-    * `bucketPlan`): `migrates` when the current version was written
-    * before manifests; `merging` are the streams that re-coarsen now
+    * `bucketPlan`): `merging` are the streams that re-coarsen now
     * (the batch's in buckets on their `mergeEvery`-th append since their
     * last merge, and those earlier appends left unmerged there);
     * `oldFiles` hold the rows the new version rewrites; `carried`
@@ -1150,7 +1110,6 @@ object SummaryDB {
     * does not merge now.
     */
   private[core] final case class BucketPlan(
-      migrates: Boolean,
       merging: Set[Long],
       oldFiles: Seq[BucketManifest.File],
       carried: Map[Int, BucketManifest.Bucket],
@@ -1158,7 +1117,7 @@ object SummaryDB {
 
     /** The manifest of the version whose rewritten buckets hold `written`. */
     def manifest(written: Map[Int, Seq[BucketManifest.File]]): BucketManifest =
-      BucketManifest(hashed = true, Vector.tabulate(Buckets) { b =>
+      BucketManifest(Vector.tabulate(Buckets) { b =>
         carried.getOrElse(b, {
           val (since, pending) = cadence.getOrElse(b, (0, Set.empty[Long]))
           BucketManifest.Bucket(written.getOrElse(b, Nil), since, pending)
@@ -1168,11 +1127,8 @@ object SummaryDB {
 
   private[core] object BucketPlan {
     /** A full rewrite: every bucket rewritten, none left unmerged. */
-    val Full: BucketPlan = BucketPlan(migrates = false, Set.empty, Nil, Map.empty, Map.empty)
+    val Full: BucketPlan = BucketPlan(Set.empty, Nil, Map.empty, Map.empty)
   }
-
-  /** The marker of a version written before manifests: its bucket count. */
-  private[graft] val BucketsMarker = "_buckets"
 
   /** The bucket of `streamId` among `n`: the partition id Spark's
     * `HashPartitioning` gives one long key (Murmur3, seed 42,

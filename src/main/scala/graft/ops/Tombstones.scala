@@ -36,18 +36,19 @@ private[graft] final class Tombstones(
       new Path(spark.sessionState.catalog.getTableMetadata(
         spark.sessionState.sqlParser.parseTableIdentifier(t)).location).toString)
 
-  /** The distinct key rows, if any. Takedown-sized: under `tinyBytes`
-    * of data the set reads DRIVER-SIDE into a LocalRelation — no
-    * read, distinct or broadcast-guard-count job on the probe path;
-    * past it, the Spark read of the same files.
+  /** The distinct key rows, if any. Takedown-sized: while the set is
+    * tiny ([[TinyParquet.onDriver]]) it reads DRIVER-SIDE into a
+    * LocalRelation — no read, distinct or broadcast-guard-count job on
+    * the probe path; past it, the Spark read of the same files.
     */
-  def read(tinyBytes: Long = TinyParquet.TinyBytes): Option[DataFrame] = {
+  def read(): Option[DataFrame] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val bytes = TinyParquet.dataBytes(conf, location)
+    val files = TinyParquet.dataFiles(conf, location)
+    val bytes = files.map(_.getLen).sum
     val names = keys.fieldNames.toSeq
     if (bytes == 0L) None
-    else if (bytes <= tinyBytes) {
-      val rows = TinyParquet.rows(conf, location).iterator
+    else if (TinyParquet.onDriver(bytes)) {
+      val rows = TinyParquet.fileRows(conf, files.map(_.getPath)).iterator
         .filter(g => names.forall(n => g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0))
         .map(g => Row.fromSeq(keys.fields.toSeq.map(f => f.dataType match {
           case LongType => g.getLong(f.name, 0)

@@ -24,31 +24,47 @@ import org.apache.spark.sql.types._
 import scala.collection.mutable.ArrayBuilder
 import scala.jdk.CollectionConverters._
 import scala.reflect.ClassTag
+import scala.util.DynamicVariable
 
 /** Driver-side reads and writes of TINY parquet tables (index metadata,
   * takedown sets, k-row center tables, the stream buckets of a point
   * query or a small append, the stream tables of a tiny fleet query)
-  * via parquet-hadoop directly — NO Spark job. A Spark read of a one-row table costs a full plan + schedule +
-  * task round trip (~100 ms of fixed latency per read on the serving
-  * path); the direct read is small-file IO at any corpus size. Callers
-  * must only point this at tables that are small BY CONSTRUCTION
-  * (one-row-per-mutation deltas that compaction collapses, k-row center
-  * tables) or guard with [[dataBytes]] or [[input]] and fall back to a Spark read —
-  * on an object store this is O(files) GETs with no task parallelism.
+  * via parquet-hadoop directly — NO Spark job. A Spark read of a
+  * one-row table costs a full plan + schedule + task round trip (~100 ms
+  * of fixed latency per read on the serving path); the direct read is
+  * small-file IO at any corpus size. Callers must only point this at
+  * tables that are small BY CONSTRUCTION (one-row-per-mutation deltas
+  * that compaction collapses, k-row center tables) or ask [[onDriver]]
+  * first and fall back to a Spark read of the same files — on an object
+  * store this is O(files) GETs with no task parallelism.
   *
   * File order is the lexicographic file-name sort (deterministic across
   * filesystems, unlike raw listing order).
   */
 private[graft] object TinyParquet {
 
-  /** Data bytes under which a guarded table is read driver-side: the
-    * takedown sets of `ops.Tombstones`, the stream buckets (point
-    * queries; the buckets a local batch's append reads and rewrites on
-    * the driver), declared landmark intervals and stream catalog of
-    * [[graft.core.SummaryDB]], and the three stream tables of a fleet
-    * query ([[graft.core.QueryEngine]]).
+  /** Data bytes under which a guarded read runs on the driver: the
+    * takedown sets of `ops.Tombstones`, the stream catalog and declared
+    * landmark intervals of [[graft.core.SummaryDB]], the stream buckets
+    * of its point queries and of the appends it runs on the driver, and
+    * the three stream tables of a fleet query
+    * ([[graft.core.QueryEngine]]).
     */
   val TinyBytes: Long = 8L << 20
+
+  /** The one guard of every driver-or-Spark read: whether data of
+    * `bytes` is read on the driver — at most [[TinyBytes]], and not
+    * inside [[forcingSpark]].
+    */
+  def onDriver(bytes: Long): Boolean = !sparkOnly.value && bytes <= TinyBytes
+
+  private val sparkOnly = new DynamicVariable(false)
+
+  /** `body` with every guarded read on this thread taking its Spark side,
+    * whatever its size: how a spec checks that both sides of a guard
+    * give the same rows.
+    */
+  private[graft] def forcingSpark[T](body: => T): T = sparkOnly.withValue(true)(body)
 
   /** The table's data files, lexicographically sorted. */
   def dataFiles(conf: Configuration, dirStr: String): Seq[org.apache.hadoop.fs.FileStatus] = {
@@ -60,12 +76,6 @@ private[graft] object TinyParquet {
         !st.getPath.getName.startsWith("."))
       .sortBy(_.getPath.getName)
   }
-
-  /** Total data bytes of the table (0 when absent) — the caller-side
-    * tininess guard.
-    */
-  def dataBytes(conf: Configuration, dirStr: String): Long =
-    dataFiles(conf, dirStr).map(_.getLen).sum
 
   /** Every row of every data file, in lexicographic file order. */
   def rows(conf: Configuration, dirStr: String): Seq[Group] =

@@ -1,6 +1,7 @@
 package graft
 
 import graft.core._
+import graft.sources.TinyParquet
 import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -82,7 +83,7 @@ class BucketAppendSpec extends SparkSpec {
       if (withKinds) Seq(db, forced).foreach(enableAll)
       appends.foreach { b =>
         db.append(b())
-        forced.append(b(), Nil, tinyBytes = 0L)
+        TinyParquet.forcingSpark(forced.append(b()))
       }
       // append 2's late rows (ts 370) follow stream 2's frontier of 390
       assert(db.rawEvents.filter($"streamId" === 2L && $"ts".between(391L, 394L)).count() == 4L,
@@ -113,7 +114,7 @@ class BucketAppendSpec extends SparkSpec {
     Seq(db, forced).foreach(_.append(rows(1L to 40L, 0, 30, 0).toDS()))
     val batch = rows(Seq(4L, 9L, 17L), 30, 10, 2)
     val (_, driver) = SparkCounts.of(spark)(db.append(batch.toDS()))
-    val (_, spark0) = SparkCounts.of(spark)(forced.append(batch.toDS(), Nil, tinyBytes = 0L))
+    val (_, spark0) = SparkCounts.of(spark)(TinyParquet.forcingSpark(forced.append(batch.toDS())))
     assert(driver.jobs == 0L, driver.jobLines)
     // the fallback runs a Spark aggregate for the frontier and one for the counts
     assert(spark0.jobs >= driver.jobs + 2L, s"driver path ${driver.jobs} jobs, fallback ${spark0.jobs}")
@@ -121,7 +122,7 @@ class BucketAppendSpec extends SparkSpec {
     // A batch that is not a local relation takes the Spark path, to the same tables.
     val more = rows(Seq(9L, 23L), 42, 8, 1)
     val (_, distributed) = SparkCounts.of(spark)(db.append(spark.createDataFrame(more).as[Event].repartition(2)))
-    forced.append(more.toDS(), Nil, tinyBytes = 0L)
+    TinyParquet.forcingSpark(forced.append(more.toDS()))
     assert(distributed.jobs > 0L)
     assert(wal(db) == wal(forced))
     assert(exact(db.summaryWindows.toDF()) == exact(forced.summaryWindows.toDF()))
@@ -159,8 +160,8 @@ class BucketAppendSpec extends SparkSpec {
     rows(Seq(2L, 3L, 7L, fresh), 320, 12, 2))
 
   /** Two stores that take the same appends, `db` by the driver guard and
-    * `forced` with it at 0 (the Spark path); `reopenAfter` appends, both
-    * are reopened.
+    * `forced` on the Spark path ([[TinyParquet.forcingSpark]]);
+    * `reopenAfter` appends, both are reopened.
     */
   private def twins(mergeEvery: Int, withKinds: Boolean, reopenAfter: Int): Unit = {
     val dirs = Seq("graft_twin", "graft_twin0").map(Files.createTempDirectory(_).toString)
@@ -174,7 +175,7 @@ class BucketAppendSpec extends SparkSpec {
     localAppends.zipWithIndex.foreach { case (batch, i) =>
       val (_, counts) = SparkCounts.of(spark)(db.append(batch.toDS()))
       if (!withKinds) assert(counts.jobs == 0L, s"append ${i + 1}: ${counts.jobLines}")
-      forced.append(batch.toDS(), Nil, tinyBytes = 0L)
+      TinyParquet.forcingSpark(forced.append(batch.toDS()))
       assert(wal(db) == wal(forced), s"append ${i + 1}")
       tables.foreach(t => assert(layout(dirs(0), t) == layout(dirs(1), t), s"append ${i + 1}: $t"))
       if (i + 1 == reopenAfter) { db = open(dirs(0)); forced = open(dirs(1)) }
@@ -214,11 +215,11 @@ class BucketAppendSpec extends SparkSpec {
     val Seq(mixed, allSpark) = dirs.map(SummaryDB.open(spark, _))
     def nonLocal(b: Seq[Event]) = spark.createDataFrame(b).as[Event].repartition(2)
     val Seq(b1, b2, b3, b4, b5, _) = localAppends
-    mixed.append(b1.toDS()); allSpark.append(b1.toDS(), Nil, tinyBytes = 0L)
-    mixed.append(b2.toDS(), Nil, tinyBytes = 0L); allSpark.append(b2.toDS(), Nil, tinyBytes = 0L)
+    mixed.append(b1.toDS()); TinyParquet.forcingSpark(allSpark.append(b1.toDS()))
+    TinyParquet.forcingSpark { mixed.append(b2.toDS()); allSpark.append(b2.toDS()) }
     mixed.appendOnce(7L, b3.toDS()); allSpark.appendOnce(7L, nonLocal(b3))
     mixed.append(nonLocal(b4)); allSpark.append(nonLocal(b4))
-    mixed.append(b5.toDS()); allSpark.append(b5.toDS(), Nil, tinyBytes = 0L)
+    mixed.append(b5.toDS()); TinyParquet.forcingSpark(allSpark.append(b5.toDS()))
     def sorted(df: DataFrame) = df.collect().map(_.toSeq).sortBy(_.toString).toSeq
     def same(label: String): Unit = {
       assert(mixed.rawEvents.schema == allSpark.rawEvents.schema, label)

@@ -11,8 +11,8 @@ import org.apache.spark.sql.Dataset
   * `SummaryDB.Buckets` hash buckets of `streamId` (Spark's own partition
   * id), each bucket's files sorted by (streamId, ts); `SummaryDB.query`
   * answers from the stream's bucket read on the driver, bit-identical to
-  * the Spark path that a zero byte guard forces. Stores written before
-  * manifests stay readable and migrate on their next write.
+  * the Spark path that `TinyParquet.forcingSpark` forces. A version
+  * written before manifests, and a malformed manifest, fail loudly.
   */
 class BucketedPointQuerySpec extends SparkSpec {
   import spark.implicits._
@@ -49,7 +49,7 @@ class BucketedPointQuerySpec extends SparkSpec {
     versions.foreach { case (table, v) =>
       assert(fs(dir).exists(new Path(v, BucketManifest.Name)), s"$v has no manifest")
       val m = BucketManifest.read(fs(dir), v)
-      assert(m.hashed && m.buckets.size == SummaryDB.Buckets, s"$v covers ${m.buckets.size} buckets")
+      assert(m.buckets.size == SummaryDB.Buckets, s"$v covers ${m.buckets.size} buckets")
       for ((bucket, b) <- m.buckets.zipWithIndex; f <- bucket.files) {
         val file = new Path(s"$dir/${f.path}")
         assert(fs(dir).getFileStatus(file).getLen == f.bytes, s"$table: $file")
@@ -70,21 +70,20 @@ class BucketedPointQuerySpec extends SparkSpec {
   private def bits(r: AggResult): (Long, Long) =
     (java.lang.Double.doubleToRawLongBits(r.value), java.lang.Double.doubleToRawLongBits(r.error))
 
-  /** The default point query answers bit-identically to the one a zero
-    * guard forces onto Spark and to one over the whole tables; the
-    * forced one runs at least `forcedJobs` jobs;
-    * with `zeroJobs` the default one reads on the driver and runs none.
+  /** The default point query answers bit-identically to the one forced
+    * onto Spark and to one over the whole tables; the forced one runs at
+    * least `forcedJobs` jobs, the default one reads on the driver and
+    * runs none.
     */
-  private def assertParity(db: SummaryDB, sid: Long, ranges: Seq[(Long, Long)],
-      zeroJobs: Boolean = true, forcedJobs: Long = 1L): Unit =
+  private def assertParity(db: SummaryDB, sid: Long, ranges: Seq[(Long, Long)], forcedJobs: Long = 1L): Unit =
     for ((t0, t1) <- ranges; op <- ops) {
       val (fast, fc) = SparkCounts.of(spark)(db.query(sid, op, t0, t1, params))
-      val (slow, sc) = SparkCounts.of(spark)(db.query(sid, op, t0, t1, params, tinyBytes = 0L))
+      val (slow, sc) = SparkCounts.of(spark)(TinyParquet.forcingSpark(db.query(sid, op, t0, t1, params)))
       assert(bits(fast) == bits(slow), s"stream $sid $op [$t0, $t1]: $fast vs $slow")
       val whole = QueryEngine.queryOne(db.summaryWindows, db.landmarkSpans, db.landmarkElems,
         sid, op, t0, t1, params)
       assert(bits(whole) == bits(slow), s"stream $sid $op [$t0, $t1]: whole tables $whole vs $slow")
-      if (zeroJobs) assert(fc.jobs == 0L, s"stream $sid $op [$t0, $t1] ran ${fc.jobs} jobs")
+      assert(fc.jobs == 0L, s"stream $sid $op [$t0, $t1] ran ${fc.jobs} jobs")
       assert(sc.jobs >= forcedJobs, s"stream $sid $op [$t0, $t1]: forced run took the driver path")
     }
 
@@ -146,15 +145,6 @@ class BucketedPointQuerySpec extends SparkSpec {
     assert(c.value == raw.toDouble && c.error == 0.0, s"open landmark is exact: $c, $raw rows")
   }
 
-  test("point query parity: an unbucketed (old-layout) version takes the Spark path") {
-    val (dir, db) = storeWithData()
-    db.append(events(sids, 300, 320), landmarkIntervals = Seq((3000L, 3100L)))
-    StoreLayout.toLegacy(spark, dir, bucketed = false)
-    probed.foreach(sid => assertParity(db, sid, ranges :+ ((2990L, 3120L)), zeroJobs = false))
-    val (_, old) = SparkCounts.of(spark)(db.query(1L, "sum", 0L, 3000L, params))
-    assert(old.jobs > 0L, "an unmarked version cannot be read by bucket")
-  }
-
   test("layout: every committed stream-table version is bucketed, sorted and marked") {
     val dir = Files.createTempDirectory("graft_layout").toString
     val db = SummaryDB.open(spark, dir)
@@ -210,36 +200,52 @@ class BucketedPointQuerySpec extends SparkSpec {
     assert(db.query(3L, "count", 0L, 2790L, params).value == 280.0)
   }
 
-  test("migration: a store written before manifests, appended to once, reads as one that never was") {
-    for (bucketed <- Seq(true, false)) {
-      val (dir, db) = storeWithData()
-      val (_, twin) = storeWithData()
-      Seq(db, twin).foreach(_.enableSampleSummaries(k = 8))
-      StoreLayout.toLegacy(spark, dir, bucketed)
-      assert(StoreLayout.manifests(spark, dir, "summary_windows").isEmpty)
-      // Readable as it is: by bucket when it was bucketed, else by Spark.
-      probed.foreach(sid => assertParity(db, sid, ranges, zeroJobs = bucketed))
-      val more = events(sids.take(2), 300, 340)
-      db.append(more)
-      twin.append(more)
-      Seq("summary_windows", SampleSummary.kind(8).table).foreach { t =>
-        val m = StoreLayout.current(spark, dir, t)
-        assert(m.hashed && m.buckets.size == SummaryDB.Buckets, s"$t was not migrated")
-      }
-      def windows(d: SummaryDB) = d.summaryWindows.collect().sortBy(w => (w.streamId, w.cs)).toSeq
-      def samples(d: SummaryDB) = d.sampleWindows
-        .selectExpr("streamId", "cs", "ce", "transform(sample, s -> s.seq) AS seqs")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getAs[scala.collection.Seq[Long]](3).toVector)).sortBy(t => (t._1, t._2)).toSeq
-      assert(windows(db) == windows(twin), s"bucketed=$bucketed")
-      assert(samples(db) == samples(twin), s"bucketed=$bucketed")
-      for (sid <- probed; (t0, t1) <- ranges :+ ((0L, 3400L)); op <- ops)
-        assert(bits(db.query(sid, op, t0, t1, params)) == bits(twin.query(sid, op, t0, t1, params)))
-      probed.foreach(sid => assertParity(db, sid, ranges))
-      // The next write prunes the old-layout version: every version left
-      // is a manifest's.
-      db.append(events(sids.takeRight(2), 300, 320))
-      assertBucketed(dir)
+  test("a stream-table version written before manifests fails loudly; a torn one is skipped") {
+    val (dir, db) = storeWithData()
+    val before = db.rawEvents.count()
+    def stamp() = StoreLayout.versionDirs(spark, dir).map(_._2).max + 1
+    // a torn version (no marker at all) is skipped, as a crashed write
+    db.summaryWindows.write.parquet(s"$dir/summary_windows__v${stamp()}")
+    fs(dir).delete(new Path(StoreLayout.versionDirs(spark, dir).maxBy(_._2)._3, "_SUCCESS"), false)
+    assert(db.query(1L, "count", 0L, 3000L, params).value == 300.0)
+    // Spark's own write of the table: _SUCCESS, no manifest
+    val legacy = new Path(s"$dir/summary_windows__v${stamp()}")
+    db.summaryWindows.write.parquet(legacy.toString)
+    assert(fs(dir).exists(new Path(legacy, "_SUCCESS")))
+    val calls: Seq[(String, () => Any)] = Seq(
+      "query" -> (() => db.query(1L, "count", 0L, 3000L, params)),
+      "append" -> (() => db.append(events(Seq(1L), 300, 310))),
+      "summaryWindows" -> (() => db.summaryWindows))
+    for ((name, call) <- calls) {
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains(legacy.getName), s"$name: ${e.getMessage}")
     }
+    assert(db.rawEvents.count() == before, "the failed append wrote its batch")
+  }
+
+  test("a malformed manifest fails loudly, naming the file and the line") {
+    val (dir, db) = storeWithData()
+    val (version, m) = StoreLayout.manifests(spark, dir, "summary_windows").head
+    val manifest = new Path(version, BucketManifest.Name)
+    val lines = {
+      val in = fs(dir).open(manifest)
+      try new String(in.readAllBytes(), "UTF-8").split('\n').toVector finally in.close()
+    }
+    def rewrite(ls: Seq[String]): Unit = {
+      val out = fs(dir).create(manifest, true)
+      try out.write(ls.mkString("", "\n", "\n").getBytes("UTF-8")) finally out.close()
+    }
+    // the bucket of stream 1 and one whose files differ from it, swapped
+    val b = m.bucketOf(1L)
+    val other = m.buckets.indices.find(i => m.buckets(i).files != m.buckets(b).files).get
+    rewrite(lines.updated(b + 1, lines(other + 1)).updated(other + 1, lines(b + 1)))
+    val swapped = intercept[IllegalStateException](db.query(1L, "count", 0L, 3000L, params))
+    assert(swapped.getMessage.contains(manifest.toString), swapped.getMessage)
+    // a line cut short of its fields
+    rewrite(lines.updated(b + 1, lines(b + 1).split('\t').take(2).mkString("\t")))
+    val truncated = intercept[IllegalStateException](db.query(1L, "count", 0L, 3000L, params))
+    assert(truncated.getMessage.contains(manifest.toString), truncated.getMessage)
+    rewrite(lines)
+    assert(db.query(1L, "count", 0L, 3000L, params).value == 300.0)
   }
 }

@@ -8,8 +8,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
 /** The zero-job fleet query: `rangeQueryAll` and `rangeBoundsAll` over
   * a store's bare table scans are decoded and walked on the driver, and
-  * return the rows and schema of the Spark `cogroup` path that a zero
-  * byte guard forces — over plain and landmarked stores, with integer
+  * return the rows and schema of the Spark `cogroup` path that
+  * `TinyParquet.forcingSpark` forces — over plain and landmarked stores, with integer
   * values so that sums are exact. Other inputs keep the Spark path.
   */
 class FleetQueryParitySpec extends SparkSpec {
@@ -44,27 +44,27 @@ class FleetQueryParitySpec extends SparkSpec {
   private val ranges = Seq((0L, 3000L), (450L, 1210L), (1490L, 1710L), (2990L, 3120L),
     (3050L, 3990L), (3160L, 3170L), (5000L, 6000L), (Long.MinValue, Long.MaxValue))
 
-  /** Schema and rows of `q` at the default guard and at a zero one,
+  /** Schema and rows of `q` at the default guard and forced onto Spark,
     * with the jobs of each.
     */
-  private def bothPaths(q: Long => DataFrame): ((DataFrame, Seq[Row], Long), (DataFrame, Seq[Row], Long)) = {
-    def run(guard: Long) = {
+  private def bothPaths(q: () => DataFrame): ((DataFrame, Seq[Row], Long), (DataFrame, Seq[Row], Long)) = {
+    def run() = {
       val (out, counts) = SparkCounts.of(spark) {
-        val df = q(guard)
+        val df = q()
         (df, df.collect().toSeq)
       }
       (out._1, out._2, counts.jobs)
     }
-    (run(TinyParquet.TinyBytes), run(0L))
+    (run(), TinyParquet.forcingSpark(run()))
   }
 
   private def assertParity(db: SummaryDB): Unit = {
     val (sw, spans, elems) = (db.summaryWindows, db.landmarkSpans, db.landmarkElems)
-    val queries: Seq[(String, Long => DataFrame)] = ranges.flatMap { case (t0, t1) =>
+    val queries: Seq[(String, () => DataFrame)] = ranges.flatMap { case (t0, t1) =>
       Seq("count", "sum", "max").map(op => s"rangeQueryAll $op [$t0, $t1]" ->
-        ((g: Long) => QueryEngine.rangeQueryAll(sw, spans, elems, op, t0, t1, params, g))) ++
+        (() => QueryEngine.rangeQueryAll(sw, spans, elems, op, t0, t1, params))) ++
       Seq("count", "sum").map(op => s"rangeBoundsAll $op [$t0, $t1]" ->
-        ((g: Long) => QueryEngine.rangeBoundsAll(sw, spans, elems, op, t0, t1, g)))
+        (() => QueryEngine.rangeBoundsAll(sw, spans, elems, op, t0, t1)))
     }
     var answered = 0
     for ((name, q) <- queries) {
@@ -94,8 +94,8 @@ class FleetQueryParitySpec extends SparkSpec {
     val db = landmarkedStore()
     val cached = db.summaryWindows.cache()
     for ((name, sw) <- Seq("filtered" -> db.summaryWindows.filter($"streamId" =!= 3L), "cached" -> cached)) {
-      val ((_, rows, jobs), (_, forced, _)) = bothPaths(g =>
-        QueryEngine.rangeQueryAll(sw, db.landmarkSpans, db.landmarkElems, "sum", 0L, 3990L, params, g))
+      val ((_, rows, jobs), (_, forced, _)) = bothPaths(() =>
+        QueryEngine.rangeQueryAll(sw, db.landmarkSpans, db.landmarkElems, "sum", 0L, 3990L, params))
       assert(jobs >= 1L, s"a $name input was read on the driver")
       assert(rows.nonEmpty && rows.sortBy(_.getLong(0)) == forced.sortBy(_.getLong(0)), name)
     }

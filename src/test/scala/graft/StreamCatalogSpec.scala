@@ -1,7 +1,7 @@
 package graft
 
-import graft.core.{StreamMeta, SummaryDB}
-import org.apache.hadoop.fs.Path
+import graft.core.{Event, StreamMeta, SummaryDB}
+import graft.sources.TinyParquet
 import graft.windowing.{ExponentialWindowing, PowerWindowing}
 
 /** Catalog round-trip: a stream declaration (windowing spec + operator
@@ -39,15 +39,22 @@ class StreamCatalogSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft_catalog0").toString
     val db = SummaryDB.open(spark, dir)
     db.newStream(StreamMeta.exponential(0L, 2.0, operators = Seq("count", "max", "sum")))
-    db.newStream(StreamMeta.power(1L, 1, 2, 3, 4, operators = Seq("count")))
-    db.newStream(StreamMeta.exponential(2L, 3.0, operators = Nil))
-    val (reopened, counts) = SparkCounts.of(spark)(SummaryDB.open(spark, dir))
-    assert(counts.jobs == 0L, counts.jobLines)
-    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val version = StoreLayout.versionDirs(spark, dir).filter(_._1 == "stream_meta")
-      .filter(v => fs.exists(new Path(v._3, "_SUCCESS"))).maxBy(_._2)._3
-    val read = spark.read.parquet(version.toString).as[StreamMeta].collect().map(m => m.streamId -> m).toMap
-    assert(read.size == 3)
-    assert(reopened.streams == read)
+    db.newStream(StreamMeta.power(1L, 1, 2, 3, 4, operators = Nil))
+    db.append((0 until 40).map(i => Event(i % 2L, i.toLong, i * 10L, i.toDouble)).toDS(),
+      landmarkIntervals = Seq((100L, 150L)))
+    db.newLandmark(0L, 200L, 250L)
+    db.startLandmark(1L, 300L)
+    def catalog(store: => SummaryDB) = {
+      val d = store
+      (d.streams, d.landmarkIntervals, d.streamLandmarks)
+    }
+    val (driver, dc) = SparkCounts.of(spark)(catalog(SummaryDB.open(spark, dir)))
+    val (forced, fc) = SparkCounts.of(spark)(TinyParquet.forcingSpark(catalog(SummaryDB.open(spark, dir))))
+    assert(dc.jobs == 0L, dc.jobLines)
+    assert(fc.jobs >= 1L, "the forced reopen read its catalog on the driver")
+    assert(driver._1.size == 2 && driver._1(1L).operators.isEmpty)
+    assert(driver._2 == Seq((100L, 150L)))
+    assert(driver._3 == Map(0L -> Seq((200L, 250L)), 1L -> Seq((300L, Long.MaxValue))))
+    assert(forced == driver)
   }
 }

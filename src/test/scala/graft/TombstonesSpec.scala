@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{DedupIndex, Tombstones}
+import graft.sources.TinyParquet
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
@@ -31,7 +32,7 @@ class TombstonesSpec extends SparkSpec {
       new Tombstones(spark, ids, Tombstones.longKey("doc_id")))
     sets.foreach { t =>
       val tiny = t.read().get
-      val big = t.read(tinyBytes = 0L).get
+      val big = TinyParquet.forcingSpark(t.read()).get
       assert(tiny.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
       assert(!big.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
       assert(rowsOf(tiny) == rowsOf(big))
