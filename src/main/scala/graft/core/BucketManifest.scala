@@ -12,7 +12,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * layout. The files it names for a read are decoded on the driver
   * while they are tiny ([[graft.sources.TinyParquet.onDriver]], which
   * specs switch to Spark with `TinyParquet.forcingSpark`), else read by
-  * Spark.
+  * Spark. Each file's `bytes` is its length, which with its path keys
+  * its decoded columns ([[graft.sources.TinyParquet.columns]]); a
+  * published manifest never changes, so a reader parses it once per
+  * version.
   */
 private[graft] final case class BucketManifest(buckets: Vector[BucketManifest.Bucket]) {
   import BucketManifest._

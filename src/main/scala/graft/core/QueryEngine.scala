@@ -242,25 +242,6 @@ object QueryEngine {
       .select($"stream_id", $"cnt", round($"sum_raw", 2).as("sum_value"))
   }
 
-  /** Exact aggregates over landmark ELEMENT rows restricted to [t0, t1]:
-    * (stream_id, cnt, sum_value). Landmark elements are stored verbatim,
-    * so this is error-free by construction
-    * (`/root/reference/core/sum_estimator.go:82-86`) — and with the row
-    * layout it is one pushed-down filter + groupBy, no explode.
-    */
-  def landmarkExactAll(
-      elems: Dataset[LandmarkElem],
-      t0: Long,
-      t1: Long): DataFrame = {
-    val spark = elems.sparkSession
-    import spark.implicits._
-    elems.filter($"ts" >= t0 && $"ts" <= t1)
-      .groupBy($"streamId".as("stream_id"))
-      .agg(
-        count(lit(1)).as("cnt"),
-        sum($"value").as("sum_value"))
-  }
-
   /** Driver-side single-stream query — the reference's public API shape
     * (`Stream.Query(op, t0, t1, params)`) over the row-layout landmark
     * tables. Collects the O(log N) overlapping summary windows and the

@@ -46,7 +46,12 @@ import org.apache.spark.unsafe.hash.Murmur3_x86_32
   * `summary_windows` buckets are built and written there
   * ([[appendOnDriver]]). The three stream tables are read there by one
   * column-wise reader ([[TinyParquet.columns]], typed by
-  * [[StreamTable]]). Both append paths share the bucket bookkeeping
+  * [[StreamTable]]), which decodes each file once per process: the
+  * driver-side append hands it the bucket files it writes, and a publish
+  * or prune drops the files it replaces or deletes. Each call resolves a
+  * stream table by one listing of its versions; the manifest and Dataset
+  * of a version this instance has resolved before are reused
+  * ([[resolve]]). Both append paths share the bucket bookkeeping
   * ([[bucketPlan]]) and the manifest publish ([[publish]]).
   *
   * Landmark elements are rows keyed by (streamId, windowId), never one
@@ -77,8 +82,9 @@ final class SummaryDB private (
 
   private def p(name: String) = s"$dir/$name"
 
-  private def fs: FileSystem =
-    new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private def fs: FileSystem = new Path(dir).getFileSystem(conf)
+
+  private def conf = spark.sparkContext.hadoopConfiguration
 
   // ------------------------------------------------------------ write lock
 
@@ -166,19 +172,58 @@ final class SummaryDB private (
     }
   }
 
-  /** The current version of the stream table `name`, if any. */
-  private def streamTable(name: String): Option[BucketManifest] =
-    currentVersion(name).map(BucketManifest.read(fs, _))
-
-  /** The paths that read the stream table `name`'s current version: its
-    * directory when its own write holds every file the manifest lists
-    * (a full rewrite: Spark lists one directory several times faster
-    * than it checks 16 files), else those files.
+  /** A complete version of a stream table as this instance resolved it:
+    * its directory, its manifest and, once asked for, its Dataset. A
+    * complete version never changes, so each is read once.
     */
-  private def tableFiles(name: String): Seq[String] = currentVersion(name).toSeq.flatMap { v =>
-    val files = BucketManifest.read(fs, v).files.map(_.path)
-    if (files.nonEmpty && files.forall(_.startsWith(s"${v.getName}/"))) Seq(v.toString) else files.map(p)
+  private final class Resolved(val version: Path, val manifest: BucketManifest) {
+    /** The paths that read it: its directory when its own write holds
+      * every file the manifest lists (a full rewrite: Spark lists one
+      * directory several times faster than it checks 16 files), else
+      * those files.
+      */
+    val paths: Seq[String] = {
+      val files = manifest.files.map(_.path)
+      if (files.nonEmpty && files.forall(_.startsWith(s"${version.getName}/"))) Seq(version.toString)
+      else files.map(p)
+    }
+
+    private var read: Dataset[_] = _
+
+    /** Its rows, as a Dataset of its table's type `T` built once. */
+    def rows[T: Encoder]: Dataset[T] = synchronized {
+      if (read == null) read = readFiles[T](paths)
+      read.asInstanceOf[Dataset[T]]
+    }
   }
+
+  /** The version of each stream table this instance resolved last. */
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
+
+  /** The current version of the stream table `name`, if any. Every call
+    * lists the versions once ([[currentVersion]]), so another writer's
+    * version is seen at once; the manifest and Dataset of a version this
+    * instance already resolved are reused.
+    */
+  private def resolve(name: String): Option[Resolved] = currentVersion(name).map { v =>
+    Option(resolved.get(name)).filter(_.version == v).getOrElse {
+      val r = new Resolved(v, BucketManifest.read(fs, v))
+      resolved.put(name, r)
+      r
+    }
+  }
+
+  /** The manifest of the stream table `name`'s current version, if any. */
+  private def streamTable(name: String): Option[BucketManifest] = resolve(name).map(_.manifest)
+
+  /** The paths that read the stream table `name`'s current version. */
+  private def tableFiles(name: String): Seq[String] = resolve(name).toSeq.flatMap(_.paths)
+
+  /** The rows of the stream table `name`'s current version (empty when
+    * there is none), a Dataset of its type `T`.
+    */
+  private def currentRows[T: Encoder](name: String): Dataset[T] =
+    resolve(name).fold(spark.emptyDataset[T])(_.rows[T])
 
   /** Write a new version of the stream table `name`: the buckets `plan`
     * rewrites hold `df`'s rows (so `df` holds rows of those buckets only)
@@ -197,7 +242,7 @@ final class SummaryDB private (
       .write.mode(SaveMode.Overwrite)
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .parquet(version.toString)
-    val (written, stray) = TinyParquet.dataFiles(spark.sparkContext.hadoopConfiguration, version.toString)
+    val (written, stray) = TinyParquet.dataFiles(conf, version.toString)
       .groupBy(_.getPath.getName.stripPrefix("part-").take(5).toInt).partition(f => !plan.carried.contains(f._1))
     // Spark's task 0 always writes a file: an empty one when bucket 0 is carried
     stray.values.flatten.foreach(f => fs.delete(f.getPath, false))
@@ -210,10 +255,13 @@ final class SummaryDB private (
     * buckets `plan` carries by reference, the others holding their
     * `written` files at the plan's merge cadence — then [[prune]]. The
     * one publish of the Spark write above and the driver-side append.
+    * The decoded columns of the files the plan replaced are dropped
+    * ([[TinyParquet.forget]]).
     */
   private def publish(name: String, version: Path, plan: BucketPlan,
       written: Map[Int, Seq[BucketManifest.File]]): Unit = {
     plan.manifest(written).publish(fs, version)
+    TinyParquet.forget(conf, plan.oldFiles.map(f => new Path(p(f.path))))
     prune(name)
   }
 
@@ -226,14 +274,19 @@ final class SummaryDB private (
     * not yanked mid-query. Every other version directory, torn ones
     * included, loses each file neither kept manifest lists (its markers
     * too, so it is never resolved again), and goes once none is left.
+    * A deleted file's decoded columns are dropped ([[TinyParquet.forget]]).
     */
   private def prune(name: String): Unit = {
-    val kept = complete(name).take(2)
-    val referenced = kept.flatMap(v => BucketManifest.read(fs, v).files.map(_.path)).toSet
+    val kept = complete(name).take(2).toList
+    // the predecessor is most often the version this instance resolved
+    val referenced = kept.flatMap { v =>
+      Option(resolved.get(name)).filter(_.version == v).fold(BucketManifest.read(fs, v))(_.manifest).files.map(_.path)
+    }.toSet
     versions(name).map(_._2).filterNot(kept.contains).foreach { v =>
       try {
         val (live, dead) = fs.listStatus(v).toSeq.filterNot(_.getPath.getName.startsWith("."))
           .partition(f => referenced(s"${v.getName}/${f.getPath.getName}"))
+        TinyParquet.forget(conf, dead.map(_.getPath))
         if (live.isEmpty) fs.delete(v, true) else dead.foreach(f => fs.delete(f.getPath, true))
       } catch { case _: Throwable => () } // retried by the next write
     }
@@ -254,7 +307,6 @@ final class SummaryDB private (
     */
   private def catalogRows[T: Encoder](name: String)(of: Group => T): Seq[T] =
     currentVersion(name).fold(Seq.empty[T]) { v =>
-      val conf = spark.sparkContext.hadoopConfiguration
       val files = TinyParquet.dataFiles(conf, v.toString)
       if (TinyParquet.onDriver(files.map(_.getLen).sum)) TinyParquet.fileRows(conf, files.map(_.getPath)).map(of)
       else readFiles[T](Seq(v.toString)).collect().toSeq
@@ -567,8 +619,10 @@ final class SummaryDB private (
     val written = (kept ++ merged).groupBy(w => SummaryDB.bucketOf(w.streamId, SummaryDB.Buckets)).map {
       case (b, ws) =>
         val file = new Path(version, partName(b))
-        b -> Seq(BucketManifest.File(s"${version.getName}/${file.getName}", TinyParquet.writeRows(spark, file,
-          WindowSchema, ws.sortBy(w => (w.streamId, w.ts, w.cs)).iterator.map(Row.fromTuple))))
+        val rows = ws.sortBy(w => (w.streamId, w.ts, w.cs)).map(Row.fromTuple)
+        val bytes = TinyParquet.writeRows(spark, file, WindowSchema, rows.iterator)
+        TinyParquet.fill(conf, file, bytes, WindowSchema, rows)
+        b -> Seq(BucketManifest.File(s"${version.getName}/${file.getName}", bytes))
     }
     publish("summary_windows", version, plan, written)
   }
@@ -584,7 +638,7 @@ final class SummaryDB private (
     * a damaged file.
     */
   private def columns(files: Seq[BucketManifest.File], schema: StructType): TinyParquet.Columns =
-    TinyParquet.columns(spark.sparkContext.hadoopConfiguration, files.map(f => new Path(p(f.path))), schema)
+    TinyParquet.columns(conf, files.map(f => new Path(p(f.path)) -> f.bytes), schema)
       .fold(e => throw new IllegalStateException(e), identity)
 
   /** Where the frontier — the newest stored timestamp per stream — is
@@ -1041,15 +1095,15 @@ final class SummaryDB private (
             s"(declared: ${m.operators.mkString(", ")})")
     }
 
-  def summaryWindows: Dataset[SummaryWindow] = readFiles[SummaryWindow](tableFiles("summary_windows"))
+  def summaryWindows: Dataset[SummaryWindow] = currentRows[SummaryWindow]("summary_windows")
 
   /** Declared spans of landmark windows that matched elements — one
     * bounded row per (stream, interval). */
-  def landmarkSpans: Dataset[LandmarkSpan] = readFiles[LandmarkSpan](tableFiles("landmark_spans"))
+  def landmarkSpans: Dataset[LandmarkSpan] = currentRows[LandmarkSpan]("landmark_spans")
 
   /** Exact landmark elements, one row each — the scale layout queries
     * aggregate over. */
-  def landmarkElems: Dataset[LandmarkElem] = readFiles[LandmarkElem](tableFiles("landmark_elems"))
+  def landmarkElems: Dataset[LandmarkElem] = currentRows[LandmarkElem]("landmark_elems")
 
   /** Driver-side landmark VIEW: elements assembled into one array per
     * window. Small-landmark convenience (tests, inspection) — queries

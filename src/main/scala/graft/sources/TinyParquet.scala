@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.{HadoopReadOptions, ParquetReadOptions}
 import org.apache.parquet.column.impl.ColumnReadStoreImpl
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
@@ -40,6 +40,12 @@ import scala.util.DynamicVariable
   *
   * File order is the lexicographic file-name sort (deterministic across
   * filesystems, unlike raw listing order).
+  *
+  * Decode once: the column reader [[columns]] keeps every file it
+  * decodes, process-wide and bounded by [[CacheBytes]], keyed by the
+  * file's qualified path and length, since no file is ever rewritten in
+  * place. A driver-side writer hands it the rows it wrote ([[fill]]),
+  * and a store drops the files it replaces or deletes ([[forget]]).
   */
 private[graft] object TinyParquet {
 
@@ -99,67 +105,169 @@ private[graft] object TinyParquet {
 
   /** The columns of a flat table decoded into primitive arrays, each
     * `size` long: `long` for a `LongType` field of the schema read,
-    * `double` for a `DoubleType` one.
+    * `double` for a `DoubleType` one. The arrays may be shared with
+    * other readers ([[columns]] keeps them): they are never written.
     */
   final class Columns private[TinyParquet] (val size: Int, cols: Map[String, AnyRef]) {
     def long(name: String): Array[Long] = cols(name).asInstanceOf[Array[Long]]
     def double(name: String): Array[Double] = cols(name).asInstanceOf[Array[Double]]
+
+    /** Whether every column of `schema` is here, as its type's array. */
+    private[TinyParquet] def holds(schema: StructType): Boolean = schema.fields.forall(f => cols.get(f.name).exists {
+      case _: Array[Long] => f.dataType == LongType
+      case _ => f.dataType == DoubleType
+    })
+
+    /** Decoded bytes: 8 per value. */
+    private[TinyParquet] def bytes: Long = 8L * size * cols.size
   }
 
   /** The `schema` columns (long or double) of the flat parquet `files`,
-    * in file order, decoded column by column: no record is assembled
-    * and only those columns are read. Left when a file lacks a column or
-    * stores it as another physical type than INT64 or DOUBLE (a Spark
-    * read of `schema` may still convert it); a null throws, naming the
-    * file and the column, since every such column is non-null.
+    * each given with its length, in file order, decoded column by
+    * column: no record is assembled and only those columns are read.
+    * Left when a file lacks a column or stores it as another physical
+    * type than INT64 or DOUBLE (a Spark read of `schema` may still
+    * convert it); a null throws, naming the file and the column, since
+    * every such column is non-null.
+    *
+    * Each file is decoded once per process: its columns are kept by
+    * qualified path, valid while its length matches, until they are
+    * [[forget]]-ten or pushed out, least recently used first, past
+    * [[CacheBytes]]. So a file must never be rewritten in place: the
+    * store and Spark's writer give every new file a fresh name. A
+    * `Left` or a throw keeps nothing.
     */
-  def columns(conf: Configuration, files: Seq[Path], schema: StructType): Either[String, Columns] = {
-    // one options object: opening a file without it builds a Configuration
-    val options = HadoopReadOptions.builder(conf).build()
+  def columns(conf: Configuration, files: Seq[(Path, Long)], schema: StructType): Either[String, Columns] = {
+    // one options object, and only on a miss: opening a file without it builds a Configuration
+    lazy val options = HadoopReadOptions.builder(conf).build()
+    files.foldLeft[Either[String, Vector[Columns]]](Right(Vector.empty)) { case (done, (f, length)) =>
+      done.flatMap { parts =>
+        val key = qualified(conf, f)
+        (Decoded.get(key, length, schema) match {
+          case Some(c) => Right(c)
+          case None => decode(conf, options, f, schema).map { c => Decoded.put(key, length, c); c }
+        }).map(parts :+ _)
+      }
+    }.map {
+      case Vector(one) => one
+      case parts => new Columns(parts.map(_.size).sum, schema.fields.map { f =>
+        f.name -> (if (f.dataType == LongType) Array.concat(parts.map(_.long(f.name)): _*)
+          else Array.concat(parts.map(_.double(f.name)): _*))
+      }.toMap)
+    }
+  }
+
+  /** One file's `schema` columns, as [[columns]] reads them. */
+  private def decode(conf: Configuration, options: ParquetReadOptions, f: Path,
+      schema: StructType): Either[String, Columns] = {
+    decodes.incrementAndGet()
     val out = schema.fields.map(f => f.name -> (if (f.dataType == LongType) new ArrayBuilder.ofLong
       else new ArrayBuilder.ofDouble))
     var size = 0
-    files.foldLeft[Either[String, Unit]](Right(())) { (done, f) =>
-      done.flatMap { _ =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf), options)
-        try {
-          val file = reader.getFileMetaData.getSchema
-          val typeOf = file.getFields.asScala.map(t => t.getName -> t).toMap
-          schema.fields.find { c =>
-            val physical = if (c.dataType == LongType) PrimitiveTypeName.INT64 else PrimitiveTypeName.DOUBLE
-            !typeOf.get(c.name).exists(t => t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
-              t.asPrimitiveType.getPrimitiveTypeName == physical)
-          }.map(c => s"$f: column ${c.name} is not a flat ${c.dataType.simpleString}").toLeft {
-            val projection = new MessageType(file.getName, schema.fields.map(c => typeOf(c.name)).toList.asJava)
-            reader.setRequestedSchema(projection)
-            Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).foreach { pages =>
-              size += pages.getRowCount.toInt
-              // the store asks for converters; values are read off its column readers instead
-              val store = new ColumnReadStoreImpl(pages, new GroupRecordConverter(projection).getRootConverter,
-                projection, reader.getFileMetaData.getCreatedBy)
-              out.foreach { case (name, values) =>
-                val column = store.getColumnReader(projection.getColumnDescription(Array(name)))
-                val defined = column.getDescriptor.getMaxDefinitionLevel
-                def decode(add: => Unit): Unit = {
-                  var row = 0L
-                  while (row < pages.getRowCount) {
-                    if (column.getCurrentDefinitionLevel < defined)
-                      throw new IllegalStateException(s"$f: null in non-null column $name")
-                    add
-                    column.consume()
-                    row += 1
-                  }
-                }
-                (values: @unchecked) match {
-                  case l: ArrayBuilder.ofLong => decode(l += column.getLong)
-                  case d: ArrayBuilder.ofDouble => decode(d += column.getDouble)
-                }
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f, conf), options)
+    try {
+      val file = reader.getFileMetaData.getSchema
+      val typeOf = file.getFields.asScala.map(t => t.getName -> t).toMap
+      schema.fields.find { c =>
+        val physical = if (c.dataType == LongType) PrimitiveTypeName.INT64 else PrimitiveTypeName.DOUBLE
+        !typeOf.get(c.name).exists(t => t.isPrimitive && !t.isRepetition(Type.Repetition.REPEATED) &&
+          t.asPrimitiveType.getPrimitiveTypeName == physical)
+      }.map(c => s"$f: column ${c.name} is not a flat ${c.dataType.simpleString}").toLeft {
+        val projection = new MessageType(file.getName, schema.fields.map(c => typeOf(c.name)).toList.asJava)
+        reader.setRequestedSchema(projection)
+        Iterator.continually(reader.readNextRowGroup()).takeWhile(_ != null).foreach { pages =>
+          size += pages.getRowCount.toInt
+          // the store asks for converters; values are read off its column readers instead
+          val store = new ColumnReadStoreImpl(pages, new GroupRecordConverter(projection).getRootConverter,
+            projection, reader.getFileMetaData.getCreatedBy)
+          out.foreach { case (name, values) =>
+            val column = store.getColumnReader(projection.getColumnDescription(Array(name)))
+            val defined = column.getDescriptor.getMaxDefinitionLevel
+            def decode(add: => Unit): Unit = {
+              var row = 0L
+              while (row < pages.getRowCount) {
+                if (column.getCurrentDefinitionLevel < defined)
+                  throw new IllegalStateException(s"$f: null in non-null column $name")
+                add
+                column.consume()
+                row += 1
               }
             }
+            (values: @unchecked) match {
+              case l: ArrayBuilder.ofLong => decode(l += column.getLong)
+              case d: ArrayBuilder.ofDouble => decode(d += column.getDouble)
+            }
           }
-        } finally reader.close()
+        }
+        new Columns(size, out.map { case (name, values) => name -> values.result().asInstanceOf[AnyRef] }.toMap)
       }
-    }.map(_ => new Columns(size, out.map { case (name, values) => name -> values.result().asInstanceOf[AnyRef] }.toMap))
+    } finally reader.close()
+  }
+
+  /** Decoded bytes [[columns]] keeps across calls: 4 × [[TinyBytes]],
+    * so one table the driver may read fits at up to 4× parquet
+    * compression (the store's window tables decode to about 2.3× their
+    * file bytes).
+    */
+  val CacheBytes: Long = 4 * TinyBytes
+
+  /** Files [[columns]] has decoded from disk in this process. */
+  private[graft] val decodes = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Hand [[columns]] the `schema` columns of `rows`, just written as
+    * `file` of `length` bytes in that order: the writer's own copy, so
+    * the next read of the file decodes nothing.
+    */
+  def fill(conf: Configuration, file: Path, length: Long, schema: StructType, rows: Seq[Row]): Unit =
+    Decoded.put(qualified(conf, file), length, new Columns(rows.size, schema.fields.zipWithIndex.map {
+      case (f, i) => f.name -> (if (f.dataType == LongType) rows.map(_.getLong(i)).toArray
+        else rows.map(_.getDouble(i)).toArray)
+    }.toMap))
+
+  /** Drop what [[columns]] keeps of `files`: replaced or deleted. */
+  def forget(conf: Configuration, files: Seq[Path]): Unit = files.foreach(f => Decoded.remove(qualified(conf, f)))
+
+  /** Drop everything [[columns]] keeps: a spec's cold read. */
+  private[graft] def forgetAll(): Unit = Decoded.clear()
+
+  /** What [[columns]] keeps: decoded bytes by qualified path. */
+  private[graft] def kept: Map[String, Long] = Decoded.snapshot
+
+  private def qualified(conf: Configuration, f: Path): String = f.getFileSystem(conf).makeQualified(f).toString
+
+  /** The decoded files of [[columns]], by qualified path, in access order. */
+  private object Decoded {
+    private final class Entry(val length: Long, val columns: Columns)
+    private val entries = new java.util.LinkedHashMap[String, Entry](64, 0.75f, true)
+    private var held = 0L
+
+    def get(key: String, length: Long, schema: StructType): Option[Columns] = synchronized {
+      Option(entries.get(key)).filter(e => e.length == length && e.columns.holds(schema)).map(_.columns)
+    }
+
+    /** Keep `c` as `key`'s columns, unless it alone passes the bound. */
+    def put(key: String, length: Long, c: Columns): Unit = synchronized {
+      remove(key)
+      if (c.bytes <= CacheBytes) {
+        entries.put(key, new Entry(length, c))
+        held += c.bytes
+        val eldest = entries.values.iterator
+        while (held > CacheBytes) {
+          held -= eldest.next().columns.bytes
+          eldest.remove()
+        }
+      }
+    }
+
+    def remove(key: String): Unit = synchronized {
+      Option(entries.remove(key)).foreach(e => held -= e.columns.bytes)
+    }
+
+    def clear(): Unit = synchronized { entries.clear(); held = 0L }
+
+    def snapshot: Map[String, Long] = synchronized {
+      entries.asScala.map { case (k, e) => k -> e.columns.bytes }.toMap
+    }
   }
 
   /** A Dataset the driver can read without Spark, holding `bytes`: its
@@ -178,7 +286,7 @@ private[graft] object TinyParquet {
     case l: LogicalRelation => l.relation match {
       case h: HadoopFsRelation if h.fileFormat.isInstanceOf[ParquetFileFormat] &&
           h.partitionSchema.isEmpty && h.bucketSpec.isEmpty =>
-        val files = h.location.inputFiles.toSeq.map(new Path(_))
+        val files = h.location.listFiles(Nil, Nil).flatMap(_.files).map(f => f.getPath -> f.getLen)
         Some(new Input(h.location.sizeInBytes, schema => lacking(l.output, schema, nonNull = false).toLeft(())
           .flatMap(_ => columns(ds.sparkSession.sparkContext.hadoopConfiguration, files, schema))))
       case _ => None

@@ -44,8 +44,10 @@ class ColumnReaderSpec extends SparkSpec {
 
   private def files(dir: String): Seq[Path] = TinyParquet.dataFiles(conf, dir).map(_.getPath)
 
+  private def sized(fs: Seq[Path]): Seq[(Path, Long)] = fs.map(f => f -> f.getFileSystem(conf).getFileStatus(f).getLen)
+
   private def decoded(fs: Seq[Path]): Seq[SummaryWindow] =
-    StreamTable.Windows.rows(TinyParquet.columns(conf, fs, schema).fold(e => fail(e), identity))
+    StreamTable.Windows.rows(TinyParquet.columns(conf, sized(fs), schema).fold(e => fail(e), identity))
 
   private def sparkRead(fs: Seq[Path]): Seq[SummaryWindow] =
     spark.read.schema(schema).parquet(fs.map(_.toString): _*).as[SummaryWindow].collect().toSeq
@@ -111,7 +113,7 @@ class ColumnReaderSpec extends SparkSpec {
       .withColumn("sum", when($"ts" === 500L, lit(null).cast("double")).otherwise($"sum"))
       .coalesce(1).write.mode("overwrite").parquet(dir)
     val Seq(file) = files(dir)
-    val e = intercept[IllegalStateException](TinyParquet.columns(conf, Seq(file), schema))
+    val e = intercept[IllegalStateException](TinyParquet.columns(conf, sized(Seq(file)), schema))
     assert(e.getMessage.contains(file.getName) && e.getMessage.contains("column sum"), e.getMessage)
   }
 
@@ -120,7 +122,7 @@ class ColumnReaderSpec extends SparkSpec {
     windows.toDS().toDF().withColumn("streamId", $"streamId".cast("int"))
       .coalesce(1).write.mode("overwrite").parquet(narrow)
     windows.toDS().coalesce(1).write.mode("overwrite").parquet(wide)
-    assert(TinyParquet.columns(conf, files(narrow), schema).isLeft)
+    assert(TinyParquet.columns(conf, sized(files(narrow)), schema).isLeft)
     def fleet(dir: String) = SparkCounts.of(spark) {
       val sw: Dataset[SummaryWindow] = spark.read.schema(schema).parquet(dir).as[SummaryWindow]
       QueryEngine.rangeQueryAll(sw, spark.emptyDataset[LandmarkSpan], spark.emptyDataset[LandmarkElem],

@@ -102,15 +102,6 @@ class LandmarkRowsSpec extends SparkSpec {
     }
   }
 
-  test("landmarkExactAll over element rows: pushed-down filter + groupBy, exact") {
-    val events = (0 until 200).map(i => Event(5L, i.toLong, i.toLong, 1.5)).toDS()
-    val (_, _, elems) = Summarizer.summarizeWithLandmarkRowsPerStream(
-      events, specOf, Seq((50L, 99L)))
-    val r = QueryEngine.landmarkExactAll(elems, 60L, 80L)
-      .as[(Long, Long, Double)].collect().toSeq
-    assert(r == Seq((5L, 21L, 21 * 1.5)))
-  }
-
   test("zero-element declared interval emits no span (estimator set unchanged)") {
     val events = (0 until 100).map(i => Event(7L, i.toLong, i.toLong, 1.0)).toDS()
     val (_, spans, elems) = Summarizer.summarizeWithLandmarkRowsPerStream(
